@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // process-level measured settings (codegen cache, shuffle local
     // dir, shuffle writer): SessionTuning — one definition for every
     // entry point, each env-overridable for A/B
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     // JVM/session warmup (codegen, shuffle service, parquet footer reads)
     // so per-query timings below are steady-state, not arrival order.
     spark.read.parquet(s"$sfDir/lineitem.parquet")

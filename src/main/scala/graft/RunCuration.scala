@@ -31,7 +31,6 @@ object RunCuration {
     * reshuffle a 100 TB corpus or only its derived statistics.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String): Summary = {
-    graft.functions.GraftFunctions.register(spark)
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -91,14 +90,7 @@ object RunCuration {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_curation")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     val t0 = System.nanoTime()
     val s = run(spark, sfDir, outDir)
     val secs = (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.enrich.Enrich
 import graft.ops.PipelineRun
 
@@ -16,14 +14,7 @@ object RunPipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val opsDir = args.lift(1).getOrElse("/tmp/graft_ops")
     val sinkDir = args.lift(2).getOrElse("/tmp/graft_sink")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     val curated = Enrich.curated(Tables(spark, sfDir).events)
     val out = PipelineRun.run(curated, opsDir, sinkDir,
       PipelineRun.ConsoleNotifier,

@@ -255,7 +255,6 @@ object RunStream {
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : FullSummary = {
     import graft.streaming.{DedupStream, HeavyHitterStream, SketchStream}
-    graft.functions.GraftFunctions.register(spark)
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -538,20 +537,15 @@ object RunStream {
     val outDir = args.lift(1).getOrElse("/tmp/graft_stream")
     val rowsPerSecond = args.lift(2).getOrElse("200")
     val wire = args.lift(3).getOrElse("json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val spark = SessionTuning.session(confs = Seq(
       // FAIR by default: FIFO lets one leg's ~30-job trigger
       // head-of-line block the other five — measured 8.6× on the
       // composed graph leg (703 → 6 030 docs/s, 360 s runs, SCALING.md
       // "Six-leg composition: the scheduler was the bottleneck") with
       // every other leg unharmed or faster. SPARK_GRAFT_SCHEDULER=FIFO
       // restores the old posture for A/B.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
+      "spark.scheduler.mode" ->
+        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"),
       // streaming OVERRIDE of the SessionTuning batch default (false):
       // a micro-batch trigger's per-batch frames are small by
       // construction, so size-based AQE coalescing folds every
@@ -559,10 +553,8 @@ object RunStream {
       // trigger — measured 15.3k -> 10.7k docs/s on the 30 s curate
       // leg. Latency-bound micro-batches want parallelism-first; the
       // size-based posture is for the batch/analytics sessions.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+        SessionTuning.aqeParallelismFirst(default = true)))
 
     val rate = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond).load()
@@ -853,7 +845,6 @@ object RunStream {
       return
     }
 
-    graft.functions.GraftFunctions.register(spark)
     val parsed = wire match {
       case "avro" => EventPipeline.parseAvro(rate.select(
         graft.functions.GraftFunctions.avroEncodeCe(eventStruct)

@@ -1728,257 +1728,81 @@ object ScaleProbe {
     spark.catalog.clearCache()
   }
 
+  /** The default sweep: the heavy text operators over one N-doc
+    * synthetic corpus.
+    */
+  def corpusProbe(spark: SparkSession, n: Long): Unit = {
+    val docs = synthDocs(spark, n).persist()
+    docs.count() // materialize corpus outside the timings
+    def time(name: String)(f: => Long): Unit = {
+      val t0 = System.nanoTime()
+      val rows = f
+      println(f"[scale] n=$n%-8d $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
+    }
+    time("text_stats") { TextAnalysis.textStats(docs).count() }
+    time("quality_gate") { TextAnalysis.qualityFilter(docs).count() }
+    time("normalize_md5") {
+      docs.select(md5(graft.ext.Curation.normalizeText(col("text")))
+        .as("h")).filter(col("h").isNotNull).count()
+    }
+    time("minhash_near_dups") { Dedup.minhashNearDups(docs).count() }
+    // 24-bit blocking saturates quadratically past ~1.28M on this
+    // near-identical corpus (SCALING.md) — probe it only below that
+    if (n <= 1280000L)
+      time("simhash_near_dups") { Dedup.simhashNearDups(docs).count() }
+    time("simhash_adaptive") {
+      Dedup.simhashNearDupsAdaptive(docs, Some(n)).count() }
+    time("simhash60_near_dups") { Dedup.simhash60NearDups(docs).count() }
+    time("exact_dedup") { Dedup.exactSummary(docs).count() }
+    time("novelty") { TextAnalysis.noveltyReport(docs).count() }
+    time("soft_dedup_weights") { Dedup.softDedupWeights(docs).count() }
+    time("keep_best") { Dedup.keepBestSurvivors(docs).count() }
+    docs.unpersist()
+    spark.catalog.clearCache()
+  }
+
+  /** Probe per mode name (`sbt "runMain graft.ScaleProbe MODE N..."`);
+    * with no mode, [[corpusProbe]] runs.
+    */
+  private val probes: Map[String, (SparkSession, Long) => Unit] = Map(
+    "ann" -> annProbe _, "audiodup" -> audioDupProbe _,
+    "bloom" -> bloomProbe _, "bow" -> bowProbe _,
+    "bownat" -> bowNaturalProbe _, "bpetok" -> bpeTokProbe _,
+    "cadence" -> cadenceProbe _, "cap" -> capProbe _,
+    "curation" -> curationProbe _, "events" -> eventsProbe _,
+    "graph" -> graphProbe _, "graphstar" -> graphStarProbe _,
+    "imagedup" -> imageDupProbe _, "ivf" -> ivfIndexProbe _,
+    "ivfrebuild" -> ivfRebuildProbe _, "joins" -> joinsProbe _,
+    "levels" -> levelsProbe _, "link" -> linkProbe _,
+    "listing" -> listingProbe _, "lsh" -> lshSkewProbe _,
+    "mediaserved" -> mediaServedProbe _, "overlap" -> overlapProbe _,
+    "pq" -> pqProbe _, "rebucket" -> rebucketProbe _,
+    "recallf" -> filteredRecallProbe _, "served" -> servedProbe _,
+    "spans" -> spanProbe _, "stats" -> statsProbe _,
+    "streamread" -> streamReadProbe _, "takedown" -> takedownProbe _,
+    "videodup" -> videoDupProbe _, "winnow" -> winnowProbe _)
+
   def main(args: Array[String]): Unit = {
-    val annMode = args.headOption.contains("ann")
-    val capMode = args.headOption.contains("cap")
-    val lshMode = args.headOption.contains("lsh")
-    val joinsMode = args.headOption.contains("joins")
-    val pqMode = args.headOption.contains("pq")
-    val ivfMode = args.headOption.contains("ivf")
-    val spansMode = args.headOption.contains("spans")
-    val winnowMode = args.headOption.contains("winnow")
-    val bpeTokMode = args.headOption.contains("bpetok")
-    val curationMode = args.headOption.contains("curation")
-    val linkMode = args.headOption.contains("link")
-    val overlapMode = args.headOption.contains("overlap")
-    val eventsMode = args.headOption.contains("events")
-    val statsMode = args.headOption.contains("stats")
-    val servedMode = args.headOption.contains("served")
-    val bowMode = args.headOption.contains("bow")
-    val bowNatMode = args.headOption.contains("bownat")
-    val recallfMode = args.headOption.contains("recallf")
-    val takedownMode = args.headOption.contains("takedown")
-    val imageDupMode = args.headOption.contains("imagedup")
-    val audioDupMode = args.headOption.contains("audiodup")
-    val bloomMode = args.headOption.contains("bloom")
-    val videoDupMode = args.headOption.contains("videodup")
-    val mediaServedMode = args.headOption.contains("mediaserved")
-    val ivfRebuildMode = args.headOption.contains("ivfrebuild")
-    val streamReadMode = args.headOption.contains("streamread")
-    val graphStarMode = args.headOption.contains("graphstar")
-    val graphMode = args.headOption.contains("graph")
-    val levelsMode = args.headOption.contains("levels")
-    val rebucketMode = args.headOption.contains("rebucket")
-    val cadenceMode = args.headOption.contains("cadence")
-    val listingMode = args.headOption.contains("listing")
-    val sizeArgs =
-      if (annMode || lshMode || joinsMode || pqMode || ivfMode || spansMode
-          || winnowMode || bpeTokMode || curationMode || linkMode
-          || eventsMode || overlapMode || capMode || statsMode
-          || servedMode || bowMode || bowNatMode || recallfMode
-          || takedownMode || imageDupMode || audioDupMode
-          || videoDupMode || bloomMode || mediaServedMode
-          || ivfRebuildMode || graphMode || streamReadMode
-          || graphStarMode || levelsMode || rebucketMode || cadenceMode
-          || listingMode)
-        args.drop(1)
-      else args
+    val (probe, sizeArgs) = args.headOption.flatMap(probes.get) match {
+      case Some(p) => (p, args.drop(1))
+      case None => (corpusProbe _, args)
+    }
+    sizeArgs.find(_.toLongOption.isEmpty).foreach { bad =>
+      System.err.println(s"unknown mode or size '$bad'; modes: " +
+        probes.keys.toSeq.sorted.mkString(" "))
+      sys.exit(2)
+    }
     val sizes = if (sizeArgs.nonEmpty) sizeArgs.map(_.toLong).toSeq
       else Seq(50000L, 200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = SessionTuning.session(logLevel = "ERROR",
       // probes default partitions = cores; the graph probes at 32 M
       // need more under small heaps (per-task memory share =
       // 0.6 × heap / cores — partitions must keep each task's join
       // state under it; measured in SCALING.md "Corpus graph driver
       // memory")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    if (annMode) {
-      sizes.foreach(annProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (lshMode) {
-      sizes.foreach(lshSkewProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (joinsMode) {
-      sizes.foreach(joinsProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (pqMode) {
-      sizes.foreach(pqProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (ivfMode) {
-      sizes.foreach(ivfIndexProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (graphMode) {
-      sizes.foreach(graphProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (streamReadMode) {
-      sizes.foreach(streamReadProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (graphStarMode) {
-      sizes.foreach(graphStarProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (levelsMode) {
-      sizes.foreach(levelsProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (rebucketMode) {
-      sizes.foreach(rebucketProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (cadenceMode) {
-      sizes.foreach(cadenceProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (listingMode) {
-      sizes.foreach(listingProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (spansMode) {
-      sizes.foreach(spanProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (winnowMode) {
-      sizes.foreach(winnowProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (bpeTokMode) {
-      sizes.foreach(bpeTokProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (curationMode) {
-      sizes.foreach(curationProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (capMode) {
-      sizes.foreach(capProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (linkMode) {
-      sizes.foreach(linkProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (overlapMode) {
-      sizes.foreach(overlapProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (statsMode) {
-      sizes.foreach(statsProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (servedMode) {
-      sizes.foreach(servedProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (bowMode) {
-      sizes.foreach(bowProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (bowNatMode) {
-      sizes.foreach(bowNaturalProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (takedownMode) {
-      sizes.foreach(takedownProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (imageDupMode) {
-      sizes.foreach(imageDupProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (audioDupMode) {
-      sizes.foreach(audioDupProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (videoDupMode) {
-      sizes.foreach(videoDupProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (bloomMode) {
-      sizes.foreach(bloomProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (mediaServedMode) {
-      sizes.foreach(mediaServedProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (ivfRebuildMode) {
-      sizes.foreach(ivfRebuildProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (recallfMode) {
-      sizes.foreach(filteredRecallProbe(spark, _))
-      spark.stop()
-      return
-    }
-    if (eventsMode) {
-      sizes.foreach(eventsProbe(spark, _))
-      spark.stop()
-      return
-    }
-    for (n <- sizes) {
-      val docs = synthDocs(spark, n).persist()
-      docs.count() // materialize corpus outside the timings
-      def time(name: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale] n=$n%-8d $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-      }
-      time("text_stats") { TextAnalysis.textStats(docs).count() }
-      time("quality_gate") { TextAnalysis.qualityFilter(docs).count() }
-      time("normalize_md5") {
-        docs.select(md5(graft.ext.Curation.normalizeText(col("text")))
-          .as("h")).filter(col("h").isNotNull).count()
-      }
-      time("minhash_near_dups") { Dedup.minhashNearDups(docs).count() }
-      // 24-bit blocking saturates quadratically past ~1.28M on this
-      // near-identical corpus (SCALING.md) — probe it only below that
-      if (n <= 1280000L)
-        time("simhash_near_dups") { Dedup.simhashNearDups(docs).count() }
-      time("simhash_adaptive") {
-        Dedup.simhashNearDupsAdaptive(docs, Some(n)).count() }
-      time("simhash60_near_dups") { Dedup.simhash60NearDups(docs).count() }
-      time("exact_dedup") { Dedup.exactSummary(docs).count() }
-      time("novelty") { TextAnalysis.noveltyReport(docs).count() }
-      time("soft_dedup_weights") { Dedup.softDedupWeights(docs).count() }
-      time("keep_best") { Dedup.keepBestSurvivors(docs).count() }
-      docs.unpersist()
-      spark.catalog.clearCache()
-    }
+      confs = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").toSeq
+        .map("spark.sql.shuffle.partitions" -> _))
+    sizes.foreach(probe(spark, _))
     spark.stop()
   }
 }

@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared per-process Spark session tuning for every long-lived entry
-  * point (Bench, Verify, QueryProfile, RunStream, RunPipeline,
-  * RunCuration, ScaleProbe). One definition so a measured win lands in
-  * every builder and an A/B can flip one env var against one binary.
+/** The one Spark session factory and its per-process tuning. Every
+  * entry point (Bench, Verify, QueryProfile, ExplainAudit, RunStream,
+  * RunPipeline, RunCuration, ScaleProbe) and the spec suite's shared
+  * session build through [[session]]; the benchmark under `perfbench/`
+  * applies [[tuned]] to its own builder. One definition so a measured
+  * win lands in every session and an A/B can flip one env var against
+  * one binary.
   *
   * Each setting is measured (OPTIMIZATION_r17/r18.md) and justified at
   * production scale — none is a local[32]-only trick:
@@ -45,20 +48,53 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
 
+  /** Local-mode core count: `SPARK_GRAFT_CPUS`, else 32. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.toInt)
+
+  /** Build (or get) the process session: `local[cores]` with one
+    * shuffle partition per core, UTC, no UI, the measured settings of
+    * [[tuned]], then `confs`, which win over all of those, and finally
+    * the driver's log level.
+    */
+  def session(cores: Int = cpus, confs: Seq[(String, String)] = Nil,
+      logLevel: String = "WARN"): SparkSession = {
+    val base = tuned(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+    val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Spark scratch (shuffle/spill/broadcast) directory: env override,
     * else tmpfs when available, else the JVM tmpdir. Spark creates a
     * per-app `spark-<uuid>` subdir and removes it via shutdown hook,
     * so the tmpfs footprint is bounded by one app's live shuffle data.
     */
   def localDir: String =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) {
-        val d = new java.io.File(shm, "graft-spark")
-        d.mkdirs()
-        d.getAbsolutePath
-      } else java.lang.System.getProperty("java.io.tmpdir", "/tmp")
-    })
+    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+      scratchDirUnder(new java.io.File("/dev/shm")))
+
+  /** `root/graft-spark` when it is, or can be made, a writable
+    * directory; else the JVM tmpdir.
+    */
+  private[graft] def scratchDirUnder(root: java.io.File): String = {
+    val d = new java.io.File(root, "graft-spark")
+    if (root.isDirectory && root.canWrite) d.mkdirs()
+    if (d.isDirectory && d.canWrite) d.getAbsolutePath
+    else java.lang.System.getProperty("java.io.tmpdir", "/tmp")
+  }
+
+  /** AQE `coalescePartitions.parallelismFirst`:
+    * `SPARK_GRAFT_AQE_PARALLELISM_FIRST`, else `default` (false for
+    * the batch sessions of [[tuned]], true for RunStream's
+    * micro-batches).
+    */
+  def aqeParallelismFirst(default: Boolean): String =
+    sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", default.toString)
 
   /** Apply the measured process-level settings to a builder. Static
     * confs (codegen cache, local.dir) only take effect for the first
@@ -86,7 +122,7 @@ object SessionTuning {
       // (winnow_matches −58 %, dedup_incremental −44 %,
       // media_dedup_clusters_served −46 %).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+        aqeParallelismFirst(default = false))
     // dev seam: `SPARK_GRAFT_CONF=k=v;k=v` extra confs, so a candidate
     // setting can be A/B'd against one binary before it earns a
     // measured default above

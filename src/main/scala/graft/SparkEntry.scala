@@ -259,7 +259,6 @@ object SparkEntry {
     // (non-null required fields, plan in the enum — what a DatumWriter
     // can serialize; byte-level layout is pinned separately in AvroSpec)
     "ce_avro_decoded" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.{avroDecodeCe, avroEncodeCe}
       val wireable = CustomerEvents.synth(tables(s, dir).events)
         .filter(col("id").isNotNull && col("name").isNotNull

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     new java.io.File(outDir).mkdirs()
     // Every query that throws becomes a named row in verify_errors.json —
     // a crashed query must surface as a red row in the correctness
@@ -29,10 +21,10 @@ object Verify {
     // concurrent jobs across the local[32] cores that a single serial
     // query rarely saturates (measured 149 s serial → ~60 s at 6 threads
     // on sf0.01). Shared state is already concurrent: IndexCache and the
-    // model caches are ConcurrentHashMap.computeIfAbsent, function
-    // registration is idempotent, and Tables only sets an identical conf
-    // value. Results are byte-identical to the serial run — per-query
-    // output never depends on sibling queries.
+    // model caches are ConcurrentHashMap.computeIfAbsent, and Tables
+    // only sets an identical conf value. Results are byte-identical to
+    // the serial run — per-query output never depends on sibling
+    // queries.
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "6").toInt
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     implicit val ec: scala.concurrent.ExecutionContext =

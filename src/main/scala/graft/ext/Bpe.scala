@@ -269,7 +269,6 @@ object Bpe {
     * STRINGS cross-engine, not just how many there are.
     */
   def tokenizeReport(documents: DataFrame, merges: Seq[Merge]): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
         size(filter(split(col("text"), " "), w => w =!= ""))
@@ -341,7 +340,6 @@ object Bpe {
     */
   def fertilityReport(documents: DataFrame,
       merges: Seq[Merge]): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("lang"), col("n_chars"),
         size(filter(split(col("text"), " "), w => w =!= ""))

@@ -45,9 +45,6 @@ object Curation {
     * pairs ever shuffle — same discipline as [[Dedup.shingleTable]]).
     */
   private def shingleHashes(documents: DataFrame): DataFrame = {
-    // self-contained: callers must not depend on an earlier query
-    // having registered the native generator (idempotent)
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
         explode(array_distinct(shingles(col("text")))).as("s"))
@@ -690,8 +687,6 @@ object Curation {
     */
   def vocabGrowth(documents: DataFrame,
       buckets: Int = GrowthBuckets): DataFrame = {
-    val spark = documents.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val nDocs = documents.agg(count(lit(1)).as("n_docs"))
     val toks = documents
       .crossJoin(broadcast(nDocs))
@@ -1025,7 +1020,6 @@ object Curation {
     * join — both carry the distinct-gram volume, not the corpus.
     */
   def sourceOverlap(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val grams = documents
       .select(col("source"),
         explode(graft.ext.TextAnalysis.shingles(col("text"))).as("g"))
@@ -1101,7 +1095,6 @@ object Curation {
     */
   def sourceOverlapApprox(documents: DataFrame,
       mod: Int = OverlapSampleMod): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val grams = documents
       .select(col("source"),
         explode(graft.ext.TextAnalysis.shingles(col("text"))).as("g"))
@@ -1781,7 +1774,6 @@ object Curation {
     * canonical text (pins exact bytes cross-engine) and its length.
     */
   def normalizedReport(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(col("doc_id"),
       md5(normalizeText(col("text"))).as("norm_md5"),
       length(normalizeText(col("text"))).cast("long").as("n_norm_chars"))
@@ -2275,7 +2267,6 @@ object Curation {
     */
   def semanticDecontam(embeddings: DataFrame, nBench: Int = SemBenchCount,
       tau: Double = SemDecontamTau): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", Dedup.norm(col("v")))

@@ -93,7 +93,6 @@ object Dedup {
     * hashes identically, so parity is exact by construction.
     */
   def shingleTable(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(col("doc_id"),
         explode(array_distinct(shingles(col("text")))).as("shingle"))
       .select(col("doc_id"), h32(col("shingle")).as("h"))
@@ -104,7 +103,6 @@ object Dedup {
     * bucket-size skew on the exact production banding.
     */
   def bandTable(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val sigs = documents.select(col("doc_id"),
       graft.functions.GraftFunctions.minhashSigs(col("text"), NumHashes)
         .as("sig"))
@@ -155,7 +153,6 @@ object Dedup {
   def minhashNearDups(documents: DataFrame,
       maxBandBucket: Option[Int] = None,
       bands: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val rawBands = bands.getOrElse(bandTable(documents))
     val capped = maxBandBucket.fold(rawBands) { cap =>
       // count per bucket is map-side combinable; the join back is on the
@@ -927,7 +924,6 @@ object Dedup {
     * hash (h32 carries only 32 bits of md5).
     */
   def simhash(documents: DataFrame, bits: Int = SimHashBits): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     require(bits <= 60, "keep the signature sign-free in a BIGINT")
     documents.select(col("doc_id"),
       graft.functions.GraftFunctions.simhashSig(col("text"), bits)
@@ -942,7 +938,6 @@ object Dedup {
     */
   private[graft] def simhashViaAggregates(documents: DataFrame,
       bits: Int = SimHashBits): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     require(bits <= 60, "keep the signature sign-free in a BIGINT")
     // features are HASHED before the TF combine: the shuffle key is
     // (long, long) instead of (long, string) and md5 runs map-side —
@@ -1150,7 +1145,6 @@ object Dedup {
   val CanopySeeds = Seq(0, 1)
 
   def ngramJaccardNearDups(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // the two canopy keys ARE MinHash rows 0 and 1 ([[CanopySeeds]]) —
     // map-side native signature, no explode/aggregate
     val canopies = Scratch.track(documents.select(col("doc_id"),
@@ -1244,7 +1238,6 @@ object Dedup {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def embeddingNearDups(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -1278,7 +1271,6 @@ object Dedup {
 
   def embeddingNearDupsAnn(embeddings: DataFrame,
       maxBlock: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e0 = embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))

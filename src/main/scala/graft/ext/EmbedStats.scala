@@ -114,7 +114,6 @@ object EmbedStats {
     * (vec_id, j, p) for the exact-hash oracle.
     */
   def jlProject(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val v = col("embedding").cast("array<double>")
     val projCols = array((0 until JlDim).map { j =>
       val plane = array((0 until 64).map(d => lit(jlEntry(j, d))): _*)
@@ -200,7 +199,6 @@ object EmbedStats {
     * rather than NaN.
     */
   def hashEmbeddings(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // native bow_hash_embed: the HOF fold form (per-token (bucket,
     // sign) structs aggregated into a dim-long accumulator) allocates
     // a fresh array per token — the expression does the identical
@@ -252,7 +250,6 @@ object EmbedStats {
     * keeps them as a NULL-embedding row).
     */
   def hashEmbeddingsLong(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
         posexplode(graft.functions.GraftFunctions

@@ -80,7 +80,6 @@ object ProductQuant {
     */
   def trainCodebooks(embeddings: DataFrame,
       k: Int = CodebookK): Seq[Seq[Seq[Double]]] = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"),
       unitVec(col("embedding")).as("v"))
     val sub = e.select(col("vec_id"),
@@ -389,7 +388,6 @@ object ProductQuant {
   /** Encode, ADC-scan, shortlist, re-rank against given codebooks. */
   def topKPqWith(embeddings: DataFrame, cbs: Seq[Seq[Seq[Double]]],
       shortlistN: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"),
       unitVec(col("embedding")).as("v"))
     val codes = e.select(col("vec_id"),
@@ -417,7 +415,6 @@ object ProductQuant {
   def topKPqLshPruned(embeddings: DataFrame,
       planes: Int = Similarity.NumPlanes,
       shortlistN: Int = Shortlist): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cbs = trainCodebooks(embeddings)
     val e = embeddings.select(col("vec_id"),
       unitVec(col("embedding")).as("v"))
@@ -612,7 +609,6 @@ object ProductQuant {
     */
   private def ivfPqParts(embeddings: DataFrame, cells: Int,
       cbs: Seq[Seq[Seq[Double]]]): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select(col("vec_id"), unitVec(col("embedding")).as("v"))
       .withColumn("vn2", dot(col("v"), col("v")))
@@ -662,7 +658,6 @@ object ProductQuant {
       nProbe: Int = Similarity.IvfProbes,
       shortlistN: Int = Shortlist,
       codebooks: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cbs = codebooks.getOrElse(trainCodebooks(embeddings))
     val (refined, index) = ivfPqParts(embeddings, cells, cbs)
     val queries = embeddings.filter(col("vec_id") < NumQueries)
@@ -707,7 +702,6 @@ object ProductQuant {
       nProbe: Int = Similarity.IvfProbes,
       shortlistN: Int = Shortlist,
       codebooks: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cbs = codebooks.getOrElse(trainCodebooks(embeddings))
     val refined = spark.read.parquet(s"$path/cents")
     val queries = embeddings.filter(col("vec_id") < NumQueries)
@@ -739,7 +733,6 @@ object ProductQuant {
       embeddings: DataFrame, path: String,
       cbs: Seq[Seq[Seq[Double]]],
       shortlistN: Int = Shortlist): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val codes = spark.read.parquet(s"$path/codes")
       .select(col("vec_id"), col("codes"))
     // v projected as its own attribute first (the Winnow inline-HOF

@@ -723,7 +723,6 @@ object Search {
   private def hybridFuse(lexRanked: DataFrame, embeddings: DataFrame,
       queryDocId: Long, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val lex = lexRanked
       .select(col("doc_id"), col("rank").as("lex_rank"))
     val e = embeddings.select(col("vec_id"),

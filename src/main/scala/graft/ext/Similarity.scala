@@ -85,7 +85,6 @@ object Similarity {
     math.max(IvfProbes, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
   private def withNorm(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     embeddings
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -220,7 +219,6 @@ object Similarity {
   def hardNegativesServed(spark: org.apache.spark.sql.SparkSession,
       path: String, embeddings: DataFrame,
       nProbe: Int = ivfProbesFor(IvfCells)): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
     val data = readIndexData(spark, root)
@@ -390,7 +388,6 @@ object Similarity {
   def labelNoiseKnnServed(spark: org.apache.spark.sql.SparkSession,
       path: String, embeddings: DataFrame,
       nProbe: Int = ivfProbesFor(IvfCells)): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
     val data = readIndexData(spark, root)
@@ -490,7 +487,6 @@ object Similarity {
   def topKIvfFiltered(spark: org.apache.spark.sql.SparkSession,
       path: String, embeddings: DataFrame,
       nProbe: Int = ivfProbesFor(IvfCells)): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
     val data = readIndexData(spark, root)
@@ -1120,7 +1116,6 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       path: String, cells: Int = IvfCells,
       beforeCommit: () => Unit = () => ()): Long = {
-    graft.functions.GraftFunctions.register(spark)
     val cur = Versioned.resolve(spark, path)
     val n = Versioned.nextVersion(spark, path)
     val stage = Versioned.versionDir(path, n)
@@ -1203,7 +1198,6 @@ object Similarity {
       batchId: Long): Unit = {
     require(batchId > 0, "batch_id 0 is the base build")
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // appends land in the CURRENT snapshot (a rebuild folds them into
     // its staged batch_id=0, so post-rebuild appends restart at the
     // new version)
@@ -1262,7 +1256,6 @@ object Similarity {
     */
   def ivfIndexDrift(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
     def dist2(v: Column, nv: Column, fv: Column, fn2: Column): Column =
@@ -1473,7 +1466,6 @@ object Similarity {
       nProbe: Int = IvfProbes,
       probeCoarse: Int = IvfCoarseProbes): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
     val probes = rankProbes(queries, fineCells, nProbe, probeCoarse)
@@ -1664,7 +1656,6 @@ object Similarity {
   def probedCellsFor(spark: org.apache.spark.sql.SparkSession,
       path: String, nProbe: Int = IvfProbes,
       probeCoarse: Int = IvfCoarseProbes): Array[Long] = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Versioned.resolve(spark, path)
     val fineCells = spark.read.parquet(s"$root/centroids")
     val q = spark.read.parquet(s"$root/data")

@@ -475,7 +475,6 @@ object TextAnalysis {
   def repetitionReport(documents: DataFrame,
       dupPpmMax: Long = 300000L, topBigramPpmMax: Long = 180000L)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val toks = tokens(col("text"))
     val base = documents.select(col("doc_id"),
       size(toks).cast("long").as("n_words"),
@@ -953,8 +952,7 @@ object TextAnalysis {
   /** Word-k-shingle array of a TEXT column — the native codegen'd
     * [[graft.functions.WordShingles]] (identical semantics to the
     * split/slice/join composition; see its Scaladoc). Clamps short docs
-    * to one shingle so the expression is total. Callers must have
-    * registered [[graft.functions.GraftFunctions]] on the session.
+    * to one shingle so the expression is total.
     */
   def shingles(text: Column, k: Int = ShingleK): Column =
     graft.functions.GraftFunctions.wordShingles(text, k)
@@ -978,7 +976,6 @@ object TextAnalysis {
     * class of cost), never corpus text.
     */
   def noveltyReport(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     // xxhash64 gram keys: every shuffle carries (doc_id, long), never the
     // 5-gram string (the span-dedup discipline, Dedup.scala:1166); the
     // oracle aggregates raw gram strings — counts agree absent 64-bit
@@ -1021,7 +1018,6 @@ object TextAnalysis {
     * across ingests (union new batch grams per arrival); recomputed here.
     */
   def gramIndex(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(explode(shingles(col("text"))).as("g"))
       .select(xxhash64(col("g")).as("h"))
@@ -1043,7 +1039,6 @@ object TextAnalysis {
     * per-ingest cost is O(|batch| + matching index keys).
     */
   def noveltyAgainst(index: DataFrame, batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val bg = batch
       .select(col("doc_id"), explode(shingles(col("text"))).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("h"))
@@ -1108,7 +1103,6 @@ object TextAnalysis {
     * fingerprint robust to suffix edits). All map-side.
     */
   def fingerprints(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("doc_id"), md5(col("text")).as("fp_md5"),
         shingles(col("text")).as("sh"))

@@ -89,7 +89,6 @@ object Winnow {
     */
   private def withSelections(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     documents
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .select(col("doc_id"),

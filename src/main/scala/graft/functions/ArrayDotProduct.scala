@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.GraftColumns.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot product over two `array<double>` columns — the inner loop
@@ -71,11 +70,12 @@ case class ArrayDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration surface for graft's native functions: either install
-  * [[GraftExtensions]] via `spark.sql.extensions`, or call
-  * [[GraftFunctions.register]] on an existing session (idempotent). The
-  * operator modules call `register` defensively so driver-created
-  * sessions work without config.
+/** graft's native functions. The Column helpers build each catalyst
+  * expression directly, so they work on any session, a fresh
+  * `newSession()` or a streaming micro-batch included, with no setup.
+  * [[register]] is only for SQL text: it adds the same functions to a
+  * session's function registry (idempotent), and [[graft.Graft.init]]
+  * calls it for the plain-SQL surface.
   */
 object GraftFunctions {
 
@@ -145,73 +145,53 @@ object GraftFunctions {
       }
     }
 
-  def registerTo(ext: SparkSessionExtensions): Unit =
-    fns.foreach(ext.injectFunction)
+  /** `array_dot(a, b)` as a Column. */
+  def arrayDot(a: Column, b: Column): Column =
+    column(ArrayDotProduct(expression(a), expression(b)))
 
-  /** `array_dot(a, b)` as a Column; requires registration (resolved
-    * lazily against the analyzing session's registry).
-    */
-  def arrayDot(a: Column, b: Column): Column = call_function("array_dot", a, b)
-
-  /** `word_shingles(text, k)` as a Column; requires registration. */
+  /** `word_shingles(text, k)` as a Column. */
   def wordShingles(text: Column, k: Int): Column =
-    call_function("word_shingles", text,
-      org.apache.spark.sql.functions.lit(k))
+    column(WordShingles(expression(text), k))
 
-  /** `simhash_sig(text, bits)` as a Column; requires registration. */
+  /** `simhash_sig(text, bits)` as a Column. */
   def simhashSig(text: Column, bits: Int): Column =
-    call_function("simhash_sig", text,
-      org.apache.spark.sql.functions.lit(bits))
+    column(SimHashSignature(expression(text), bits))
 
-  /** `minhash_sigs(text, k)` as a Column; requires registration. */
+  /** `minhash_sigs(text, k)` as a Column. */
   def minhashSigs(text: Column, k: Int): Column =
-    call_function("minhash_sigs", text,
-      org.apache.spark.sql.functions.lit(k))
+    column(MinHashSignature(expression(text), k))
 
-  /** `bow_hash_embed(text, dim)` as a Column; requires registration. */
+  /** `bow_hash_embed(text, dim)` as a Column. */
   def bowHashEmbed(text: Column, dim: Int): Column =
-    call_function("bow_hash_embed", text,
-      org.apache.spark.sql.functions.lit(dim))
+    column(BowHashEmbed(expression(text), dim))
 
-  /** `pq_encode(v, codebooks)` as a Column; requires registration. */
+  /** `pq_encode(v, codebooks)` as a Column. */
   def pqEncode(v: Column, codebooks: Column): Column =
-    call_function("pq_encode", v, codebooks)
+    column(PqEncode(expression(v), expression(codebooks)))
 
-  /** `pq_dist_tables(v, codebooks)` as a Column; requires registration. */
+  /** `pq_dist_tables(v, codebooks)` as a Column. */
   def pqDistTables(v: Column, codebooks: Column): Column =
-    call_function("pq_dist_tables", v, codebooks)
+    column(PqDistTables(expression(v), expression(codebooks)))
 
   /** `bpe_apply(text, rules)` as a Column with the merge table embedded
-    * as a literal (evaluated once at plan build); requires registration.
+    * in the expression.
     */
   def bpeApply(text: Column, merges: Seq[(String, String)]): Column =
-    call_function("bpe_apply", text,
-      org.apache.spark.sql.functions.typedlit(
-        merges.map(m => Seq(m._1, m._2))))
+    column(BpeApply(expression(text), merges))
 
-  /** `winnow_select(text, k, w)` as a Column; requires registration. */
+  /** `winnow_select(text, k, w)` as a Column. */
   def winnowSelect(text: Column, k: Int, w: Int): Column =
-    call_function("winnow_select", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    column(WinnowSelect(expression(text), k, w))
 
-  /** `nfc_normalize(text)` as a Column; requires registration. */
+  /** `nfc_normalize(text)` as a Column. */
   def nfcNormalize(text: Column): Column =
-    call_function("nfc_normalize", text)
+    column(NfcNormalize(expression(text)))
 
-  /** `avro_encode_ce(struct)` as a Column; requires registration. */
+  /** `avro_encode_ce(struct)` as a Column. */
   def avroEncodeCe(event: Column): Column =
-    call_function("avro_encode_ce", event)
+    column(graft.sources.AvroEncodeCustomerEvent(expression(event)))
 
-  /** `avro_decode_ce(binary)` as a Column; requires registration. */
+  /** `avro_decode_ce(binary)` as a Column. */
   def avroDecodeCe(datum: Column): Column =
-    call_function("avro_decode_ce", datum)
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` installs the
-  * native functions at session build (SparkSessionExtensions route).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.registerTo(ext)
+    column(graft.sources.AvroDecodeCustomerEvent(expression(datum)))
 }

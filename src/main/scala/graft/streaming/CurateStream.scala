@@ -63,7 +63,6 @@ object CurateStream {
       indexPath: String, stats: CurateStats,
       bench: Option[Curation.BloomState] = None): Unit =
     if (batchId > stats.dedup.lastCommitted) {
-      graft.functions.GraftFunctions.register(batch.sparkSession)
       val canon = batch
         .withColumn("text", Curation.normalizeText(col("text")))
         .persist()
@@ -123,8 +122,6 @@ object CurateStream {
     // disagree. The cache is filter-sized (≤ mBits rows) and is
     // released when THIS query terminates (listener below).
     val bench = benchmark.map { b =>
-      // normalizeText's native expression resolves eagerly here
-      graft.functions.GraftFunctions.register(b.sparkSession)
       val st = Curation.bloomState(
         b.withColumn("text", Curation.normalizeText(col("text"))),
         benchMBits)

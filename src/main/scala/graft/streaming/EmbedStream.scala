@@ -77,7 +77,6 @@ object EmbedStream {
 
   /** (vec_id, table_idx, bucket) rows for a vector frame — map-side. */
   def bucketTable(vectors: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = col("embedding").cast("array<double>")
     vectors.select(col("vec_id"),
       explode(array((0 until NumTables).map(t =>

@@ -92,7 +92,6 @@ object EventPipeline {
     * (curate → DQ → sinks) is decoder-agnostic.
     */
   def parseAvro(raw: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     val present = Seq("key", "topic", "partition", "offset", "timestamp")
       .filter(raw.columns.contains)
     val meta = present.map {

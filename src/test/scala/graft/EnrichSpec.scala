@@ -5,19 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    // same process-level tuning as the entry points (SessionTuning):
-    // the specs exercise the same operators, and the tmpfs shuffle dir
-    // + serialized shuffle writer cut the full suite's wall clock
-    val s = SessionTuning.tuned(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // same session factory and process-level tuning as the entry points
+  // (SessionTuning): the specs exercise the same operators, and the
+  // tmpfs shuffle dir + serialized shuffle writer cut the full suite's
+  // wall clock
+  lazy val spark: SparkSession = SessionTuning.session(cores = 4)
   val Sf0001 = "/root/testdata/sf0.001"
 }
 
