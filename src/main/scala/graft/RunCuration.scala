@@ -28,21 +28,12 @@ object RunCuration {
     * CLI main only adds session setup/teardown around it). Returns the
     * per-stage survivor counts and the total shuffle-write volume the
     * run generated — the number that decides whether a stage would
-    * reshuffle a 100 TB corpus or only its derived statistics.
+    * reshuffle a 100 TB corpus or only its derived statistics. The
+    * volume is the [[Metrics.record]] total over every stage the run
+    * completed, complete when this returns.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String): Summary = {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit = {
-        shuffleWrite.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (counts, rec) = Metrics.record(spark) {
       val docs = Tables(spark, sfDir).documents
       val nRaw = docs.count()
 
@@ -75,29 +66,20 @@ object RunCuration {
       Bpe.mergesTable(sampled).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/bpe_merges")
 
-      // settle: stage-completed events post asynchronously; a short
-      // quiesce keeps the shuffle total from missing the last stages
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1L
-      while (last != shuffleWrite.get() && System.nanoTime() < deadline) {
-        last = shuffleWrite.get()
-        Thread.sleep(200L)
-      }
-      Summary(nRaw, nGated, nDeduped, nSampled, shuffleWrite.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Summary(nRaw, nGated, nDeduped, nSampled, shuffleWriteBytes = 0L)
+    }
+    counts.copy(shuffleWriteBytes = rec.shuffleWriteBytes)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_curation")
     val spark = SessionTuning.session()
-    val t0 = System.nanoTime()
-    val s = run(spark, sfDir, outDir)
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (s, rec) = Metrics.record(spark)(run(spark, sfDir, outDir))
     println(f"[curation] raw=${s.raw} gated=${s.gated} " +
       f"deduped=${s.deduped} sampled=${s.sampled} " +
       f"shuffle_write_mb=${s.shuffleWriteBytes / 1e6}%.1f " +
-      f"wall_s=$secs%.1f out=$outDir")
+      f"wall_s=${rec.seconds}%.1f out=$outDir")
     spark.stop()
   }
 }

@@ -23,7 +23,9 @@ object RunStream {
     * accounting, peak streaming-state memory, and aggregate
     * shuffle-write volume (the number that decides whether a stage
     * would reshuffle a 100 TB/day stream or only its derived
-    * summaries).
+    * summaries). Shuffle volume and `wallSec` cover the streaming
+    * window — first leg started to last leg terminated — as
+    * [[Metrics.record]] measured it.
     */
   final case class FullSummary(events: Long, late: Long, dqFailed: Long,
       mainRows: Long, quarantineRows: Long,
@@ -255,17 +257,6 @@ object RunStream {
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : FullSummary = {
     import graft.streaming.{DedupStream, HeavyHitterStream, SketchStream}
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit = {
-        shuffleWrite.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // the sessionizer leg runs under RocksDB (off-heap state — the
     // measured posture for large live-user counts); session-scoped
     // conf, restored on exit
@@ -275,142 +266,143 @@ object RunStream {
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
     try {
-      val t0 = System.nanoTime()
-      def rateSource() = spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond.toString).load()
-      // graph-leg trigger: 3× the base interval (see Scaladoc), env
-      // override first so the A/B knob keeps working; a
-      // non-ProcessingTime base trigger passes through unchanged
-      val graphTrigger = sys.env.get("SPARK_GRAFT_GRAPH_TRIGGER")
-        .map(Trigger.ProcessingTime(_))
-        .getOrElse(trigger match {
-          case t: org.apache.spark.sql.execution.streaming
-              .ProcessingTimeTrigger =>
-            Trigger.ProcessingTime(s"${t.intervalMs * 3} milliseconds")
-          case other => other
-        })
-      // each leg's queries start under a leg-named FAIR pool (see
-      // Scaladoc — without one, FAIR degenerates to FIFO); the pool
-      // local property is inherited by the query's execution thread
-      // at start()
-      def inPool[T](pool: String)(body: => T): T = {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        try body
-        finally spark.sparkContext
-          .setLocalProperty("spark.scheduler.pool", null)
-      }
-
       val ceStats = new EventPipeline.RunStats(spark)
-      val qCe = inPool("graft_ce")(EventPipeline.startDualSink(
-        EventPipeline.curate(EventPipeline.parse(
-          rateSource().select(to_json(eventStruct).as("value")))),
-        s"$outDir/main", s"$outDir/quarantine", s"$outDir/ckpt_ce",
-        ceStats, trigger))
-
-      val evTypes = array(lit("view"), lit("click"), lit("purchase"),
-        lit("error"), lit("login"))
       val skStats = new SketchStream.SketchStats(spark)
-      val qSk = inPool("graft_hll")(SketchStream.start(
-        rateSource().select(col("timestamp").as("ts"),
-          element_at(evTypes, (col("value") % 5 + 1).cast("int"))
-            .as("event_type"),
-          concat(lit("u"), (col("value") % 97).cast("string"))
-            .as("user_id")),
-        s"$outDir/hll_index", s"$outDir/ckpt_hll", skStats, trigger))
-
       val ddStats = new DedupStream.DedupStats(spark)
-      val qDd = inPool("graft_dedup")(DedupStream.start(
-        docStream(rateSource()),
-        s"$outDir/corpus", s"$outDir/dd_index", s"$outDir/ckpt_dd",
-        ddStats, trigger))
-
-      // skewed symbol stream for the heavy-hitter leg: the word-salad
-      // docs are near-uniform over their vocabulary, which is exactly
-      // the distribution Misra–Gries (correctly) reports nothing for —
-      // a hot symbol ("h", 3/18 of the mass) gives the run a
-      // guaranteed survivor to assert on (symbols are first chars,
-      // the HeavyHitters fixture contract)
-      val skew = array((Seq.fill(3)("h") ++ Seq.fill(2)("w")
-        ++ "abcdefgijklmn".map(_.toString)).map(lit(_)): _*)
       val hhStats = new HeavyHitterStream.HhStats(spark)
-      val qHh = inPool("graft_hh")(HeavyHitterStream.start(
-        rateSource().select(col("value").as("doc_id"),
-          element_at(skew,
-            (pmod(xxhash64(col("value")), lit(18)) + 1).cast("int"))
-            .as("text")),
-        s"$outDir/hh_index", s"$outDir/ckpt_hh", hhStats, trigger))
-
-      // users cycle so a user's successive events arrive
-      // ~nUsers/rowsPerSecond apart (2 s at the chosen ratio) — past
-      // the 1 s gap, every revisit CLOSES the prior session, so the
-      // leg exercises the full state churn at one row per live user
-      val nUsers = math.max(rowsPerSecond.toLong * 2L, 100L)
       val sessEmitted =
         spark.sparkContext.longAccumulator("full_sessions_emitted")
-      val qSess = inPool("graft_sess")(
-        graft.streaming.SessionStream.sessions(
-          rateSource().select(
-            pmod(col("value"), lit(nUsers)).as("user_id"),
-            col("timestamp").as("ts"),
-            (pmod(col("value"), lit(100L)) / lit(10.0)).as("value")),
-          gapMs = 1000L, watermarkDelay = "5 seconds")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$outDir/ckpt_sess")
-        .trigger(trigger)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[
-             graft.streaming.SessionStream.Session], _: Long) =>
-            sessEmitted.add(b.count()); ()
-        }
-        .start())
-
-      // sixth leg: the evidence-preserving multimodal graph stream.
-      // PNG payloads ride on the twin-pair residues only (ids ≡ 0 and
-      // ≡ 7 mod 10 — the planted-duplicate rule pairs (v−7, v), so
-      // both ends of every perceptual twin carry a payload while the
-      // encode cost stays at ~20% of the doc rate)
-      import spark.implicits._
       val gStats = new graft.streaming.GraphStream.GraphStats(spark)
-      // the graph leg runs a 3× LONGER trigger than the other five
-      // (`graphTrigger` above): its per-trigger cost is dominated by
-      // fixed per-action overhead (~30 queued jobs per trigger —
-      // banding, pruned reads, decode, fp append, relabel — each
-      // waiting its turn on the executor pool the other legs share),
-      // so fewer, larger batches amortize the queue tax; its artifacts
-      // are indexes and evidence, not latency-sensitive sinks
-      // (measured: SCALING.md "Six-leg composition", r16)
-      val qGr = inPool("graft_graph")(graft.streaming.GraphStream.start(
-        docStream(rateSource()).as[(Long, String)].map { case (id, t) =>
-          (id, t,
-            if (id % 10 == 0 || id % 10 == 7)
-              graft.ext.Multimodal.pngHashPayload(id)
-            else null)
-        }.toDF("doc_id", "text", "image_payload"),
-        s"$outDir/corpus_g", s"$outDir/bands_g", s"$outDir/graph_g",
-        s"$outDir/ckpt_g", gStats, graphTrigger,
-        mediaLegs = Seq(graft.streaming.GraphStream.MediaLeg(
-          "image_payload", "image",
-          graft.ext.Multimodal.imageFpFromPayload(_))),
-        fpIndexPath = Some(s"$outDir/fp_g"),
-        // same opt-in per-ingest health monitor as the graph modes
-        auditTouched =
-          sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")))
+      val ((queries, qSess), rec) = Metrics.record(spark) {
+        def rateSource() = spark.readStream.format("rate")
+          .option("rowsPerSecond", rowsPerSecond.toString).load()
+        // graph-leg trigger: 3× the base interval (see Scaladoc), env
+        // override first so the A/B knob keeps working; a
+        // non-ProcessingTime base trigger passes through unchanged
+        val graphTrigger = sys.env.get("SPARK_GRAFT_GRAPH_TRIGGER")
+          .map(Trigger.ProcessingTime(_))
+          .getOrElse(trigger match {
+            case t: org.apache.spark.sql.execution.streaming
+                .ProcessingTimeTrigger =>
+              Trigger.ProcessingTime(s"${t.intervalMs * 3} milliseconds")
+            case other => other
+          })
+        // each leg's queries start under a leg-named FAIR pool (see
+        // Scaladoc — without one, FAIR degenerates to FIFO); the pool
+        // local property is inherited by the query's execution thread
+        // at start()
+        def inPool[T](pool: String)(body: => T): T = {
+          spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+          try body
+          finally spark.sparkContext
+            .setLocalProperty("spark.scheduler.pool", null)
+        }
 
-      val queries = Seq(qCe, qSk, qDd, qHh, qSess, qGr)
-      Thread.sleep(seconds * 1000L)
-      // the graph leg's first trigger is the composition's longest
-      // (banding + decode + fp append + relabel, cold, under five
-      // competing streams): grant it a bounded grace window to land
-      // its first commit, or the run reports an empty graph and the
-      // interrupted trigger reads as a bootstrap crash window (real,
-      // replay-recoverable — but not what a measurement run is for)
-      val grace = System.nanoTime() + 90e9.toLong
-      while (gStats.lastCommitted < 0L && System.nanoTime() < grace)
-        Thread.sleep(500L)
-      queries.foreach(q => if (q.isActive) q.stop())
-      queries.foreach(_.awaitTermination())
-      val wall = (System.nanoTime() - t0) / 1e9
+        val qCe = inPool("graft_ce")(EventPipeline.startDualSink(
+          EventPipeline.curate(EventPipeline.parse(
+            rateSource().select(to_json(eventStruct).as("value")))),
+          s"$outDir/main", s"$outDir/quarantine", s"$outDir/ckpt_ce",
+          ceStats, trigger))
+
+        val evTypes = array(lit("view"), lit("click"), lit("purchase"),
+          lit("error"), lit("login"))
+        val qSk = inPool("graft_hll")(SketchStream.start(
+          rateSource().select(col("timestamp").as("ts"),
+            element_at(evTypes, (col("value") % 5 + 1).cast("int"))
+              .as("event_type"),
+            concat(lit("u"), (col("value") % 97).cast("string"))
+              .as("user_id")),
+          s"$outDir/hll_index", s"$outDir/ckpt_hll", skStats, trigger))
+
+        val qDd = inPool("graft_dedup")(DedupStream.start(
+          docStream(rateSource()),
+          s"$outDir/corpus", s"$outDir/dd_index", s"$outDir/ckpt_dd",
+          ddStats, trigger))
+
+        // skewed symbol stream for the heavy-hitter leg: the word-salad
+        // docs are near-uniform over their vocabulary, which is exactly
+        // the distribution Misra–Gries (correctly) reports nothing for —
+        // a hot symbol ("h", 3/18 of the mass) gives the run a
+        // guaranteed survivor to assert on (symbols are first chars,
+        // the HeavyHitters fixture contract)
+        val skew = array((Seq.fill(3)("h") ++ Seq.fill(2)("w")
+          ++ "abcdefgijklmn".map(_.toString)).map(lit(_)): _*)
+        val qHh = inPool("graft_hh")(HeavyHitterStream.start(
+          rateSource().select(col("value").as("doc_id"),
+            element_at(skew,
+              (pmod(xxhash64(col("value")), lit(18)) + 1).cast("int"))
+              .as("text")),
+          s"$outDir/hh_index", s"$outDir/ckpt_hh", hhStats, trigger))
+
+        // users cycle so a user's successive events arrive
+        // ~nUsers/rowsPerSecond apart (2 s at the chosen ratio) — past
+        // the 1 s gap, every revisit CLOSES the prior session, so the
+        // leg exercises the full state churn at one row per live user
+        val nUsers = math.max(rowsPerSecond.toLong * 2L, 100L)
+        val qSess = inPool("graft_sess")(
+          graft.streaming.SessionStream.sessions(
+            rateSource().select(
+              pmod(col("value"), lit(nUsers)).as("user_id"),
+              col("timestamp").as("ts"),
+              (pmod(col("value"), lit(100L)) / lit(10.0)).as("value")),
+            gapMs = 1000L, watermarkDelay = "5 seconds")
+          .writeStream
+          .outputMode("append")
+          .option("checkpointLocation", s"$outDir/ckpt_sess")
+          .trigger(trigger)
+          .foreachBatch {
+            (b: org.apache.spark.sql.Dataset[
+               graft.streaming.SessionStream.Session], _: Long) =>
+              sessEmitted.add(b.count()); ()
+          }
+          .start())
+
+        // sixth leg: the evidence-preserving multimodal graph stream.
+        // PNG payloads ride on the twin-pair residues only (ids ≡ 0 and
+        // ≡ 7 mod 10 — the planted-duplicate rule pairs (v−7, v), so
+        // both ends of every perceptual twin carry a payload while the
+        // encode cost stays at ~20% of the doc rate)
+        import spark.implicits._
+        // the graph leg runs a 3× LONGER trigger than the other five
+        // (`graphTrigger` above): its per-trigger cost is dominated by
+        // fixed per-action overhead (~30 queued jobs per trigger —
+        // banding, pruned reads, decode, fp append, relabel — each
+        // waiting its turn on the executor pool the other legs share),
+        // so fewer, larger batches amortize the queue tax; its artifacts
+        // are indexes and evidence, not latency-sensitive sinks
+        // (measured: SCALING.md "Six-leg composition", r16)
+        val qGr = inPool("graft_graph")(graft.streaming.GraphStream.start(
+          docStream(rateSource()).as[(Long, String)].map { case (id, t) =>
+            (id, t,
+              if (id % 10 == 0 || id % 10 == 7)
+                graft.ext.Multimodal.pngHashPayload(id)
+              else null)
+          }.toDF("doc_id", "text", "image_payload"),
+          s"$outDir/corpus_g", s"$outDir/bands_g", s"$outDir/graph_g",
+          s"$outDir/ckpt_g", gStats, graphTrigger,
+          mediaLegs = Seq(graft.streaming.GraphStream.MediaLeg(
+            "image_payload", "image",
+            graft.ext.Multimodal.imageFpFromPayload(_))),
+          fpIndexPath = Some(s"$outDir/fp_g"),
+          // same opt-in per-ingest health monitor as the graph modes
+          auditTouched =
+            sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")))
+
+        val queries = Seq(qCe, qSk, qDd, qHh, qSess, qGr)
+        Thread.sleep(seconds * 1000L)
+        // the graph leg's first trigger is the composition's longest
+        // (banding + decode + fp append + relabel, cold, under five
+        // competing streams): grant it a bounded grace window to land
+        // its first commit, or the run reports an empty graph and the
+        // interrupted trigger reads as a bootstrap crash window (real,
+        // replay-recoverable — but not what a measurement run is for)
+        val grace = System.nanoTime() + 90e9.toLong
+        while (gStats.lastCommitted < 0L && System.nanoTime() < grace)
+          Thread.sleep(500L)
+        queries.foreach(q => if (q.isActive) q.stop())
+        queries.foreach(_.awaitTermination())
+        (queries, qSess)
+      }
       val stateMax = queries.flatMap(_.recentProgress)
         .map(p => p.stateOperators.map(_.memoryUsedBytes).sum)
         .foldLeft(0L)(math.max)
@@ -450,7 +442,7 @@ object RunStream {
         graphRoutedAppends = gStats.routedAppends.value,
         graphMaxTouchedRatio = gStats.maxTouchedRatio,
         stateBytesMax = stateMax,
-        shuffleWriteBytes = shuffleWrite.get(), wallSec = wall)
+        shuffleWriteBytes = rec.shuffleWriteBytes, wallSec = rec.seconds)
       // post-run maintenance, AFTER the summary's row accounting (a
       // compaction folds any uncommitted in-flight partition into -1,
       // which would shift the committed-only counts): all six streams
@@ -492,7 +484,6 @@ object RunStream {
         graft.ext.CorpusGraph.maintainPairs(spark, s"$outDir/graph_g"))
       summary
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       priorProvider match {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)

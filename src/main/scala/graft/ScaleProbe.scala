@@ -7,12 +7,33 @@ import graft.ext.{Dedup, Similarity, TextAnalysis}
 
 /** Scale probe ("measure, don't guess"): synthesize an N-doc corpus with
   * planted near-dups entirely as column expressions (no fixture bound),
-  * then time the heavy ext operators at increasing N. Results recorded
-  * in SCALING.md.
+  * then time the heavy ext operators at increasing N. Every timing goes
+  * through [[Metrics.record]]. Results recorded in SCALING.md.
   *
   * `sbt "runMain graft.ScaleProbe 50000 200000"`
   */
 object ScaleProbe {
+
+  /** `f`'s value and wall seconds, timed by [[Metrics.record]]. */
+  private def timed[T](spark: SparkSession)(f: => T): (T, Double) = {
+    val (v, run) = Metrics.record(spark)(f)
+    (v, run.seconds)
+  }
+
+  /** Wall seconds of `f`, timed by [[Metrics.record]]. */
+  private def secondsOf(spark: SparkSession)(f: => Any): Double =
+    timed(spark)(f)._2
+
+  /** Timed rows of a per-operator sweep: `time(name) { f }` prints
+    * `head name seconds field=f`, the name padded to `width`.
+    */
+  private final class TimedRows(spark: SparkSession, head: String,
+      width: Int, field: String = "rows") {
+    def apply(name: String)(f: => Long): Unit = {
+      val (v, secs) = timed(spark)(f)
+      println(s"$head %-${width}s %7.2fs $field=$v".format(name, secs))
+    }
+  }
 
   /** Deterministic word-salad corpus: ~55-word docs over a 30-word
     * vocabulary; ids ≡ 1 (mod 17) mirror the previous id's text with one
@@ -67,9 +88,8 @@ object ScaleProbe {
       .groupBy(_.getLong(0)).map { case (q, rs) =>
         q -> rs.map(_.getLong(1)).toSet }
     def report(name: String, df: DataFrame, params: String): Unit = {
-      val t0 = System.nanoTime()
-      val rows = df.select("q_id", "vec_id", "n_candidates").collect()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (rows, secs) =
+        timed(spark)(df.select("q_id", "vec_id", "n_candidates").collect())
       val byQ = rows.groupBy(_.getLong(0))
       val recall = truth.map { case (q, t) =>
         byQ.get(q).fold(0.0)(
@@ -128,17 +148,15 @@ object ScaleProbe {
   def lshSkewProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
     val buckets = Dedup.bandTable(docs)
       .groupBy("band_idx", "band_hash").count()
       .persist()
-    val stats = buckets.agg(
+    val (stats, secs) = timed(spark)(buckets.agg(
       count(lit(1)).as("buckets"),
       max("count").as("max"),
       avg("count").as("avg"),
       expr("percentile_approx(count, 0.99, 10000)").as("p99"),
-      sum(expr("count * (count - 1) / 2")).as("cand_pairs")).head()
-    val secs = (System.nanoTime() - t0) / 1e9
+      sum(expr("count * (count - 1) / 2")).as("cand_pairs")).head())
     val top = buckets.orderBy(col("count").desc).limit(5)
       .collect().map(_.getAs[Long]("count")).mkString(",")
     println(f"[scale-lsh] n=$n%-8d band_time=$secs%6.1fs " +
@@ -167,19 +185,17 @@ object ScaleProbe {
       pmod(xxhash64(col("id"), lit(1)), lit(n * 10)).as("rts"),
       col("id").as("rid")).persist()
     left.count(); right.count()
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      val secs = (System.nanoTime() - t0) / 1e9
+    def report(name: String, timedRows: (Long, Double)): Unit = {
+      val (rows, secs) = timedRows
       println(f"[scale-joins] n=$n%-8d $name%-14s $secs%7.2fs rows=$rows " +
         f"(${n / secs / 1e6}%.1f M left rows/s)")
     }
-    time("asof") {
+    report("asof", timed(spark) {
       // aggregate OVER the matched payload: a bare count() would let
       // Catalyst prune the window away and time only the union
       AsOfJoin.backward(left, right, Seq("k"), "lts", "rts", Seq("rts"))
         .agg(count(col("asof_rts"))).head().getLong(0)
-    }
+    })
     // keyless range join: n/200 intervals of FIXED ~2000-tick width over
     // a 0.1 points/tick domain — ~200 matches per interval, output ~n
     // (fixed window length is the realistic shape; width scaling with
@@ -190,12 +206,12 @@ object ScaleProbe {
       .withColumn("e", col("s") + pmod(xxhash64(col("iv_id")), lit(4000L)))
       .persist()
     intervals.count()
-    time("range") {
+    report("range", timed(spark) {
       RangeJoin.pointInInterval(
           left.select(col("lts").as("v"), col("lid")), intervals,
           "v", "s", "e", bucketWidth = 4000L)
         .count()
-    }
+    })
     left.unpersist(); right.unpersist(); intervals.unpersist()
     spark.catalog.clearCache()
   }
@@ -239,11 +255,6 @@ object ScaleProbe {
     import graft.ext.ProductQuant
     val emb = synthEmbeddings(spark, n).persist()
     emb.count()
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val truth = Similarity.topKBruteForce(emb)
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).map { case (q, rs) =>
@@ -256,19 +267,19 @@ object ScaleProbe {
       }.sum / truth.size
     }
     // fixture config: K=16 full-corpus training, fixed shortlist
-    val (cbs, trainS) = timed(ProductQuant.trainCodebooks(emb))
-    val (_, encodeS) = timed {
+    val (cbs, trainS) = timed(spark)(ProductQuant.trainCodebooks(emb))
+    val (_, encodeS) = timed(spark) {
       emb.select(ProductQuant.encodeExpr(
         col("embedding").cast("array<double>"), cbs).as("c"))
         .select(max(element_at(col("c"), 1))).head()
     }
-    val (pqRows, searchS) = timed(
+    val (pqRows, searchS) = timed(spark)(
       ProductQuant.topKPq(emb).select("q_id", "vec_id").collect())
     println(f"[scale-pq] n=$n%-8d cfg=K16      train=$trainS%7.2fs " +
       f"encode=$encodeS%6.2fs (${n / encodeS / 1e6}%.2f M vec/s) " +
       f"search=$searchS%7.2fs recall@5=${recallOf(pqRows)}%.3f")
     // scaled config: sample-trained K=codebookKFor(n), scaled shortlist
-    val (scRows, scS) = timed(
+    val (scRows, scS) = timed(spark)(
       ProductQuant.topKPqScaled(emb).select("q_id", "vec_id").collect())
     println(f"[scale-pq] n=$n%-8d cfg=scaled   " +
       f"K=${ProductQuant.codebookKFor(n)}%-4d " +
@@ -289,7 +300,7 @@ object ScaleProbe {
           rs => rs.count(r => t(r.getLong(1))).toDouble / t.size)
       }.sum / truthS.size
     }
-    val (stRows, stS) = timed(
+    val (stRows, stS) = timed(spark)(
       ProductQuant.topKPqScaled(embS).select("q_id", "vec_id").collect())
     println(f"[scale-pq] n=$n%-8d cfg=lowrank  " +
       f"K=${ProductQuant.codebookKFor(n)}%-4d " +
@@ -312,19 +323,13 @@ object ScaleProbe {
     val cells = Similarity.ivfCellsFor(n)
     val nProbe = Similarity.ivfProbesFor(cells)
     val path = s"/tmp/graft_scaleprobe_ivf_$n"
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val buildS = timed(Similarity.writeIvfIndex(emb, path, cells))
-    val inflightS = timed {
-      Similarity.topKIvfHier(emb, cells, nProbe).count(); ()
-    }
-    val servedS = timed {
-      Similarity.topKIvfServed(spark, path, nProbe).count(); ()
-    }
-    val served2S = timed {
-      Similarity.topKIvfServed(spark, path, nProbe).count(); ()
-    }
+    val buildS = secondsOf(spark)(Similarity.writeIvfIndex(emb, path, cells))
+    val inflightS =
+      secondsOf(spark)(Similarity.topKIvfHier(emb, cells, nProbe).count())
+    val servedS =
+      secondsOf(spark)(Similarity.topKIvfServed(spark, path, nProbe).count())
+    val served2S =
+      secondsOf(spark)(Similarity.topKIvfServed(spark, path, nProbe).count())
     println(f"[scale-ivf] n=$n%-8d cells=$cells nprobe=$nProbe " +
       f"build=$buildS%7.2fs inflight_query=$inflightS%7.2fs " +
       f"served_query=$servedS%6.2fs served_query2=$served2S%6.2fs " +
@@ -354,22 +359,20 @@ object ScaleProbe {
     val path = s"/tmp/graft_scaleprobe_ivfrb_$n"
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(path))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val buildS = timed(Similarity.writeIvfIndex(emb, path, cells))
+    val buildS = secondsOf(spark)(Similarity.writeIvfIndex(emb, path, cells))
     // append a 1% drifted batch, then rebuild over base + batch
     val batch = synthEmbeddings(spark, n / 100)
       .select((col("vec_id") + n * 2).as("vec_id"), col("label"),
         transform(col("embedding").cast("array<double>"),
           x => x + lit(0.25)).as("embedding"))
-    val appendS = timed(
+    val appendS = secondsOf(spark)(
       Similarity.appendToIvfIndex(batch, path, batchId = 1L))
-    val rebuildS = timed { Similarity.rebuildIvfIndex(spark, path, cells); () }
-    val rebuild2S = timed { Similarity.rebuildIvfIndex(spark, path, cells); () }
-    val servedS = timed {
-      Similarity.topKIvfServed(spark, path, nProbe).count(); ()
-    }
+    val rebuildS =
+      secondsOf(spark)(Similarity.rebuildIvfIndex(spark, path, cells))
+    val rebuild2S =
+      secondsOf(spark)(Similarity.rebuildIvfIndex(spark, path, cells))
+    val servedS =
+      secondsOf(spark)(Similarity.topKIvfServed(spark, path, nProbe).count())
     println(f"[scale-ivfrebuild] n=$n%-8d cells=$cells " +
       f"build=$buildS%7.2fs append_1pct=$appendS%6.2fs " +
       f"rebuild=$rebuildS%7.2fs (${rebuildS / buildS}%.2fx build) " +
@@ -408,16 +411,14 @@ object ScaleProbe {
     Seq(root, root2).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(p)))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val buildS = timed(CorpusGraph.write(base, root))
+    val buildS = secondsOf(spark)(CorpusGraph.write(base, root))
     // 10k new docs, each bridging into a distinct standing component
     val b = math.min(10000L, n / 4)
     val batch = spark.range(b).select(
       (col("id") * 4).as("doc_a"), (lit(n) + col("id")).as("doc_b"),
       modOf(col("id")).as("modality"))
-    val appendS = timed(CorpusGraph.append(spark, root, batch, 1L))
+    val appendS =
+      secondsOf(spark)(CorpusGraph.append(spark, root, batch, 1L))
     // the per-ingest monitor: touched-scope stale audit over the
     // batch's own endpoints — priced by the touched components, vs the
     // full audit (≈ a rebuild) timed at the end of this probe
@@ -426,7 +427,7 @@ object ScaleProbe {
     var touched = CorpusGraph.TouchedAudit(-1L, -1L, -1L, 0, false)
     val auditTouchedS =
       if (sys.env.contains("SPARK_GRAFT_SKIP_TOUCHED_AUDIT")) -1.0
-      else timed {
+      else secondsOf(spark) {
         // scoped: the audit is a monitor — its scratch frames must not
         // ride into the next phase's memory envelope
         graft.ext.Scratch.scopedAll {
@@ -434,7 +435,7 @@ object ScaleProbe {
             CorpusGraph.staleLabelCountTouched(spark, root, batchIds)
         }
       }
-    val rebuildS = timed(
+    val rebuildS = secondsOf(spark)(
       CorpusGraph.write(base.unionByName(batch), root2))
     val inc = CorpusGraph.readLabels(spark, root)
     val reb = CorpusGraph.readLabels(spark, root2)
@@ -448,21 +449,17 @@ object ScaleProbe {
     import spark.implicits._
     val smallIds = spark.range(50L.min(n / 256))
       .select((col("id") * 256 + 1).as("doc_id"))
-    var small: CorpusGraph.GraphPurge = null
-    val smallS = timed {
-      small = CorpusGraph.purge(spark, root, smallIds, audit = false)
-    }
+    val (small, smallS) = timed(spark)(
+      CorpusGraph.purge(spark, root, smallIds, audit = false))
     // then 2k bridge docs spread across every bucket (each removal
     // splits its component); the full-recompute audit runs on its own
     // clock
     val purgeIds = spark.range(2000L.min(n / 4))
       .select((col("id") * 4 + 1).as("doc_id"))
-    var out: CorpusGraph.GraphPurge = null
-    val purgeS = timed {
-      out = CorpusGraph.purge(spark, root, purgeIds, audit = false)
-    }
-    var stale = -1L
-    val auditS = timed { stale = CorpusGraph.staleLabelCount(spark, root) }
+    val (out, purgeS) = timed(spark)(
+      CorpusGraph.purge(spark, root, purgeIds, audit = false))
+    val (stale, auditS) =
+      timed(spark)(CorpusGraph.staleLabelCount(spark, root))
     println(f"[scale-graph] n=$n%-8d pairs=${n * 3 / 4}%-9d " +
       f"build=$buildS%7.1fs append_10k=$appendS%6.1fs " +
       f"auditTouched=$auditTouchedS%6.1fs " +
@@ -532,10 +529,8 @@ object ScaleProbe {
         val addressed = hit
           .map(bk => dirStats(s"$dir/index/band_bucket=$bk")._1).sum
         val stats = new DedupStream.DedupStats(spark)
-        val t0 = System.nanoTime()
-        DedupStream.processBatch(batch, 2L, s"$dir/corpus",
-          s"$dir/index", stats)
-        val wall = (System.nanoTime() - t0) / 1e9
+        val wall = secondsOf(spark)(DedupStream.processBatch(batch, 2L,
+          s"$dir/corpus", s"$dir/index", stats))
         println(f"[scale-streamread] n=$n%-8d B=$b%-6d ($tag) " +
           f"index=${idxBytes / 1e6}%7.1fMB files=$idxFiles%-5d " +
           f"hitBuckets=${hit.size}%-5d " +
@@ -597,21 +592,18 @@ object ScaleProbe {
             .withColumn("doc_id", col("doc_id") + lit(4 * n))
           val stats = new DedupStream.DedupStats(spark)
           stats.lastCommitted = id - 1
-          val t0 = System.nanoTime()
-          DedupStream.processBatch(batch, id, s"$dir/corpus",
-            s"$dir/index", stats)
-          (System.nanoTime() - t0) / 1e9
+          secondsOf(spark)(DedupStream.processBatch(batch, id,
+            s"$dir/corpus", s"$dir/index", stats))
         }
         val trig = trigger(100L)
         val report = BatchIndex.layoutReport(spark, s"$dir/index",
           "band_bucket", b)
         // compaction recovery, priced on the worst layout only
         val (compactS, trigAfter) =
-          if (levels == 32) {
-            val t0 = System.nanoTime()
-            DedupStream.compactIndex(spark, s"$dir/index")
-            ((System.nanoTime() - t0) / 1e9, trigger(101L))
-          } else (-1.0, -1.0)
+          if (levels == 32)
+            (secondsOf(spark)(DedupStream.compactIndex(spark, s"$dir/index")),
+              trigger(101L))
+          else (-1.0, -1.0)
         println(f"[scale-levels] n=$n%-8d B=$b%-6d L=$levels%-4d " +
           f"files=$idxFiles%-7d sizeMB=${idxBytes / 1e6}%7.1f " +
           f"trigger=$trig%6.2fs " +
@@ -660,20 +652,16 @@ object ScaleProbe {
       def trigger(id: Long, off: Long): Double = {
         val stats = new DedupStream.DedupStats(spark)
         stats.lastCommitted = id - 1
-        val t = System.nanoTime()
-        DedupStream.processBatch(
+        secondsOf(spark)(DedupStream.processBatch(
           synthDocs(spark, 50).withColumn("doc_id",
             col("doc_id") + lit(off)),
-          id, s"$dir/corpus", s"$dir/index", stats)
-        (System.nanoTime() - t) / 1e9
+          id, s"$dir/corpus", s"$dir/index", stats))
       }
       val trigRowRule = trigger(2L, 5 * n)
       // resize to the byte rule's B from the MEASURED index bytes
       val newB = BatchIndex.autoBucketCountBytes(szBytes, 64L)
-      val t0 = System.nanoTime()
-      BatchIndex.rebucket(spark, s"$dir/index", "band_bucket", newB,
-        DedupStream.bandBucketAt)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = secondsOf(spark)(BatchIndex.rebucket(spark,
+        s"$dir/index", "band_bucket", newB, DedupStream.bandBucketAt))
       val (szBytes2, szFiles2) = dirStats(s"$dir/index")
       val trigByteRule = trigger(3L, 6 * n)
       println(f"[scale-rebucket] n=$n%-8d rows=${4 * n}%-9d " +
@@ -729,12 +717,9 @@ object ScaleProbe {
             concat_ws(" ", (0 until 45).map(p =>
               concat(lit("w"), pmod(xxhash64(col("id"), lit(p)),
                 lit(1000000L)))): _*).as("text"))
-        def timed(f: => Unit): Double = {
-          val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-        }
-        val tA = timed(DedupStream.processBatch(docs, i.toLong,
+        val tA = secondsOf(spark)(DedupStream.processBatch(docs, i.toLong,
           s"$withRoot/corpus", s"$withRoot/index", sA))
-        val tB = timed(DedupStream.processBatch(docs, i.toLong,
+        val tB = secondsOf(spark)(DedupStream.processBatch(docs, i.toLong,
           s"$noRoot/corpus", s"$noRoot/index", sB))
         // the wired cadence, between batches (the stream-stopped seam)
         val m = DedupStream.maintain(spark, s"$withRoot/index")
@@ -836,12 +821,8 @@ object ScaleProbe {
       def direct(): Long = BatchIndex.readBeforeBuckets(spark, dir,
         levels, cols, empty, "band_bucket", hit).count()
       def median3(f: () => Long): (Double, Long) = {
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          val c = f()
-          ((System.nanoTime() - t0) / 1e9, c)
-        }
-        (runs.map(_._1).sorted.apply(1), runs.head._2)
+        val runs = (1 to 3).map(_ => timed(spark)(f()))
+        (runs.map(_._2).sorted.apply(1), runs.head._1)
       }
       // DIRECT first, COLD (no warmup): every page-cache/dentry byte
       // the legacy run then re-reads is warm — the bias runs AGAINST
@@ -851,9 +832,7 @@ object ScaleProbe {
       // all B × L dirs) runs MINUTES; a median would triple a cost
       // the number's magnitude already makes unambiguous.
       val (tDirect, cDirect) = median3(() => direct())
-      val t0L = System.nanoTime()
-      val cLegacy = legacy()
-      val tLegacy = (System.nanoTime() - t0L) / 1e9
+      val (cLegacy, tLegacy) = timed(spark)(legacy())
       assert(cLegacy == cDirect,
         s"direct read lost rows: $cDirect vs $cLegacy")
       println(f"[scale-listing] B=$b levels=$levels " +
@@ -882,9 +861,6 @@ object ScaleProbe {
     Seq(root, root2).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(p)))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // SPARK_GRAFT_STAR_BG scales the untouched background (chain docs
     // ≈ bg × n), setting the probe's touched-members/graph-members
     // ratio to ≈ 1/(1+bg) — the knob that locates the append-vs-full-
@@ -896,7 +872,7 @@ object ScaleProbe {
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"),
         lit("text").as("modality"))
     val base = star.unionByName(chains)
-    val buildS = timed(CorpusGraph.write(base, root))
+    val buildS = secondsOf(spark)(CorpusGraph.write(base, root))
     // twin root with identical on-disk state: the bounded and routed
     // append paths must start from the same graph to compare fairly
     // (an append mutates its root; a replay would find the labels
@@ -923,13 +899,13 @@ object ScaleProbe {
     // is documented at these sizes) must not strand the global routing
     // seams at the forced values for every later probe size in the JVM
     try {
-      appendS = timed {
+      appendS = secondsOf(spark) {
         CorpusGraph.routeFraction = Double.MaxValue
         boundedReport = CorpusGraph.append(spark, root, batch, 1L)
       }
       // routed path on the twin root: force the full-relabel route (the
       // decision the production fraction makes at this measured ratio)
-      appendRoutedS = timed {
+      appendRoutedS = secondsOf(spark) {
         CorpusGraph.routeFraction = 0.0
         CorpusGraph.routeMinMembers = 0L
         routedReport = CorpusGraph.append(spark, rootR, batch, 1L)
@@ -940,7 +916,7 @@ object ScaleProbe {
     }
     val memberRatio = boundedReport.touchedMembers.toDouble /
       math.max(routedReport.graphMembers, 1L)
-    val rebuildS = timed(
+    val rebuildS = secondsOf(spark)(
       CorpusGraph.write(base.unionByName(batch), root2))
     val mismatch = CorpusGraph.readLabels(spark, root)
       .join(CorpusGraph.readLabels(spark, root2),
@@ -959,15 +935,10 @@ object ScaleProbe {
       new java.io.File(rootR))
     // hub takedown: the star's pair rows all touch doc 0, so the
     // component splits to singletons and ~n label rows drop
-    var out: CorpusGraph.GraphPurge = null
-    val purgeS = timed {
-      out = CorpusGraph.purge(spark, root, Seq(0L).toDF("doc_id"),
-        audit = false)
-    }
-    var stale = -1L
-    val auditS = timed {
-      stale = CorpusGraph.staleLabelCount(spark, root)
-    }
+    val (out, purgeS) = timed(spark)(
+      CorpusGraph.purge(spark, root, Seq(0L).toDF("doc_id"), audit = false))
+    val (stale, auditS) =
+      timed(spark)(CorpusGraph.staleLabelCount(spark, root))
     println(f"[scale-graphstar] n=$n%-8d starPairs=${n - 1}%-9d " +
       f"build=$buildS%7.1fs append_10k=$appendS%6.1fs " +
       f"appendRouted=$appendRoutedS%6.1fs " +
@@ -996,12 +967,7 @@ object ScaleProbe {
   def spanProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val v = f
-      println(f"[scale-spans] n=$n%-8d $name%-18s " +
-        f"${(System.nanoTime() - t0) / 1e9}%7.2fs agg=$v")
-    }
+    val time = new TimedRows(spark, f"[scale-spans] n=$n%-8d", 18, "agg")
     time("dup_span_report") {
       Dedup.dupSpanReport(docs).agg(sum("dup_spans")).head().getLong(0)
     }
@@ -1019,11 +985,7 @@ object ScaleProbe {
     import graft.ext.Winnow
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"[winnow] n=$n%-8d $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-    }
+    val time = new TimedRows(spark, f"[winnow] n=$n%-8d", 22)
     time("fingerprints") {
       // read the aggregate VALUE — count() would let column pruning
       // drop the fingerprint computation entirely
@@ -1042,14 +1004,11 @@ object ScaleProbe {
   def bpeTokProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
-    val merges = graft.ext.Bpe.trainMerges(
-      synthDocs(spark, math.min(n, 100000L)), k = 32)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val toks = graft.ext.Bpe.tokenizeReport(docs, merges)
-      .agg(sum(col("n_bpe_tokens"))).head().getLong(0)
-    val tApply = (System.nanoTime() - t1) / 1e9
+    val (merges, tTrain) = timed(spark)(graft.ext.Bpe.trainMerges(
+      synthDocs(spark, math.min(n, 100000L)), k = 32))
+    val (toks, tApply) = timed(spark)(
+      graft.ext.Bpe.tokenizeReport(docs, merges)
+        .agg(sum(col("n_bpe_tokens"))).head().getLong(0))
     println(f"[bpetok] n=$n%-8d train(k=32)=$tTrain%7.2fs apply=$tApply%7.2fs" +
       f" tokens=$toks (${toks / tApply / 1e6}%.1f M tok/s)")
     docs.unpersist()
@@ -1064,19 +1023,15 @@ object ScaleProbe {
   def curationProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
-    val feats = graft.ext.Curation.dsirWeights(docs)
-      .agg(sum("n_feats")).head().getLong(0)
-    val tDsir = (System.nanoTime() - t0) / 1e9
+    val (feats, tDsir) = timed(spark)(graft.ext.Curation.dsirWeights(docs)
+      .agg(sum("n_feats")).head().getLong(0))
     println(f"[curation] n=$n%-8d dsir=$tDsir%7.2fs " +
       f"bigrams=$feats (${feats / tDsir / 1e6}%.1f M feats/s)")
     docs.unpersist()
     val emb = synthEmbeddings(spark, math.max(n / 10, 2000)).persist()
     val ne = emb.count()
-    val t1 = System.nanoTime()
-    val flagged = graft.ext.Curation
-      .semanticDecontam(emb, nBench = 1000, tau = 0.95).count()
-    val tSem = (System.nanoTime() - t1) / 1e9
+    val (flagged, tSem) = timed(spark)(graft.ext.Curation
+      .semanticDecontam(emb, nBench = 1000, tau = 0.95).count())
     println(f"[curation] vecs=$ne%-8d semantic_decontam(bench=1000)=" +
       f"$tSem%7.2fs flagged=$flagged " +
       f"(${(ne - 1000) * 1000 / tSem / 1e6}%.1f M pairs/s)")
@@ -1094,17 +1049,13 @@ object ScaleProbe {
   def overlapProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
     val exact = graft.ext.Curation.sourceOverlap(docs)
       .select(col("source_a"), col("source_b"), col("jaccard")).persist()
-    val nPairsExact = exact.count()
-    val tExact = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
+    val (nPairsExact, tExact) = timed(spark)(exact.count())
     val approx = graft.ext.Curation.sourceOverlapApprox(docs)
       .select(col("source_a"), col("source_b"), col("jaccard_est"))
       .persist()
-    val nPairsApprox = approx.count()
-    val tApprox = (System.nanoTime() - t1) / 1e9
+    val (nPairsApprox, tApprox) = timed(spark)(approx.count())
     val fullGrams = docs.select(col("source"),
         explode(graft.ext.TextAnalysis.shingles(col("text"))).as("g"))
       .distinct().count()
@@ -1141,9 +1092,8 @@ object ScaleProbe {
         col("key").substr(lit(5), length(col("key")))).as("key"))
       .persist()
     val (nc, nd) = (clean.count(), dirty.count())
-    val t0 = System.nanoTime()
-    val links = graft.operators.FuzzyLink.linkage(clean, dirty).count()
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (links, secs) =
+      timed(spark)(graft.operators.FuzzyLink.linkage(clean, dirty).count())
     println(f"[link] clean=$nc%-8d dirty=$nd%-7d links=$links " +
       f"time=$secs%6.1fs (${nc / secs / 1000}%.0f k keys/s)")
     clean.unpersist(); dirty.unpersist()
@@ -1163,16 +1113,11 @@ object ScaleProbe {
   def capProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    def timed(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val key = "spark.sql.optimizer.windowGroupLimitThreshold"
     spark.conf.set(key, -1)
-    val (r1, t1) = timed(graft.ext.Curation.sourceCap(docs).count())
+    val (r1, t1) = timed(spark)(graft.ext.Curation.sourceCap(docs).count())
     spark.conf.set(key, 1000) // Spark default
-    val (r2, t2) = timed(graft.ext.Curation.sourceCap(docs).count())
+    val (r2, t2) = timed(spark)(graft.ext.Curation.sourceCap(docs).count())
     require(r1 == r2, s"pushdown changed the result: $r1 vs $r2")
     val plan = graft.ext.Curation.sourceCap(docs)
       .queryExecution.executedPlan.toString
@@ -1215,12 +1160,7 @@ object ScaleProbe {
     import graft.report.Analytics
     val events = synthEvents(spark, n).persist()
     events.count() // materialize outside the timings
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"[scale-events] n=$n%-9d $name%-18s " +
-        f"${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-    }
+    val time = new TimedRows(spark, f"[scale-events] n=$n%-9d", 18)
     val curated = Enrich.curated(events)
     time("curated") { curated.count() }
     time("dq_suite") {
@@ -1242,12 +1182,7 @@ object ScaleProbe {
   def statsProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"[scale-stats] n=$n%-9d $name%-22s " +
-        f"${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-    }
+    val time = new TimedRows(spark, f"[scale-stats] n=$n%-9d", 22)
     time("pmi_collocations") {
       graft.ext.TextAnalysis.pmiCollocations(docs).count()
     }
@@ -1283,32 +1218,6 @@ object ScaleProbe {
     docs.unpersist()
   }
 
-  /** Total input-file bytes read by `f`, via a stage listener (the
-    * probe corpora are `spark.range`-synthesized, so file input == the
-    * persisted index — the quantity the served contract bounds).
-    */
-  private def fileBytesRead(spark: SparkSession)(f: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit = {
-        acc.addAndGet(s.stageInfo.taskMetrics.inputMetrics.bytesRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1L
-      while (last != acc.get() && System.nanoTime() < deadline) {
-        last = acc.get(); Thread.sleep(200L)
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def dirStats(p: String): (Long, Long) = { // (bytes, parquet files)
     def walk(f: java.io.File): (Long, Long) =
       if (f.isDirectory)
@@ -1332,9 +1241,6 @@ object ScaleProbe {
     * `sbt "runMain graft.ScaleProbe recallf 5120000"`.
     */
   def filteredRecallProbe(spark: SparkSession, n: Long): Unit = {
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     Seq(4, 16, 64, 256).foreach { nLabels =>
       val emb = synthEmbeddings(spark, n)
         .withColumn("label", concat(lit("l"),
@@ -1345,17 +1251,11 @@ object ScaleProbe {
       val cells = Similarity.ivfCellsFor(n)
       val nProbe = Similarity.ivfProbesFor(cells)
       val path = s"/tmp/graft_scaleprobe_recallf_${n}_$nLabels"
-      val buildS = timed(Similarity.writeIvfIndex(emb, path, cells))
-      var fRows: Array[org.apache.spark.sql.Row] = Array.empty
-      val fS = timed {
-        fRows = Similarity.annRecallFiltered(spark, path, emb, nProbe)
-          .collect()
-      }
-      var uRows: Array[org.apache.spark.sql.Row] = Array.empty
-      val uS = timed {
-        uRows = Similarity.annRecallReport(spark, path, emb, nProbe)
-          .collect()
-      }
+      val buildS = secondsOf(spark)(Similarity.writeIvfIndex(emb, path, cells))
+      val (fRows, fS) = timed(spark)(
+        Similarity.annRecallFiltered(spark, path, emb, nProbe).collect())
+      val (uRows, uS) = timed(spark)(
+        Similarity.annRecallReport(spark, path, emb, nProbe).collect())
       def mean(rows: Array[org.apache.spark.sql.Row], c: String): Long =
         if (rows.isEmpty) 0L else rows.map(_.getAs[Long](c)).sum / rows.length
       println(f"[recallf] n=$n%-8d labels=$nLabels%-4d " +
@@ -1373,11 +1273,8 @@ object ScaleProbe {
         val brute = Similarity.topKBruteForceFiltered(emb)
           .localCheckpoint()
         Seq(1, 2, 4, defProbe).distinct.foreach { np =>
-          var rows: Array[org.apache.spark.sql.Row] = Array.empty
-          val s = timed {
-            rows = Similarity.recallFrom(brute,
-              Similarity.topKIvfFiltered(spark, path, emb, np)).collect()
-          }
+          val (rows, s) = timed(spark)(Similarity.recallFrom(brute,
+            Similarity.topKIvfFiltered(spark, path, emb, np)).collect())
           println(f"[recallf] n=$n%-8d labels=$nLabels%-4d nProbe=$np%-4d" +
             f" filtered recall=${mean(rows, "recall_ppm")}%7d ppm " +
             f"mrr=${mean(rows, "mrr_ppm")}%7d ppm (${s}%5.1fs)")
@@ -1395,73 +1292,56 @@ object ScaleProbe {
     */
   def servedProbe(spark: SparkSession, n: Long): Unit = {
     import org.apache.spark.sql.functions.input_file_name
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // ---- IVF: hard negatives + label-noise audit served from cells --
     val emb = synthEmbeddings(spark, n).persist()
     emb.count()
     val cells = Similarity.ivfCellsFor(n)
     val nProbe = Similarity.ivfProbesFor(cells)
     val ivfPath = s"/tmp/graft_scaleprobe_served_ivf_$n"
-    val buildS = timed(Similarity.writeIvfIndex(emb, ivfPath, cells))
+    val buildS =
+      secondsOf(spark)(Similarity.writeIvfIndex(emb, ivfPath, cells))
     val (ivfBytes, ivfFiles) = dirStats(ivfPath)
     // unpersist BEFORE measuring: inputMetrics counts cache-block
     // reads too, and the synthesized corpus recomputes from range()
     // with zero file input — so the measured bytes are index-only
     emb.unpersist(blocking = true)
-    var hnS = 0.0
-    val hnRead = fileBytesRead(spark) {
-      hnS = timed {
-        Similarity.hardNegativesServed(spark, ivfPath, emb, nProbe)
-          .count(); ()
-      }
-    }
-    var lnS = 0.0
-    val lnRead = fileBytesRead(spark) {
-      lnS = timed {
-        Similarity.labelNoiseKnnServed(spark, ivfPath, emb, nProbe)
-          .count(); ()
-      }
-    }
-    var flS = 0.0
-    val flRead = fileBytesRead(spark) {
-      flS = timed {
-        Similarity.topKIvfFiltered(spark, ivfPath, emb, nProbe)
-          .count(); ()
-      }
-    }
+    // each serve's read volume is its recorded input total
+    val (_, hn) = Metrics.record(spark)(
+      Similarity.hardNegativesServed(spark, ivfPath, emb, nProbe).count())
+    val (_, ln) = Metrics.record(spark)(
+      Similarity.labelNoiseKnnServed(spark, ivfPath, emb, nProbe).count())
+    val (_, fl) = Metrics.record(spark)(
+      Similarity.topKIvfFiltered(spark, ivfPath, emb, nProbe).count())
     println(f"[served] n=$n%-8d ivf build=$buildS%7.1fs " +
       f"index=${ivfBytes / 1e6}%8.1fMB/$ivfFiles%d files | " +
-      f"hard_neg serve=$hnS%6.2fs read=${hnRead / 1e6}%7.1fMB " +
-      f"(${100.0 * hnRead / ivfBytes}%4.1f%% of index) | " +
-      f"label_noise serve=$lnS%6.2fs read=${lnRead / 1e6}%7.1fMB " +
-      f"(${100.0 * lnRead / ivfBytes}%4.1f%% of index) | " +
-      f"filtered serve=$flS%6.2fs read=${flRead / 1e6}%7.1fMB " +
-      f"(${100.0 * flRead / ivfBytes}%4.1f%% of index)")
+      f"hard_neg serve=${hn.seconds}%6.2fs " +
+      f"read=${hn.inputBytes / 1e6}%7.1fMB " +
+      f"(${100.0 * hn.inputBytes / ivfBytes}%4.1f%% of index) | " +
+      f"label_noise serve=${ln.seconds}%6.2fs " +
+      f"read=${ln.inputBytes / 1e6}%7.1fMB " +
+      f"(${100.0 * ln.inputBytes / ivfBytes}%4.1f%% of index) | " +
+      f"filtered serve=${fl.seconds}%6.2fs " +
+      f"read=${fl.inputBytes / 1e6}%7.1fMB " +
+      f"(${100.0 * fl.inputBytes / ivfBytes}%4.1f%% of index)")
 
     // ---- HLL sketch index: 10-day window over a 30-day corpus -------
     val events = synthEvents(spark, n).persist()
     events.count()
     val hllPath = s"/tmp/graft_scaleprobe_served_hll_$n"
-    val hllBuildS = timed(
+    val hllBuildS = secondsOf(spark)(
       graft.ext.SketchIndex.writeHllIndex(events, hllPath))
     val (hllBytes, hllFiles) = dirStats(hllPath)
     val day0 = events
       .agg(min(graft.ext.SketchIndex.dayCol(col("ts")))).head().getLong(0)
-    var hllS = 0.0
-    val hllRead = fileBytesRead(spark) {
-      hllS = timed {
-        graft.ext.SketchIndex.distinctUsersOverRange(
-          spark, hllPath, day0 + 10, day0 + 19).count(); ()
-      }
-    }
+    val (_, hll) = Metrics.record(spark)(
+      graft.ext.SketchIndex.distinctUsersOverRange(
+        spark, hllPath, day0 + 10, day0 + 19).count())
     val hllFilesRead = spark.read.parquet(hllPath)
       .filter(col("day") >= day0 + 10 && col("day") <= day0 + 19)
       .select(input_file_name()).distinct().count()
     println(f"[served] n=$n%-8d hll build=$hllBuildS%7.1fs " +
       f"index=${hllBytes / 1e6}%8.1fMB/$hllFiles%d files | " +
-      f"serve=$hllS%6.2fs read=${hllRead / 1e6}%7.1fMB " +
+      f"serve=${hll.seconds}%6.2fs read=${hll.inputBytes / 1e6}%7.1fMB " +
       f"files_read=$hllFilesRead/$hllFiles (10 of 30 days)")
     events.unpersist()
 
@@ -1471,26 +1351,21 @@ object ScaleProbe {
     docs.count()
     val terms = Seq("w1", "w7", "w13")
     val bmPath = s"/tmp/graft_scaleprobe_served_bm25_$nDocs"
-    val bmBuildS = timed {
+    val bmBuildS = secondsOf(spark) {
       graft.ext.Search.writeSearchIndex(docs, bmPath)
     }
     val (bmBytes, bmFiles) = dirStats(s"$bmPath/postings")
     val (dlBytes, _) = dirStats(s"$bmPath/doclen")
-    var bmS = 0.0
-    val bmRead = fileBytesRead(spark) {
-      bmS = timed {
-        graft.ext.Search.bm25Served(spark, bmPath, terms)
-          .count(); ()
-      }
-    }
+    val (_, bm) = Metrics.record(spark)(
+      graft.ext.Search.bm25Served(spark, bmPath, terms).count())
     val termBuckets = terms.map(graft.ext.Search.bucketOf(_)).distinct
     val bmFilesRead = spark.read.parquet(s"$bmPath/postings")
       .filter(col("bucket").isin(termBuckets: _*))
       .select(input_file_name()).distinct().count()
     println(f"[served] ndocs=$nDocs%-7d bm25 build=$bmBuildS%7.1fs " +
       f"postings=${bmBytes / 1e6}%8.1fMB/$bmFiles%d files " +
-      f"dl=${dlBytes / 1e6}%.1fMB | serve=$bmS%6.2fs " +
-      f"read=${bmRead / 1e6}%7.1fMB " +
+      f"dl=${dlBytes / 1e6}%.1fMB | serve=${bm.seconds}%6.2fs " +
+      f"read=${bm.inputBytes / 1e6}%7.1fMB " +
       f"postings_files_read=$bmFilesRead/$bmFiles " +
       f"(${termBuckets.size} of ${graft.ext.Search.NumBuckets} buckets)")
     docs.unpersist()
@@ -1505,9 +1380,8 @@ object ScaleProbe {
   def bowProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
-    val rows = Dedup.bowNearDups(docs).count()
-    println(f"[bow] n=$n%-8d bow_near_dups ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
+    val (rows, secs) = timed(spark)(Dedup.bowNearDups(docs).count())
+    println(f"[bow] n=$n%-8d bow_near_dups $secs%7.2fs rows=$rows")
     docs.unpersist()
     spark.catalog.clearCache()
   }
@@ -1554,10 +1428,7 @@ object ScaleProbe {
     emb.count()
     val cells = Similarity.ivfCellsFor(n)
     val path = s"/tmp/graft_scaleprobe_td_$n"
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val buildS = timed(Similarity.writeIvfIndex(emb, path, cells))
+    val buildS = secondsOf(spark)(Similarity.writeIvfIndex(emb, path, cells))
     println(f"[scale-takedown] n=$n%-8d cells=$cells build=$buildS%7.2fs")
     Seq(10L, 100L, 1000L).zipWithIndex.foreach { case (k, r) =>
       // odd stride: a multiple of the synthetic cluster modulus (32)
@@ -1566,11 +1437,8 @@ object ScaleProbe {
       val stride = math.max(1L, n / k) | 1L
       val ids = spark.range(k)
         .select(pmod(col("id") * stride + r, lit(n)).as("vec_id"))
-      var stats: Takedown.PurgeStats = null
-      val purgeS = timed {
-        stats = Takedown.purgeIndex(spark, s"$path/data", "vec_id", ids,
-          Seq("cell", "batch_id"))
-      }
+      val (stats, purgeS) = timed(spark)(Takedown.purgeIndex(spark,
+        s"$path/data", "vec_id", ids, Seq("cell", "batch_id")))
       val touched = stats.partsRewritten + stats.partsDeleted
       val ratio = touched.toDouble / stats.partsTotal
       println(f"[scale-takedown] n=$n%-8d k=$k%-5d purge=$purgeS%6.2fs " +
@@ -1591,9 +1459,8 @@ object ScaleProbe {
     */
   def imageDupProbe(spark: SparkSession, n: Long): Unit = {
     val docs = spark.range(n).select(col("id").as("doc_id"))
-    val t0 = System.nanoTime()
-    val pairs = graft.ext.Multimodal.imageNearDups(docs).count()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val (pairs, wall) =
+      timed(spark)(graft.ext.Multimodal.imageNearDups(docs).count())
     println(f"[scale-imagedup] n=$n%-8d pairs=$pairs " +
       f"wall=$wall%7.2fs (${n / wall}%.0f docs/s encode+decode+join)")
     // release this size's persisted fingerprint table (Scratch.track is
@@ -1608,9 +1475,8 @@ object ScaleProbe {
     */
   def audioDupProbe(spark: SparkSession, n: Long): Unit = {
     val docs = spark.range(n).select(col("id").as("doc_id"))
-    val t0 = System.nanoTime()
-    val pairs = graft.ext.Multimodal.audioNearDups(docs).count()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val (pairs, wall) =
+      timed(spark)(graft.ext.Multimodal.audioNearDups(docs).count())
     println(f"[scale-audiodup] n=$n%-8d pairs=$pairs " +
       f"wall=$wall%7.2fs (${n / wall}%.0f docs/s encode+decode+join)")
     spark.catalog.clearCache() // release the fingerprint persist
@@ -1638,12 +1504,11 @@ object ScaleProbe {
       val bench = synthDocs(spark, benchDocs)
       val fill = graft.ext.Curation.bloomFillBits(bench).toDouble /
         graft.ext.Curation.BloomBits
-      val t0 = System.nanoTime()
       // the n_hits>0 filter drops only zero-hit docs, so the filtered
       // sum IS the corpus-total FP gram count
-      val out = graft.ext.Curation.bloomDecontamAgainst(corpus, bench)
-        .agg(count(lit(1)).as("d"), sum("n_hits").as("h")).head()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (out, wall) = timed(spark)(
+        graft.ext.Curation.bloomDecontamAgainst(corpus, bench)
+          .agg(count(lit(1)).as("d"), sum("n_hits").as("h")).head())
       val fpDocs = out.getLong(0)
       val fpGrams = if (out.isNullAt(1)) 0L else out.getLong(1)
       val k = graft.ext.Curation.BloomK
@@ -1664,9 +1529,8 @@ object ScaleProbe {
     */
   def videoDupProbe(spark: SparkSession, n: Long): Unit = {
     val docs = spark.range(n).select(col("id").as("doc_id"))
-    val t0 = System.nanoTime()
-    val pairs = graft.ext.Multimodal.videoNearDups(docs).count()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val (pairs, wall) =
+      timed(spark)(graft.ext.Multimodal.videoNearDups(docs).count())
     println(f"[scale-videodup] n=$n%-8d pairs=$pairs " +
       f"wall=$wall%7.2fs (${n / wall}%.0f docs/s mux+demux+decode+join)")
     spark.catalog.clearCache() // release the fingerprint persist
@@ -1680,26 +1544,20 @@ object ScaleProbe {
     */
   def mediaServedProbe(spark: SparkSession, n: Long): Unit = {
     val docs = spark.range(n).select(col("id").as("doc_id"))
-    def timed(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val path = java.nio.file.Files
       .createTempDirectory(s"mediafp_probe_$n").toString
-    val (_, tBuild) = timed {
-      graft.ext.Multimodal.writeMediaFpIndex(docs, path); 0L
-    }
+    val tBuild =
+      secondsOf(spark)(graft.ext.Multimodal.writeMediaFpIndex(docs, path))
     val served = graft.ext.Multimodal.MediaFpModalities.map { m =>
       val (p, t) =
-        timed(graft.ext.Multimodal
+        timed(spark)(graft.ext.Multimodal
           .mediaNearDupsServed(spark, path, m).count())
       f"$m=$t%.2fs/$p"
     }
-    val (cs, tClusters) = timed(
+    val (cs, tClusters) = timed(spark)(
       graft.ext.Multimodal.mediaDedupClustersServed(spark, path).count())
     spark.catalog.clearCache() // screens persist fingerprint frames
-    val (ci, tInflight) = timed(
+    val (ci, tInflight) = timed(spark)(
       graft.ext.Multimodal.mediaDedupClusters(docs).count())
     require(cs == ci, s"served clusters $cs != in-flight $ci")
     println(f"[mediaserved] n=$n%-8d build=$tBuild%7.2fs " +
@@ -1720,10 +1578,8 @@ object ScaleProbe {
   def bowNaturalProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthNaturalDocs(spark, n).persist()
     docs.count()
-    val t0 = System.nanoTime()
-    val rows = Dedup.bowNearDups(docs).count()
-    println(f"[bownat] n=$n%-8d bow_near_dups " +
-      f"${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
+    val (rows, secs) = timed(spark)(Dedup.bowNearDups(docs).count())
+    println(f"[bownat] n=$n%-8d bow_near_dups $secs%7.2fs rows=$rows")
     docs.unpersist()
     spark.catalog.clearCache()
   }
@@ -1734,11 +1590,7 @@ object ScaleProbe {
   def corpusProbe(spark: SparkSession, n: Long): Unit = {
     val docs = synthDocs(spark, n).persist()
     docs.count() // materialize corpus outside the timings
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"[scale] n=$n%-8d $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$rows")
-    }
+    val time = new TimedRows(spark, f"[scale] n=$n%-8d", 22)
     time("text_stats") { TextAnalysis.textStats(docs).count() }
     time("quality_gate") { TextAnalysis.qualityFilter(docs).count() }
     time("normalize_md5") {

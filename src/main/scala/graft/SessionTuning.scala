@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   - shuffle local dirs on tmpfs when present
   *     (`SPARK_GRAFT_LOCAL_DIR`; default /dev/shm/graft-spark when
-  *     writable, else the JVM tmpdir): thread dumps of the 32-core
+  *     writable with at least the heap's size free, else the JVM
+  *     tmpdir — see [[localDir]]): thread dumps of the 32-core
   *     bench showed task threads dominated by shuffle-file
   *     open/copy/commit syscalls on ext4 (DiskBlockObjectWriter
   *     .initialize, copyFileStreamNIO, a BLOCKED
@@ -70,21 +71,34 @@ object SessionTuning {
   }
 
   /** Spark scratch (shuffle/spill/broadcast) directory: env override,
-    * else tmpfs when available, else the JVM tmpdir. Spark creates a
-    * per-app `spark-<uuid>` subdir and removes it via shutdown hook,
-    * so the tmpfs footprint is bounded by one app's live shuffle data.
+    * else tmpfs when available and large enough, else the JVM tmpdir.
+    * Spark creates a per-app `spark-<uuid>` subdir and removes it via
+    * shutdown hook, so the tmpfs footprint is bounded by one app's live
+    * shuffle data.
+    *
+    * The trade: tmpfs is RAM. Shuffle and spill files written there
+    * compete with the heap for the host's memory, and a spill — the
+    * path Spark takes precisely when memory is short — lands in memory
+    * again. On a host whose tmpfs is smaller than the heap, a large
+    * shuffle would fail with ENOSPC instead of slowing down, so tmpfs
+    * is used only when it has at least the heap's size free (see
+    * [[scratchDirUnder]]).
     */
   def localDir: String =
     sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       scratchDirUnder(new java.io.File("/dev/shm")))
 
-  /** `root/graft-spark` when it is, or can be made, a writable
-    * directory; else the JVM tmpdir.
+  /** `root/graft-spark` when `root` has at least `floorBytes` usable
+    * (default: the JVM's max heap, which `SPARK_DRIVER_MEM` sets) and
+    * `root/graft-spark` is, or can be made, a writable directory; else
+    * the JVM tmpdir.
     */
-  private[graft] def scratchDirUnder(root: java.io.File): String = {
+  private[graft] def scratchDirUnder(root: java.io.File,
+      floorBytes: Long = Runtime.getRuntime.maxMemory): String = {
     val d = new java.io.File(root, "graft-spark")
-    if (root.isDirectory && root.canWrite) d.mkdirs()
-    if (d.isDirectory && d.canWrite) d.getAbsolutePath
+    val roomy = root.getUsableSpace >= floorBytes
+    if (roomy && root.isDirectory && root.canWrite) d.mkdirs()
+    if (roomy && d.isDirectory && d.canWrite) d.getAbsolutePath
     else java.lang.System.getProperty("java.io.tmpdir", "/tmp")
   }
 

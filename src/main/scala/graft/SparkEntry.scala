@@ -1216,11 +1216,8 @@ object SparkEntry {
     "agent_daily_decisions" -> ((s, dir) => {
       val daily = Enrich.curated(tables(s, dir).events)
         .groupBy(to_date(col("processing_timestamp")).as("day"))
-        .agg(count(lit(1)).as("total_records"),
-          count(when(col("is_late_arrival"), 1)).as("late_records"),
-          count(when(!col("dq_passed"), 1)).as("dq_failures"),
-          count(when(col("schema_drift_detected"), 1))
-            .as("schema_drift_count"))
+        .agg(Reports.runReportColumns.head,
+          Reports.runReportColumns.tail: _*)
       DecisionEngine.withConsecutiveFailures(daily)
         .select(Seq(col("day"), col("total_records"),
           col("late_records"), col("dq_failures"),

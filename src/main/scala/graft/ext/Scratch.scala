@@ -89,10 +89,8 @@ object Scratch {
       ckptRddIds: java.util.HashSet[Int]): Unit =
     try {
       df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-          df.unpersist(blocking = false)
-          ()
+        case _: org.apache.spark.sql.execution.LogicalRDD =>
+          unpersistAll(df)
         case plan =>
           val derived = plan.exists {
             case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -101,6 +99,21 @@ object Scratch {
           }
           if (derived) { df.unpersist(blocking = false); () }
       }
+    } catch { case _: Throwable => () }
+
+  /** Best-effort full release of one frame: when it IS a checkpoint,
+    * its backing RDD blocks (not reachable through Dataset.unpersist
+    * alone), then the frame's own cache entry.
+    */
+  private def unpersistAll(df: Dataset[_]): Unit =
+    try {
+      df.queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          l.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+      df.unpersist(blocking = false)
+      ()
     } catch { case _: Throwable => () }
 
   /** Run `body` with a fresh tracking scope; release every frame the
@@ -152,21 +165,9 @@ object Scratch {
       (r, frames())
     } catch {
       case e: Throwable =>
-        // same release as scopedAll's: a checkpoint frame's backing
-        // RDD blocks are not reachable through Dataset.unpersist
-        // alone (see release case 1) — dropping only the cache entry
-        // here would pin them for the stream's lifetime
-        frames().foreach { df =>
-          try {
-            df.queryExecution.analyzed match {
-              case l: org.apache.spark.sql.execution.LogicalRDD =>
-                l.rdd.unpersist(blocking = false)
-              case _ => ()
-            }
-            df.unpersist(blocking = false)
-            ()
-          } catch { case _: Throwable => () }
-        }
+        // scopedAll's release: dropping only the cache entry would pin
+        // a checkpoint's RDD blocks for the stream's lifetime
+        frames().foreach(unpersistAll)
         throw e
     } finally tl.set(outer)
   }
@@ -196,17 +197,7 @@ object Scratch {
     try body
     finally {
       tl.set(outer)
-      buf.forEach { df =>
-        try {
-          df.queryExecution.analyzed match {
-            case l: org.apache.spark.sql.execution.LogicalRDD =>
-              l.rdd.unpersist(blocking = false)
-            case _ => ()
-          }
-          df.unpersist(blocking = false)
-          ()
-        } catch { case _: Throwable => () }
-      }
+      buf.forEach(unpersistAll(_))
     }
   }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.agent.DecisionEngine
 import graft.agent.DecisionEngine._
 import graft.dq.DqSuite
+import graft.report.Reports
 
 /** The orchestrated pipeline run — the reference's Airflow DAG stage
   * contract (SURVEY.md §2.8 O8, §3.2) as a plain Scala assembly:
@@ -166,11 +167,9 @@ object PipelineRun {
     try {
       cached.write.mode("overwrite").partitionBy("country", "plan")
         .parquet(sinkDir)
-      val r = cached.agg(count(lit(1)),
-        count(when(col("is_late_arrival"), 1)),
-        count(when(!col("dq_passed"), 1)),
-        count(when(col("schema_drift_detected"), 1)),
-        max(unix_millis(col("event_timestamp")))).head()
+      val r = cached.agg(Reports.runReportColumns.head,
+        Reports.runReportColumns.tail :+
+          max(unix_millis(col("event_timestamp"))): _*).head()
       val report = RunReport(r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))
       writeRunReport(report, s"$opsDir/run_report.json")

@@ -1,6 +1,6 @@
 package graft.report
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Run-report / rate aggregates A1-A3 (SURVEY.md §2.4), mirroring
@@ -13,15 +13,20 @@ import org.apache.spark.sql.functions._
   */
 object Reports {
 
-  /** A1 — conditional counts over the curated frame. `count(when(cond,1))`
-    * (not sum) so both engines emit BIGINT.
+  /** A1's four counts — total, late, DQ-failed, drifted — as aggregate
+    * columns, the one definition every run report uses (batch, stream
+    * micro-batch, per-day agent input). `count(when(cond,1))` (not sum)
+    * so both engines emit BIGINT.
     */
+  val runReportColumns: Seq[Column] = Seq(
+    count(lit(1)).as("total_records"),
+    count(when(col("is_late_arrival"), 1)).as("late_records"),
+    count(when(!col("dq_passed"), 1)).as("dq_failures"),
+    count(when(col("schema_drift_detected"), 1)).as("schema_drift_count"))
+
+  /** A1 — [[runReportColumns]] over the curated frame. */
   def runReport(curated: DataFrame): DataFrame =
-    curated.agg(
-      count(lit(1)).as("total_records"),
-      count(when(col("is_late_arrival"), 1)).as("late_records"),
-      count(when(!col("dq_passed"), 1)).as("dq_failures"),
-      count(when(col("schema_drift_detected"), 1)).as("schema_drift_count"))
+    curated.agg(runReportColumns.head, runReportColumns.tail: _*)
 
   /** A3 — late / DQ-failure rates, div-by-zero-guarded
     * (decision_agent.py:457-471), rounded for float-stable oracle compare.

@@ -9,6 +9,7 @@ import org.apache.spark.util.LongAccumulator
 import graft.CustomerEvents
 import graft.enrich.Enrich
 import graft.ops.Quarantine
+import graft.report.Reports
 
 /** The reference's streaming ingest job re-expressed as Structured
   * Streaming combinators (SURVEY.md §2.7 T1-T7, §3.1):
@@ -188,11 +189,7 @@ object EventPipeline {
         .withColumn("event_date", to_date(col("event_timestamp")))
         .persist()
       try {
-        val r = cached.agg(
-          count(lit(1)),
-          count(when(col("is_late_arrival"), 1)),
-          count(when(!col("dq_passed"), 1)),
-          count(when(col("schema_drift_detected"), 1))).head()
+        val r = Reports.runReport(cached).head()
         val (main, quarantine) =
           Quarantine.split(cached, !col("dq_passed"))
         main.write.mode("overwrite")

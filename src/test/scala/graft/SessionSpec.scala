@@ -65,7 +65,8 @@ class SessionSpec extends AnyFunSuite {
   test("localDir uses root/graft-spark when it can create it") {
     withRoot { root =>
       val d = new File(root, "graft-spark")
-      assert(SessionTuning.scratchDirUnder(root) == d.getAbsolutePath)
+      assert(SessionTuning.scratchDirUnder(root, floorBytes = 0L) ==
+        d.getAbsolutePath)
       assert(d.isDirectory)
     }
   }
@@ -75,6 +76,14 @@ class SessionSpec extends AnyFunSuite {
       assert(new File(root, "graft-spark").createNewFile())
       assert(SessionTuning.scratchDirUnder(root) ==
         System.getProperty("java.io.tmpdir", "/tmp"))
+    }
+  }
+
+  test("localDir falls back to the JVM tmpdir when root is below the free-space floor") {
+    withRoot { root =>
+      assert(SessionTuning.scratchDirUnder(root, floorBytes = Long.MaxValue)
+        == System.getProperty("java.io.tmpdir", "/tmp"))
+      assert(!new File(root, "graft-spark").exists())
     }
   }
 }
