@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,11 +11,11 @@ import graft.streaming.EventPipeline
   * via the same residue arithmetic as [[CustomerEvents]]), feeding the
   * full parse -> curate -> watermark -> dual-sink pipeline for a bounded
   * run (`sbt "runMain graft.RunStream [seconds] [outDir] [rowsPerSec]
-  * [json|avro]"`). The 4th arg selects the wire format: `json`
-  * (from_json path) or `avro` (the producer's actual binary-datum
-  * contract through the native codec, [[EventPipeline.parseAvro]]).
-  * With a broker, swap the source for [[EventPipeline.fromKafka]] — the
-  * rest is unchanged.
+  * [mode]"`). The mode is a wire format, `json` (default, from_json
+  * path) or `avro` (the producer's binary-datum contract through the
+  * native codec, [[EventPipeline.parseAvro]]), or another stream of
+  * `modes`; an unknown one lists them and exits 2. With a broker, swap
+  * the source for [[EventPipeline.fromKafka]] — the rest is unchanged.
   */
 object RunStream {
 
@@ -123,16 +123,28 @@ object RunStream {
     * documented at-least-once window a checkpoint replay rewrites), so
     * an unfiltered count could exceed the accumulators — and a run
     * shorter than its first trigger has no sink at all, which must
-    * read as 0, not PATH_NOT_FOUND.
+    * read as 0, not PATH_NOT_FOUND. Any other failure (a corrupt sink)
+    * propagates: it must not read as an empty run.
     */
-  private def committedRows(spark: SparkSession, p: String,
+  private[graft] def committedRows(spark: SparkSession, p: String,
       committed: Long = Long.MaxValue): Long =
     try {
       val df = spark.read.parquet(p)
       (if (df.columns.contains("batch_id"))
          df.filter(col("batch_id") <= committed)
        else df).count()
-    } catch { case _: Throwable => 0L }
+    } catch { case e: AnalysisException if notYetWritten(e) => 0L }
+
+  /** A read of an artifact the run never wrote: no path, or no data
+    * files in it to infer a schema from. */
+  private def notYetWritten(e: AnalysisException): Boolean =
+    Option(e.getCondition).exists(c =>
+      c.contains("PATH_NOT_FOUND") || c.contains("UNABLE_TO_INFER_SCHEMA"))
+
+  /** `SPARK_GRAFT_GRAPH_AUDIT=touched`: the graph legs' per-ingest
+    * touched-scope stale audit (~1.5× append cost per trigger). */
+  private def auditTouched: Boolean =
+    sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")
 
   /** Committed-only graph accounting for a bounded run: stop() can
     * interrupt a trigger between its pair write and its relabel — the
@@ -184,11 +196,7 @@ object RunStream {
     } catch {
       // absent graph = the run stopped before its first commit — a
       // legitimate empty result, not an audit failure
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        (0L, 0L, 0L)
+      case e: AnalysisException if notYetWritten(e) => (0L, 0L, 0L)
       case e: Throwable =>
         // surfaced, not swallowed: the printed summary must show WHY
         // the health numbers are absent
@@ -243,14 +251,18 @@ object RunStream {
     * graph leg's ~30-job triggers head-of-line block the other five.
     * Distinct pools (created on demand, weight 1 each) are what make
     * FAIR actually interleave legs. Harmless under FIFO mode (the
-    * property is ignored), so the A/B stays one env var.
+    * property is ignored), so the A/B stays one conf
+    * (`SPARK_GRAFT_CONF=spark.scheduler.mode=FIFO`).
     *
     * TRIGGERS: five legs run at `trigger`; the graph leg runs at 3× its
-    * interval (per-trigger cost there is dominated by fixed per-action
-    * overhead, so fewer larger batches amortize the queue tax —
-    * measured, SCALING.md "Six-leg composition"), overridable via
-    * SPARK_GRAFT_GRAPH_TRIGGER. A non-ProcessingTime `trigger` is used
-    * for the graph leg unchanged.
+    * interval: its per-trigger cost is dominated by fixed per-action
+    * overhead (~30 queued jobs per trigger — banding, pruned reads,
+    * decode, fp append, relabel — each waiting its turn on the executor
+    * pool the other legs share), so fewer, larger batches amortize the
+    * queue tax; its artifacts are indexes and evidence, not
+    * latency-sensitive sinks (measured: SCALING.md "Six-leg
+    * composition", r16). A non-ProcessingTime `trigger` is used for the
+    * graph leg unchanged.
     */
   def runFull(spark: SparkSession, outDir: String, seconds: Int,
       rowsPerSecond: Int,
@@ -276,17 +288,14 @@ object RunStream {
       val ((queries, qSess), rec) = Metrics.record(spark) {
         def rateSource() = spark.readStream.format("rate")
           .option("rowsPerSecond", rowsPerSecond.toString).load()
-        // graph-leg trigger: 3× the base interval (see Scaladoc), env
-        // override first so the A/B knob keeps working; a
+        // graph-leg trigger: 3× the base interval (see Scaladoc); a
         // non-ProcessingTime base trigger passes through unchanged
-        val graphTrigger = sys.env.get("SPARK_GRAFT_GRAPH_TRIGGER")
-          .map(Trigger.ProcessingTime(_))
-          .getOrElse(trigger match {
-            case t: org.apache.spark.sql.execution.streaming
-                .ProcessingTimeTrigger =>
-              Trigger.ProcessingTime(s"${t.intervalMs * 3} milliseconds")
-            case other => other
-          })
+        val graphTrigger = trigger match {
+          case t: org.apache.spark.sql.execution.streaming
+              .ProcessingTimeTrigger =>
+            Trigger.ProcessingTime(s"${t.intervalMs * 3} milliseconds")
+          case other => other
+        }
         // each leg's queries start under a leg-named FAIR pool (see
         // Scaladoc — without one, FAIR degenerates to FIFO); the pool
         // local property is inherited by the query's execution thread
@@ -363,14 +372,6 @@ object RunStream {
         // both ends of every perceptual twin carry a payload while the
         // encode cost stays at ~20% of the doc rate)
         import spark.implicits._
-        // the graph leg runs a 3× LONGER trigger than the other five
-        // (`graphTrigger` above): its per-trigger cost is dominated by
-        // fixed per-action overhead (~30 queued jobs per trigger —
-        // banding, pruned reads, decode, fp append, relabel — each
-        // waiting its turn on the executor pool the other legs share),
-        // so fewer, larger batches amortize the queue tax; its artifacts
-        // are indexes and evidence, not latency-sensitive sinks
-        // (measured: SCALING.md "Six-leg composition", r16)
         val qGr = inPool("graft_graph")(graft.streaming.GraphStream.start(
           docStream(rateSource()).as[(Long, String)].map { case (id, t) =>
             (id, t,
@@ -384,9 +385,7 @@ object RunStream {
             "image_payload", "image",
             graft.ext.Multimodal.imageFpFromPayload(_))),
           fpIndexPath = Some(s"$outDir/fp_g"),
-          // same opt-in per-ingest health monitor as the graph modes
-          auditTouched =
-            sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")))
+          auditTouched = auditTouched))
 
         val queries = Seq(qCe, qSk, qDd, qHh, qSess, qGr)
         Thread.sleep(seconds * 1000L)
@@ -420,12 +419,10 @@ object RunStream {
         corpusRows = rows(s"$outDir/corpus", ddStats.lastCommitted),
         dedupIndexRows = rows(s"$outDir/dd_index", ddStats.lastCommitted),
         hhSymbols =
-          // Same missing-path posture as committedRows: a run shorter
-          // than the HH leg's first trigger has no index directory yet,
-          // which must read as 0 symbols, not PATH_NOT_FOUND.
+          // a run shorter than the HH leg's first trigger has no index
           try HeavyHitterStream.servedCounters(spark, s"$outDir/hh_index")
             .count()
-          catch { case _: Throwable => 0L },
+          catch { case e: AnalysisException if notYetWritten(e) => 0L },
         hllDays = rows(s"$outDir/hll_index"),
         sessionsEmitted = sessEmitted.value,
         sessionStateRows = qSess.recentProgress.toSeq
@@ -523,20 +520,33 @@ object RunStream {
           String.valueOf(e.getMessage).take(200))
     }
 
+  /** Mode per CLI name (the 4th argument, default `json`). */
+  private val modes: Map[String, Cli => Unit] = Map(
+    "full" -> (_.full()), "curate" -> (_.curate()),
+    "curatebench" -> (_.curate()), "media" -> (_.media()),
+    "video" -> (_.media()), "sessions" -> (_.sessions()),
+    "graph" -> (_.graph()), "graphmm" -> (_.graph()),
+    "graphmm3" -> (_.graph()), "dedup" -> (_.dedup()),
+    "json" -> (_.events()), "avro" -> (_.events()))
+
   def main(args: Array[String]): Unit = {
+    val wire = args.lift(3).getOrElse("json")
+    val mode = modes.getOrElse(wire, {
+      System.err.println(s"unknown mode '$wire'; modes: " +
+        modes.keys.toSeq.sorted.mkString(" "))
+      sys.exit(2)
+    })
     val seconds = args.headOption.map(_.toInt).getOrElse(15)
     val outDir = args.lift(1).getOrElse("/tmp/graft_stream")
-    val rowsPerSecond = args.lift(2).getOrElse("200")
-    val wire = args.lift(3).getOrElse("json")
+    val rowsPerSecond = args.lift(2).getOrElse("200").toInt
     val spark = SessionTuning.session(confs = Seq(
-      // FAIR by default: FIFO lets one leg's ~30-job trigger
-      // head-of-line block the other five — measured 8.6× on the
-      // composed graph leg (703 → 6 030 docs/s, 360 s runs, SCALING.md
-      // "Six-leg composition: the scheduler was the bottleneck") with
-      // every other leg unharmed or faster. SPARK_GRAFT_SCHEDULER=FIFO
-      // restores the old posture for A/B.
-      "spark.scheduler.mode" ->
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"),
+      // FAIR: FIFO lets one leg's ~30-job trigger head-of-line block
+      // the other five — measured 8.6× on the composed graph leg
+      // (703 → 6 030 docs/s, 360 s runs, SCALING.md "Six-leg
+      // composition: the scheduler was the bottleneck") with every
+      // other leg unharmed or faster. A/B:
+      // SPARK_GRAFT_CONF=spark.scheduler.mode=FIFO
+      "spark.scheduler.mode" -> "FAIR",
       // streaming OVERRIDE of the SessionTuning batch default (false):
       // a micro-batch trigger's per-batch frames are small by
       // construction, so size-based AQE coalescing folds every
@@ -544,18 +554,23 @@ object RunStream {
       // trigger — measured 15.3k -> 10.7k docs/s on the 30 s curate
       // leg. Latency-bound micro-batches want parallelism-first; the
       // size-based posture is for the batch/analytics sessions.
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        SessionTuning.aqeParallelismFirst(default = true)))
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true"))
+    try mode(new Cli(spark, wire, outDir, seconds, rowsPerSecond))
+    finally spark.stop()
+  }
 
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
+  /** One CLI run: its arguments, its session and a method per mode. */
+  private final class Cli(spark: SparkSession, wire: String,
+      outDir: String, seconds: Int, rowsPerSecond: Int) {
+    private def rate: DataFrame = spark.readStream.format("rate")
+      .option("rowsPerSecond", rowsPerSecond.toString).load()
 
     // `full` mode: the composed surface — curate→dual-sink plus the
     // three index-ingest streams plus the stateful sessionizer
     // (RocksDB), all concurrent; counters + state/shuffle accounting
     // recorded in SCALING.md ("RunStream full composition")
-    if (wire == "full") {
-      val s = runFull(spark, outDir, seconds, rowsPerSecond.toInt)
+    def full(): Unit = {
+      val s = runFull(spark, outDir, seconds, rowsPerSecond)
       println(s"[stream-full] events=${s.events} late=${s.late} " +
         s"dqFailed=${s.dqFailed} main=${s.mainRows} " +
         s"quarantine=${s.quarantineRows} | docs seen=${s.docsSeen} " +
@@ -571,15 +586,13 @@ object RunStream {
         f"shuffleWrite=${s.shuffleWriteBytes / 1e6}%.1fMB " +
         f"wall=${s.wallSec}%.1fs " +
         f"eventsPerSec=${s.events / math.max(s.wallSec, 1e-9)}%.0f")
-      spark.stop()
-      return
     }
 
     // `curate` mode: the full streaming curation funnel
     // (normalize → quality gate → incremental near-dup → corpus+index)
     // over gate-passing synthetic docs with planted duplicates —
     // measures sustained curated docs/s (recorded in SCALING.md)
-    if (wire == "curate" || wire == "curatebench") {
+    def curate(): Unit = {
       val stats = new graft.streaming.CurateStream.CurateStats(spark)
       // curatebench: benchmark = the texts of seeds ≡ 4 (mod 1000)
       // within the run's id range, generated by the SAME skeleton —
@@ -611,8 +624,6 @@ object RunStream {
         s"gated=${stats.dedup.seen.value} kept=${stats.dedup.kept.value} " +
         s"sink=$kept " +
         f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
-      spark.stop()
-      return
     }
 
     // `media` / `video` modes: the streaming PERCEPTUAL dedup leg —
@@ -621,7 +632,7 @@ object RunStream {
     // fingerprint → exact-verified band screen → corpus + fingerprint
     // index). Measures sustained payloads/s of the full codec + screen
     // path per modality (recorded in SCALING.md)
-    if (wire == "media" || wire == "video") {
+    def media(): Unit = {
       import spark.implicits._
       val stats = new graft.streaming.MediaDedupStream.MediaStats(spark)
       val ids = rate.select(col("value").as("doc_id")).as[Long]
@@ -650,25 +661,16 @@ object RunStream {
         s"sink=$sink " +
         f"keptRate=${stats.kept.value.toDouble / math.max(stats.seen.value, 1)}%.4f " +
         f"payloadsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
-      spark.stop()
-      return
     }
 
     // `sessions` mode: the flatMapGroupsWithState leg at RunStream
     // scale — rate source fanned out to many concurrent users, state =
     // one open session per active user, sessions flushed by gap
-    // successors and by the event-time timeout. The state-store
-    // provider comes from SPARK_GRAFT_STATE_STORE (`rocksdb` or
-    // default HDFS-backed) — run both, compare state bytes + batch
-    // latency (SCALING.md "Stateful state store posture").
-    if (wire == "sessions") {
-      sys.env.get("SPARK_GRAFT_STATE_STORE").foreach {
-        case "rocksdb" => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        case _ => ()
-      }
+    // successors and by the event-time timeout. The state store is the
+    // session's provider, HDFS-backed unless SPARK_GRAFT_CONF sets
+    // RocksDB — run both, compare state bytes + batch latency
+    // (SCALING.md "Stateful state store posture" has the value).
+    def sessions(): Unit = {
       val nUsers = sys.env.getOrElse("SPARK_GRAFT_SESSION_USERS",
         "100000").toLong
       // event time advances with the rate clock; user ids cycle so a
@@ -716,8 +718,6 @@ object RunStream {
         f"meanBatchMs=${if (batchMs.isEmpty) 0.0
           else batchMs.map(_.toDouble).sum / batchMs.size}%.0f " +
         f"maxBatchMs=${batchMs.foldLeft(0L)(math.max)}")
-      spark.stop()
-      return
     }
 
     // `graph` mode: the same planted-duplicate document stream through
@@ -734,7 +734,7 @@ object RunStream {
     // four channels), the fully-multimodal ceiling: the video leg's
     // per-frame demux+decode is the expensive one, and this mode
     // prices it inside the composed trigger instead of standalone.
-    if (wire == "graph" || wire == "graphmm" || wire == "graphmm3") {
+    def graph(): Unit = {
       import spark.implicits._
       def onTwinResidue(id: Long)(payload: => Array[Byte]): Array[Byte] =
         if (id % 10 == 0 || id % 10 == 7) payload else null
@@ -762,11 +762,6 @@ object RunStream {
         case _ => Nil
       }
       val stats = new graft.streaming.GraphStream.GraphStats(spark)
-      // SPARK_GRAFT_GRAPH_AUDIT=touched turns on the per-ingest
-      // touched-scope stale audit (flat-cost health monitor — a knob,
-      // not a default; ~1.5× append cost per trigger)
-      val auditTouched =
-        sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")
       val q = graft.streaming.GraphStream.start(docs,
         s"$outDir/corpus_g", s"$outDir/bands_g", s"$outDir/graph_g",
         s"$outDir/ckpt_g", stats, Trigger.ProcessingTime("5 seconds"),
@@ -809,15 +804,13 @@ object RunStream {
       // folded_through screen keeps a replayed in-flight batch exact
       maintainAfterRun("graph-pairs",
         graft.ext.CorpusGraph.maintainPairs(spark, s"$outDir/graph_g"))
-      spark.stop()
-      return
     }
 
     // `dedup` mode: document stream with a planted 10% duplicate rate
     // (every value ≡ 7 (mod 10) repeats the text of value − 7) through
     // the incremental near-dup ingest — measures sustained docs/s of
     // graft.streaming.DedupStream on this box (recorded in SCALING.md)
-    if (wire == "dedup") {
+    def dedup(): Unit = {
       val docs = docStream(rate)
       val stats = new graft.streaming.DedupStream.DedupStats(spark)
       val q = graft.streaming.DedupStream.start(docs,
@@ -832,32 +825,33 @@ object RunStream {
         s"kept=${stats.kept.value} sink=$kept " +
         f"keptRate=${stats.kept.value.toDouble / math.max(stats.seen.value, 1)}%.4f " +
         f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
-      spark.stop()
-      return
     }
 
-    val parsed = wire match {
-      case "avro" => EventPipeline.parseAvro(rate.select(
-        graft.functions.GraftFunctions.avroEncodeCe(eventStruct)
-          .as("value")))
-      case _ => EventPipeline.parse(
-        rate.select(to_json(eventStruct).as("value")))
-    }
-    val stats = new EventPipeline.RunStats(spark)
-    val query = EventPipeline.startDualSink(
-      EventPipeline.curate(parsed),
-      s"$outDir/main", s"$outDir/quarantine", s"$outDir/ckpt", stats,
-      Trigger.ProcessingTime("5 seconds"))
-    EventPipeline.runBounded(query, seconds * 1000L)
+    // `json` (default) / `avro` modes: the CustomerEvent pipeline,
+    // parse (from_json or native Avro) -> curate -> dual sink
+    def events(): Unit = {
+      val parsed = wire match {
+        case "avro" => EventPipeline.parseAvro(rate.select(
+          graft.functions.GraftFunctions.avroEncodeCe(eventStruct)
+            .as("value")))
+        case _ => EventPipeline.parse(
+          rate.select(to_json(eventStruct).as("value")))
+      }
+      val stats = new EventPipeline.RunStats(spark)
+      val query = EventPipeline.startDualSink(
+        EventPipeline.curate(parsed),
+        s"$outDir/main", s"$outDir/quarantine", s"$outDir/ckpt", stats,
+        Trigger.ProcessingTime("5 seconds"))
+      EventPipeline.runBounded(query, seconds * 1000L)
 
-    println(s"[stream] total=${stats.total.value} late=${stats.late.value} " +
-      s"dqFailed=${stats.dqFailed.value} drifted=${stats.drifted.value} " +
-      f"lateRate=${stats.lateRate}%.4f dqFailureRate=${stats.dqFailureRate}%.4f")
-    val written = committedRows(spark, s"$outDir/main",
-      stats.lastCommitted)
-    val quarantined = committedRows(spark, s"$outDir/quarantine",
-      stats.lastCommitted)
-    println(s"[stream] sink rows: main=$written quarantine=$quarantined")
-    spark.stop()
+      println(s"[stream] total=${stats.total.value} late=${stats.late.value} " +
+        s"dqFailed=${stats.dqFailed.value} drifted=${stats.drifted.value} " +
+        f"lateRate=${stats.lateRate}%.4f dqFailureRate=${stats.dqFailureRate}%.4f")
+      val written = committedRows(spark, s"$outDir/main",
+        stats.lastCommitted)
+      val quarantined = committedRows(spark, s"$outDir/quarantine",
+        stats.lastCommitted)
+      println(s"[stream] sink rows: main=$written quarantine=$quarantined")
+    }
   }
 }

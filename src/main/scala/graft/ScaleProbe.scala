@@ -1646,14 +1646,12 @@ object ScaleProbe {
     }
     val sizes = if (sizeArgs.nonEmpty) sizeArgs.map(_.toLong).toSeq
       else Seq(50000L, 200000L)
-    val spark = SessionTuning.session(logLevel = "ERROR",
-      // probes default partitions = cores; the graph probes at 32 M
-      // need more under small heaps (per-task memory share =
-      // 0.6 × heap / cores — partitions must keep each task's join
-      // state under it; measured in SCALING.md "Corpus graph driver
-      // memory")
-      confs = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").toSeq
-        .map("spark.sql.shuffle.partitions" -> _))
+    // probes default partitions = cores; the graph probes at 32 M need
+    // more under small heaps (per-task memory share = 0.6 × heap /
+    // cores — partitions must keep each task's join state under it;
+    // measured in SCALING.md "Corpus graph driver memory"): set
+    // SPARK_GRAFT_CONF=spark.sql.shuffle.partitions=N
+    val spark = SessionTuning.session(logLevel = "ERROR")
     sizes.foreach(probe(spark, _))
     spark.stop()
   }

@@ -7,15 +7,20 @@ import org.apache.spark.sql.SparkSession
   * RunPipeline, RunCuration, ScaleProbe) and the spec suite's shared
   * session build through [[session]]; the benchmark under `perfbench/`
   * applies [[tuned]] to its own builder. One definition so a measured
-  * win lands in every session and an A/B can flip one env var against
-  * one binary.
+  * win lands in every session. Precedence, lowest first: base settings
+  * (master, shuffle partitions = cores, UTC, UI off) < the measured
+  * settings below < the entry point's `confs` < `SPARK_GRAFT_CONF=k=v;
+  * k=v`, the one override seam, so one env var A/Bs any setting an
+  * entry point fixes against one binary. [[tuned]] applies measured <
+  * `SPARK_GRAFT_CONF` to a caller's builder.
   *
   * Each setting is measured (OPTIMIZATION_r17/r18.md) and justified at
   * production scale — none is a local[32]-only trick:
   *
-  *   - codegen class cache (`SPARK_GRAFT_CODEGEN_CACHE`, default 4096):
-  *     the stock 100-entry LRU is sized for a handful of hot queries; a
-  *     JVM serving this library's 186-query surface compiles ~10^3
+  *   - codegen class cache, 4096 entries (A/B: `SPARK_GRAFT_CONF=`
+  *     `spark.sql.codegen.cache.maxEntries=100`): the stock 100-entry
+  *     LRU is sized for a handful of hot queries; a JVM serving this
+  *     library's 186-query surface compiles ~10^3
   *     distinct whole-stage-codegen units, so the cache thrashes and
   *     janino recompiles every plan on every pass. Bounded by
   *     compiled-class memory (tens of MB); a long-lived serving driver
@@ -24,9 +29,10 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle local dirs on tmpfs when present
   *     (`SPARK_GRAFT_LOCAL_DIR`; default /dev/shm/graft-spark when
   *     writable with at least the heap's size free, else the JVM
-  *     tmpdir — see [[localDir]]): thread dumps of the 32-core
-  *     bench showed task threads dominated by shuffle-file
-  *     open/copy/commit syscalls on ext4 (DiskBlockObjectWriter
+  *     tmpdir — see [[localDir]]; A/B: `SPARK_GRAFT_CONF=`
+  *     `spark.local.dir=/tmp`): thread dumps of the 32-core bench
+  *     showed task threads dominated by shuffle-file open/copy/commit
+  *     syscalls on ext4 (DiskBlockObjectWriter
   *     .initialize, copyFileStreamNIO, a BLOCKED
   *     writeMetadataFileAndCommit lock) — shuffle I/O, not compute,
   *     was the scaling ceiling. The guide's premise is "machines with
@@ -34,11 +40,12 @@ import org.apache.spark.sql.SparkSession
   *     NVMe, and tmpfs is the sandbox's equivalent. r18 same-box A/B
   *     (18-query subset, calibration flat): 22.6 → 17.0 s (−25 %).
   *
-  *   - `spark.shuffle.sort.bypassMergeThreshold` = 2
-  *     (`SPARK_GRAFT_BYPASS_THRESHOLD`): with reduce-partition counts
-  *     at or below the default threshold (200), the bypass writer
-  *     opens one file PER (map task × reduce partition) — M×R file
-  *     creates/merges/deletes per shuffle, 1024 at local[32]'s 32×32
+  *   - `spark.shuffle.sort.bypassMergeThreshold` = 2 (A/B:
+  *     `SPARK_GRAFT_CONF=spark.shuffle.sort.bypassMergeThreshold=200`):
+  *     with reduce-partition counts at or below the default threshold
+  *     (200), the bypass writer opens one file PER (map task × reduce
+  *     partition) — M×R file creates/merges/deletes per shuffle, 1024
+  *     at local[32]'s 32×32
   *     versus 64 at 8×8, which is exactly the measured t8/t32
   *     anti-scaling of the shuffle-heavy queries (PERF_r17 scaling
   *     0.3–0.7). Forcing the serialized sort writer makes every map
@@ -46,6 +53,23 @@ import org.apache.spark.sql.SparkSession
   *     shape uses anyway (at scale R ≫ 200, the bypass path never
   *     fires), so local plan behavior matches deployment. r18 A/B:
   *     22.6 → 16.5 s (−27 %), every subset query improved.
+  *
+  *   - AQE coalescing sized by bytes, not by core count:
+  *     `spark.sql.adaptive.coalescePartitions.parallelismFirst` = false
+  *     (A/B: `SPARK_GRAFT_CONF=` that key `=true`; RunStream's
+  *     micro-batches set true, so its A/B is `=false`): with
+  *     parallelismFirst=true, AQE refuses to coalesce a post-shuffle
+  *     read below the session's parallelism, so every tiny shuffle
+  *     still schedules ~cores reduce tasks — per-task overhead, not
+  *     compute, at fixture scale, and the Spark docs themselves
+  *     recommend false ("respect the configured target size").
+  *     Size-derived partitioning is exactly the scale-adaptive
+  *     posture: at 100 TB the same setting yields thousands of
+  *     advisory-sized partitions. r18 same-box A/B (33-query subset):
+  *     suite 29.6 → 23.4 s (−21 %), isolated 32.1 → 23.3 s (−27 %),
+  *     calibration flat; 29 of 31 queries improved or flat
+  *     (winnow_matches −58 %, dedup_incremental −44 %,
+  *     media_dedup_clusters_served −46 %).
   *
   *   - the `file:` scheme through [[ForkFreeLocalFileSystem]]
   *     (`fs.file.impl`) and [[ForkFreeLocalFs]]
@@ -61,8 +85,7 @@ import org.apache.spark.sql.SparkSession
   *     `etl_cycle` cycle p50 2.96 → 1.82 s (8/8). Scoped to `file:` on
   *     purpose: `FileSystemBasedCheckpointFileManager` also drops the
   *     forks, but for every scheme, and gives up FileContext's atomic
-  *     rename on HDFS-like stores. A/B back to stock through
-  *     `SPARK_GRAFT_CONF`, set to
+  *     rename on HDFS-like stores. A/B back to stock: `SPARK_GRAFT_CONF=`
   *     `spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem;`
   *     `spark.hadoop.fs.AbstractFileSystem.file.impl=org.apache.hadoop.fs.local.LocalFs`
   *     (one value, the two pairs joined by the `;`).
@@ -72,23 +95,57 @@ object SessionTuning {
   /** Local-mode core count: `SPARK_GRAFT_CPUS`, else 32. */
   private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.toInt)
 
-  /** Build (or get) the process session: `local[cores]` with one
-    * shuffle partition per core, UTC, no UI, the measured settings of
-    * [[tuned]], then `confs`, which win over all of those, and finally
-    * the driver's log level.
-    */
+  /** Build (or get) the process session from [[sessionConfs]]. */
   def session(cores: Int = cpus, confs: Seq[(String, String)] = Nil,
       logLevel: String = "WARN"): SparkSession = {
-    val base = tuned(SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-    val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+    val spark = SparkSession.builder()
+      .config(sessionConfs(cores, confs, sys.env.get("SPARK_GRAFT_CONF")))
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** Apply the measured settings, then `SPARK_GRAFT_CONF`, to a
+    * builder. Static confs (codegen cache, local.dir, the `file:`
+    * filesystem classes) only take effect for the first session of a
+    * JVM — exactly the entry-point usage.
+    */
+  def tuned(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(resolve(sys.env.get("SPARK_GRAFT_CONF"), measured))
+
+  /** A [[session]]'s confs; `overrides` is `SPARK_GRAFT_CONF`. */
+  private[graft] def sessionConfs(cores: Int, confs: Seq[(String, String)],
+      overrides: Option[String]): Map[String, String] =
+    resolve(overrides, Seq(
+      "spark.master" -> s"local[$cores]",
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"), measured, confs)
+
+  /** `layers`, then `overrides` (`k=v;k=v`), the later winning. Blank
+    * entries are skipped; one that is not `key=value` fails, so a
+    * typo'd A/B cannot silently measure the defaults.
+    */
+  private[graft] def resolve(overrides: Option[String],
+      layers: Seq[(String, String)]*): Map[String, String] =
+    (layers.flatten ++ overrides.toSeq.flatMap(_.split(';')).map(_.trim)
+      .filter(_.nonEmpty).map { e =>
+        e.split("=", 2).map(_.trim) match {
+          case Array(k, v) if k.nonEmpty => k -> v
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF entry '$e' is not key=value")
+        }
+      }).toMap
+
+  /** The measured process-level settings (see the object's doc). */
+  private def measured: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.local.dir" -> localDir,
+    "spark.shuffle.sort.bypassMergeThreshold" -> "2",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[ForkFreeLocalFs].getName)
 
   /** Spark scratch (shuffle/spill/broadcast) directory: env override,
     * else tmpfs when available and large enough, else the JVM tmpdir.
@@ -120,55 +177,5 @@ object SessionTuning {
     if (roomy && root.isDirectory && root.canWrite) d.mkdirs()
     if (roomy && d.isDirectory && d.canWrite) d.getAbsolutePath
     else java.lang.System.getProperty("java.io.tmpdir", "/tmp")
-  }
-
-  /** AQE `coalescePartitions.parallelismFirst`:
-    * `SPARK_GRAFT_AQE_PARALLELISM_FIRST`, else `default` (false for
-    * the batch sessions of [[tuned]], true for RunStream's
-    * micro-batches).
-    */
-  def aqeParallelismFirst(default: Boolean): String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", default.toString)
-
-  /** Apply the measured process-level settings to a builder. Static
-    * confs (codegen cache, local.dir, the `file:` filesystem classes)
-    * only take effect for the first session of a JVM — exactly the
-    * entry-point usage.
-    */
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    val tb = b
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.local.dir", localDir)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // AQE coalescing sized by BYTES, not by core count
-      // (`SPARK_GRAFT_AQE_PARALLELISM_FIRST`): with the default
-      // parallelismFirst=true, AQE refuses to coalesce a post-shuffle
-      // read below the session's parallelism, so every tiny shuffle
-      // still schedules ~cores reduce tasks — per-task overhead, not
-      // compute, at fixture scale, and the Spark docs themselves
-      // recommend false ("respect the configured target size").
-      // Size-derived partitioning is exactly the scale-adaptive
-      // posture: at 100 TB the same setting yields thousands of
-      // advisory-sized partitions. r18 same-box A/B (33-query subset):
-      // suite 29.6 → 23.4 s (−21 %), isolated 32.1 → 23.3 s (−27 %),
-      // calibration flat; 29 of 31 queries improved or flat
-      // (winnow_matches −58 %, dedup_incremental −44 %,
-      // media_dedup_clusters_served −46 %).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        aqeParallelismFirst(default = false))
-      .config("spark.hadoop.fs.file.impl",
-        classOf[ForkFreeLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[ForkFreeLocalFs].getName)
-    // dev seam: `SPARK_GRAFT_CONF=k=v;k=v` extra confs, so a candidate
-    // setting can be A/B'd against one binary before it earns a
-    // measured default above
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';').toSeq)
-      .map(_.split("=", 2))
-      .collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(tb) { case (bb, (k, v)) => bb.config(k, v) }
   }
 }

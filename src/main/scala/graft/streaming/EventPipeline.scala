@@ -24,8 +24,10 @@ import graft.report.Reports
   *   - the quarantine split is actually implemented (the reference only
   *     records the filter condition, agent/tools.py:163);
   *   - Avro decode (S4) is declared by the reference but its job parses
-  *     JSON; spark-avro is not on this classpath so JSON parity is what
-  *     we ship, with the schema as the single source of truth.
+  *     JSON; both ship here: [[parse]] for JSON and [[parseAvro]], the
+  *     native decode of the producer's binary Avro datum (spark-avro is
+  *     not on this classpath), with the schema as the single source of
+  *     truth.
   *
   * Scale: the hot path is stateless per-row projection — no shuffle at
   * all until a windowed aggregate is attached; the dual sink writes both
@@ -71,18 +73,8 @@ object EventPipeline {
     * 113-136). Unparseable payloads yield null columns (the declared
     * contract). Works on any frame with a string/binary `value` column.
     */
-  def parse(raw: DataFrame): DataFrame = {
-    val present = Seq("key", "topic", "partition", "offset", "timestamp")
-      .filter(raw.columns.contains)
-    val meta = present.map {
-      case "key" => col("key").cast("string").as("kafka_key")
-      case c => col(c).as(s"kafka_$c")
-    }
-    raw
-      .select(meta :+
-        from_json(col("value").cast("string"), eventSchema).as("data"): _*)
-      .select(col("data.*") +: present.map(c => col(s"kafka_$c")): _*)
-  }
+  def parse(raw: DataFrame): DataFrame =
+    decoded(raw, from_json(col("value").cast("string"), eventSchema))
 
   /** S4 twin of [[parse]] for the producer's actual wire format: `value`
     * is a raw binary Avro datum of the CustomerEvent record, decoded by
@@ -92,7 +84,16 @@ object EventPipeline {
     * flattens exactly like the JSON path, so everything downstream
     * (curate → DQ → sinks) is decoder-agnostic.
     */
-  def parseAvro(raw: DataFrame): DataFrame = {
+  def parseAvro(raw: DataFrame): DataFrame =
+    decoded(raw, graft.functions.GraftFunctions
+      .avroDecodeCe(col("value").cast("binary")))
+      // Avro wire carries version as int; the curated surface is
+      // BIGINT-canonical, so both parse paths emit the same schema
+      .withColumn("version", col("version").cast("long"))
+
+  /** The decoded event struct `data`, flattened, then the Kafka
+    * metadata columns `raw` has, renamed `kafka_*`. */
+  private def decoded(raw: DataFrame, data: Column): DataFrame = {
     val present = Seq("key", "topic", "partition", "offset", "timestamp")
       .filter(raw.columns.contains)
     val meta = present.map {
@@ -100,12 +101,8 @@ object EventPipeline {
       case c => col(c).as(s"kafka_$c")
     }
     raw
-      .select(meta :+ graft.functions.GraftFunctions
-        .avroDecodeCe(col("value").cast("binary")).as("data"): _*)
+      .select(meta :+ data.as("data"): _*)
       .select(col("data.*") +: present.map(c => col(s"kafka_$c")): _*)
-      // Avro wire carries version as int; the curated surface is
-      // BIGINT-canonical, so both parse paths emit the same schema
-      .withColumn("version", col("version").cast("long"))
   }
 
   /** P1-P7 + Q1-Q5 over a (possibly streaming) parsed frame. Streaming

@@ -1,7 +1,9 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -10,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions._
 
-/** Session surface: the native Column helpers need no registration, and
-  * the session factory's scratch directory falls back when it cannot
-  * use tmpfs.
+/** Session surface: the native Column helpers need no registration;
+  * the session factory's conf precedence, its `SPARK_GRAFT_CONF` parse
+  * and its measured defaults; the set of env vars the engine reads; and
+  * the factory's scratch directory falling back when it cannot use
+  * tmpfs.
   */
 class SessionSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -85,5 +89,64 @@ class SessionSpec extends AnyFunSuite {
         == System.getProperty("java.io.tmpdir", "/tmp"))
       assert(!new File(root, "graft-spark").exists())
     }
+  }
+
+  test("session confs: base < measured < entry-point confs < SPARK_GRAFT_CONF") {
+    val c = SessionTuning.sessionConfs(4, confs = Seq(
+        "spark.sql.shuffle.partitions" -> "7",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+        "spark.scheduler.mode" -> "FAIR"),
+      overrides = Some("spark.scheduler.mode=FIFO; spark.master = local[2]"))
+    assert(c("spark.sql.session.timeZone") == "UTC") // base
+    assert(c("spark.sql.codegen.cache.maxEntries") == "4096") // measured
+    assert(c("spark.sql.shuffle.partitions") == "7") // confs > base
+    assert(c("spark.sql.adaptive.coalescePartitions.parallelismFirst")
+      == "true") // confs > measured
+    assert(c("spark.scheduler.mode") == "FIFO") // env > confs
+    assert(c("spark.master") == "local[2]") // env > base
+    assert(SessionTuning.sessionConfs(4, Nil, None)("spark.master")
+      == "local[4]")
+  }
+
+  test("SPARK_GRAFT_CONF skips blank entries and rejects malformed ones") {
+    assert(SessionTuning.resolve(Some(";a=1;; b = x=y ;"), Seq("a" -> "0"))
+      == Map("a" -> "1", "b" -> "x=y"))
+    assert(SessionTuning.resolve(None, Seq("a" -> "0"), Seq("a" -> "2"))
+      == Map("a" -> "2"))
+    Seq("a=1;spark.scheduler.mode", "=FIFO").foreach { raw =>
+      val e = intercept[IllegalArgumentException](
+        SessionTuning.resolve(Some(raw)))
+      assert(e.getMessage.contains(s"'${raw.split(';').last}'"),
+        e.getMessage)
+    }
+  }
+
+  test("the shared session carries the measured defaults") {
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(conf.get("spark.shuffle.sort.bypassMergeThreshold") == "2")
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst")
+      == "false")
+    assert(conf.get("spark.hadoop.fs.file.impl")
+      == classOf[ForkFreeLocalFileSystem].getName)
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl")
+      == classOf[ForkFreeLocalFs].getName)
+  }
+
+  // adding an env knob is a visible edit here; prefer a conf set
+  // through SPARK_GRAFT_CONF
+  test("src/main reads exactly the declared SPARK_GRAFT_* env vars") {
+    val declared = Set("BENCH_ISOLATE", "BENCH_OUT", "CADENCE_B",
+      "CADENCE_DOCS", "CONF", "CPUS", "GRAPH_AUDIT", "LISTING_B",
+      "LISTING_HITS", "LISTING_ROWS", "LOCAL_DIR", "NO_SCRATCH",
+      "SESSION_USERS", "SF_DIR", "SKIP_TOUCHED_AUDIT", "STAR_BG", "TRACE",
+      "VERIFY_PAR").map("SPARK_GRAFT_" + _)
+    val knob = "SPARK_GRAFT_[A-Z_]+".r
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val found =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(f => knob.findAllIn(Files.readString(f))).toSet
+      finally files.close()
+    assert(found == declared)
   }
 }

@@ -995,6 +995,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(pre("n") == 36L, s"n=${pre.get("n")}")
   }
 
+  test("RunStream read-back: a sink a run never wrote counts 0 rows") {
+    val out = Files.createTempDirectory("readback")
+    assert(RunStream.committedRows(spark, s"$out/never_written") == 0L)
+    assert(RunStream.committedRows(spark, out.toString) == 0L)
+  }
+
+  test("RunStream read-back: a corrupt sink fails instead of counting 0") {
+    val out = Files.createTempDirectory("readback")
+    Files.write(out.resolve("part-0.parquet"), "not parquet".getBytes)
+    intercept[org.apache.spark.SparkException](
+      RunStream.committedRows(spark, out.toString))
+  }
+
   test("RunStream full composition: six streams land consistent artifacts") {
     val out = Files.createTempDirectory("runfull").toString
     // 30 s: the graph leg's first trigger (text banding + PNG decode +
