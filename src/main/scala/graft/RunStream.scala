@@ -141,6 +141,21 @@ object RunStream {
     Option(e.getCondition).exists(c =>
       c.contains("PATH_NOT_FOUND") || c.contains("UNABLE_TO_INFER_SCHEMA"))
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Sets the RocksDB state-store provider for [[runFull]]'s
+    * sessionizer leg unless the session already has a provider set
+    * explicitly (e.g. through `SPARK_GRAFT_CONF`), which then stands.
+    * True when it set one, so the caller unsets exactly what it set.
+    */
+  private[graft] def useRocksDbUnlessSet(spark: SparkSession): Boolean =
+    !spark.conf.getAll.contains(ProviderKey) && {
+      spark.conf.set(ProviderKey,
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")
+      true
+    }
+
   /** `SPARK_GRAFT_GRAPH_AUDIT=touched`: the graph legs' per-ingest
     * touched-scope stale audit (~1.5× append cost per trigger). */
   private def auditTouched: Boolean =
@@ -221,7 +236,8 @@ object RunStream {
     *   5. user-event stream → [[graft.streaming.SessionStream]]
     *      sessionization — the one leg with REAL streaming state
     *      (flatMapGroupsWithState, one open session per live user),
-    *      run under the RocksDB state-store provider so the composed
+    *      run under the RocksDB state-store provider (unless one is
+    *      set explicitly, see [[useRocksDbUnlessSet]]) so the composed
     *      posture carries off-heap state next to the foreachBatch legs,
     *   6. a MULTIMODAL document stream (planted text twins + PNG
     *      payloads on the twin-pair residues) → [[graft.streaming
@@ -270,13 +286,9 @@ object RunStream {
       : FullSummary = {
     import graft.streaming.{DedupStream, HeavyHitterStream, SketchStream}
     // the sessionizer leg runs under RocksDB (off-heap state — the
-    // measured posture for large live-user counts); session-scoped
-    // conf, restored on exit
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    // measured posture for large live-user counts) unless a provider is
+    // set explicitly; session-scoped conf, unset on exit if set here
+    val setProvider = useRocksDbUnlessSet(spark)
     try {
       val ceStats = new EventPipeline.RunStats(spark)
       val skStats = new SketchStream.SketchStats(spark)
@@ -480,12 +492,7 @@ object RunStream {
       maintainAfterRun("full-graph-pairs",
         graft.ext.CorpusGraph.maintainPairs(spark, s"$outDir/graph_g"))
       summary
-    } finally {
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+    } finally if (setProvider) spark.conf.unset(ProviderKey)
   }
 
   /** Post-run index maintenance: by the time this runs the stream is

@@ -119,8 +119,10 @@ object PipelineRun {
   }
 
   /** Small-files compaction for a parquet sink (the streaming dual sink
-    * writes one file per partition-dir per micro-batch — at a 30 s
-    * trigger that is ~2.9 k files/day/dir): rewrite with
+    * writes one file per partition-dir per micro-batch — 77 files for a
+    * 5 k-event batch over 77 dirs, 243 before the batch was rebalanced
+    * by its partition columns; at a 30 s trigger that is ~2.9 k
+    * files/day/dir): rewrite with
     * `ceil(rows/targetRows)` output files per partition column set.
     * Returns (files before, files after). The 100 TB version is this
     * exact job per partition-dir on a schedule.

@@ -29,10 +29,13 @@ import graft.report.Reports
   *     not on this classpath), with the schema as the single source of
   *     truth.
   *
-  * Scale: the hot path is stateless per-row projection — no shuffle at
-  * all until a windowed aggregate is attached; the dual sink writes both
-  * flows from one materialized micro-batch (one source read), partitioned
-  * by (country, plan) for pruned downstream scans.
+  * Scale: the hot path is stateless per-row projection; the one shuffle
+  * before a windowed aggregate is attached is a small rebalance of each
+  * micro-batch by its output directory, so the dual sink writes one file
+  * per partition directory instead of one per directory and input task
+  * (see [[processBatch]]). Both flows are written from one materialized
+  * micro-batch (one source read), partitioned by (event_date, country,
+  * plan) for pruned downstream scans.
   */
 object EventPipeline {
 
@@ -178,27 +181,44 @@ object EventPipeline {
     * without date pruning reads the whole corpus (SCALING.md).
     * StreamingSpec asserts the date-pruned scan reads only matching
     * partition directories.
+    *
+    * File count: the batch arrives as one partition per source partition,
+    * and a task writes one file per directory it touches, so an
+    * unclustered 5 k-event batch wrote 243 files into its 77 directories.
+    * The cached frame is REBALANCEd by (event_date, country, plan) —
+    * `batch_id` is a literal — so each directory's rows meet in one task:
+    * one file per directory, each paying one open, footer, `.crc` and
+    * commit rename. REBALANCE rather than `repartition(cols)`: AQE
+    * coalesces the small post-shuffle partitions and splits a skewed one,
+    * so a hot directory does not serialize a large batch. The shuffle
+    * runs once, into the cache that feeds the report and both writes.
+    *
+    * Emptiness is read from the run report's total — an empty batch
+    * writes nothing and moves no counter. A separate `isEmpty` would be
+    * one more job that re-reads the uncached source.
     */
   def processBatch(batch: DataFrame, batchId: Long, mainPath: String,
       quarantinePath: String, stats: RunStats): Unit =
-    if (!batch.isEmpty && batchId > stats.lastCommitted) {
+    if (batchId > stats.lastCommitted) {
       val cached = batch.withColumn("batch_id", lit(batchId))
         .withColumn("event_date", to_date(col("event_timestamp")))
+        .hint("rebalance", col("event_date"), col("country"), col("plan"))
         .persist()
       try {
         val r = Reports.runReport(cached).head()
-        val (main, quarantine) =
-          Quarantine.split(cached, !col("dq_passed"))
-        main.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "event_date", "country", "plan").parquet(mainPath)
-        quarantine.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "event_date", "country", "plan").parquet(quarantinePath)
-        // both writes committed — only now touch the report counters
-        stats.total.add(r.getLong(0)); stats.late.add(r.getLong(1))
-        stats.dqFailed.add(r.getLong(2)); stats.drifted.add(r.getLong(3))
-        stats.lastCommitted = batchId
+        if (r.getLong(0) > 0) {
+          val (main, quarantine) =
+            Quarantine.split(cached, !col("dq_passed"))
+          Seq(main -> mainPath, quarantine -> quarantinePath).foreach {
+            case (flow, path) => flow.write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id", "event_date", "country", "plan").parquet(path)
+          }
+          // both writes committed — only now touch the report counters
+          stats.total.add(r.getLong(0)); stats.late.add(r.getLong(1))
+          stats.dqFailed.add(r.getLong(2)); stats.drifted.add(r.getLong(3))
+          stats.lastCommitted = batchId
+        }
       } finally { cached.unpersist(); () }
     }
 

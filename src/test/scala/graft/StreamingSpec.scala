@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -147,6 +149,93 @@ class StreamingSpec extends AnyFunSuite {
     EventPipeline.processBatch(batch2, 1L, mainDir, qDir, freshStats)
     assert(freshStats.total.value == 3)
     assert(spark.read.parquet(mainDir).count() == 2)
+  }
+
+  /** Leaf directory -> `.parquet` data files under `root` (the `.crc`
+    * siblings end in `.crc`). */
+  private def parquetFilesPerDir(root: String): Map[String, Int] = {
+    val files = Files.walk(java.nio.file.Paths.get(root))
+    try files.iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .groupBy(_.getParent.toString).view.mapValues(_.size).toMap
+    finally files.close()
+  }
+
+  test("dual sink writes one parquet file per partition directory per batch") {
+    import spark.implicits._
+    val mainDir = Files.createTempDirectory("lmain").toString
+    val qDir = Files.createTempDirectory("lquar").toString
+    val stats = new EventPipeline.RunStats(spark)
+    // 48 events, 4 in each of 12 (date, country, plan) cells; 2 rows of
+    // each of 6 cells fail DQ. Hashed over 4 input partitions, so a
+    // cell's rows sit in several tasks
+    val payloads = (0 until 48).map { i =>
+      val bad = i < 24 && i % 12 < 6
+      eventJson(s"c$i", if (bad) s"bad$i" else s"u$i@example.com",
+        T0 - (i % 2) * 86400000L, plan = Seq("basic", "premium")(i / 2 % 2),
+        country = Seq("US", "CA", "GB")(i / 4 % 3))
+    }
+    val batch = EventPipeline.curate(
+      EventPipeline.parse(payloads.toDF("value").repartition(4, col("value"))),
+      processingTs = lit(new java.sql.Timestamp(T0)))
+    assert(batch.rdd.getNumPartitions == 4)
+
+    EventPipeline.processBatch(batch, 0L, mainDir, qDir, stats)
+    assert(stats.total.value == 48 && stats.dqFailed.value == 12)
+    Seq(mainDir -> 12, qDir -> 6).foreach { case (dir, cells) =>
+      val perDir = parquetFilesPerDir(dir)
+      assert(perDir.size == cells, s"$dir: $perDir")
+      assert(perDir.values.forall(_ == 1), s"$dir: $perDir")
+    }
+    // the rows read back are the curated batch, split by dq_passed
+    val fields = (EventPipeline.eventSchema.fieldNames.toSeq ++
+      Seq("region", "email_domain", "is_late_arrival", "dq_passed",
+        "schema_drift_detected")).map(col)
+    Seq(mainDir -> true, qDir -> false).foreach { case (dir, passed) =>
+      val got = spark.read.parquet(dir).select(fields: _*).orderBy("id")
+      val want = batch.filter(col("dq_passed") === passed)
+        .select(fields: _*).orderBy("id")
+      assert(got.collect().toSeq == want.collect().toSeq, dir)
+    }
+  }
+
+  test("dual sink: an empty batch writes nothing and moves no counter") {
+    import spark.implicits._
+    val mainDir = Files.createTempDirectory("emain").toString
+    val qDir = Files.createTempDirectory("equar").toString
+    val stats = new EventPipeline.RunStats(spark)
+    val empty = EventPipeline.curate(
+      EventPipeline.parse(Seq.empty[String].toDF("value")))
+    EventPipeline.processBatch(empty, 0L, mainDir, qDir, stats)
+    assert(parquetFilesPerDir(mainDir).isEmpty)
+    assert(parquetFilesPerDir(qDir).isEmpty)
+    assert(Seq(stats.total, stats.late, stats.dqFailed, stats.drifted)
+      .forall(_.value == 0))
+    assert(stats.lastCommitted == -1L)
+  }
+
+  test("dual sink: numInputRows and the run report count each offered row once") {
+    // a second job over the uncached batch (an emptiness probe) re-reads
+    // the source and inflates numInputRows
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[String]
+    val mainDir = Files.createTempDirectory("nmain").toString
+    val qDir = Files.createTempDirectory("nquar").toString
+    val ckpt = Files.createTempDirectory("nckpt").toString
+    val stats = new EventPipeline.RunStats(spark)
+    val sizes = Seq(7, 11, 13)
+    sizes.zipWithIndex.foreach { case (n, b) =>
+      mem.addData((0 until n).map(i =>
+        eventJson(s"b${b}r$i", s"b${b}r$i@example.com", T0)): _*)
+    }
+    val query = EventPipeline.startDualSink(
+      EventPipeline.curate(EventPipeline.parse(mem.toDF().select(col("value")))),
+      mainDir, qDir, ckpt, stats, Trigger.AvailableNow())
+    query.awaitTermination(60000)
+    assert(query.recentProgress.map(_.numInputRows).sum == sizes.sum)
+    assert(stats.total.value == sizes.sum)
+    assert(spark.read.parquet(mainDir).count() == sizes.sum)
   }
 
   test("Kafka-shaped streaming frame: full column contract end to end") {
@@ -702,7 +791,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     import graft.streaming.SessionStream
     val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(confKey)
+    // only an explicit setting is restored: getOption would return the
+    // default, and setting it back would read as an explicit choice
+    val prior = spark.conf.getAll.get(confKey)
     providerClass.foreach(spark.conf.set(confKey, _))
     try {
     val gapMs = 60000L
@@ -1006,6 +1097,20 @@ class StreamingSpec extends AnyFunSuite {
     Files.write(out.resolve("part-0.parquet"), "not parquet".getBytes)
     intercept[org.apache.spark.SparkException](
       RunStream.committedRows(spark, out.toString))
+  }
+
+  test("runFull sets RocksDB only when no state-store provider is set explicitly") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    assert(RunStream.useRocksDbUnlessSet(s))
+    assert(s.conf.get(key).endsWith(".RocksDBStateStoreProvider"))
+    // an explicit choice (e.g. through SPARK_GRAFT_CONF) stands
+    val hdfs = "org.apache.spark.sql.execution.streaming.state." +
+      "HDFSBackedStateStoreProvider"
+    s.conf.set(key, hdfs)
+    assert(!RunStream.useRocksDbUnlessSet(s))
+    assert(s.conf.get(key) == hdfs)
   }
 
   test("RunStream full composition: six streams land consistent artifacts") {
