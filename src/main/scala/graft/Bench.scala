@@ -4,7 +4,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // process-level measured settings (codegen cache, shuffle local
     // dir, shuffle writer): SessionTuning — one definition for every
-    // entry point, each env-overridable for A/B
+    // entry point; A/B any of them through SPARK_GRAFT_CONF
     val spark = SessionTuning.session()
     // JVM/session warmup (codegen, shuffle service, parquet footer reads)
     // so per-query timings below are steady-state, not arrival order.

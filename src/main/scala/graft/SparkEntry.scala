@@ -1039,7 +1039,8 @@ object SparkEntry {
     // filtered-search retrieval eval: recall@k / MRR of the
     // metadata-filtered IVF search against the same-predicate exact
     // scan — isolates the probing loss a selective filter adds (the
-    // known weak spot of IVF filtering; selectivity sweep in ScaleProbe)
+    // known weak spot of IVF filtering; selectivity sweep in SCALING.md
+    // "Filtered-ANN recall vs selectivity")
     "ann_recall_filtered" -> ((s, dir) => {
       val path = s"/tmp/graft_ivf_${fixtureKey(dir)}"
       graft.ext.IndexCache.ensure(path)(

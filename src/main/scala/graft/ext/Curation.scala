@@ -157,18 +157,6 @@ object Curation {
       documents.filter(col("doc_id") % benchmarkMod =!= 0),
       documents.filter(col("doc_id") % benchmarkMod === 0))
 
-  /** Set-bit count of the benchmark's Bloom filter — the fill-ratio
-    * monitor (`fill = bloomFillBits/BloomBits`; per-gram FP rate is
-    * `fill^BloomK`). An ops dashboard sizes m from this: past ~50 %
-    * fill the screen's FP mass grows fast and the filter wants more
-    * bits — which is a REBUILD, not an in-place change (a Bloom cannot
-    * delete or grow; takedown of benchmark items likewise rebuilds —
-    * it is benchmark-sized, not corpus-sized, so that is cheap).
-    */
-  def bloomFillBits(benchmark: DataFrame,
-      mBits: Int = BloomBits): Long =
-    bloomBits(benchmark, mBits).count()
-
   /** A trained filter with the bit-space it was trained AT: build and
     * probe positions are mod `mBits`, so a probe at a different size
     * silently finds nothing (a Bloom false NEGATIVE — the one failure

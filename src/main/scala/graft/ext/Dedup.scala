@@ -99,8 +99,9 @@ object Dedup {
   }
 
   /** (doc_id, band_idx, band_hash): the LSH band table — the self-join
-    * key space of [[minhashNearDups]]. Exposed so ScaleProbe can measure
-    * bucket-size skew on the exact production banding.
+    * key space of [[minhashNearDups]]. Public because the streaming
+    * screens (DedupStream, GraphStream) and `Curation.fuzzyDecontam`
+    * band their inputs with it, so they share this exact banding.
     */
   def bandTable(documents: DataFrame): DataFrame = {
     val sigs = documents.select(col("doc_id"),

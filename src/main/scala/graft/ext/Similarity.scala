@@ -1560,9 +1560,9 @@ object Similarity {
     * recall can sit well below unfiltered recall at the same nProbe.
     * Ground truth is [[topKBruteForceFiltered]] (same predicate,
     * exact scan), so recall_ppm here isolates exactly the probing
-    * loss under the filter. The selectivity sweep lives in ScaleProbe
-    * ("filtered-recall vs selectivity"); this is the per-deployment
-    * monitored row.
+    * loss under the filter. The selectivity sweep is recorded in
+    * SCALING.md "Filtered-ANN recall vs selectivity"; this is the
+    * per-deployment monitored row.
     */
   def annRecallFiltered(spark: org.apache.spark.sql.SparkSession,
       path: String, embeddings: DataFrame,

@@ -136,11 +136,9 @@ class SessionSpec extends AnyFunSuite {
   // adding an env knob is a visible edit here; prefer a conf set
   // through SPARK_GRAFT_CONF
   test("src/main reads exactly the declared SPARK_GRAFT_* env vars") {
-    val declared = Set("BENCH_ISOLATE", "BENCH_OUT", "CADENCE_B",
-      "CADENCE_DOCS", "CONF", "CPUS", "GRAPH_AUDIT", "LISTING_B",
-      "LISTING_HITS", "LISTING_ROWS", "LOCAL_DIR", "NO_SCRATCH",
-      "SESSION_USERS", "SF_DIR", "SKIP_TOUCHED_AUDIT", "STAR_BG", "TRACE",
-      "VERIFY_PAR").map("SPARK_GRAFT_" + _)
+    val declared = Set("BENCH_ISOLATE", "BENCH_OUT", "CONF", "CPUS",
+      "GRAPH_AUDIT", "LOCAL_DIR", "NO_SCRATCH", "SESSION_USERS", "SF_DIR",
+      "STAR_BG", "TRACE", "VERIFY_PAR").map("SPARK_GRAFT_" + _)
     val knob = "SPARK_GRAFT_[A-Z_]+".r
     val files = Files.walk(Paths.get("src/main/scala"))
     val found =
