@@ -4,7 +4,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.EventPipeline
+import graft.streaming.{EventPipeline, MicroBatch}
 
 /** Runnable streaming demo without a Kafka broker: the `rate` source
   * synthesizes CustomerEvent payloads (with the reference's anomaly mix
@@ -156,11 +156,6 @@ object RunStream {
       true
     }
 
-  /** `SPARK_GRAFT_GRAPH_AUDIT=touched`: the graph legs' per-ingest
-    * touched-scope stale audit (~1.5× append cost per trigger). */
-  private def auditTouched: Boolean =
-    sys.env.get("SPARK_GRAFT_GRAPH_AUDIT").contains("touched")
-
   /** Committed-only graph accounting for a bounded run: stop() can
     * interrupt a trigger between its pair write and its relabel — the
     * documented at-least-once window a checkpoint RESUME replays — so
@@ -284,7 +279,8 @@ object RunStream {
       rowsPerSecond: Int,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"))
       : FullSummary = {
-    import graft.streaming.{DedupStream, HeavyHitterStream, SketchStream}
+    import graft.streaming.{DedupStream, GraphStream, HeavyHitterStream,
+      SessionStream, SketchStream}
     // the sessionizer leg runs under RocksDB (off-heap state — the
     // measured posture for large live-user counts) unless a provider is
     // set explicitly; session-scoped conf, unset on exit if set here
@@ -296,7 +292,7 @@ object RunStream {
       val hhStats = new HeavyHitterStream.HhStats(spark)
       val sessEmitted =
         spark.sparkContext.longAccumulator("full_sessions_emitted")
-      val gStats = new graft.streaming.GraphStream.GraphStats(spark)
+      val gStats = new GraphStream.GraphStats(spark)
       val ((queries, qSess), rec) = Metrics.record(spark) {
         def rateSource() = spark.readStream.format("rate")
           .option("rowsPerSecond", rowsPerSecond.toString).load()
@@ -327,18 +323,19 @@ object RunStream {
 
         val evTypes = array(lit("view"), lit("click"), lit("purchase"),
           lit("error"), lit("login"))
-        val qSk = inPool("graft_hll")(SketchStream.start(
+        val qSk = inPool("graft_hll")(MicroBatch.start(
           rateSource().select(col("timestamp").as("ts"),
             element_at(evTypes, (col("value") % 5 + 1).cast("int"))
               .as("event_type"),
             concat(lit("u"), (col("value") % 97).cast("string"))
               .as("user_id")),
-          s"$outDir/hll_index", s"$outDir/ckpt_hll", skStats, trigger))
+          s"$outDir/ckpt_hll", trigger)(
+          SketchStream.processBatch(_, _, s"$outDir/hll_index", skStats)))
 
-        val qDd = inPool("graft_dedup")(DedupStream.start(
-          docStream(rateSource()),
-          s"$outDir/corpus", s"$outDir/dd_index", s"$outDir/ckpt_dd",
-          ddStats, trigger))
+        val qDd = inPool("graft_dedup")(MicroBatch.start(
+          docStream(rateSource()), s"$outDir/ckpt_dd", trigger)(
+          DedupStream.processBatch(_, _, s"$outDir/corpus",
+            s"$outDir/dd_index", ddStats)))
 
         // skewed symbol stream for the heavy-hitter leg: the word-salad
         // docs are near-uniform over their vocabulary, which is exactly
@@ -348,35 +345,30 @@ object RunStream {
         // the HeavyHitters fixture contract)
         val skew = array((Seq.fill(3)("h") ++ Seq.fill(2)("w")
           ++ "abcdefgijklmn".map(_.toString)).map(lit(_)): _*)
-        val qHh = inPool("graft_hh")(HeavyHitterStream.start(
+        val qHh = inPool("graft_hh")(MicroBatch.start(
           rateSource().select(col("value").as("doc_id"),
             element_at(skew,
               (pmod(xxhash64(col("value")), lit(18)) + 1).cast("int"))
               .as("text")),
-          s"$outDir/hh_index", s"$outDir/ckpt_hh", hhStats, trigger))
+          s"$outDir/ckpt_hh", trigger)(
+          HeavyHitterStream.processBatch(_, _, s"$outDir/hh_index",
+            hhStats)))
 
         // users cycle so a user's successive events arrive
         // ~nUsers/rowsPerSecond apart (2 s at the chosen ratio) — past
         // the 1 s gap, every revisit CLOSES the prior session, so the
         // leg exercises the full state churn at one row per live user
         val nUsers = math.max(rowsPerSecond.toLong * 2L, 100L)
-        val qSess = inPool("graft_sess")(
-          graft.streaming.SessionStream.sessions(
+        val qSess = inPool("graft_sess")(MicroBatch.start(
+          SessionStream.sessions(
             rateSource().select(
               pmod(col("value"), lit(nUsers)).as("user_id"),
               col("timestamp").as("ts"),
               (pmod(col("value"), lit(100L)) / lit(10.0)).as("value")),
-            gapMs = 1000L, watermarkDelay = "5 seconds")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$outDir/ckpt_sess")
-          .trigger(trigger)
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[
-               graft.streaming.SessionStream.Session], _: Long) =>
-              sessEmitted.add(b.count()); ()
-          }
-          .start())
+            gapMs = 1000L, watermarkDelay = "5 seconds"),
+          s"$outDir/ckpt_sess", trigger) { (b, _) =>
+          sessEmitted.add(b.count()); ()
+        })
 
         // sixth leg: the evidence-preserving multimodal graph stream.
         // PNG payloads ride on the twin-pair residues only (ids ≡ 0 and
@@ -384,20 +376,19 @@ object RunStream {
         // both ends of every perceptual twin carry a payload while the
         // encode cost stays at ~20% of the doc rate)
         import spark.implicits._
-        val qGr = inPool("graft_graph")(graft.streaming.GraphStream.start(
+        val imageLeg = Seq(GraphStream.MediaLeg("image_payload", "image",
+          graft.ext.Multimodal.imageFpFromPayload(_)))
+        val qGr = inPool("graft_graph")(MicroBatch.start(
           docStream(rateSource()).as[(Long, String)].map { case (id, t) =>
             (id, t,
               if (id % 10 == 0 || id % 10 == 7)
                 graft.ext.Multimodal.pngHashPayload(id)
               else null)
           }.toDF("doc_id", "text", "image_payload"),
-          s"$outDir/corpus_g", s"$outDir/bands_g", s"$outDir/graph_g",
-          s"$outDir/ckpt_g", gStats, graphTrigger,
-          mediaLegs = Seq(graft.streaming.GraphStream.MediaLeg(
-            "image_payload", "image",
-            graft.ext.Multimodal.imageFpFromPayload(_))),
-          fpIndexPath = Some(s"$outDir/fp_g"),
-          auditTouched = auditTouched))
+          s"$outDir/ckpt_g", graphTrigger)(
+          GraphStream.processBatch(_, _, s"$outDir/corpus_g",
+            s"$outDir/bands_g", s"$outDir/graph_g", gStats,
+            mediaLegs = imageLeg, fpIndexPath = Some(s"$outDir/fp_g"))))
 
         val queries = Seq(qCe, qSk, qDd, qHh, qSess, qGr)
         Thread.sleep(seconds * 1000L)
@@ -469,8 +460,7 @@ object RunStream {
       // IO, no progress (the volatile counter only knows THIS run)
       if (gStats.lastCommitted >= 0L) {
         maintainAfterRun("full-graph-bands",
-          graft.streaming.GraphStream.maintain(spark,
-            s"$outDir/bands_g",
+          GraphStream.maintain(spark, s"$outDir/bands_g",
             foldThrough = gStats.lastCommitted + 1L))
         maintainAfterRun("full-graph-fp",
           graft.streaming.MediaDedupStream.maintain(spark,
@@ -571,6 +561,7 @@ object RunStream {
       outDir: String, seconds: Int, rowsPerSecond: Int) {
     private def rate: DataFrame = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond.toString).load()
+    private val trigger = Trigger.ProcessingTime("5 seconds")
 
     // `full` mode: the composed surface — curate→dual-sink plus the
     // three index-ingest streams plus the stateful sessionizer
@@ -619,8 +610,7 @@ object RunStream {
       // count its corpus rows (runFull suffixes per leg for this reason)
       val q = graft.streaming.CurateStream.start(curatedDocStream(rate),
         s"$outDir/corpus_cu", s"$outDir/index_cu", s"$outDir/ckpt_cu",
-        stats, Trigger.ProcessingTime("5 seconds"), bench,
-        benchMBits = 1 << 23)
+        stats, trigger, bench, benchMBits = 1 << 23)
       EventPipeline.runBounded(q, seconds * 1000L)
       maintainAfterRun("curate-index",
         graft.streaming.DedupStream.maintain(spark, s"$outDir/index_cu"))
@@ -653,10 +643,11 @@ object RunStream {
       val fpExtract: DataFrame => DataFrame =
         if (wire == "video") graft.ext.Multimodal.videoFpFromPayload(_)
         else graft.ext.Multimodal.imageFpFromPayload(_)
-      val q = graft.streaming.MediaDedupStream.start(media,
-        s"$outDir/corpus_md", s"$outDir/index_md", s"$outDir/ckpt_md",
-        stats, Trigger.ProcessingTime("5 seconds"), fpExtract,
-        modality = if (wire == "video") "video" else "image")
+      val modality = if (wire == "video") "video" else "image"
+      val q = MicroBatch.start(media, s"$outDir/ckpt_md", trigger)(
+        graft.streaming.MediaDedupStream.processBatch(_, _,
+          s"$outDir/corpus_md", s"$outDir/index_md", stats, fpExtract,
+          modality))
       EventPipeline.runBounded(q, seconds * 1000L)
       maintainAfterRun("media-fp",
         graft.streaming.MediaDedupStream.maintain(spark,
@@ -693,16 +684,9 @@ object RunStream {
       val out = graft.streaming.SessionStream.sessions(
         events, gapMs = 1000L, watermarkDelay = "5 seconds")
       val emitted = spark.sparkContext.longAccumulator("emitted")
-      val q = out.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$outDir/ckpt_sess")
-        .trigger(Trigger.ProcessingTime("5 seconds"))
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[
-             graft.streaming.SessionStream.Session], _: Long) =>
-            emitted.add(b.count()); ()
-        }
-        .start()
+      val q = MicroBatch.start(out, s"$outDir/ckpt_sess", trigger) {
+        (b, _) => emitted.add(b.count()); ()
+      }
       EventPipeline.runBounded(q, seconds * 1000L)
       val progress = q.recentProgress.toSeq
       val stateRows = progress.flatMap(_.stateOperators.toSeq)
@@ -769,13 +753,11 @@ object RunStream {
         case _ => Nil
       }
       val stats = new graft.streaming.GraphStream.GraphStats(spark)
-      val q = graft.streaming.GraphStream.start(docs,
-        s"$outDir/corpus_g", s"$outDir/bands_g", s"$outDir/graph_g",
-        s"$outDir/ckpt_g", stats, Trigger.ProcessingTime("5 seconds"),
-        mediaLegs = legs,
-        fpIndexPath =
-          if (legs.nonEmpty) Some(s"$outDir/fp_g") else None,
-        auditTouched = auditTouched)
+      val fpIndexPath = if (legs.nonEmpty) Some(s"$outDir/fp_g") else None
+      val q = MicroBatch.start(docs, s"$outDir/ckpt_g", trigger)(
+        graft.streaming.GraphStream.processBatch(_, _, s"$outDir/corpus_g",
+          s"$outDir/bands_g", s"$outDir/graph_g", stats, legs,
+          fpIndexPath))
       EventPipeline.runBounded(q, seconds * 1000L)
       // fold only through the committed stored id (see runFull) — an
       // interrupted trigger's bands/fps must stay under their own
@@ -820,9 +802,9 @@ object RunStream {
     def dedup(): Unit = {
       val docs = docStream(rate)
       val stats = new graft.streaming.DedupStream.DedupStats(spark)
-      val q = graft.streaming.DedupStream.start(docs,
-        s"$outDir/corpus", s"$outDir/index", s"$outDir/ckpt", stats,
-        Trigger.ProcessingTime("5 seconds"))
+      val q = MicroBatch.start(docs, s"$outDir/ckpt", trigger)(
+        graft.streaming.DedupStream.processBatch(_, _, s"$outDir/corpus",
+          s"$outDir/index", stats))
       EventPipeline.runBounded(q, seconds * 1000L)
       maintainAfterRun("dedup-index",
         graft.streaming.DedupStream.maintain(spark, s"$outDir/index"))
@@ -848,12 +830,13 @@ object RunStream {
       val query = EventPipeline.startDualSink(
         EventPipeline.curate(parsed),
         s"$outDir/main", s"$outDir/quarantine", s"$outDir/ckpt", stats,
-        Trigger.ProcessingTime("5 seconds"))
+        trigger)
       EventPipeline.runBounded(query, seconds * 1000L)
 
       println(s"[stream] total=${stats.total.value} late=${stats.late.value} " +
         s"dqFailed=${stats.dqFailed.value} drifted=${stats.drifted.value} " +
-        f"lateRate=${stats.lateRate}%.4f dqFailureRate=${stats.dqFailureRate}%.4f")
+        f"lateRate=${stats.report.lateRate}%.4f " +
+        f"dqFailureRate=${stats.report.dqFailureRate}%.4f")
       val written = committedRows(spark, s"$outDir/main",
         stats.lastCommitted)
       val quarantined = committedRows(spark, s"$outDir/quarantine",

@@ -84,6 +84,13 @@ object Similarity {
   def ivfProbesFor(cells: Int): Int =
     math.max(IvfProbes, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
+  /** Squared L2 distance from `v` (norm `nv`) to `cv` (squared norm
+    * `cn2`) via dot products, in the op order of the oracle SQL's
+    * [[d2Sql]].
+    */
+  private def dist2(v: Column, nv: Column, cv: Column, cn2: Column): Column =
+    nv * nv - lit(2.0) * dot(v, cv) + cn2
+
   private def withNorm(embeddings: DataFrame): DataFrame = {
     embeddings
       .select(col("vec_id"), col("label"),
@@ -264,8 +271,6 @@ object Similarity {
     */
   def hardNegativesServedSql: String = {
     val nProbe = ivfProbesFor(IvfCells)
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""WITH $hierBuildCtesSql,
        |qcoarse AS (
        |  SELECT vec_id, embedding, nrm, ccell FROM cranked
@@ -273,7 +278,7 @@ object Similarity {
        |qranked AS (
        |  SELECT qc.vec_id, qc.embedding, qc.nrm, f.cell,
        |    row_number() OVER (PARTITION BY qc.vec_id ORDER BY
-       |      ${d2("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM qcoarse qc JOIN fcells f ON qc.ccell = f.ccell),
        |probes AS (
@@ -428,8 +433,6 @@ object Similarity {
     */
   def labelNoiseKnnServedSql: String = {
     val nProbe = ivfProbesFor(IvfCells)
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""WITH $hierBuildCtesSql,
        |qcoarse AS (
        |  SELECT vec_id, embedding, nrm, ccell FROM cranked
@@ -437,7 +440,7 @@ object Similarity {
        |qranked AS (
        |  SELECT qc.vec_id, qc.embedding, qc.nrm, f.cell,
        |    row_number() OVER (PARTITION BY qc.vec_id ORDER BY
-       |      ${d2("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM qcoarse qc JOIN fcells f ON qc.ccell = f.ccell),
        |probes AS (
@@ -521,8 +524,6 @@ object Similarity {
     */
   def topKIvfFilteredSql: String = {
     val nProbe = ivfProbesFor(IvfCells)
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""WITH $hierBuildCtesSql,
        |qcoarse AS (
        |  SELECT vec_id, embedding, nrm, ccell FROM cranked
@@ -530,7 +531,7 @@ object Similarity {
        |qranked AS (
        |  SELECT qc.vec_id, qc.embedding, qc.nrm, f.cell,
        |    row_number() OVER (PARTITION BY qc.vec_id ORDER BY
-       |      ${d2("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM qcoarse qc JOIN fcells f ON qc.ccell = f.ccell),
        |probes AS (
@@ -703,9 +704,6 @@ object Similarity {
     val cents0 = e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cell"), col("v").as("cv"),
         (col("nrm") * col("nrm")).as("cn2"))
-    // L2² via dot products; identical op order to the oracle SQL
-    def dist2(v: Column, nv: Column, cv: Column, cn2: Column): Column =
-      nv * nv - lit(2.0) * dot(v, cv) + cn2
     def score(side: DataFrame, cents: DataFrame): DataFrame = side
       .join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
@@ -759,12 +757,6 @@ object Similarity {
   }
 
   def topKIvfSql: String = {
-    def d2(vecExpr: String, nrm2Expr: String): String =
-      s"""$nrm2Expr
-         |        - 2.0 * list_sum([CAST($vecExpr[i] AS DOUBLE)
-         |                          * CAST(cv[i] AS DOUBLE)
-         |                          for i in range(1, len($vecExpr) + 1)])
-         |        + cn2""".stripMargin
     s"""WITH e AS (
        |  SELECT vec_id, embedding,
        |    sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
@@ -776,7 +768,7 @@ object Similarity {
        |ranked0 AS (
        |  SELECT e.vec_id, e.embedding, cents0.cell,
        |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      ${d2("e.embedding", "e.nrm * e.nrm")},
+       |      ${d2Sql("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
        |      cents0.cell) AS rn
        |  FROM e CROSS JOIN cents0),
        |refined0 AS (
@@ -798,7 +790,7 @@ object Similarity {
        |ranked AS (
        |  SELECT e.vec_id, e.embedding, e.nrm, refined.cell,
        |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      ${d2("e.embedding", "e.nrm * e.nrm")},
+       |      ${d2Sql("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
        |      refined.cell) AS rn
        |  FROM e CROSS JOIN refined),
        |assign AS (
@@ -867,8 +859,6 @@ object Similarity {
     */
   private def rankProbes(q: DataFrame, fineCells: DataFrame,
       nProbe: Int, probeCoarse: Int): DataFrame = {
-    def dist2(v: Column, nv: Column, fv: Column, fn2: Column): Column =
-      nv * nv - lit(2.0) * dot(v, fv) + fn2
     val coarseCents = fineCells.filter(col("cell") < 0)
       .select(col("ccell"), col("fv").as("cv"), col("fn2").as("cn2"))
     val qCoarse = q.join(broadcast(coarseCents), lit(true))
@@ -906,7 +896,7 @@ object Similarity {
         col("cosine"))
   }
 
-  /** DuckDB squared-distance fragment shared by the hier-build CTEs. */
+  /** DuckDB squared-distance fragment shared by the IVF oracle SQL. */
   private def d2Sql(vecExpr: String, nrm2Expr: String, cvExpr: String,
       cn2Expr: String): String =
     s"""$nrm2Expr
@@ -921,8 +911,6 @@ object Similarity {
     */
   private def hierBuildCtesSql: String = {
     val nCoarse = ivfCoarseFor(IvfCells)
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""e AS (
        |  SELECT vec_id, embedding,
        |    sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
@@ -934,7 +922,7 @@ object Similarity {
        |cranked0 AS (
        |  SELECT e.vec_id, e.embedding, coarse0.ccell,
        |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      ${d2("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
+       |      ${d2Sql("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
        |      coarse0.ccell) AS rn
        |  FROM e CROSS JOIN coarse0),
        |crefined0 AS (
@@ -956,7 +944,7 @@ object Similarity {
        |cranked AS (
        |  SELECT e.vec_id, e.embedding, e.nrm, crefined.ccell,
        |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |      ${d2("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
+       |      ${d2Sql("e.embedding", "e.nrm * e.nrm", "cv", "cn2")},
        |      crefined.ccell) AS rn
        |  FROM e CROSS JOIN crefined),
        |cassign AS (
@@ -969,9 +957,9 @@ object Similarity {
        |  FROM crefined),
        |franked AS (
        |  SELECT a.vec_id, a.embedding, a.nrm, f.cell,
-       |    ${d2("a.embedding", "a.nrm * a.nrm", "f.fv", "f.fn2")} AS d2,
+       |    ${d2Sql("a.embedding", "a.nrm * a.nrm", "f.fv", "f.fn2")} AS d2,
        |    row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |      ${d2("a.embedding", "a.nrm * a.nrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("a.embedding", "a.nrm * a.nrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM cassign a JOIN fcells f ON a.ccell = f.ccell),
        |assign AS (
@@ -988,8 +976,6 @@ object Similarity {
     */
   def topKIvfHierSql: String = {
     val nProbe = ivfProbesFor(IvfCells)
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""WITH $hierBuildCtesSql,
        |qcoarse AS (
        |  SELECT vec_id, embedding, nrm, ccell FROM cranked
@@ -997,7 +983,7 @@ object Similarity {
        |qranked AS (
        |  SELECT qc.vec_id, qc.embedding, qc.nrm, f.cell,
        |    row_number() OVER (PARTITION BY qc.vec_id ORDER BY
-       |      ${d2("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("qc.embedding", "qc.nrm * qc.nrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM qcoarse qc JOIN fcells f ON qc.ccell = f.ccell),
        |probes AS (
@@ -1204,8 +1190,6 @@ object Similarity {
     val root = Versioned.resolve(spark, path)
     val fineCells = spark.read.parquet(s"$root/centroids")
     val e = withNorm(batch)
-    def dist2(v: Column, nv: Column, fv: Column, fn2: Column): Column =
-      nv * nv - lit(2.0) * dot(v, fv) + fn2
     val coarseCents = fineCells.filter(col("cell") < 0)
       .select(col("ccell"), col("fv").as("cv"), col("fn2").as("cn2"))
     val cAssign = e.join(broadcast(coarseCents), lit(true))
@@ -1258,8 +1242,6 @@ object Similarity {
       path: String, batch: DataFrame): DataFrame = {
     val root = Versioned.resolve(spark, path) // one snapshot per query
     val fineCells = spark.read.parquet(s"$root/centroids")
-    def dist2(v: Column, nv: Column, fv: Column, fn2: Column): Column =
-      nv * nv - lit(2.0) * dot(v, fv) + fn2
     def q(c: Column): Column = floor(c * 1e6 + lit(0.5)).cast("long")
     val idxD = readIndexData(spark, root)
       .join(broadcast(fineCells.select(col("cell"), col("fv"),
@@ -1306,8 +1288,6 @@ object Similarity {
     * same quantization, same stats.
     */
   def ivfIndexDriftSql(batchPred: String, shift: Double): String = {
-    def d2(vecExpr: String, nrm2Expr: String, cvExpr: String,
-        cn2Expr: String): String = d2Sql(vecExpr, nrm2Expr, cvExpr, cn2Expr)
     s"""WITH $hierBuildCtesSql,
        |iq AS (
        |  SELECT CAST(floor(d2 * 1000000.0 + 0.5) AS BIGINT) AS qd2
@@ -1323,14 +1303,14 @@ object Similarity {
        |bc AS (
        |  SELECT b1.vec_id, bv, bnrm, crefined.ccell,
        |    row_number() OVER (PARTITION BY b1.vec_id ORDER BY
-       |      ${d2("bv", "bnrm * bnrm", "cv", "cn2")},
+       |      ${d2Sql("bv", "bnrm * bnrm", "cv", "cn2")},
        |      crefined.ccell) AS rn
        |  FROM b1 CROSS JOIN crefined),
        |bf AS (
        |  SELECT bca.vec_id,
-       |    ${d2("bca.bv", "bca.bnrm * bca.bnrm", "f.fv", "f.fn2")} AS d2,
+       |    ${d2Sql("bca.bv", "bca.bnrm * bca.bnrm", "f.fv", "f.fn2")} AS d2,
        |    row_number() OVER (PARTITION BY bca.vec_id ORDER BY
-       |      ${d2("bca.bv", "bca.bnrm * bca.bnrm", "f.fv", "f.fn2")},
+       |      ${d2Sql("bca.bv", "bca.bnrm * bca.bnrm", "f.fv", "f.fn2")},
        |      f.cell) AS rn
        |  FROM (SELECT * FROM bc WHERE rn = 1) bca JOIN fcells f
        |    ON bca.ccell = f.ccell),
@@ -1367,8 +1347,6 @@ object Similarity {
       cells: Int): Map[String, DataFrame] = {
     val e = withNorm(embeddings)
     val nCoarse = ivfCoarseFor(cells)
-    def dist2(v: Column, nv: Column, cv: Column, cn2: Column): Column =
-      nv * nv - lit(2.0) * dot(v, cv) + cn2
     val coarse0 = e.filter(col("vec_id") < nCoarse)
       .select(col("vec_id").as("ccell"), col("v").as("cv"),
         (col("nrm") * col("nrm")).as("cn2"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.report.Analytics
 
@@ -21,7 +20,7 @@ import graft.report.Analytics
   *   - per-batch counts land partitioned by batch_id with DYNAMIC
   *     overwrite — a replayed batch rewrites its own partition, never
   *     double-counts;
-  *   - batches are gated on `batchId > lastCommitted`;
+  *   - batches are gated by the [[MicroBatch.commit]] ledger;
   *   - alerts are gated on a per-hour high-water mark (`alertedThrough`),
   *     so an hour alerts at most once per run even as later batches
   *     rescore it.
@@ -36,8 +35,7 @@ import graft.report.Analytics
 object AnomalyMonitor {
 
   /** Run-level monitor state across micro-batches. */
-  final class AnomalyStats extends Serializable {
-    @volatile var lastCommitted: Long = -1L
+  final class AnomalyStats extends MicroBatch.Ledger {
     @volatile var alertedThrough: Long = Long.MinValue
     @volatile var alertsSent: Long = 0L
   }
@@ -56,13 +54,15 @@ object AnomalyMonitor {
   }
 
   /** One idempotent micro-batch fold + score + alert (the foreachBatch
-    * body of [[start]], extracted so StreamingSpec can replay it).
+    * body of the monitor, extracted so StreamingSpec can replay it).
+    * It runs as its own sink, so it composes with the data sinks — the
+    * same stream (with a `ts` column) can feed both.
     */
   def processBatch(batch: DataFrame, batchId: Long, countsPath: String,
       stats: AnomalyStats,
       notifier: Option[graft.ops.PipelineRun.Notifier] = None,
       lookback: Int = 24, zThresh: Double = 3.0): Unit =
-    if (batchId > stats.lastCommitted) {
+    if (MicroBatch.commit(stats, batchId) {
       batch
         .select(expr("unix_millis(ts) div 3600000").as("hour_id"))
         .groupBy("hour_id").agg(count(lit(1)).as("n"))
@@ -70,7 +70,8 @@ object AnomalyMonitor {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(countsPath)
-      stats.lastCommitted = batchId
+      true
+    }) {
       val spark = batch.sparkSession
       val fresh = scoredSeries(spark, countsPath, lookback, zThresh)
         .filter(col("is_anomaly") === 1 &&
@@ -90,24 +91,4 @@ object AnomalyMonitor {
         stats.alertsSent += 1
       }
     }
-
-  /** Attach the monitor to a stream of events (needs a `ts` column).
-    * Runs as its own foreachBatch sink so it composes with the data
-    * sinks — the same stream can feed both.
-    */
-  def start(stream: DataFrame, countsPath: String, checkpointDir: String,
-      stats: AnomalyStats,
-      notifier: Option[graft.ops.PipelineRun.Notifier] = None,
-      lookback: Int = 24, zThresh: Double = 3.0,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, countsPath, stats, notifier,
-          lookback, zThresh)
-      }
-      .start()
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** The ONE persisted-index write/serve contract shared by every
   * incremental index in the engine — MinHash band index
@@ -503,6 +505,115 @@ object BatchIndex {
           s"is configured for $buckets — run BatchIndex.rebucket " +
           "(stream stopped) before resuming")
     }
+  }
+
+  /** Bucket partition column of the [[ingestKeyed]] index layouts. */
+  private val KeyBucketCol = "band_bucket"
+
+  /** Ledger and counters of a key-bucketed ingest leg
+    * ([[ingestKeyed]]): batch rows `seen`, and the rows its screen
+    * `passed` (kept, or fully novel), both added only on commit.
+    */
+  class KeyedStats(spark: SparkSession, leg: String, passedName: String)
+      extends MicroBatch.Ledger {
+    val seen: LongAccumulator =
+      spark.sparkContext.longAccumulator(s"${leg}_seen")
+    val passed: LongAccumulator =
+      spark.sparkContext.longAccumulator(s"${leg}_$passedName")
+  }
+
+  /** One key-bucketed micro-batch as its leg's screen sees it: the
+    * cached batch `rows`, its index `keys`, and the stored `index`
+    * visible to `batchId`, pruned to the buckets those keys hit.
+    * [[keep]] persists a frame until the batch's index write is done
+    * (that write may still read it).
+    */
+  final class KeyedBatch private[BatchIndex] (val batchId: Long,
+      val rows: DataFrame, val keys: DataFrame, val index: DataFrame) {
+    private val held = scala.collection.mutable.Buffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
+    private[BatchIndex] def release(): Unit = held.foreach(_.unpersist())
+  }
+
+  /** The per-trigger ingest of a key-bucketed index leg
+    * ([[DedupStream]], [[EmbedStream]], [[NoveltyStream]]), behind the
+    * [[MicroBatch.commit]] gate: cache and count the batch (an empty
+    * batch commits nothing); resolve the index's bucket count
+    * ([[bucketCountForWrite]], sized from the batch's `keysOf` rows for
+    * a new index); read the stored rows in the batch's hit buckets
+    * ([[readBeforeBuckets]] over `cols`); run the leg's `screen`, which
+    * writes the leg's own output and returns the key rows to index and
+    * its `passed` count; stamp the layout ([[ensureBucketMeta]]); land
+    * those keys under `bucketAt(b)` ([[writePartition]]); then count.
+    * The index write follows the output write, so a replay between the
+    * two rewrites both, and the index read excludes the batch's own
+    * partition.
+    */
+  def ingestKeyed(batch: DataFrame, batchId: Long, indexPath: String,
+      stats: KeyedStats, defaultBuckets: Long, cols: Seq[String],
+      keysOf: DataFrame => DataFrame, bucketAt: Long => Column)(
+      screen: KeyedBatch => (DataFrame, Long)): Unit =
+    MicroBatch.commit(stats, batchId) {
+      val spark = batch.sparkSession
+      // one materialization of the micro-batch: every action below
+      // reuses it instead of re-reading the source per action
+      val cached = batch.persist()
+      try {
+        val nSeen = cached.count()
+        nSeen > 0 && {
+          val keys = keysOf(cached).persist()
+          try {
+            val b = bucketCountForWrite(spark, indexPath, defaultBuckets,
+              keys.count())
+            // rows in other buckets cannot join a batch key by
+            // construction, so the pruned read is lossless
+            val hit = keys.select(bucketAt(b)).distinct()
+              .collect().map(_.getLong(0)).toSeq
+            val kb = new KeyedBatch(batchId, cached, keys,
+              readBeforeBuckets(spark, indexPath, batchId, cols,
+                keysOf(cached.limit(0)), KeyBucketCol, hit))
+            try {
+              val (indexed, nPassed) = screen(kb)
+              ensureBucketMeta(spark, indexPath, b)
+              writePartition(indexed.withColumn(KeyBucketCol, bucketAt(b)),
+                batchId, indexPath, bucketCol = Some(KeyBucketCol))
+              stats.seen.add(nSeen); stats.passed.add(nPassed)
+              true
+            } finally kb.release()
+          } finally { keys.unpersist(); () }
+        }
+      } finally { cached.unpersist(); () }
+    }
+
+  /** The keep-first candidate screen of the dedup legs
+    * ([[DedupStream]], [[EmbedStream]]): a batch row drops when one of
+    * its `keyCols` rows collides with the index, or with a batch-mate
+    * of lower `id`; survivors land as the batch's partition of
+    * `corpusPath`, and only their keys extend the index.
+    */
+  def keepFirst(corpusPath: String, id: String, keyCols: Seq[String])(
+      kb: KeyedBatch): (DataFrame, Long) = {
+    val drops = kb.keep(dropSet(kb.keys, kb.index, id, keyCols))
+    val survivors =
+      kb.keep(kb.rows.join(broadcast(drops), Seq(id), "left_anti"))
+    val nKept = survivors.count()
+    writePartition(survivors, kb.batchId, corpusPath)
+    (kb.keys.join(broadcast(drops), Seq(id), "left_anti"), nKept)
+  }
+
+  /** Ids of batch `keys` rows that share all `keyCols` with an `index`
+    * row or with a lower-id batch-mate (keep-first within the batch).
+    */
+  private def dropSet(keys: DataFrame, index: DataFrame, id: String,
+      keyCols: Seq[String]): DataFrame = {
+    def sameKey(l: String, r: String): Column =
+      keyCols.map(c => col(s"$l.$c") === col(s"$r.$c")).reduce(_ && _)
+    val vsIndex = keys.as("b").join(index.as("i"), sameKey("b", "i"))
+      .select(col(s"b.$id"))
+    val inBatch = keys.as("a").join(keys.as("b"),
+        sameKey("a", "b") && col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"b.$id"))
+    vsIndex.unionByName(inBatch).distinct()
   }
 
   /** Resize a key-bucketed index to `newBuckets` — the maintenance op

@@ -107,7 +107,7 @@ object CurateStream {
     */
   def start(stream: DataFrame, corpusPath: String, indexPath: String,
       checkpointDir: String, stats: CurateStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
+      trigger: Trigger = MicroBatch.DefaultTrigger,
       benchmark: Option[DataFrame] = None,
       benchMBits: Int = Curation.BloomBits): StreamingQuery = {
     // train-once: persist the position table so per-batch screens
@@ -128,15 +128,8 @@ object CurateStream {
       st.bits.persist().count() // materialize before the first batch
       st
     }
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, indexPath, stats,
-          bench)
-      }
-      .start()
+    val q = MicroBatch.start(stream, checkpointDir, trigger)(
+      processBatch(_, _, corpusPath, indexPath, stats, bench))
     bench.foreach { st =>
       val spark = st.bits.sparkSession
       import org.apache.spark.sql.streaming.StreamingQueryListener

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Dedup
 
@@ -68,81 +67,29 @@ object DedupStream {
   def bandBucket: org.apache.spark.sql.Column =
     bandBucketAt(bandBucketCount)
 
+  /** The band index's stored columns. */
+  private[streaming] val BandCols = Seq("doc_id", "band_idx", "band_hash")
+
   final class DedupStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
-    val seen = spark.sparkContext.longAccumulator("dedup_seen")
-    val kept = spark.sparkContext.longAccumulator("dedup_kept")
-    @volatile var lastCommitted: Long = -1L
+      extends BatchIndex.KeyedStats(spark, "dedup", "kept") {
+    def kept: org.apache.spark.util.LongAccumulator = passed
   }
 
-  /** Docs of `batch` that collide with `index` bands or with an
-    * earlier batch-mate's bands (keep-first within the batch).
-    */
-  private def dropSet(batchBands: DataFrame, index: DataFrame): DataFrame = {
-    val vsIndex = batchBands.as("b")
-      .join(index.as("i"),
-        col("b.band_idx") === col("i.band_idx")
-          && col("b.band_hash") === col("i.band_hash"))
-      .select(col("b.doc_id"))
-    val inBatch = batchBands.as("a").join(batchBands.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("b.doc_id"))
-    vsIndex.unionByName(inBatch).distinct()
-  }
-
-  /** One idempotent micro-batch ingest (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+  /** One idempotent micro-batch ingest (the foreachBatch body of the
+    * leg, extracted so StreamingSpec can replay it): the
+    * [[BatchIndex.ingestKeyed]] step over the batch's MinHash bands,
+    * screened by [[BatchIndex.keepFirst]]. The bucket count is this
+    * index's layout metadata when it exists, the compiled default for
+    * a pre-metadata index, and the auto-sizing rule over the first
+    * batch's band rows for a NEW index (a catch-up first macro batch
+    * creates its layout at corpus-proportional B, not the fixture
+    * constant).
     */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String, stats: DedupStats): Unit =
-    if (batchId > stats.lastCommitted) {
-      val spark = batch.sparkSession
-      // one materialization of the micro-batch: every action below
-      // (count, band build, survivor write) reuses it instead of
-      // re-reading the source per action
-      val cached = batch.persist()
-      try {
-        val nSeen = cached.count()
-        if (nSeen == 0) return
-        val bands = Dedup.bandTable(cached).persist()
-        try {
-          // THIS index's bucket count: its layout metadata when it
-          // exists, the compiled default for a pre-metadata index, and
-          // the auto-sizing rule over the first batch's band rows for
-          // a NEW index (a catch-up first macro batch creates its
-          // layout at corpus-proportional B, not the fixture constant)
-          // — probing with any other B would address the wrong buckets
-          val b = BatchIndex.bucketCountForWrite(spark, indexPath,
-            bandBucketCount, bands.count())
-          // pruned read: only the band buckets this batch's hashes
-          // hit — the screen joins on (band_idx, band_hash), so rows
-          // in other buckets cannot match by construction
-          val hitBuckets = bands
-            .select(bandBucketAt(b).as("band_bucket")).distinct()
-            .collect().map(_.getLong(0)).toSeq
-          val index = BatchIndex.readBeforeBuckets(spark, indexPath,
-            batchId, Seq("doc_id", "band_idx", "band_hash"),
-            Dedup.bandTable(cached.limit(0)), "band_bucket", hitBuckets)
-          val drops = dropSet(bands, index).persist()
-          val survivors = cached
-            .join(broadcast(drops), Seq("doc_id"), "left_anti")
-            .persist()
-          val nKept = survivors.count()
-          BatchIndex.writePartition(survivors, batchId, corpusPath)
-          BatchIndex.ensureBucketMeta(spark, indexPath, b)
-          BatchIndex.writePartition(
-            bands.join(broadcast(drops), Seq("doc_id"), "left_anti")
-              .withColumn("band_bucket", bandBucketAt(b)),
-            batchId, indexPath, bucketCol = Some("band_bucket"))
-          stats.seen.add(nSeen); stats.kept.add(nKept)
-          stats.lastCommitted = batchId
-          drops.unpersist(); survivors.unpersist()
-          ()
-        } finally { bands.unpersist(); () }
-      } finally { cached.unpersist(); () }
-    }
+    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats,
+      bandBucketCount, BandCols, Dedup.bandTable, bandBucketAt)(
+      BatchIndex.keepFirst(corpusPath, "doc_id", BandCols.tail))
 
   /** Fold the band index's per-batch partitions into one distinct
     * partition ([[BatchIndex.compact]] contract — stream stopped only).
@@ -155,8 +102,7 @@ object DedupStream {
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): (Long, Long) =
-    BatchIndex.compactMulti(spark, indexPath,
-      Seq("doc_id", "band_idx", "band_hash"),
+    BatchIndex.compactMulti(spark, indexPath, BandCols,
       bucketCols = Seq("band_bucket"))
 
   /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
@@ -167,19 +113,5 @@ object DedupStream {
   def maintain(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Option[BatchIndex.Maintenance] =
     BatchIndex.maintain(spark, indexPath, "band_bucket",
-      bandBucketCount, Seq("doc_id", "band_idx", "band_hash"))
-
-  /** Attach the dedup ingest to a documents stream. */
-  def start(stream: DataFrame, corpusPath: String, indexPath: String,
-      checkpointDir: String, stats: DedupStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, indexPath, stats)
-      }
-      .start()
+      bandBucketCount, BandCols)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
 
 import graft.dq.{DqSuite, Expectation}
@@ -28,16 +27,15 @@ import graft.dq.{DqSuite, Expectation}
 object DqMonitor {
 
   /** Run-level DQ state across micro-batches: one (evaluated, failed)
-    * accumulator pair per expectation, plus the idempotence high-water
-    * mark (same contract as [[EventPipeline.RunStats.lastCommitted]]).
+    * accumulator pair per expectation, plus the idempotence ledger
+    * ([[MicroBatch.Ledger]]).
     */
   final class DqStreamStats(spark: SparkSession, val suite: Seq[Expectation])
-      extends Serializable {
+      extends MicroBatch.Ledger {
     val evaluated: IndexedSeq[LongAccumulator] = suite.indices.map(i =>
       spark.sparkContext.longAccumulator(s"dq_ev_$i"))
     val failed: IndexedSeq[LongAccumulator] = suite.indices.map(i =>
       spark.sparkContext.longAccumulator(s"dq_fail_$i"))
-    @volatile var lastCommitted: Long = -1L
 
     /** (expectation, column, n_evaluated, n_failed) totals so far. */
     def summary: Seq[(String, String, Long, Long)] =
@@ -50,27 +48,30 @@ object DqMonitor {
   }
 
   /** One idempotent micro-batch DQ evaluation (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+    * the monitor, extracted so StreamingSpec can replay it). It runs as
+    * its own sink, so it composes with the dual data sink — the same
+    * stream can feed both.
     *
     *   - `aliases` business→technical mappings are applied first, so the
     *     suite may be authored in business names ([[DqSuite.FieldMappings]]);
     *   - per-batch results land in `resultsPath` partitioned by batch_id
     *     with DYNAMIC overwrite — a replayed batch rewrites its own
     *     partition instead of appending duplicate result rows;
-    *   - accumulators update only after the write commits, gated on
-    *     batchId > lastCommitted, so replays never double-count.
+    *   - accumulators update only after the write commits, behind the
+    *     [[MicroBatch.commit]] gate, so replays never double-count.
     */
   def processDqBatch(batch: DataFrame, batchId: Long,
       stats: DqStreamStats, resultsPath: String,
       aliases: Seq[(String, String)] = Nil,
-      notifier: Option[graft.ops.PipelineRun.Notifier] = None): Unit =
-    if (batchId > stats.lastCommitted) {
+      notifier: Option[graft.ops.PipelineRun.Notifier] = None): Unit = {
+    var rows: Array[org.apache.spark.sql.Row] = Array.empty
+    if (MicroBatch.commit(stats, batchId) {
       val frame = DqSuite.withAliases(batch, aliases)
       val resultsDf = DqSuite.evaluate(frame, stats.suite)
         .withColumn("batch_id", lit(batchId))
       // one scan of the batch: collect the O(|suite|) result rows, then
       // write THOSE (not the plan) so the sink doesn't rescan the input
-      val rows = resultsDf.collect()
+      rows = resultsDf.collect()
       val spark = batch.sparkSession
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.toSeq.asJava, resultsDf.schema)
@@ -82,7 +83,8 @@ object DqMonitor {
         stats.evaluated(i).add(r.getAs[Long]("n_evaluated"))
         stats.failed(i).add(r.getAs[Long]("n_failed"))
       }
-      stats.lastCommitted = batchId
+      true
+    })
       // alert AFTER commit, gated by the same high-water mark, so a
       // replayed batch never re-alerts. Counts are CHECK-level (each
       // expectation evaluates ~every batch row); severity rides the
@@ -100,24 +102,4 @@ object DqMonitor {
         }
       }
     }
-
-  /** Attach the monitor to a stream: every micro-batch is evaluated
-    * against `stats.suite` (through `aliases`) and logged to
-    * `resultsPath`. Runs as its own sink so it composes with the dual
-    * data sink — the same stream can feed both.
-    */
-  def start(stream: DataFrame, stats: DqStreamStats, resultsPath: String,
-      checkpointDir: String, aliases: Seq[(String, String)] = Nil,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-      notifier: Option[graft.ops.PipelineRun.Notifier] = None)
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDqBatch(batch, batchId, stats, resultsPath, aliases,
-          notifier)
-      }
-      .start()
 }

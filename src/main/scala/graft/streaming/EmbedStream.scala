@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Hashing
 
@@ -86,7 +85,10 @@ object EmbedStream {
         col("tb.bucket").as("bucket"))
   }
 
-  /** Per-SESSION best-effort counters. `lastCommitted` (and the
+  /** The LSH index's stored columns. */
+  private val IndexCols = Seq("vec_id", "table_idx", "bucket")
+
+  /** Per-SESSION best-effort counters. The ledger (and the
     * accumulators) live in driver memory only: after a driver restart a
     * replayed batch re-adds to seen/kept, so treat the counts as
     * monitoring signals, not ledger truth. The DATA stays exactly-once
@@ -96,79 +98,28 @@ object EmbedStream {
     * committed batch_id partitions on disk.
     */
   final class EmbedStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
-    val seen = spark.sparkContext.longAccumulator("embed_seen")
-    val kept = spark.sparkContext.longAccumulator("embed_kept")
-    @volatile var lastCommitted: Long = -1L
+      extends BatchIndex.KeyedStats(spark, "embed", "kept") {
+    def kept: org.apache.spark.util.LongAccumulator = passed
   }
 
-  /** Vectors of `batch` colliding with the index in any table, or with
-    * an earlier batch-mate (keep-first within the batch).
+  /** One idempotent micro-batch ingest (extracted for replay specs):
+    * the [[BatchIndex.ingestKeyed]] step over the batch's sign-LSH
+    * buckets, screened by [[BatchIndex.keepFirst]]. B resolves from the
+    * index's layout metadata; a NEW index auto-sizes from the first
+    * batch's key rows ([[BatchIndex.autoBucketCount]]).
     */
-  private def dropSet(batchBuckets: DataFrame, index: DataFrame): DataFrame = {
-    val vsIndex = batchBuckets.as("b")
-      .join(index.as("i"),
-        col("b.table_idx") === col("i.table_idx")
-          && col("b.bucket") === col("i.bucket"))
-      .select(col("b.vec_id"))
-    val inBatch = batchBuckets.as("a").join(batchBuckets.as("b"),
-        col("a.table_idx") === col("b.table_idx")
-          && col("a.bucket") === col("b.bucket")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("b.vec_id"))
-    vsIndex.unionByName(inBatch).distinct()
-  }
-
-  /** One idempotent micro-batch ingest (extracted for replay specs). */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String, stats: EmbedStats): Unit =
-    if (batchId > stats.lastCommitted) {
-      val spark = batch.sparkSession
-      val cached = batch.persist()
-      try {
-        val nSeen = cached.count()
-        if (nSeen == 0) return
-        val buckets = bucketTable(cached).persist()
-        try {
-          // pruned read: only the key buckets this batch hits — the
-          // screen joins on (table_idx, bucket), so rows elsewhere
-          // cannot collide by construction. B resolves from the
-          // index's layout metadata; a NEW index auto-sizes from the
-          // first batch's key rows (BatchIndex.autoBucketCount)
-          val b = BatchIndex.bucketCountForWrite(spark, indexPath,
-            KeyBuckets, buckets.count())
-          val hit = buckets
-            .select(keyBucketColAt(b).as("band_bucket"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          val index = BatchIndex.readBeforeBuckets(spark, indexPath,
-            batchId, Seq("vec_id", "table_idx", "bucket"),
-            bucketTable(cached.limit(0)), "band_bucket", hit)
-          val drops = dropSet(buckets, index).persist()
-          val survivors = cached
-            .join(broadcast(drops), Seq("vec_id"), "left_anti")
-            .persist()
-          val nKept = survivors.count()
-          BatchIndex.writePartition(survivors, batchId, corpusPath)
-          BatchIndex.ensureBucketMeta(spark, indexPath, b)
-          BatchIndex.writePartition(
-            buckets.join(broadcast(drops), Seq("vec_id"), "left_anti")
-              .withColumn("band_bucket", keyBucketColAt(b)),
-            batchId, indexPath, bucketCol = Some("band_bucket"))
-          stats.seen.add(nSeen); stats.kept.add(nKept)
-          stats.lastCommitted = batchId
-          drops.unpersist(); survivors.unpersist()
-          ()
-        } finally { buckets.unpersist(); () }
-      } finally { cached.unpersist(); () }
-    }
+    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats, KeyBuckets,
+      IndexCols, bucketTable, keyBucketColAt)(
+      BatchIndex.keepFirst(corpusPath, "vec_id", IndexCols.tail))
 
   /** Fold the LSH index's per-batch partitions into one distinct
     * partition ([[BatchIndex.compact]] contract — stream stopped only).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): (Long, Long) =
-    BatchIndex.compactMulti(spark, indexPath,
-      Seq("vec_id", "table_idx", "bucket"),
+    BatchIndex.compactMulti(spark, indexPath, IndexCols,
       bucketCols = Seq("band_bucket"))
 
   /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
@@ -177,19 +128,5 @@ object EmbedStream {
   def maintain(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Option[BatchIndex.Maintenance] =
     BatchIndex.maintain(spark, indexPath, "band_bucket", KeyBuckets,
-      Seq("vec_id", "table_idx", "bucket"))
-
-  /** Attach the embedding ingest to a vector stream. */
-  def start(stream: DataFrame, corpusPath: String, indexPath: String,
-      checkpointDir: String, stats: EmbedStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, indexPath, stats)
-      }
-      .start()
+      IndexCols)
 }

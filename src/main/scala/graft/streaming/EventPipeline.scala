@@ -8,7 +8,7 @@ import org.apache.spark.util.LongAccumulator
 
 import graft.CustomerEvents
 import graft.enrich.Enrich
-import graft.ops.Quarantine
+import graft.ops.{PipelineRun, Quarantine}
 import graft.report.Reports
 
 /** The reference's streaming ingest job re-expressed as Structured
@@ -142,21 +142,17 @@ object EventPipeline {
 
   /** Driver-side run-report accumulators (A1), filled inside
     * foreachBatch — replaces the reference's invalid post-hoc streaming
-    * aggregate (ingest_transform.py:307-316).
+    * aggregate (ingest_transform.py:307-316). Its ledger is the highest
+    * batchId whose BOTH writes committed.
     */
-  final class RunStats(spark: SparkSession) extends Serializable {
+  final class RunStats(spark: SparkSession) extends MicroBatch.Ledger {
     val total: LongAccumulator = spark.sparkContext.longAccumulator("total")
     val late: LongAccumulator = spark.sparkContext.longAccumulator("late")
     val dqFailed: LongAccumulator = spark.sparkContext.longAccumulator("dqFailed")
     val drifted: LongAccumulator = spark.sparkContext.longAccumulator("drifted")
-    /** Highest batchId whose BOTH writes committed (foreachBatch runs on
-      * the driver, so a plain volatile is the whole coordination needed).
-      */
-    @volatile var lastCommitted: Long = -1L
-    def lateRate: Double =
-      if (total.value == 0) 0.0 else late.value.toDouble / total.value
-    def dqFailureRate: Double =
-      if (total.value == 0) 0.0 else dqFailed.value.toDouble / total.value
+    /** The run report of every batch committed so far. */
+    def report: PipelineRun.RunReport = PipelineRun.RunReport(
+      total.value, late.value, dqFailed.value, drifted.value)
   }
 
   /** One idempotent micro-batch commit of the dual sink (the foreachBatch
@@ -171,9 +167,9 @@ object EventPipeline {
     *     standard exactly-once-to-files recipe when the sink has no
     *     transactions);
     *   - run-report accumulators are added only AFTER both writes
-    *     succeed, gated on batchId > [[RunStats.lastCommitted]], so a
-    *     replayed batch in the same driver never double-counts (a
-    *     restarted driver starts from zero and the replay repopulates).
+    *     succeed, behind the [[MicroBatch.commit]] gate, so a replayed
+    *     batch in the same driver never double-counts (a restarted
+    *     driver starts from zero and the replay repopulates).
     * Partition scheme is (batch_id, event_date, country, plan):
     * batch_id leads for the idempotent overwrite; `event_date` (derived
     * from the event timestamp) is the 100 TB pruning lever — nearly
@@ -199,14 +195,14 @@ object EventPipeline {
     */
   def processBatch(batch: DataFrame, batchId: Long, mainPath: String,
       quarantinePath: String, stats: RunStats): Unit =
-    if (batchId > stats.lastCommitted) {
+    MicroBatch.commit(stats, batchId) {
       val cached = batch.withColumn("batch_id", lit(batchId))
         .withColumn("event_date", to_date(col("event_timestamp")))
         .hint("rebalance", col("event_date"), col("country"), col("plan"))
         .persist()
       try {
         val r = Reports.runReport(cached).head()
-        if (r.getLong(0) > 0) {
+        r.getLong(0) > 0 && {
           val (main, quarantine) =
             Quarantine.split(cached, !col("dq_passed"))
           Seq(main -> mainPath, quarantine -> quarantinePath).foreach {
@@ -217,7 +213,7 @@ object EventPipeline {
           // both writes committed — only now touch the report counters
           stats.total.add(r.getLong(0)); stats.late.add(r.getLong(1))
           stats.dqFailed.add(r.getLong(2)); stats.drifted.add(r.getLong(3))
-          stats.lastCommitted = batchId
+          true
         }
       } finally { cached.unpersist(); () }
     }
@@ -230,16 +226,9 @@ object EventPipeline {
     */
   def startDualSink(curated: DataFrame, mainPath: String,
       quarantinePath: String, checkpointDir: String, stats: RunStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    withLateness(curated).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, mainPath, quarantinePath, stats)
-      }
-      .start()
+      trigger: Trigger = MicroBatch.DefaultTrigger): StreamingQuery =
+    MicroBatch.start(withLateness(curated), checkpointDir, trigger)(
+      processBatch(_, _, mainPath, quarantinePath, stats))
 
   /** T5 — bounded run: block up to `durationMs`, then stop. Tests use
     * `Trigger.AvailableNow` + `processAllAvailable` instead.

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.{CorpusGraph, Dedup, Multimodal}
 
@@ -54,7 +53,7 @@ import graft.ext.{CorpusGraph, Dedup, Multimodal}
 object GraphStream {
 
   final class GraphStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
+      extends MicroBatch.Ledger {
     val seen = spark.sparkContext.longAccumulator("graph_seen")
     val pairs = spark.sparkContext.longAccumulator("graph_pairs")
     val resent = spark.sparkContext.longAccumulator("graph_resent")
@@ -85,7 +84,6 @@ object GraphStream {
     @volatile var maxTouchedRatio: Double = 0.0
     /** The most recent append's full report (null before the first). */
     @volatile var lastAppend: CorpusGraph.AppendReport = null
-    @volatile var lastCommitted: Long = -1L
   }
 
   /** One perceptual-evidence leg of a multimodal graph stream: docs
@@ -108,8 +106,6 @@ object GraphStream {
     MediaLeg("image_payload", "image", Multimodal.imageFpFromPayload(_)),
     MediaLeg("audio_payload", "audio", Multimodal.audioFpFromPayload(_)),
     MediaLeg("video_payload", "video", Multimodal.videoFpFromPayload(_)))
-
-  private val BandCols = Seq("doc_id", "band_idx", "band_hash")
 
   /** Serializes the unified fp index's WRITE operations across
     * concurrent media legs: each leg writes only its own modality
@@ -147,8 +143,9 @@ object GraphStream {
   @volatile private[graft] var triggerBroadcastBound: Long =
     BatchIndex.TriggerBroadcastMaxDocs
 
-  /** One idempotent micro-batch ingest (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+  /** One idempotent micro-batch ingest of a document stream (the
+    * foreachBatch body of the leg, extracted so StreamingSpec can
+    * replay it).
     *
     * `mediaLegs` adds PERCEPTUAL evidence to the same graph append:
     * each leg decodes its payload column once, extends the unified
@@ -174,7 +171,7 @@ object GraphStream {
     // incrementalNearDups / CorpusGraph.append) has zero cross-batch
     // reuse value — without the scope they would accrete cache+disk
     // blocks for the stream's lifetime
-    if (batchId > stats.lastCommitted) graft.ext.Scratch.scopedAll {
+    MicroBatch.commit(stats, batchId)(graft.ext.Scratch.scopedAll {
       require(mediaLegs.isEmpty || fpIndexPath.isDefined,
         "media legs need the unified fingerprint index path")
       val spark = batch.sparkSession
@@ -189,208 +186,208 @@ object GraphStream {
       }
       try {
         val nSeen = cached.count()
-        if (nSeen == 0) return
-        mark("count")
-        // batch-derived frames broadcast only while the trigger is
-        // trigger-sized; a catch-up macro-batch takes plain joins (the
-        // BatchIndex.TriggerBroadcastMaxDocs rationale) — results are
-        // identical, spec-pinned through this path
-        val smallTrigger = nSeen <= triggerBroadcastBound
-        def bc(df: DataFrame): DataFrame =
-          if (smallTrigger) broadcast(df) else df
-        val batchBands = graft.ext.Scratch.track(
-          Dedup.bandTable(cached).persist())
-        // THIS band index's / corpus's bucket counts: recorded layout
-        // metadata, or the auto-sizing rule over the first batch for
-        // NEW artifacts (band rows for the band index, docs for the
-        // corpus) — probing with any other count would address the
-        // wrong buckets
-        val bandB = BatchIndex.bucketCountForWrite(spark, bandIndexPath,
-          DedupStream.bandBucketCount, batchBands.count())
-        val corpusB = BatchIndex.bucketCountForWrite(spark, corpusPath,
-          CorpusBuckets, nSeen, rowBytes = CorpusDocRowBytes)
-        // pruned index read: only the band buckets this batch's hashes
-        // hit (the [[DedupStream.BandBuckets]] layout) — every use
-        // below is an equi-join on (band_idx, band_hash) or a probe
-        // for ids sharing those hashes, so rows in other buckets
-        // cannot contribute. Persisted for the trigger (scopedAll
-        // releases it): the candidate-bucket discovery, the
-        // re-sent-id probe, and incrementalNearDups' candidate join
-        // all read this one pruned scan.
-        val hitBandBuckets = batchBands
-          .select(DedupStream.bandBucketAt(bandB).as("band_bucket"))
-          .distinct()
-          .collect().map(_.getLong(0)).toSeq
-        mark("hitBuckets")
-        val indexBands = graft.ext.Scratch.track(
-          BatchIndex.readBeforeBuckets(spark, bandIndexPath,
-            storedId, BandCols, batchBands.limit(0),
-            "band_bucket", hitBandBuckets).persist())
-        // re-sent ids: a doc_id already in the stored band index has
-        // been ingested — screening it again would put the SAME doc on
-        // both sides of incrementalNearDups, whose shingle union then
-        // doubles its rows and inflates every jaccard it touches
-        // (2i/(2na+nb−2i) — borderline non-dups would enter the graph
-        // as false pair evidence), and it would land a second corpus
-        // row. Drop such rows: their evidence already exists. (Bands
-        // are a pure function of text, so an identical re-send always
-        // collides with its own stored rows; a CHANGED text under a
-        // reused doc_id is an upstream contract violation — doc ids
-        // are immutable identities here.)
-        val resentIds = graft.ext.Scratch.track(indexBands
-          .join(bc(cached.select("doc_id").distinct()),
-            Seq("doc_id"), "left_semi")
-          .select("doc_id").distinct().persist())
-        val nResent = resentIds.count()
-        mark("resentProbe")
-        val fresh =
-          if (nResent == 0L) cached
-          else graft.ext.Scratch.track(cached
-            .join(bc(resentIds), Seq("doc_id"), "left_anti")
-            .persist())
-        val freshBands =
-          if (nResent == 0L) batchBands
-          else graft.ext.Scratch.track(batchBands
-            .join(bc(resentIds), Seq("doc_id"), "left_anti")
-            .persist())
-        // corpus side of candidate verification: the band join names
-        // the candidate index docs FIRST (hash-sized tables), their
-        // bucket set prunes the corpus read to ≤ min(candidates,
-        // buckets) partitions, and the replay-excluding batch_id
-        // filter keeps a recovery replay from screening against its
-        // own first attempt — per-trigger corpus IO is candidate-
-        // bucket-sized, never a full corpus rescan
-        val candBuckets = indexBands
-          .join(bc(freshBands
-            .select("band_idx", "band_hash").distinct()),
-            Seq("band_idx", "band_hash"))
-          .select(pmod(col("doc_id"), lit(corpusB)).as("bucket"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        mark("candBuckets")
-        val corpusBefore = BatchIndex.readBeforeBuckets(spark,
-          corpusPath, storedId, cached.columns.toIndexedSeq,
-          cached.limit(0), "bucket", candBuckets)
-        val cross = Dedup.incrementalNearDups(
-            corpusBefore, fresh, indexBands = Some(indexBands),
-            broadcastBatch = smallTrigger)
-          .filter(col("batch_doc") =!= col("index_doc")) // belt+braces
-          .select(least(col("batch_doc"), col("index_doc")).as("doc_a"),
-            greatest(col("batch_doc"), col("index_doc")).as("doc_b"))
-        val internal = Dedup.minhashNearDups(fresh,
-            bands = Some(freshBands))
-          .select("doc_a", "doc_b")
-        val textPairs = cross.unionByName(internal)
-          .withColumn("modality", lit("text"))
-        // perceptual legs: each decodes once, extends the unified fp
-        // index, and contributes its pairs to the SAME graph append.
-        // Multiple legs run CONCURRENTLY (each on its own thread over
-        // the shared session): a leg's actions — decode count, hit-
-        // bucket collect, fp append — are many small jobs that leave
-        // the executor pool underused, so serial legs pay the queue
-        // tax thrice; concurrency overlaps them (the intra-trigger
-        // face of the six-leg FAIR fix, measured in SCALING.md
-        // "graphmm3"). Index WRITES inside the legs stay serialized
-        // ([[fpAppendLock]] in mediaLegPairs) — each leg writes only
-        // its own modality partitions, but the shared band-sidecar
-        // backfill and layout metadata must not race. Scratch frames
-        // are collected per helper thread and adopted into THIS
-        // trigger's scope, so they release at the trigger boundary as
-        // before — after the pair plans they back were consumed.
-        val legPairs: Seq[DataFrame] =
-          if (mediaLegs.isEmpty) Nil
-          else if (mediaLegs.sizeIs == 1) {
-            val p = mediaLegPairs(spark, mediaLegs.head, fresh,
-              fpIndexPath.get, storedId, stats, smallTrigger)
-            mark(s"leg:${mediaLegs.head.modality}")
-            Seq(p)
-          } else {
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            import scala.util.{Failure, Success, Try}
-            val pool = java.util.concurrent.Executors
-              .newFixedThreadPool(mediaLegs.size)
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutor(pool)
-            val futs = mediaLegs.map { leg =>
-              Future {
-                val t0 = System.nanoTime()
-                val r = graft.ext.Scratch.collectTracked(
-                  mediaLegPairs(spark, leg, fresh, fpIndexPath.get,
-                    storedId, stats, smallTrigger))
-                if (trace) println(f"[gs-trace] leg:${leg.modality}%-10s "
-                  + f"${(System.nanoTime() - t0) / 1e9}%6.2fs (concurrent)")
-                r
+        nSeen > 0 && {
+          mark("count")
+          // batch-derived frames broadcast only while the trigger is
+          // trigger-sized; a catch-up macro-batch takes plain joins (the
+          // BatchIndex.TriggerBroadcastMaxDocs rationale) — results are
+          // identical, spec-pinned through this path
+          val smallTrigger = nSeen <= triggerBroadcastBound
+          def bc(df: DataFrame): DataFrame =
+            if (smallTrigger) broadcast(df) else df
+          val batchBands = graft.ext.Scratch.track(
+            Dedup.bandTable(cached).persist())
+          // THIS band index's / corpus's bucket counts: recorded layout
+          // metadata, or the auto-sizing rule over the first batch for
+          // NEW artifacts (band rows for the band index, docs for the
+          // corpus) — probing with any other count would address the
+          // wrong buckets
+          val bandB = BatchIndex.bucketCountForWrite(spark, bandIndexPath,
+            DedupStream.bandBucketCount, batchBands.count())
+          val corpusB = BatchIndex.bucketCountForWrite(spark, corpusPath,
+            CorpusBuckets, nSeen, rowBytes = CorpusDocRowBytes)
+          // pruned index read: only the band buckets this batch's hashes
+          // hit (the [[DedupStream.BandBuckets]] layout) — every use
+          // below is an equi-join on (band_idx, band_hash) or a probe
+          // for ids sharing those hashes, so rows in other buckets
+          // cannot contribute. Persisted for the trigger (scopedAll
+          // releases it): the candidate-bucket discovery, the
+          // re-sent-id probe, and incrementalNearDups' candidate join
+          // all read this one pruned scan.
+          val hitBandBuckets = batchBands
+            .select(DedupStream.bandBucketAt(bandB).as("band_bucket"))
+            .distinct()
+            .collect().map(_.getLong(0)).toSeq
+          mark("hitBuckets")
+          val indexBands = graft.ext.Scratch.track(
+            BatchIndex.readBeforeBuckets(spark, bandIndexPath,
+              storedId, DedupStream.BandCols, batchBands.limit(0),
+              "band_bucket", hitBandBuckets).persist())
+          // re-sent ids: a doc_id already in the stored band index has
+          // been ingested — screening it again would put the SAME doc on
+          // both sides of incrementalNearDups, whose shingle union then
+          // doubles its rows and inflates every jaccard it touches
+          // (2i/(2na+nb−2i) — borderline non-dups would enter the graph
+          // as false pair evidence), and it would land a second corpus
+          // row. Drop such rows: their evidence already exists. (Bands
+          // are a pure function of text, so an identical re-send always
+          // collides with its own stored rows; a CHANGED text under a
+          // reused doc_id is an upstream contract violation — doc ids
+          // are immutable identities here.)
+          val resentIds = graft.ext.Scratch.track(indexBands
+            .join(bc(cached.select("doc_id").distinct()),
+              Seq("doc_id"), "left_semi")
+            .select("doc_id").distinct().persist())
+          val nResent = resentIds.count()
+          mark("resentProbe")
+          val fresh =
+            if (nResent == 0L) cached
+            else graft.ext.Scratch.track(cached
+              .join(bc(resentIds), Seq("doc_id"), "left_anti")
+              .persist())
+          val freshBands =
+            if (nResent == 0L) batchBands
+            else graft.ext.Scratch.track(batchBands
+              .join(bc(resentIds), Seq("doc_id"), "left_anti")
+              .persist())
+          // corpus side of candidate verification: the band join names
+          // the candidate index docs FIRST (hash-sized tables), their
+          // bucket set prunes the corpus read to ≤ min(candidates,
+          // buckets) partitions, and the replay-excluding batch_id
+          // filter keeps a recovery replay from screening against its
+          // own first attempt — per-trigger corpus IO is candidate-
+          // bucket-sized, never a full corpus rescan
+          val candBuckets = indexBands
+            .join(bc(freshBands
+              .select("band_idx", "band_hash").distinct()),
+              Seq("band_idx", "band_hash"))
+            .select(pmod(col("doc_id"), lit(corpusB)).as("bucket"))
+            .distinct().collect().map(_.getLong(0)).toSeq
+          mark("candBuckets")
+          val corpusBefore = BatchIndex.readBeforeBuckets(spark,
+            corpusPath, storedId, cached.columns.toIndexedSeq,
+            cached.limit(0), "bucket", candBuckets)
+          val cross = Dedup.incrementalNearDups(
+              corpusBefore, fresh, indexBands = Some(indexBands),
+              broadcastBatch = smallTrigger)
+            .filter(col("batch_doc") =!= col("index_doc")) // belt+braces
+            .select(least(col("batch_doc"), col("index_doc")).as("doc_a"),
+              greatest(col("batch_doc"), col("index_doc")).as("doc_b"))
+          val internal = Dedup.minhashNearDups(fresh,
+              bands = Some(freshBands))
+            .select("doc_a", "doc_b")
+          val textPairs = cross.unionByName(internal)
+            .withColumn("modality", lit("text"))
+          // perceptual legs: each decodes once, extends the unified fp
+          // index, and contributes its pairs to the SAME graph append.
+          // Multiple legs run CONCURRENTLY (each on its own thread over
+          // the shared session): a leg's actions — decode count, hit-
+          // bucket collect, fp append — are many small jobs that leave
+          // the executor pool underused, so serial legs pay the queue
+          // tax thrice; concurrency overlaps them (the intra-trigger
+          // face of the six-leg FAIR fix, measured in SCALING.md
+          // "graphmm3"). Index WRITES inside the legs stay serialized
+          // ([[fpAppendLock]] in mediaLegPairs) — each leg writes only
+          // its own modality partitions, but the shared band-sidecar
+          // backfill and layout metadata must not race. Scratch frames
+          // are collected per helper thread and adopted into THIS
+          // trigger's scope, so they release at the trigger boundary as
+          // before — after the pair plans they back were consumed.
+          val legPairs: Seq[DataFrame] =
+            if (mediaLegs.isEmpty) Nil
+            else if (mediaLegs.sizeIs == 1) {
+              val p = mediaLegPairs(spark, mediaLegs.head, fresh,
+                fpIndexPath.get, storedId, stats, smallTrigger)
+              mark(s"leg:${mediaLegs.head.modality}")
+              Seq(p)
+            } else {
+              import scala.concurrent.{Await, ExecutionContext, Future}
+              import scala.concurrent.duration.Duration
+              import scala.util.{Failure, Success, Try}
+              val pool = java.util.concurrent.Executors
+                .newFixedThreadPool(mediaLegs.size)
+              implicit val ec: ExecutionContext =
+                ExecutionContext.fromExecutor(pool)
+              val futs = mediaLegs.map { leg =>
+                Future {
+                  val t0 = System.nanoTime()
+                  val r = graft.ext.Scratch.collectTracked(
+                    mediaLegPairs(spark, leg, fresh, fpIndexPath.get,
+                      storedId, stats, smallTrigger))
+                  if (trace) println(f"[gs-trace] leg:${leg.modality}%-10s "
+                    + f"${(System.nanoTime() - t0) / 1e9}%6.2fs (concurrent)")
+                  r
+                }
               }
+              // settle ALL legs before adopting/rethrowing: a fail-fast
+              // await would leak the successful legs' collected frames
+              val settled: Seq[Try[(DataFrame,
+                  Seq[org.apache.spark.sql.Dataset[_]])]] =
+                try Await.result(
+                  Future.sequence(futs.map(_.transform(Success(_)))),
+                  Duration.Inf)
+                finally pool.shutdown()
+              settled.foreach {
+                case Success((_, frames)) => graft.ext.Scratch.adopt(frames)
+                case Failure(_) => ()
+              }
+              settled.collectFirst { case Failure(e) => throw e }
+              mark("legs(conc)")
+              settled.map(_.get._1)
             }
-            // settle ALL legs before adopting/rethrowing: a fail-fast
-            // await would leak the successful legs' collected frames
-            val settled: Seq[Try[(DataFrame,
-                Seq[org.apache.spark.sql.Dataset[_]])]] =
-              try Await.result(
-                Future.sequence(futs.map(_.transform(Success(_)))),
-                Duration.Inf)
-              finally pool.shutdown()
-            settled.foreach {
-              case Success((_, frames)) => graft.ext.Scratch.adopt(frames)
-              case Failure(_) => ()
-            }
-            settled.collectFirst { case Failure(e) => throw e }
-            mark("legs(conc)")
-            settled.map(_.get._1)
+          val batchPairs = legPairs.foldLeft(textPairs)(_.unionByName(_))
+          // EVERY fresh doc lands (evidence-preserving — no near-dup
+          // drops; only exact id re-sends are deduplicated), bucketed
+          // for the pruned read-back above; pairs and relabel go
+          // through the graph's own idempotent append
+          BatchIndex.ensureBucketMeta(spark, corpusPath, corpusB)
+          BatchIndex.writePartition(
+            fresh.withColumn("bucket",
+              pmod(col("doc_id"), lit(corpusB))),
+            storedId, corpusPath, bucketCol = Some("bucket"))
+          BatchIndex.ensureBucketMeta(spark, bandIndexPath, bandB)
+          BatchIndex.writePartition(
+            freshBands.withColumn("band_bucket",
+              DedupStream.bandBucketAt(bandB)),
+            storedId, bandIndexPath, bucketCol = Some("band_bucket"))
+          mark("writes")
+          // no pre-count of batchPairs: append persists its own
+          // projection of the plan and its report carries the row count,
+          // so counting here would just materialize the same pairs plan
+          // (decode included) one extra time per trigger
+          val report = CorpusGraph.append(spark, graphPath, batchPairs,
+            storedId)
+          mark("graphAppend")
+          stats.seen.add(nSeen)
+          stats.resent.add(nResent)
+          stats.pairs.add(report.batchPairRows)
+          if (report.routedFullRelabel) stats.routedAppends.add(1L)
+          if (report.graphMembers > 0L) {
+            val ratio =
+              report.touchedMembers.toDouble / report.graphMembers
+            if (ratio > stats.maxTouchedRatio)
+              stats.maxTouchedRatio = ratio
           }
-        val batchPairs = legPairs.foldLeft(textPairs)(_.unionByName(_))
-        // EVERY fresh doc lands (evidence-preserving — no near-dup
-        // drops; only exact id re-sends are deduplicated), bucketed
-        // for the pruned read-back above; pairs and relabel go
-        // through the graph's own idempotent append
-        BatchIndex.ensureBucketMeta(spark, corpusPath, corpusB)
-        BatchIndex.writePartition(
-          fresh.withColumn("bucket",
-            pmod(col("doc_id"), lit(corpusB))),
-          storedId, corpusPath, bucketCol = Some("bucket"))
-        BatchIndex.ensureBucketMeta(spark, bandIndexPath, bandB)
-        BatchIndex.writePartition(
-          freshBands.withColumn("band_bucket",
-            DedupStream.bandBucketAt(bandB)),
-          storedId, bandIndexPath, bucketCol = Some("band_bucket"))
-        mark("writes")
-        // no pre-count of batchPairs: append persists its own
-        // projection of the plan and its report carries the row count,
-        // so counting here would just materialize the same pairs plan
-        // (decode included) one extra time per trigger
-        val report = CorpusGraph.append(spark, graphPath, batchPairs,
-          storedId)
-        mark("graphAppend")
-        stats.seen.add(nSeen)
-        stats.resent.add(nResent)
-        stats.pairs.add(report.batchPairRows)
-        if (report.routedFullRelabel) stats.routedAppends.add(1L)
-        if (report.graphMembers > 0L) {
-          val ratio =
-            report.touchedMembers.toDouble / report.graphMembers
-          if (ratio > stats.maxTouchedRatio)
-            stats.maxTouchedRatio = ratio
+          stats.lastAppend = report
+          // opt-in per-ingest health monitor (~1.5× append cost — a
+          // knob, not a default): audit exactly the components this
+          // batch touched, seeded from its own just-written pair
+          // partition (a pruned read; the batchPairs plan must not
+          // recompute its decodes for a seed set)
+          if (auditTouched) {
+            val seed = CorpusGraph.readPairs(spark, graphPath)
+              .filter(col("batch_id") === storedId)
+            val audit = CorpusGraph.staleLabelCountTouched(spark,
+              graphPath, seed.select(col("doc_a").as("doc_id"))
+                .unionByName(seed.select(col("doc_b").as("doc_id"))))
+            stats.touchedAudits.add(1L)
+            stats.auditStale.add(audit.stale)
+            mark("touchedAudit")
+          }
+          true
         }
-        stats.lastAppend = report
-        // opt-in per-ingest health monitor (~1.5× append cost — a
-        // knob, not a default): audit exactly the components this
-        // batch touched, seeded from its own just-written pair
-        // partition (a pruned read; the batchPairs plan must not
-        // recompute its decodes for a seed set)
-        if (auditTouched) {
-          val seed = CorpusGraph.readPairs(spark, graphPath)
-            .filter(col("batch_id") === storedId)
-          val audit = CorpusGraph.staleLabelCountTouched(spark,
-            graphPath, seed.select(col("doc_a").as("doc_id"))
-              .unionByName(seed.select(col("doc_b").as("doc_id"))))
-          stats.touchedAudits.add(1L)
-          stats.auditStale.add(audit.stale)
-          mark("touchedAudit")
-        }
-        stats.lastCommitted = batchId
-        ()
       } finally { cached.unpersist(); () }
-    }
+    })
 
   /** One media leg's pair evidence for a micro-batch, with the side
     * effect of extending the unified fingerprint index: decode
@@ -517,25 +514,6 @@ object GraphStream {
     // probe see its own first attempt, classify every doc re-sent,
     // and silently never produce the batch's pairs
     BatchIndex.maintain(spark, bandIndexPath, "band_bucket",
-      DedupStream.bandBucketCount, BandCols, foldThrough = foldThrough)
-
-  /** Attach the graph-maintenance ingest to a document stream; pass
-    * `mediaLegs` + `fpIndexPath` for a multimodal stream whose
-    * perceptual evidence must land per trigger (see [[processBatch]]).
-    */
-  def start(stream: DataFrame, corpusPath: String, bandIndexPath: String,
-      graphPath: String, checkpointDir: String, stats: GraphStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-      mediaLegs: Seq[MediaLeg] = Nil,
-      fpIndexPath: Option[String] = None,
-      auditTouched: Boolean = false): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, bandIndexPath,
-          graphPath, stats, mediaLegs, fpIndexPath, auditTouched)
-      }
-      .start()
+      DedupStream.bandBucketCount, DedupStream.BandCols,
+      foldThrough = foldThrough)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.HeavyHitters
 
@@ -27,20 +26,19 @@ import graft.ext.HeavyHitters
   */
 object HeavyHitterStream {
 
-  final class HhStats(spark: SparkSession) extends Serializable {
+  final class HhStats(spark: SparkSession) extends MicroBatch.Ledger {
     val batches = spark.sparkContext.longAccumulator("hh_batches")
-    @volatile var lastCommitted: Long = -1L
   }
 
   /** One idempotent micro-batch ingest (extracted for replay specs). */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       stats: HhStats, k: Int = HeavyHitters.Counters): Unit =
-    if (batchId > stats.lastCommitted) {
+    MicroBatch.commit(stats, batchId) {
       val counters =
         HeavyHitters.mergedCounters(HeavyHitters.symbolStream(batch), k)
       BatchIndex.writePartition(counters, batchId, indexPath)
       stats.batches.add(1L)
-      stats.lastCommitted = batchId
+      true
     }
 
   /** Screen batch rows a fold already merged — the [[BatchIndex
@@ -105,18 +103,4 @@ object HeavyHitterStream {
       else None
     Some(BatchIndex.Maintenance(report, compacted))
   }
-
-  /** Attach the heavy-hitter ingest to a document stream. */
-  def start(stream: DataFrame, indexPath: String, checkpointDir: String,
-      stats: HhStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, stats)
-      }
-      .start()
 }

@@ -4,7 +4,6 @@ import java.sql.DriverManager
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** T4's DATABASE leg — the reference's Snowflake sink
   * (spark/jobs/ingest_transform.py:273-305) re-expressed as an idempotent
@@ -88,18 +87,4 @@ object JdbcSink {
       .option("dbtable", table)
       .save()
   }
-
-  /** The streaming sink: curated frame → idempotent JDBC micro-batches. */
-  def start(curated: DataFrame, url: String, table: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    curated.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, url, table)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Multimodal
 
@@ -47,11 +46,10 @@ object MediaDedupStream {
     BatchIndex.TriggerBroadcastMaxDocs
 
   final class MediaStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
+      extends MicroBatch.Ledger {
     val seen = spark.sparkContext.longAccumulator("media_seen")
     val rejected = spark.sparkContext.longAccumulator("media_rejected")
     val kept = spark.sparkContext.longAccumulator("media_kept")
-    @volatile var lastCommitted: Long = -1L
   }
 
   /** Batch docs whose fingerprint sits within the Hamming radius of an
@@ -75,8 +73,9 @@ object MediaDedupStream {
       .distinct()
   }
 
-  /** One idempotent micro-batch ingest (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+  /** One idempotent micro-batch ingest of a `(doc_id, payload)` stream
+    * (the foreachBatch body of the leg, extracted so StreamingSpec can
+    * replay it).
     *
     * `fpExtract` is the modality seam: any payload → `(doc_id,
     * decoded, fp_lo, fp_hi)` extractor plugs the same exact-verified
@@ -92,75 +91,75 @@ object MediaDedupStream {
       fpExtract: DataFrame => DataFrame =
         Multimodal.imageFpFromPayload(_),
       modality: String = "image"): Unit =
-    if (batchId > stats.lastCommitted) {
+    MicroBatch.commit(stats, batchId) {
       val spark = batch.sparkSession
       val storedId = batchId + 1 // 0 is reserved for batch base builds
       val cached = batch.persist()
       try {
         val nSeen = cached.count()
-        if (nSeen == 0) return
-        // batch-derived drop sets broadcast only while the trigger is
-        // trigger-sized (BatchIndex.TriggerBroadcastMaxDocs — a
-        // catch-up macro-batch takes plain joins; identical results)
-        def bc(df: DataFrame): DataFrame =
-          if (nSeen <= triggerBroadcastBound) broadcast(df)
-          else df
-        // decode ONCE: these rows screen the batch AND grow the index
-        val fps = fpExtract(cached).persist()
-        try {
-          val nRejected = fps.filter(!col("decoded")).count()
-          val keptFpCols = fps.filter(col("decoded"))
-            .select("doc_id", "fp_lo", "fp_hi")
-          val bands = Multimodal.fpBands(keptFpCols).persist()
-          // the accumulated fingerprints visible to this batch,
-          // PRUNED to the band buckets the batch hits (the band
-          // sidecar layout — [[Multimodal.MediaBandBuckets]]): a
-          // Hamming-≤3 neighbor shares ≥1 band (pigeonhole), so rows
-          // in other buckets cannot drop anything. Strictly-before
-          // batches only (replay-excluding — the readBefore
-          // contract). A pre-sidecar root is MIGRATED in place on
-          // first contact ([[Multimodal.backfillMediaFpBands]] — a
-          // pure projection of stored fingerprints, no decode), then
-          // served pruned like any other: one bounded rewrite instead
-          // of a permanent full-slice screen.
-          val root = graft.ext.Versioned.resolve(spark, indexPath)
-          // the ROOT's bucket count (its sidecar layout metadata) —
-          // probing with any other count addresses the wrong buckets
-          val bandB = Multimodal.mediaBandBucketCountOf(spark, root)
-          val hit = bands
-            .select(Multimodal.mediaBandBucketAt(bandB)
-              .as("band_bucket"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          def emptyBands = Multimodal.fpBands(keptFpCols.limit(0))
-          val indexBands =
-            if (hit.isEmpty) emptyBands
-            else Multimodal.mediaFpBandsPruned(spark, root, modality,
-                hit, storedId)
-              .getOrElse {
-                if (Multimodal.backfillMediaFpBands(spark, root) == 0L)
-                  emptyBands // no data component yet — first batch
-                else Multimodal.mediaFpBandsPruned(spark, root,
-                  modality, hit, storedId).get
-              }
-          val drops = dropSet(bands, indexBands).persist()
-          val keptFps = fps.filter(col("decoded"))
-            .join(bc(drops), Seq("doc_id"), "left_anti")
-          val survivors = cached
-            .join(fps.filter(col("decoded")).select("doc_id"),
-              Seq("doc_id"), "left_semi")
-            .join(bc(drops), Seq("doc_id"), "left_anti")
-            .persist()
-          val nKept = survivors.count()
-          BatchIndex.writePartition(survivors, batchId, corpusPath)
-          Multimodal.appendFingerprintsToMediaFpIndex(keptFps, modality,
-            indexPath, storedId)
-          stats.seen.add(nSeen)
-          stats.rejected.add(nRejected)
-          stats.kept.add(nKept)
-          stats.lastCommitted = batchId
-          drops.unpersist(); survivors.unpersist(); bands.unpersist()
-          ()
-        } finally { fps.unpersist(); () }
+        nSeen > 0 && {
+          // batch-derived drop sets broadcast only while the trigger is
+          // trigger-sized (BatchIndex.TriggerBroadcastMaxDocs — a
+          // catch-up macro-batch takes plain joins; identical results)
+          def bc(df: DataFrame): DataFrame =
+            if (nSeen <= triggerBroadcastBound) broadcast(df)
+            else df
+          // decode ONCE: these rows screen the batch AND grow the index
+          val fps = fpExtract(cached).persist()
+          try {
+            val nRejected = fps.filter(!col("decoded")).count()
+            val keptFpCols = fps.filter(col("decoded"))
+              .select("doc_id", "fp_lo", "fp_hi")
+            val bands = Multimodal.fpBands(keptFpCols).persist()
+            // the accumulated fingerprints visible to this batch,
+            // PRUNED to the band buckets the batch hits (the band
+            // sidecar layout — [[Multimodal.MediaBandBuckets]]): a
+            // Hamming-≤3 neighbor shares ≥1 band (pigeonhole), so rows
+            // in other buckets cannot drop anything. Strictly-before
+            // batches only (replay-excluding — the readBefore
+            // contract). A pre-sidecar root is MIGRATED in place on
+            // first contact ([[Multimodal.backfillMediaFpBands]] — a
+            // pure projection of stored fingerprints, no decode), then
+            // served pruned like any other: one bounded rewrite instead
+            // of a permanent full-slice screen.
+            val root = graft.ext.Versioned.resolve(spark, indexPath)
+            // the ROOT's bucket count (its sidecar layout metadata) —
+            // probing with any other count addresses the wrong buckets
+            val bandB = Multimodal.mediaBandBucketCountOf(spark, root)
+            val hit = bands
+              .select(Multimodal.mediaBandBucketAt(bandB)
+                .as("band_bucket"))
+              .distinct().collect().map(_.getLong(0)).toSeq
+            def emptyBands = Multimodal.fpBands(keptFpCols.limit(0))
+            val indexBands =
+              if (hit.isEmpty) emptyBands
+              else Multimodal.mediaFpBandsPruned(spark, root, modality,
+                  hit, storedId)
+                .getOrElse {
+                  if (Multimodal.backfillMediaFpBands(spark, root) == 0L)
+                    emptyBands // no data component yet — first batch
+                  else Multimodal.mediaFpBandsPruned(spark, root,
+                    modality, hit, storedId).get
+                }
+            val drops = dropSet(bands, indexBands).persist()
+            val keptFps = fps.filter(col("decoded"))
+              .join(bc(drops), Seq("doc_id"), "left_anti")
+            val survivors = cached
+              .join(fps.filter(col("decoded")).select("doc_id"),
+                Seq("doc_id"), "left_semi")
+              .join(bc(drops), Seq("doc_id"), "left_anti")
+              .persist()
+            val nKept = survivors.count()
+            BatchIndex.writePartition(survivors, batchId, corpusPath)
+            Multimodal.appendFingerprintsToMediaFpIndex(keptFps, modality,
+              indexPath, storedId)
+            stats.seen.add(nSeen)
+            stats.rejected.add(nRejected)
+            stats.kept.add(nKept)
+            drops.unpersist(); survivors.unpersist(); bands.unpersist()
+            true
+          } finally { fps.unpersist(); () }
+        }
       } finally { cached.unpersist(); () }
     }
 
@@ -218,24 +217,4 @@ object MediaDedupStream {
       else None
     Some(BatchIndex.Maintenance(dataRep, compacted))
   }
-
-  /** Attach the perceptual-dedup ingest to a `(doc_id, payload)`
-    * stream; `fpExtract` picks the modality (see [[processBatch]]).
-    */
-  def start(stream: DataFrame, corpusPath: String, indexPath: String,
-      checkpointDir: String, stats: MediaStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-      fpExtract: DataFrame => DataFrame =
-        Multimodal.imageFpFromPayload(_),
-      modality: String = "image")
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, indexPath, stats,
-          fpExtract, modality)
-      }
-      .start()
 }

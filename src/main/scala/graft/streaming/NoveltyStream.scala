@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.TextAnalysis
 
@@ -48,50 +47,30 @@ object NoveltyStream {
   def gramBucket: org.apache.spark.sql.Column = gramBucketAt(KeyBuckets)
 
   final class NoveltyStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
-    val seen = spark.sparkContext.longAccumulator("novelty_seen")
-    val novel = spark.sparkContext.longAccumulator("novelty_fully_novel")
-    @volatile var lastCommitted: Long = -1L
+      extends BatchIndex.KeyedStats(spark, "novelty", "fully_novel") {
+    def novel: org.apache.spark.util.LongAccumulator = passed
   }
 
   /** One idempotent micro-batch score+extend (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+    * the leg, extracted so StreamingSpec can replay it): the
+    * [[BatchIndex.ingestKeyed]] step over the batch's gram hashes, whose
+    * screen scores the batch against the hit-bucket index and writes
+    * the per-doc reports; every batch gram extends the index. The
+    * bucket count is the recorded layout metadata, auto-sized for a
+    * NEW index from the first batch's gram rows
+    * ([[BatchIndex.autoBucketCount]]).
     */
   def processBatch(batch: DataFrame, batchId: Long, reportPath: String,
       indexPath: String, stats: NoveltyStats): Unit =
-    if (batchId > stats.lastCommitted) {
-      val spark = batch.sparkSession
-      val cached = batch.persist()
-      try {
-        val nSeen = cached.count()
-        if (nSeen == 0) return
-        val grams = TextAnalysis.gramIndex(cached).persist()
-        // recorded layout metadata; auto-sized for a NEW index from
-        // the first batch's gram rows (BatchIndex.autoBucketCount)
-        val b = BatchIndex.bucketCountForWrite(spark, indexPath,
-          KeyBuckets, grams.count())
-        val hit = grams.select(gramBucketAt(b).as("band_bucket"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        val index = BatchIndex.readBeforeBuckets(spark, indexPath,
-          batchId, Seq("h"), TextAnalysis.gramIndex(cached.limit(0)),
-          "band_bucket", hit)
-        val report = TextAnalysis.noveltyAgainst(index, cached)
-          .withColumn("batch_id", lit(batchId))
-          .persist()
-        try {
-          val nNovel = report.filter(col("novelty") === 1.0).count()
-          report.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(reportPath)
-          BatchIndex.ensureBucketMeta(spark, indexPath, b)
-          BatchIndex.writePartition(
-            grams.withColumn("band_bucket", gramBucketAt(b)),
-            batchId, indexPath, bucketCol = Some("band_bucket"))
-          stats.seen.add(nSeen); stats.novel.add(nNovel)
-          stats.lastCommitted = batchId
-          ()
-        } finally { report.unpersist(); grams.unpersist(); () }
-      } finally { cached.unpersist(); () }
+    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats, KeyBuckets,
+      Seq("h"), TextAnalysis.gramIndex, gramBucketAt) { kb =>
+      val report = kb.keep(TextAnalysis.noveltyAgainst(kb.index, kb.rows)
+        .withColumn("batch_id", lit(batchId)))
+      val nNovel = report.filter(col("novelty") === 1.0).count()
+      report.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(reportPath)
+      (kb.keys, nNovel)
     }
 
   /** Compact the gram index: batches re-append grams the index already
@@ -117,18 +96,4 @@ object NoveltyStream {
       indexPath: String): Option[BatchIndex.Maintenance] =
     BatchIndex.maintain(spark, indexPath, "band_bucket", KeyBuckets,
       Seq("h"))
-
-  /** Attach the novelty scorer to a documents stream. */
-  def start(stream: DataFrame, reportPath: String, indexPath: String,
-      checkpointDir: String, stats: NoveltyStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, reportPath, indexPath, stats)
-      }
-      .start()
 }

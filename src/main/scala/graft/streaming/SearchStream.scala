@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Search
 
@@ -21,8 +20,9 @@ import graft.ext.Search
   */
 object SearchStream {
 
-  /** One idempotent micro-batch ingest (the foreachBatch body of
-    * [[start]], extracted so StreamingSpec can replay it).
+  /** One idempotent micro-batch ingest of a document stream
+    * (doc_id, text, ...) — the foreachBatch body of the leg, extracted
+    * so StreamingSpec can replay it.
     */
   def processBatch(batch: DataFrame, batchId: Long,
       indexPath: String): Unit =
@@ -92,19 +92,4 @@ object SearchStream {
       else None
     Some(BatchIndex.Maintenance(postingsRep, compacted))
   }
-
-  /** Attach the postings ingest to a document stream
-    * (doc_id, text, ...).
-    */
-  def start(stream: DataFrame, indexPath: String, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest for the mergeable HLL sketch index
   * ([[graft.ext.SketchIndex]]): each micro-batch lands its own
@@ -23,9 +22,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object SketchStream {
 
   final class SketchStats(spark: org.apache.spark.sql.SparkSession)
-      extends Serializable {
+      extends MicroBatch.Ledger {
     val events = spark.sparkContext.longAccumulator("sketch_events")
-    @volatile var lastCommitted: Long = -1L
   }
 
   private def sketchRows(batch: DataFrame): DataFrame =
@@ -43,17 +41,17 @@ object SketchStream {
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       stats: SketchStats): Unit =
-    if (batchId > stats.lastCommitted) {
+    MicroBatch.commit(stats, batchId) {
       val rows = sketchRows(batch).persist()
       try {
         // coalesce: sum over an EMPTY batch is NULL (a rate source's
         // batch 0 has no rows), and the write must still commit so
-        // lastCommitted advances
+        // the ledger advances
         stats.events.add(
           rows.agg(coalesce(sum("n_events"), lit(0L)))
             .head().getLong(0))
         BatchIndex.writePartition(rows, batchId, indexPath, Some("day"))
-        stats.lastCommitted = batchId
+        true
       } finally { rows.unpersist(); () }
     }
 
@@ -116,18 +114,4 @@ object SketchStream {
       else None
     Some(BatchIndex.Maintenance(report, compacted))
   }
-
-  /** Attach the sketch ingest to an event stream. */
-  def start(stream: DataFrame, indexPath: String, checkpointDir: String,
-      stats: SketchStats,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"))
-      : StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, stats)
-      }
-      .start()
 }

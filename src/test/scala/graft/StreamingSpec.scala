@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventPipeline, JdbcSink}
+import graft.streaming.{EventPipeline, JdbcSink, MicroBatch}
 
 /** The exact column contract of Spark's Kafka source (key/value are
   * binary; topic/partition/offset/timestamp/timestampType metadata) —
@@ -79,7 +79,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(stats.late.value == 1)
     assert(stats.dqFailed.value == 1)
     assert(stats.drifted.value == 1)
-    assert(math.abs(stats.dqFailureRate - 0.2) < 1e-9)
+    assert(math.abs(stats.report.dqFailureRate - 0.2) < 1e-9)
 
     val main = spark.read.parquet(mainDir)
     val quarantine = spark.read.parquet(qDir)
@@ -124,7 +124,16 @@ class StreamingSpec extends AnyFunSuite {
       eventJson("c1", "good@example.com", now),
       eventJson("c2", "bad-email", now)).toDF("value")))
 
+    // a batch that throws between the two writes (its quarantine path
+    // sits under a regular file): the ledger and the accumulators stay
+    // put, so the same driver's retry of the batch commits it once
+    val blocked = Files.createTempFile("iblock", "").toString
+    intercept[Exception](
+      EventPipeline.processBatch(batch, 0L, mainDir, s"$blocked/q", stats))
+    assert(stats.lastCommitted == -1L && stats.total.value == 0)
+    assert(spark.read.parquet(mainDir).count() == 1) // partial first write
     EventPipeline.processBatch(batch, 0L, mainDir, qDir, stats)
+    assert(stats.lastCommitted == 0L)
     assert(stats.total.value == 2 && stats.dqFailed.value == 1)
     assert(spark.read.parquet(mainDir).count() == 1)
     assert(spark.read.parquet(qDir).count() == 1)
@@ -336,10 +345,11 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[String]
     val ckpt = Files.createTempDirectory("jckpt").toString
-    val q = JdbcSink.start(
+    val q = MicroBatch.start(
       EventPipeline.curate(EventPipeline.parse(
         mem.toDF().select(col("value")))),
-      url, "curated_stream", ckpt, Trigger.AvailableNow())
+      ckpt, Trigger.AvailableNow())(
+      JdbcSink.writeBatch(_, _, url, "curated_stream"))
     mem.addData(eventJson("s1", "s1@example.com", now))
     q.awaitTermination(60000)
     val sc2 = java.sql.DriverManager.getConnection(url)
@@ -591,13 +601,15 @@ class StreamingSpec extends AnyFunSuite {
     // add BEFORE start: AvailableNow snapshots offsets at query start
     val clean = Seq((1L, "en"), (2L, "de"), (3L, "fr"))
     mem.addData(clean: _*)
-    graft.streaming.DqMonitor.start(stream, stats, resDir, ckpt,
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    MicroBatch.start(stream, ckpt, Trigger.AvailableNow())(
+      graft.streaming.DqMonitor.processDqBatch(_, _, stats, resDir))
+      .awaitTermination(60000)
 
     val dirty = Seq((666L, "xx"), (5L, "en"))
     mem.addData(dirty: _*)
-    graft.streaming.DqMonitor.start(stream, stats, resDir, ckpt,
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    MicroBatch.start(stream, ckpt, Trigger.AvailableNow())(
+      graft.streaming.DqMonitor.processDqBatch(_, _, stats, resDir))
+      .awaitTermination(60000)
 
     // the streamed per-batch results must equal the static evaluator run
     // on the same rows — same engine, no drift
@@ -693,14 +705,16 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("label", lit(0))
 
     mem.addData((0L, a), (1L, b), (2L, c))
-    EmbedStream.start(stream, corpusDir, indexDir, ckpt, stats,
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    MicroBatch.start(stream, ckpt, Trigger.AvailableNow())(
+      EmbedStream.processBatch(_, _, corpusDir, indexDir, stats))
+      .awaitTermination(60000)
     // near-copy of vector 0 (1 % perturbation — the sign pattern still
     // matches in at least one of the 4 tables), one genuinely new
     // direction, and a batch-internal near-copy of it (keep-first)
     mem.addData((10L, perturb(a)), (11L, d), (12L, perturb(d)))
-    EmbedStream.start(stream, corpusDir, indexDir, ckpt, stats,
-      trigger = Trigger.AvailableNow()).awaitTermination(60000)
+    MicroBatch.start(stream, ckpt, Trigger.AvailableNow())(
+      EmbedStream.processBatch(_, _, corpusDir, indexDir, stats))
+      .awaitTermination(60000)
 
     val kept = spark.read.parquet(corpusDir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -1522,8 +1536,9 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, String)]
     val ckpt = Files.createTempDirectory("postckpt").toString
     mem.addData((1L, "spark window"), (2L, "table scan"))
-    val q = graft.streaming.SearchStream.start(
-      mem.toDF().toDF("doc_id", "text"), idx, ckpt, Trigger.AvailableNow())
+    val q = MicroBatch.start(
+      mem.toDF().toDF("doc_id", "text"), ckpt, Trigger.AvailableNow())(
+      graft.streaming.SearchStream.processBatch(_, _, idx))
     q.awaitTermination(60000)
     assert(hits("spark") == Set(0L, 1L))
     assert(hits("table", "scan") == Set(2L))
@@ -1540,8 +1555,9 @@ class StreamingSpec extends AnyFunSuite {
     // a later run on the same checkpoint gets the next batch id; the
     // readers see base + both streamed levels transparently
     mem.addData((3L, "spark join window"))
-    val q2 = graft.streaming.SearchStream.start(
-      mem.toDF().toDF("doc_id", "text"), idx, ckpt, Trigger.AvailableNow())
+    val q2 = MicroBatch.start(
+      mem.toDF().toDF("doc_id", "text"), ckpt, Trigger.AvailableNow())(
+      graft.streaming.SearchStream.processBatch(_, _, idx))
     q2.awaitTermination(60000)
     assert(hits("spark", "join") == Set(0L, 3L))
     assert(spark.read.parquet(s"$idx/postings")
