@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ext.Versioned
 import graft.streaming.{EventPipeline, MicroBatch}
 
 /** Runnable streaming demo without a Kafka broker: the `rate` source
@@ -123,25 +124,33 @@ object RunStream {
     * documented at-least-once window a checkpoint replay rewrites), so
     * an unfiltered count could exceed the accumulators — and a run
     * shorter than its first trigger has no sink at all, which must
-    * read as 0, not PATH_NOT_FOUND. Any other failure (a corrupt sink)
-    * propagates: it must not read as an empty run.
+    * read as 0 ([[Versioned.readOr]]). Any other failure (a corrupt
+    * sink) propagates: it must not read as an empty run.
     */
   private[graft] def committedRows(spark: SparkSession, p: String,
       committed: Long = Long.MaxValue): Long =
-    try {
+    Versioned.readOr(0L) {
       val df = spark.read.parquet(p)
       (if (df.columns.contains("batch_id"))
          df.filter(col("batch_id") <= committed)
        else df).count()
-    } catch { case e: AnalysisException if notYetWritten(e) => 0L }
-
-  /** A read of an artifact the run never wrote: no path, or no data
-    * files in it to infer a schema from. */
-  private def notYetWritten(e: AnalysisException): Boolean =
-    Option(e.getCondition).exists(c =>
-      c.contains("PATH_NOT_FOUND") || c.contains("UNABLE_TO_INFER_SCHEMA"))
+    }
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Extends a bounded run past its duration while `leg` has committed
+    * no batch and its query still runs, for at most 90 s: a cold first
+    * trigger can be a run's longest, and stopping it mid-flight would
+    * report an empty result and leave the interrupted trigger as a
+    * bootstrap crash window (real, replay-recoverable — but not what a
+    * measurement run is for).
+    */
+  private def graceFirstCommit(leg: MicroBatch.Ledger,
+      q: StreamingQuery): Unit = {
+    val grace = System.nanoTime() + 90e9.toLong
+    while (leg.lastCommitted < 0L && q.isActive && System.nanoTime() < grace)
+      Thread.sleep(500L)
+  }
 
   /** Sets the RocksDB state-store provider for [[runFull]]'s
     * sessionizer leg unless the session already has a provider set
@@ -181,7 +190,9 @@ object RunStream {
     */
   private def graphAudit(spark: SparkSession, path: String,
       committed: Long): (Long, Long, Long) =
-    try {
+    try Versioned.readOr((0L, 0L, 0L)) {
+      // absent graph = the run stopped before its first commit — a
+      // legitimate empty result, not an audit failure
       import graft.ext.{CorpusGraph, Dedup}
       val allPairs = CorpusGraph.readPairs(spark, path)
       // stream batch ids are offset by one in the graph artifact
@@ -204,9 +215,6 @@ object RunStream {
           staleVs(pairs.unionByName(inFlight)))
       (pairs.count(), labels.count(), stale)
     } catch {
-      // absent graph = the run stopped before its first commit — a
-      // legitimate empty result, not an audit failure
-      case e: AnalysisException if notYetWritten(e) => (0L, 0L, 0L)
       case e: Throwable =>
         // surfaced, not swallowed: the printed summary must show WHY
         // the health numbers are absent
@@ -394,13 +402,8 @@ object RunStream {
         Thread.sleep(seconds * 1000L)
         // the graph leg's first trigger is the composition's longest
         // (banding + decode + fp append + relabel, cold, under five
-        // competing streams): grant it a bounded grace window to land
-        // its first commit, or the run reports an empty graph and the
-        // interrupted trigger reads as a bootstrap crash window (real,
-        // replay-recoverable — but not what a measurement run is for)
-        val grace = System.nanoTime() + 90e9.toLong
-        while (gStats.lastCommitted < 0L && System.nanoTime() < grace)
-          Thread.sleep(500L)
+        // competing streams)
+        graceFirstCommit(gStats, qGr)
         queries.foreach(q => if (q.isActive) q.stop())
         queries.foreach(_.awaitTermination())
         (queries, qSess)
@@ -423,9 +426,8 @@ object RunStream {
         dedupIndexRows = rows(s"$outDir/dd_index", ddStats.lastCommitted),
         hhSymbols =
           // a run shorter than the HH leg's first trigger has no index
-          try HeavyHitterStream.servedCounters(spark, s"$outDir/hh_index")
-            .count()
-          catch { case e: AnalysisException if notYetWritten(e) => 0L },
+          Versioned.readOr(0L)(HeavyHitterStream.servedCounters(spark,
+            s"$outDir/hh_index").count()),
         hllDays = rows(s"$outDir/hll_index"),
         sessionsEmitted = sessEmitted.value,
         sessionStateRows = qSess.recentProgress.toSeq
@@ -758,12 +760,15 @@ object RunStream {
         graft.streaming.GraphStream.processBatch(_, _, s"$outDir/corpus_g",
           s"$outDir/bands_g", s"$outDir/graph_g", stats, legs,
           fpIndexPath))
-      EventPipeline.runBounded(q, seconds * 1000L)
+      q.awaitTermination(seconds * 1000L)
+      graceFirstCommit(stats, q)
+      if (q.isActive) q.stop()
+      val committed = stats.lastCommitted >= 0L
       // fold only through the committed stored id (see runFull) — an
       // interrupted trigger's bands/fps must stay under their own
       // batch_id or the replay's resend probe sees its first attempt;
       // a zero-commit run skips (its bound would only re-fold the -1)
-      if (stats.lastCommitted >= 0L) {
+      if (committed) {
         maintainAfterRun("graph-bands",
           graft.streaming.GraphStream.maintain(spark,
             s"$outDir/bands_g",
@@ -788,6 +793,10 @@ object RunStream {
         f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f " +
         s"triggers=${trigMs.map { case (r, ms) => s"$r:${ms}ms" }
           .mkString(",")}")
+      if (!committed) throw new IllegalStateException(
+        s"[stream-$wire] no batch committed within ${seconds}s plus " +
+          "the 90 s first-commit grace; the counts above are not a " +
+          "measurement — run longer or at a lower rate")
       // pair-table cadence AFTER the audit + summary (the audit's
       // in-flight boundary detection reads un-folded batch ids); the
       // folded_through screen keeps a replayed in-flight batch exact

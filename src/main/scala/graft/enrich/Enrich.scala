@@ -104,11 +104,17 @@ object Enrich {
     * (ingest_transform.py:338-362) over the synthesized CustomerEvent
     * stream: timestamps → region → email domain → age → drift → late → DQ.
     */
-  def curated(events: DataFrame): DataFrame = {
+  def curated(events: DataFrame): DataFrame =
+    enriched(graft.CustomerEvents.synth(events))
+
+  /** P1-P7 + Q1-Q5 in the reference order, DQ flags judged as of
+    * `asOf` — the one chain the batch job ([[curated]]) and the
+    * streaming leg (`EventPipeline.curate`) share.
+    */
+  def enriched(df: DataFrame, asOf: Column = asOfCol): DataFrame = {
     val chain =
       withEventTimestamps _ andThen withRegion andThen withEmailDomain andThen
-        withCustomerAge andThen withDriftFlag andThen withLateFlag andThen
-        (withDqFlags(_))
-    chain(graft.CustomerEvents.synth(events))
+        withCustomerAge andThen withDriftFlag andThen withLateFlag
+    withDqFlags(chain(df), asOf)
   }
 }

@@ -158,12 +158,8 @@ object CorpusGraph {
     * cleared so they cannot out-rank the fresh base (the
     * writeMediaFpIndex lesson).
     */
-  def write(pairs: DataFrame, path: String): Unit = {
-    val spark = pairs.sparkSession
-    Versioned.committedVersions(spark, path).foreach(n =>
-      Versioned.clearStage(spark, Versioned.versionDir(path, n)))
-    writeSnapshot(pairs, path)
-  }
+  def write(pairs: DataFrame, path: String): Unit =
+    Versioned.writeBase(pairs.sparkSession, path)(writeSnapshot(pairs, _))
 
   /** One complete pairs+labels snapshot under `root` — shared by the
     * flat base build ([[write]]) and the staged rebuild
@@ -243,16 +239,10 @@ object CorpusGraph {
     */
   private def readLabelsOrEmpty(spark: SparkSession,
       root: String): DataFrame =
-    try readLabelsAt(spark, root) // missing path throws at read time
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(LabelsSchema.dropRight(1)))
-    }
+    Versioned.readOr(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType(LabelsSchema.dropRight(1))))(
+      readLabelsAt(spark, root)) // missing path throws at read time
 
   /** One [[append]]'s cost/shape accounting — the structured signal a
     * deployment routes on instead of a doc-comment note: touchedMembers
@@ -501,17 +491,11 @@ object CorpusGraph {
       .distinct().collect().map(_.getLong(0)).toSeq
     if (affectedBuckets.isEmpty) return (0L, 0L)
     val storedB =
-      (try spark.read.schema(LabelsSchema).parquet(s"$path/labels")
-       catch {
-         case e: org.apache.spark.sql.AnalysisException
-             if e.getCondition != null
-               && (e.getCondition.contains("PATH_NOT_FOUND")
-                 || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-           // first streaming append bootstraps the label table
-           spark.createDataFrame(
-             new java.util.ArrayList[org.apache.spark.sql.Row](),
-             LabelsSchema)
-       })
+      // first streaming append bootstraps the label table
+      Versioned.readOr(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](),
+          LabelsSchema))(
+        spark.read.schema(LabelsSchema).parquet(s"$path/labels"))
       .filter(col("bucket").isin(affectedBuckets: _*)) // partition pruning
       .select("doc_id", "label", "bucket")
     val keep0 = storedB.join(d.select("doc_id"), Seq("doc_id"),
@@ -929,69 +913,38 @@ object CorpusGraph {
     * `pairs` is the full re-screened pair set under the new
     * parameters (pairs cannot be re-derived from themselves after a
     * banding change). Pair membership legitimately CHANGES across a
-    * banding upgrade, so there is no doc-coverage validation — the
-    * race guard is the post-commit growth re-check: an append that
-    * landed in the superseded root during the validate→commit window
-    * is detected before that root could ever retire (the
-    * assertAppendLanded twin, rebuild side).
+    * banding upgrade, so there is no doc-coverage validation; appends
+    * racing the rebuild are caught by [[Versioned.rebuild]]'s
+    * baseline checks.
     */
   def rebuildGraph(spark: SparkSession, pairs: DataFrame,
       path: String): Long =
     rebuildGraphHooked(spark, pairs, path)
 
-  /** [[rebuildGraph]] with the test seam between validation and commit
-    * (see [[Multimodal.rebuildMediaFpIndexHooked]]).
+  /** [[rebuildGraph]] with the test seam before the commit
+    * ([[Versioned.rebuild]]).
     */
   private[graft] def rebuildGraphHooked(spark: SparkSession,
       pairs: DataFrame, path: String,
-      beforeCommit: () => Unit = () => ()): Long = {
-    val cur = Versioned.resolve(spark, path)
-    // baseline for the post-commit late-append check, captured BEFORE
-    // staging: the stage+validate phase is the rebuild's LONG window,
-    // and an append landing during it passes its own guard (the
-    // marker isn't created yet, so the root is unchanged) while being
-    // absent from the caller's re-screened pairs — capturing after
-    // validation (as the media rebuild can afford, its coverage check
-    // reads the current root post-stage) would silently retire that
-    // batch's only copy
-    val curPairsAtStart = pairRowsOf(spark, cur)
-    val n = Versioned.nextVersion(spark, path)
-    val stage = Versioned.versionDir(path, n)
-    Versioned.clearStage(spark, stage)
-    writeSnapshot(pairs, stage)
-    require(staleLabelCountAt(spark, stage) == 0L,
-      "staged graph snapshot's labels disagree with its pairs — " +
-        "incomplete stage write; clear and re-run the rebuild")
-    beforeCommit()
-    Versioned.commit(spark, stage)
-    // appends only ever ADD pair rows, so growth of the superseded
-    // root since the resolve is a late append: keep the old root (the
-    // batch's only copy), serve the new one, and carry the recovery
-    // in the error (re-run the append — it lands in the committed
-    // snapshot — then rebuild again if its pairs must re-band)
-    val lateRows = pairRowsOf(spark, cur) - curPairsAtStart
-    require(lateRows <= 0L,
-      s"an append landed $lateRows pair rows in the superseded " +
-        "snapshot during the rebuild; old root retained — re-run the " +
-        "append against the committed snapshot, then rebuild again")
-    Versioned.retire(spark, path, flatSubdirs = Seq("pairs", "labels"))
-    n
-  }
-
-  private def pairRowsOf(spark: SparkSession, root: String): Long =
-    try readPairsAt(spark, root).count()
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        0L
+      beforeCommit: () => Unit = () => ()): Long =
+    Versioned.rebuild(spark, path, GraphArtifact,
+        beforeCommit = beforeCommit) { (_, stage) =>
+      writeSnapshot(pairs, stage)
+      require(staleLabelCountAt(spark, stage) == 0L,
+        "staged graph snapshot's labels disagree with its pairs — " +
+          "incomplete stage write; clear and re-run the rebuild")
     }
+
+  /** The graph to [[Versioned]]: a root serves its pair rows. No key
+    * set — a banding upgrade is defined to change pair membership.
+    */
+  private val GraphArtifact = Versioned.Artifact("corpus graph",
+    Seq("pairs", "labels"), rowsOf = readPairsAt(_, _).count())
 
   /** Every root still holding pair/label data — the takedown
     * enumeration for the graph artifact (retained snapshots are real
     * copies; [[Takedown.DedupGraph]] purges each).
     */
   def graphRetainedRoots(spark: SparkSession, path: String): Seq[String] =
-    Versioned.retainedRoots(spark, path, flatProbeSubdir = "pairs")
+    Versioned.retainedRoots(spark, path, GraphArtifact.components)
 }

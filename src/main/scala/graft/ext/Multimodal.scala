@@ -1564,14 +1564,9 @@ object Multimodal {
     * (reject-don't-drop), filtered at serve time exactly like the
     * in-flight screens filter them.
     */
-  def writeMediaFpIndex(documents: DataFrame, path: String): Unit = {
-    // full-replace semantics: stale version dirs from earlier rebuilds
-    // must not out-rank the fresh base (see Similarity.writeIvfIndex)
-    val spark = documents.sparkSession
-    Versioned.committedVersions(spark, path).foreach(n =>
-      Versioned.clearStage(spark, Versioned.versionDir(path, n)))
-    writeMediaFpSnapshot(documents, path)
-  }
+  def writeMediaFpIndex(documents: DataFrame, path: String): Unit =
+    Versioned.writeBase(documents.sparkSession, path)(
+      writeMediaFpSnapshot(documents, _))
 
   private def writeMediaFpSnapshot(documents: DataFrame,
       root: String): Unit = {
@@ -1595,8 +1590,7 @@ object Multimodal {
     // longs/doc read back — never a second decode). Static overwrite:
     // a snapshot replaces the whole component, including any stale
     // higher-batch band partitions from a previous life of this root.
-    bandSidecarRows(
-      spark.read.schema(MediaFpSchema).parquet(s"$root/data"))
+    bandSidecarRows(readMediaFpData(spark, root))
       .withColumn("batch_id", lit(0L))
       .repartition(col("band_bucket"))
       .write.mode("overwrite")
@@ -1703,15 +1697,9 @@ object Multimodal {
     */
   def backfillMediaFpBands(spark: org.apache.spark.sql.SparkSession,
       root: String): Long = {
-    val data =
-      try spark.read.schema(MediaFpSchema).parquet(s"$root/data")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition != null
-              && (e.getCondition.contains("PATH_NOT_FOUND")
-                || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-          return 0L
-      }
+    val data = Versioned.readOr(Option.empty[DataFrame])(
+        Some(readMediaFpData(spark, root)))
+      .getOrElse(return 0L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
@@ -1866,110 +1854,43 @@ object Multimodal {
       allowShrink: Boolean = false): Long =
     rebuildMediaFpIndexHooked(spark, documents, path, allowShrink)
 
-  /** [[rebuildMediaFpIndex]] with a test seam firing between the
-    * staged validation and the commit — the exact window where an
-    * append can land in the serving root AND pass its own guard
-    * (the marker is not created yet), which is why the rebuild
-    * re-checks coverage AFTER commit, before retiring the old root.
+  /** [[rebuildMediaFpIndex]] with the test seam before the commit
+    * ([[Versioned.rebuild]]).
     */
   private[graft] def rebuildMediaFpIndexHooked(
       spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, path: String,
       allowShrink: Boolean = false,
-      beforeCommit: () => Unit = () => ()): Long = {
-    val cur = Versioned.resolve(spark, path)
-    val n = Versioned.nextVersion(spark, path)
-    val stage = Versioned.versionDir(path, n)
-    Versioned.clearStage(spark, stage)
-    writeMediaFpSnapshot(documents, stage)
-    val staged = spark.read.schema(MediaFpSchema).parquet(s"$stage/data")
-    val want = documents.count() * MediaFpModalities.size
-    val built = staged.count()
-    require(built == want,
-      s"staged media fp rebuild has $built rows, corpus implies $want")
-    // two-component consistency: the band sidecar must cover exactly
-    // the staged decoded fingerprints (4 bands each)
-    val wantBands = staged.filter(col("decoded")).count() * 4L
-    val builtBands = spark.read.schema(MediaBandSchema)
-      .parquet(s"$stage/bands").count()
-    require(builtBands == wantBands,
-      s"staged band sidecar has $builtBands rows, " +
-        s"fingerprints imply $wantBands")
-    // coverage check against the CURRENT snapshot (skipped when no
-    // index exists yet — a first build through the rebuild path — or
-    // when the caller declared the shrink)
-    val servedDocs = if (allowShrink) staged.select("doc_id").limit(0)
-    else servedDocsOf(spark, cur, staged)
-    val missing = servedDocs
-      .join(staged.select("doc_id").distinct(), Seq("doc_id"),
-        "left_anti").count()
-    require(missing == 0L,
-      s"staged media fp rebuild drops $missing docs the serving index " +
-        "holds — pass the full grown corpus (base + appended batches)")
-    // validation-time snapshot of the serving root's SIZE — the
-    // reference the post-commit late-append check compares against
-    // (content-growth-based, so it works under allowShrink too)
-    val curRowsAtValidation = rowsOf(spark, cur)
-    beforeCommit()
-    Versioned.commit(spark, stage)
-    // the race's OTHER half: an append whose write AND guard both
-    // completed between the validation read above and the commit saw
-    // the old root as current throughout — its batch is in the
-    // superseded snapshot only. Appends only ever ADD rows, so any
-    // growth of that root since validation is a late append: the old
-    // snapshot is kept (nothing lost), the new one serves, and the
-    // loud error carries the recovery (re-run the append — it now
-    // lands in the committed snapshot — then rebuild again if bits
-    // must refresh).
-    val lateRows = rowsOf(spark, cur) - curRowsAtValidation
-    require(lateRows <= 0L,
-      s"an append landed $lateRows rows in the superseded snapshot " +
-        "during the rebuild; old root retained — re-run the append " +
-        "against the committed snapshot, then rebuild again")
-    // crash-recovery face of the same race: a PREVIOUS rebuild that
-    // died between its commit and its own late check leaves the
-    // stranded batch in a root THIS retire would delete — audit every
-    // retire target for coverage first (skipped under allowShrink:
-    // a declared shrink makes removed docs indistinguishable from
-    // stranded ones by content alone)
-    if (!allowShrink)
-      Versioned.retireTargets(spark, path, "data").foreach { r =>
-        val lost = servedDocsOf(spark, r, staged)
-          .join(staged.select("doc_id").distinct(), Seq("doc_id"),
-            "left_anti").count()
-        require(lost == 0L,
-          s"retire would delete $r holding $lost docs absent from the " +
-            "new snapshot — a stranded append from a crashed rebuild; " +
-            "re-run the append, then rebuild again")
-      }
-    Versioned.retire(spark, path, flatSubdirs = Seq("data", "bands"))
-    n
-  }
-
-  /** Row count of a root's data component (absent → 0). */
-  private def rowsOf(spark: org.apache.spark.sql.SparkSession,
-      root: String): Long =
-    try spark.read.schema(MediaFpSchema).parquet(s"$root/data").count()
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        0L
+      beforeCommit: () => Unit = () => ()): Long =
+    Versioned.rebuild(spark, path, MediaFpArtifact, allowShrink,
+        beforeCommit) { (_, stage) =>
+      writeMediaFpSnapshot(documents, stage)
+      val staged = readMediaFpData(spark, stage)
+      val want = documents.count() * MediaFpModalities.size
+      val built = staged.count()
+      require(built == want,
+        s"staged media fp rebuild has $built rows, corpus implies $want")
+      // two-component consistency: the band sidecar must cover exactly
+      // the staged decoded fingerprints (4 bands each)
+      val wantBands = staged.filter(col("decoded")).count() * 4L
+      val builtBands = spark.read.schema(MediaBandSchema)
+        .parquet(s"$stage/bands").count()
+      require(builtBands == wantBands,
+        s"staged band sidecar has $builtBands rows, " +
+          s"fingerprints imply $wantBands")
     }
 
-  /** Distinct doc_ids the root currently serves (absent → empty). */
-  private def servedDocsOf(spark: org.apache.spark.sql.SparkSession,
-      root: String, emptyLike: DataFrame): DataFrame =
-    try spark.read.schema(MediaFpSchema).parquet(s"$root/data")
-      .select("doc_id").distinct()
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        emptyLike.select("doc_id").limit(0)
-    }
+  private def readMediaFpData(spark: org.apache.spark.sql.SparkSession,
+      root: String): DataFrame =
+    spark.read.schema(MediaFpSchema).parquet(s"$root/data")
+
+  /** The media fp index to [[Versioned]]: a root serves its `data`
+    * rows, and a rebuild keeps every doc_id.
+    */
+  private val MediaFpArtifact = Versioned.Artifact("media fp index",
+    Seq("data", "bands"),
+    rowsOf = readMediaFpData(_, _).count(),
+    keysOf = Some(readMediaFpData(_, _).select("doc_id")))
 
   /** Every root still holding fingerprint data — the takedown
     * enumeration for this artifact (see
@@ -1977,7 +1898,7 @@ object Multimodal {
     */
   def mediaFpRetainedRoots(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[String] =
-    Versioned.retainedRoots(spark, path, flatProbeSubdir = "data")
+    Versioned.retainedRoots(spark, path, MediaFpArtifact.components)
 
   /** Index schema, declared at read time (data-less index safety +
     * no footer sniffing — the [[graft.ext.Search.PostingsSchema]]
@@ -2013,8 +1934,7 @@ object Multimodal {
       path: String): DataFrame =
     // resolve once per query — a screen straddling a rebuild's swap
     // reads one snapshot throughout (see [[Versioned]])
-    spark.read.schema(MediaFpSchema)
-      .parquet(s"${Versioned.resolve(spark, path)}/data")
+    readMediaFpData(spark, Versioned.resolve(spark, path))
 
   /** The band sidecar's rows for ONE modality, pruned to `hitBuckets`
     * and to batches strictly before `beforeBatch` — the per-trigger

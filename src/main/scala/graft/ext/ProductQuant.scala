@@ -210,12 +210,9 @@ object ProductQuant {
     */
   def writePqCodebooks(embeddings: DataFrame, path: String,
       k: Int = CodebookK): Unit = {
-    // full-replace semantics: stale version dirs from earlier retrains
-    // must not out-rank the fresh base (see Similarity.writeIvfIndex)
     val spark = embeddings.sparkSession
-    Versioned.committedVersions(spark, path).foreach(n =>
-      Versioned.clearStage(spark, Versioned.versionDir(path, n)))
-    writeCodebookSnapshot(trainCodebooks(embeddings, k), path, spark)
+    Versioned.writeBase(spark, path)(
+      writeCodebookSnapshot(trainCodebooks(embeddings, k), _, spark))
   }
 
   private def writeCodebookSnapshot(cbs: Seq[Seq[Seq[Double]]],
@@ -260,18 +257,21 @@ object ProductQuant {
       path: String, embeddings: DataFrame,
       k: Int = CodebookK): Long = {
     val cbs = trainCodebooks(embeddings, k)
-    val n = Versioned.nextVersion(spark, path)
-    val stage = Versioned.versionDir(path, n)
-    Versioned.clearStage(spark, stage)
-    writeCodebookSnapshot(cbs, stage, spark)
-    // validate the staged artifact reads back to the trained shape
-    val back = spark.read.parquet(s"$stage/codebooks").count()
-    require(back == cbs.map(_.size).sum.toLong,
-      s"staged codebooks have $back rows, trained ${cbs.map(_.size).sum}")
-    Versioned.commit(spark, stage)
-    Versioned.retire(spark, path, flatSubdirs = Seq("codebooks"))
-    n
+    Versioned.rebuild(spark, path, PqArtifact) { (_, stage) =>
+      writeCodebookSnapshot(cbs, stage, spark)
+      // validate the staged artifact reads back to the trained shape
+      val back = spark.read.parquet(s"$stage/codebooks").count()
+      require(back == cbs.map(_.size).sum.toLong,
+        s"staged codebooks have $back rows, trained ${cbs.map(_.size).sum}")
+    }
   }
+
+  /** The codebooks to [[Versioned]]: M·K rows per root, no key set (a
+    * retrain is defined to replace every codeword).
+    */
+  private val PqArtifact = Versioned.Artifact("PQ codebooks",
+    Seq("codebooks"),
+    rowsOf = (spark, root) => spark.read.parquet(s"$root/codebooks").count())
 
   /** PQ quantization-distortion monitor — the retrain signal for a
     * served PQ/IVF-PQ index (the ADC-precision twin of

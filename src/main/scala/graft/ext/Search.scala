@@ -70,14 +70,9 @@ object Search {
     * itself; rebuilds live under `v-<n>` (see [[Versioned]]).
     */
   def writeSearchIndex(documents: DataFrame, path: String,
-      buckets: Int = NumBuckets): Unit = {
-    val spark = documents.sparkSession
-    // full-replace semantics: stale version dirs from earlier rebuilds
-    // must not out-rank the fresh base (the writeIvfIndex lesson)
-    Versioned.committedVersions(spark, path).foreach(n =>
-      Versioned.clearStage(spark, Versioned.versionDir(path, n)))
-    writeSearchSnapshot(documents, path, buckets)
-  }
+      buckets: Int = NumBuckets): Unit =
+    Versioned.writeBase(documents.sparkSession, path)(
+      writeSearchSnapshot(documents, _, buckets))
 
   private def writeSearchSnapshot(documents: DataFrame, root: String,
       buckets: Int): Unit = {
@@ -127,92 +122,34 @@ object Search {
     rebuildSearchIndexHooked(spark, documents, path, buckets,
       allowShrink)
 
-  /** [[rebuildSearchIndex]] with the test seam between validation and
-    * commit (see [[graft.ext.Multimodal.rebuildMediaFpIndexHooked]]).
+  /** [[rebuildSearchIndex]] with the test seam before the commit
+    * ([[Versioned.rebuild]]).
     */
   private[graft] def rebuildSearchIndexHooked(spark: SparkSession,
       documents: DataFrame, path: String, buckets: Int = NumBuckets,
       allowShrink: Boolean = false,
-      beforeCommit: () => Unit = () => ()): Long = {
-    val cur = Versioned.resolve(spark, path)
-    val n = Versioned.nextVersion(spark, path)
-    val stage = Versioned.versionDir(path, n)
-    Versioned.clearStage(spark, stage)
-    writeSearchSnapshot(documents, stage, buckets)
-    val stagedDl = spark.read.schema(DocLenSchema)
-      .parquet(s"$stage/doclen")
-    require(stagedDl.count() == documents.count(),
-      "staged doclen row count must match the corpus")
-    def servedDocs() =
-      try spark.read.schema(DocLenSchema).parquet(s"$cur/doclen")
-        .select("doc_id").distinct()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition != null
-              && (e.getCondition.contains("PATH_NOT_FOUND")
-                || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-          stagedDl.select("doc_id").limit(0)
-      }
-    def uncovered(): Long =
-      servedDocs().join(stagedDl.select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti").count()
-    val missing = if (allowShrink) 0L else uncovered()
-    require(missing == 0L,
-      s"staged search rebuild drops $missing docs the serving index " +
-        "holds — pass the full grown corpus (base + appended batches)")
-    def dlRowsOf(root: String): Long =
-      try spark.read.schema(DocLenSchema).parquet(s"$root/doclen")
-        .count()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition != null
-              && (e.getCondition.contains("PATH_NOT_FOUND")
-                || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-          0L
-      }
-    // validation-time size of the serving root — appends only ADD
-    // rows, so post-commit growth is a late append regardless of
-    // allowShrink (see Multimodal.rebuildMediaFpIndexHooked)
-    val curRowsAtValidation = dlRowsOf(cur)
-    beforeCommit()
-    Versioned.commit(spark, stage)
-    val lateRows = dlRowsOf(cur) - curRowsAtValidation
-    require(lateRows <= 0L,
-      s"an append landed $lateRows docs in the superseded snapshot " +
-        "during the rebuild; old root retained — re-run the append " +
-        "against the committed snapshot, then rebuild again")
-    // crash-recovery face: audit every root this retire would delete
-    // for coverage by the new snapshot (a stranded append from a
-    // rebuild that died between commit and its late check)
-    if (!allowShrink)
-      Versioned.retireTargets(spark, path, "postings").foreach { r =>
-        val lost =
-          try spark.read.schema(DocLenSchema).parquet(s"$r/doclen")
-            .select("doc_id").distinct()
-            .join(stagedDl.select("doc_id").distinct(), Seq("doc_id"),
-              "left_anti").count()
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition != null
-                  && (e.getCondition.contains("PATH_NOT_FOUND")
-                    || e.getCondition.contains(
-                      "UNABLE_TO_INFER_SCHEMA")) => 0L
-          }
-        require(lost == 0L,
-          s"retire would delete $r holding $lost docs absent from the " +
-            "new snapshot — a stranded append from a crashed rebuild; " +
-            "re-run the append, then rebuild again")
-      }
-    Versioned.retire(spark, path, flatSubdirs = Seq("postings", "doclen"))
-    n
-  }
+      beforeCommit: () => Unit = () => ()): Long =
+    Versioned.rebuild(spark, path, SearchArtifact, allowShrink,
+        beforeCommit) { (_, stage) =>
+      writeSearchSnapshot(documents, stage, buckets)
+      require(readDocLens(spark, stage).count() == documents.count(),
+        "staged doclen row count must match the corpus")
+    }
+
+  /** The search artifact to [[Versioned]]: a root serves its doclen
+    * rows, and a rebuild keeps every doc_id they hold.
+    */
+  private val SearchArtifact = Versioned.Artifact("search index",
+    Seq("postings", "doclen"),
+    rowsOf = readDocLens(_, _).count(),
+    keysOf = Some(readDocLens(_, _).select("doc_id")))
 
   /** Every root still holding postings/doclen data — the takedown
     * enumeration for the search artifact (retained snapshots are real
     * copies; see [[Similarity.ivfRetainedRoots]]).
     */
   def searchRetainedRoots(spark: SparkSession, path: String): Seq[String] =
-    Versioned.retainedRoots(spark, path, flatProbeSubdir = "postings")
+    Versioned.retainedRoots(spark, path, SearchArtifact.components)
 
   /** Bucket a term exactly like the index writer (non-negative h32). */
   def bucketOf(term: String, buckets: Int = NumBuckets): Long =

@@ -1040,17 +1040,9 @@ object Similarity {
     * `path/centroids/…` (ccell, cell, fv, fn2).
     */
   def writeIvfIndex(embeddings: DataFrame, path: String,
-      cells: Int = IvfCells): Unit = {
-    // a base build is a FULL REPLACE (the writeHllIndex static-
-    // overwrite posture): version dirs from earlier rebuilds of this
-    // path must not shadow it — readers resolve to the highest
-    // committed version, so a stale v-N left behind would silently
-    // out-rank the fresh flat build
-    val spark = embeddings.sparkSession
-    Versioned.committedVersions(spark, path).foreach(n =>
-      Versioned.clearStage(spark, Versioned.versionDir(path, n)))
-    writeIvfSnapshot(embeddings, path, cells)
-  }
+      cells: Int = IvfCells): Unit =
+    Versioned.writeBase(embeddings.sparkSession, path)(
+      writeIvfSnapshot(embeddings, _, cells))
 
   /** One complete index snapshot (data + centroids) under `root` —
     * the base build writes it at the index path itself; a rebuild
@@ -1095,72 +1087,46 @@ object Similarity {
       path: String, cells: Int = IvfCells): Long =
     rebuildIvfIndexHooked(spark, path, cells)
 
-  /** [[rebuildIvfIndex]] with the test seam between validation and
-    * commit (see [[Multimodal.rebuildMediaFpIndexHooked]]).
+  /** [[rebuildIvfIndex]] with the test seam before the commit
+    * ([[Versioned.rebuild]]).
     */
   private[graft] def rebuildIvfIndexHooked(
       spark: org.apache.spark.sql.SparkSession,
       path: String, cells: Int = IvfCells,
-      beforeCommit: () => Unit = () => ()): Long = {
-    val cur = Versioned.resolve(spark, path)
-    val n = Versioned.nextVersion(spark, path)
-    val stage = Versioned.versionDir(path, n)
-    Versioned.clearStage(spark, stage) // crashed-rebuild debris
-    // CONSOLIDATE first: the serving index is nlist·batches small
-    // cell= files, and the clustering makes several passes over its
-    // input — read the fragmented layout ONCE into a flat
-    // default-parallelism staging table, then cluster from that with
-    // exactly a base build's economics (measured 121 s → 33 s at
-    // 1.28 M / 1132 cells without/with the consolidation pass; stored
-    // v is the exact withNorm(embedding) vector, so the round-trip is
-    // lossless)
-    readIndexData(spark, cur)
-      .select(col("vec_id"), col("label"), col("v").as("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$stage/.corpus")
-    val corpus = spark.read.parquet(s"$stage/.corpus")
-    val want = corpus.count() // validation reference
-    writeIvfSnapshot(corpus, stage, cells)
-    // validate the staged snapshot BEFORE promoting: a lost row here
-    // is a silently shrunken corpus forever after
-    val built = spark.read.parquet(s"$stage/data").count()
-    require(built == want,
-      s"staged rebuild has $built rows, serving index has $want")
-    Versioned.clearStage(spark, s"$stage/.corpus") // staging scratch
-    beforeCommit()
-    Versioned.commit(spark, stage)
-    // an append whose write AND guard both completed between the
-    // consolidation read and the commit saw the old root as current
-    // throughout — its vectors are in the superseded snapshot only.
-    // Re-count that root's CURRENT content before retiring it (on a
-    // hit the old snapshot is kept; the loud error carries the
-    // re-ingest recovery; see Multimodal.rebuildMediaFpIndexHooked).
-    val late = readIndexData(spark, cur).count() - want
-    require(late <= 0L,
-      s"an append landed $late vectors in the superseded snapshot " +
-        "during the rebuild; old root retained — re-run the append " +
-        "against the committed snapshot, then rebuild again")
-    // crash-recovery face: audit every root this retire would delete
-    // for coverage by the new snapshot (a stranded append from a
-    // rebuild that died between commit and its late check)
-    val stagedIds = spark.read.parquet(s"$stage/data")
-      .select("vec_id").distinct()
-    Versioned.retireTargets(spark, path, "data").foreach { r =>
-      val lost = readIndexData(spark, r).select("vec_id").distinct()
-        .join(stagedIds, Seq("vec_id"), "left_anti").count()
-      require(lost == 0L,
-        s"retire would delete $r holding $lost vectors absent from " +
-          "the new snapshot — a stranded append from a crashed " +
-          "rebuild; re-run the append, then rebuild again")
+      beforeCommit: () => Unit = () => ()): Long =
+    Versioned.rebuild(spark, path, IvfArtifact,
+        beforeCommit = beforeCommit) { (served, stage) =>
+      // CONSOLIDATE first: the serving index is nlist·batches small
+      // cell= files, and the clustering makes several passes over its
+      // input — read the fragmented layout ONCE into a flat
+      // default-parallelism staging table, then cluster from that with
+      // exactly a base build's economics (measured 121 s → 33 s at
+      // 1.28 M / 1132 cells without/with the consolidation pass; stored
+      // v is the exact withNorm(embedding) vector, so the round-trip is
+      // lossless)
+      readIndexData(spark, served)
+        .select(col("vec_id"), col("label"), col("v").as("embedding"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(s"$stage/.corpus")
+      val corpus = spark.read.parquet(s"$stage/.corpus")
+      val want = corpus.count()
+      writeIvfSnapshot(corpus, stage, cells)
+      // a lost row here is a silently shrunken corpus forever after
+      val built = spark.read.parquet(s"$stage/data").count()
+      require(built == want,
+        s"staged rebuild has $built rows, serving index has $want")
+      val scratch = new org.apache.hadoop.fs.Path(s"$stage/.corpus")
+      scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(scratch, true)
     }
-    Versioned.retire(spark, path, IvfFlatSubdirs)
-    n
-  }
 
-  /** The flat-layout component dirs [[Versioned.retire]] removes once
-    * rebuilds supersede the base build.
+  /** The IVF index to [[Versioned]]: a root serves its `data` rows,
+    * and a rebuild keeps every vec_id.
     */
-  private val IvfFlatSubdirs = Seq("data", "centroids")
+  private val IvfArtifact = Versioned.Artifact("IVF index",
+    Seq("data", "centroids"),
+    rowsOf = readIndexData(_, _).count(),
+    keysOf = Some(readIndexData(_, _).select("vec_id")))
 
   /** Every root that still holds index data — the takedown enumeration
     * (retained snapshots are real copies; right-to-be-forgotten must
@@ -1168,7 +1134,7 @@ object Similarity {
     */
   def ivfRetainedRoots(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[String] =
-    Versioned.retainedRoots(spark, path, flatProbeSubdir = "data")
+    Versioned.retainedRoots(spark, path, IvfArtifact.components)
 
   /** Incremental index ingest — the corpus grows WITHOUT a rebuild:
     * assign the new batch against the STORED centroid table (broadcast;

@@ -100,14 +100,9 @@ object Takedown {
       // (a compaction's folded_through screen lives only in the -1
       // fold files; single-file inference would silently drop it and
       // un-screen superseded duplicates)
-      try spark.read.option("mergeSchema", "true").parquet(path)
-      catch {
-        case e: AnalysisException
-            if e.getCondition != null
-              && (e.getCondition.contains("PATH_NOT_FOUND")
-                || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-          return PurgeStats(0L, 0L, 0L, 0L)
-      }
+      Versioned.readOr(Option.empty[DataFrame])(Some(
+          spark.read.option("mergeSchema", "true").parquet(path)))
+        .getOrElse(return PurgeStats(0L, 0L, 0L, 0L))
     val partKey = partCols.map(col)
     // ONE column-pruned pass discovers the affected partitions AND the
     // total partition count (the stats field): left-join the broadcast

@@ -1,26 +1,29 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
-/** Versioned persisted-artifact lifecycle: stage → validate → commit →
-  * retire, for serving artifacts that are periodically REBUILT (IVF
-  * index on centroid drift, PQ codebooks on distortion growth) while
-  * queries keep serving.
+/** Versioned persisted-artifact lifecycle: base build, staged rebuild
+  * and retire, for the served artifacts that grow by idempotent
+  * appends and are periodically REBUILT while queries keep serving
+  * (search postings, IVF index, media fingerprint index, corpus dedup
+  * graph, PQ codebooks). Each artifact states only what is specific to
+  * it — an [[Artifact]] (component dirs, rows a root serves, and the
+  * key set a rebuild must keep) plus a snapshot writer — and this
+  * object runs the protocol once for all of them.
   *
   * Layout: `<path>/v-<n>/…` per rebuilt snapshot, committed by an
   * atomically-created `_COMMITTED` marker written AFTER the snapshot's
   * data is complete and validated. Readers [[resolve]] the highest
-  * committed version ONCE per query and read every component
-  * (centroids + data, or the codebook table) from that one root — so a
-  * query straddling a rebuild sees entirely the old snapshot or
-  * entirely the new one, never a mix: the marker create is the only
-  * promotion step, there is no pointer file to half-update and no
-  * rename window where the serving root is missing. A snapshot with no
-  * marker (crashed rebuild) is invisible to readers and overwritten by
-  * the next rebuild.
+  * committed version ONCE per query and read every component from that
+  * one root — so a query straddling a rebuild sees entirely the old
+  * snapshot or entirely the new one, never a mix: the marker create is
+  * the only promotion step, there is no pointer file to half-update and
+  * no rename window where the serving root is missing. A snapshot with
+  * no marker (crashed rebuild) is invisible to readers and overwritten
+  * by the next rebuild.
   *
   * Back-compat: an artifact with NO committed versions resolves to
-  * `<path>` itself — the flat layout the base builders write. The flat
+  * `<path>` itself — the flat layout [[writeBase]] writes. The flat
   * base is retired like any superseded version once rebuilds move past
   * it.
   *
@@ -32,6 +35,26 @@ import org.apache.spark.sql.SparkSession
   * data, takedown must purge all of them — [[retainedRoots]] is the
   * enumeration a `Takedown.propagate` artifact set must cover.
   *
+  * Appends vs rebuilds: an append resolves the serving root, writes
+  * its batch there, then calls [[assertAppendLanded]], which fails if a
+  * rebuild committed in between. [[rebuild]] covers the other orderings
+  * with ONE baseline, the served root's row count read when the rebuild
+  * resolves it, checked twice:
+  *  - Before the commit. Any change fails the rebuild with nothing
+  *    committed. The stage may or may not hold a batch appended while it
+  *    was written: committing could drop it, or, where the stage reads
+  *    the served root, report a batch the snapshot already holds (and
+  *    re-running that append would duplicate it). A takedown purge shows
+  *    up the same way; a stage that predates it would resurrect rows.
+  *  - After the commit. Growth means an append wrote AND passed its own
+  *    guard between the first check and the commit: the old root is
+  *    kept and the error carries the recovery (re-run the append).
+  * So every append after the resolve is in the committed snapshot or
+  * rejected loudly. The retire audit is the crash-recovery face of the
+  * same race: a root about to be deleted whose keys the new snapshot
+  * lacks holds an append stranded by a rebuild that died between its
+  * commit and its own post-commit check.
+  *
   * Single-writer: concurrent rebuilds of the same artifact are a
   * deployment error (run them from one maintenance job, like
   * compaction); readers need no coordination at any time.
@@ -41,6 +64,34 @@ object Versioned {
   val Marker = "_COMMITTED"
 
   private val VersionDir = "^v-(\\d+)$".r
+
+  /** Committed versions [[retire]] keeps by default. */
+  private val Keep = 2
+
+  /** What the rebuild protocol needs to know about one artifact.
+    * `components` are its dirs under a root (the first one is the
+    * probe that tells whether the flat base still exists); `rowsOf`
+    * counts the rows a root serves; `keysOf`, when set, reads the keys
+    * a rebuild must keep serving (an artifact whose rebuild is defined
+    * to change its contents has none). Both may throw the absent
+    * failure [[readOr]] maps: a root not written yet serves nothing.
+    */
+  final case class Artifact(name: String, components: Seq[String],
+      rowsOf: (SparkSession, String) => Long,
+      keysOf: Option[(SparkSession, String) => DataFrame] = None)
+
+  /** The absent-artifact rule: a read of something not written yet —
+    * no path, or no data files to infer a schema from — yields
+    * `ifAbsent`; any other failure propagates.
+    */
+  def readOr[A](ifAbsent: => A)(read: => A): A =
+    try read
+    catch {
+      case e: AnalysisException
+          if Option(e.getCondition).exists(c =>
+            c.contains("PATH_NOT_FOUND")
+              || c.contains("UNABLE_TO_INFER_SCHEMA")) => ifAbsent
+    }
 
   private def fsOf(spark: SparkSession, path: String)
       : org.apache.hadoop.fs.FileSystem =
@@ -81,8 +132,8 @@ object Versioned {
   def nextVersion(spark: SparkSession, path: String): Long =
     committedVersions(spark, path).lastOption.getOrElse(0L) + 1
 
-  /** Remove a stale stage dir (a crashed previous rebuild) so the new
-    * stage starts clean.
+  /** Remove a dir (a crashed previous rebuild's stage, a superseded
+    * version, staging scratch) so what is written there starts clean.
     */
   def clearStage(spark: SparkSession, stage: String): Unit = {
     fsOf(spark, stage)
@@ -111,7 +162,7 @@ object Versioned {
     * removed too.
     */
   def retire(spark: SparkSession, path: String,
-      flatSubdirs: Seq[String], keep: Int = 2): Unit = {
+      flatSubdirs: Seq[String], keep: Int = Keep): Unit = {
     require(keep >= 1, "must keep at least the current version")
     val fs = fsOf(spark, path)
     val committed = committedVersions(spark, path)
@@ -135,26 +186,93 @@ object Versioned {
     ()
   }
 
+  /** Base build, a FULL REPLACE: clear every committed `v-<n>` (a
+    * stale version would out-rank the fresh flat base, since readers
+    * resolve to the highest committed one), then write the snapshot at
+    * `path` itself.
+    */
+  def writeBase(spark: SparkSession, path: String)(
+      snapshot: String => Unit): Unit = {
+    committedVersions(spark, path).foreach(n =>
+      clearStage(spark, versionDir(path, n)))
+    snapshot(path)
+  }
+
+  /** Staged rebuild with atomic swap; returns the committed version.
+    * `stage(served, staged)` writes and validates a complete snapshot
+    * under `staged` (`served` is the root being replaced, for a
+    * rebuild that re-derives from what is served). The steps, in
+    * order (see the object doc for why one baseline):
+    * (1) resolve the served root and read its row count, the baseline;
+    * (2) clear the stage, then write and validate the snapshot;
+    * (3) unless `allowShrink` or the artifact has no key set, every
+    * served key must be in the snapshot ("grown corpus");
+    * (4) the served root must still hold its baseline row count, else
+    * fail with nothing committed;
+    * (5) `beforeCommit` (a test seam), then commit;
+    * (6) growth of the old root since the baseline keeps it and fails
+    * ("superseded snapshot");
+    * (7) under step 3's conditions, every root the retire would delete
+    * must have its keys in the snapshot ("retire would delete");
+    * (8) retire.
+    */
+  def rebuild(spark: SparkSession, path: String, artifact: Artifact,
+      allowShrink: Boolean = false,
+      beforeCommit: () => Unit = () => ())(
+      stage: (String, String) => Unit): Long = {
+    def rows(root: String): Long =
+      readOr(0L)(artifact.rowsOf(spark, root))
+    val served = resolve(spark, path)
+    val baseline = rows(served)
+    val n = nextVersion(spark, path)
+    val staged = versionDir(path, n)
+    clearStage(spark, staged)
+    stage(served, staged)
+    // keys `root` serves that the staged snapshot lacks (an absent
+    // root holds none)
+    def uncovered(root: String): Long =
+      artifact.keysOf.filterNot(_ => allowShrink).fold(0L) { keys =>
+        val kept = keys(spark, staged).distinct()
+        readOr(Option.empty[DataFrame])(Some(keys(spark, root).distinct()))
+          .fold(0L)(held =>
+            held.join(kept, held.columns.toSeq, "left_anti").count())
+      }
+    val missing = uncovered(served)
+    require(missing == 0L,
+      s"staged ${artifact.name} rebuild drops $missing keys the " +
+        "serving root holds — pass the full grown corpus (base + " +
+        "appended batches)")
+    val early = rows(served) - baseline
+    require(early == 0L,
+      s"the serving ${artifact.name} changed by $early rows while the " +
+        "rebuild staged; nothing committed — rebuild again")
+    beforeCommit()
+    commit(spark, staged)
+    val late = rows(served) - baseline
+    require(late <= 0L,
+      s"an append landed $late rows in the superseded snapshot " +
+        "during the rebuild; old root retained — re-run the append " +
+        "against the committed snapshot, then rebuild again")
+    retainedRoots(spark, path, artifact.components).dropRight(Keep)
+      .foreach { r =>
+        val lost = uncovered(r)
+        require(lost == 0L,
+          s"retire would delete $r holding $lost keys absent from the " +
+            "new snapshot — a stranded append from a crashed rebuild; " +
+            "re-run the append, then rebuild again")
+      }
+    retire(spark, path, artifact.components)
+    n
+  }
+
   /** Post-append race guard. An incremental append resolves the
     * serving root, writes its batch into it, then calls this: if a
     * rebuild COMMITTED between the resolve and the write, the batch
-    * landed in a snapshot that is now superseded — the rebuild staged
-    * from the pre-append corpus, so the batch's rows are in no current
-    * snapshot and would be silently lost when the old one retires.
-    * Failing loudly covers the write-spans-commit ordering without
-    * coordination: the append's dynamic-partition write is
-    * replay-idempotent, so the recovery is exactly "re-run the
-    * append" — it re-resolves to the new snapshot and lands there
-    * (the batch's rows in the retiring snapshot are harmless debris
-    * the retire removes). The OTHER ordering — append write AND guard
-    * both complete between the rebuild's validation read and its
-    * commit, so the guard still sees the old root — is covered on the
-    * rebuild side: every rebuild re-checks the superseded root's
-    * CURRENT content after commit, before retiring it (see
-    * `rebuildMediaFpIndexHooked` / `rebuildSearchIndexHooked` /
-    * `rebuildIvfIndexHooked`). Together the two checks close the
-    * append-vs-rebuild window in both directions; the documented
-    * single-writer rule still applies to REBUILDS racing each other.
+    * landed in a snapshot that is now superseded and would be silently
+    * lost when the old one retires. The append's dynamic-partition
+    * write is replay-idempotent, so the recovery is exactly "re-run the
+    * append" — it re-resolves to the new snapshot and lands there. The
+    * rebuild side of the same race is [[rebuild]]'s baseline checks.
     */
   def assertAppendLanded(spark: SparkSession, path: String,
       landedRoot: String, what: String): Unit = {
@@ -168,30 +286,18 @@ object Versioned {
   }
 
   /** Every root that still holds a copy of the data — the flat base
-    * (if its first subdir still exists) plus all committed versions.
-    * A takedown is complete only when it purged ALL of these.
+    * (if its first component still exists) plus all committed
+    * versions. A takedown is complete only when it purged ALL of
+    * these; the oldest beyond the newest two are what [[retire]]
+    * deletes.
     */
   def retainedRoots(spark: SparkSession, path: String,
-      flatProbeSubdir: String): Seq[String] = {
+      components: Seq[String]): Seq[String] = {
     val fs = fsOf(spark, path)
     val flat =
       if (fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/$flatProbeSubdir"))) Seq(path)
+          s"$path/${components.head}"))) Seq(path)
       else Seq.empty
     flat ++ committedVersions(spark, path).map(versionDir(path, _))
   }
-
-  /** The roots a [[retire]] call would DELETE right now — everything
-    * [[retainedRoots]] lists beyond the newest `keep` versions (the
-    * flat base is the oldest). The rebuilds audit these before
-    * retiring: a root about to be deleted whose content is not covered
-    * by the new snapshot is the crash-recovery face of the
-    * append-vs-rebuild race — an append stranded in a superseded root
-    * by a rebuild that died between its commit and its own late-append
-    * check would otherwise be silently deleted by the NEXT rebuild's
-    * retire.
-    */
-  def retireTargets(spark: SparkSession, path: String,
-      flatProbeSubdir: String, keep: Int = 2): Seq[String] =
-    retainedRoots(spark, path, flatProbeSubdir).dropRight(keep)
 }

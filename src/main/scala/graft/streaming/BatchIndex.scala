@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode,
-  SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
+
+import graft.ext.Versioned
 
 /** The ONE persisted-index write/serve contract shared by every
   * incremental index in the engine — MinHash band index
@@ -85,16 +86,10 @@ object BatchIndex {
     */
   def readBefore(spark: SparkSession, path: String, batchId: Long,
       cols: Seq[String], empty: => DataFrame): DataFrame =
-    try {
+    Versioned.readOr(empty) {
       spark.read.parquet(path)
         .filter(col("batch_id") < batchId)
         .select(cols.map(col): _*)
-    } catch {
-      case e: AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        empty
     }
 
   /** The key-bucket expression for KEY-bucketed index layouts: indexes
@@ -146,17 +141,12 @@ object BatchIndex {
       case Some(present) =>
         val hit = buckets.distinct.filter(present.contains)
         if (hit.isEmpty) empty // nothing stored where this batch probes
-        else try {
+        // hit dirs that hold no files (purged clean) read as empty
+        else Versioned.readOr(empty) {
           spark.read.option("basePath", path)
             .parquet(hit.map(b => s"$path/$bucketCol=$b"): _*)
             .filter(col("batch_id") < batchId)
             .select(cols.map(col): _*)
-        } catch {
-          case e: AnalysisException
-              if e.getCondition != null
-                && (e.getCondition.contains("PATH_NOT_FOUND")
-                  || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-            empty // hit dirs exist but hold no files (purged clean)
         }
     }
 
@@ -189,16 +179,8 @@ object BatchIndex {
       .toSet
     val hit = values.distinct.filter(present.contains)
     if (hit.isEmpty) empty
-    else try {
-      spark.read.option("basePath", path)
-        .parquet(hit.map(v => s"$path/$partCol=$v"): _*)
-    } catch {
-      case e: AnalysisException
-          if e.getCondition != null
-            && (e.getCondition.contains("PATH_NOT_FOUND")
-              || e.getCondition.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        empty
-    }
+    else Versioned.readOr(empty)(spark.read.option("basePath", path)
+      .parquet(hit.map(v => s"$path/$partCol=$v"): _*))
   }
 
   /** The bucket values present as `bucketCol=` partition dirs directly

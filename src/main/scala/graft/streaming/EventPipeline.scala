@@ -113,14 +113,10 @@ object EventPipeline {
     * tests inject a literal for determinism.
     */
   def curate(parsed: DataFrame,
-      processingTs: Column = current_timestamp()): DataFrame = {
-    val withTs = parsed.withColumn("processing_timestamp", processingTs)
-    val chain =
-      (Enrich.withEventTimestamps _) andThen Enrich.withRegion andThen
-        Enrich.withEmailDomain andThen Enrich.withCustomerAge andThen
-        Enrich.withDriftFlag andThen Enrich.withLateFlag
-    Enrich.withDqFlags(chain(withTs), col("processing_timestamp"))
-  }
+      processingTs: Column = current_timestamp()): DataFrame =
+    Enrich.enriched(
+      parsed.withColumn("processing_timestamp", processingTs),
+      col("processing_timestamp"))
 
   /** T1 — event-time watermark; enables state cleanup + true late-row
     * dropping in any downstream stateful operator.

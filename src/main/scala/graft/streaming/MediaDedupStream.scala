@@ -104,13 +104,16 @@ object MediaDedupStream {
           def bc(df: DataFrame): DataFrame =
             if (nSeen <= triggerBroadcastBound) broadcast(df)
             else df
+          // every frame this batch persists, released however it ends
+          val held = scala.collection.mutable.Buffer.empty[DataFrame]
+          def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
           // decode ONCE: these rows screen the batch AND grow the index
-          val fps = fpExtract(cached).persist()
+          val fps = keep(fpExtract(cached))
           try {
             val nRejected = fps.filter(!col("decoded")).count()
             val keptFpCols = fps.filter(col("decoded"))
               .select("doc_id", "fp_lo", "fp_hi")
-            val bands = Multimodal.fpBands(keptFpCols).persist()
+            val bands = keep(Multimodal.fpBands(keptFpCols))
             // the accumulated fingerprints visible to this batch,
             // PRUNED to the band buckets the batch hits (the band
             // sidecar layout — [[Multimodal.MediaBandBuckets]]): a
@@ -141,14 +144,13 @@ object MediaDedupStream {
                   else Multimodal.mediaFpBandsPruned(spark, root,
                     modality, hit, storedId).get
                 }
-            val drops = dropSet(bands, indexBands).persist()
+            val drops = keep(dropSet(bands, indexBands))
             val keptFps = fps.filter(col("decoded"))
               .join(bc(drops), Seq("doc_id"), "left_anti")
-            val survivors = cached
+            val survivors = keep(cached
               .join(fps.filter(col("decoded")).select("doc_id"),
                 Seq("doc_id"), "left_semi")
-              .join(bc(drops), Seq("doc_id"), "left_anti")
-              .persist()
+              .join(bc(drops), Seq("doc_id"), "left_anti"))
             val nKept = survivors.count()
             BatchIndex.writePartition(survivors, batchId, corpusPath)
             Multimodal.appendFingerprintsToMediaFpIndex(keptFps, modality,
@@ -156,9 +158,8 @@ object MediaDedupStream {
             stats.seen.add(nSeen)
             stats.rejected.add(nRejected)
             stats.kept.add(nKept)
-            drops.unpersist(); survivors.unpersist(); bands.unpersist()
             true
-          } finally { fps.unpersist(); () }
+          } finally held.foreach(_.unpersist())
         }
       } finally { cached.unpersist(); () }
     }

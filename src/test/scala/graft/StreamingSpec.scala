@@ -1721,6 +1721,26 @@ class StreamingSpec extends AnyFunSuite {
       "compacted index must still screen perceptual twins")
   }
 
+  test("streaming media dedup: a batch that fails after its persists releases them") {
+    import spark.implicits._
+    import graft.ext.Multimodal
+    import graft.streaming.MediaDedupStream
+    val indexDir = Files.createTempDirectory("med_rel_index").toString
+    // the corpus path sits under a regular file: the corpus write throws
+    // after the fingerprints, bands, drop set and survivors are cached
+    val blocked = Files.createTempFile("med_rel_block", "").toString
+    val stats = new MediaDedupStream.MediaStats(spark)
+    val batch = Seq((10L, Multimodal.pngHashPayload(10)),
+      (20L, Multimodal.pngHashPayload(20))).toDF("doc_id", "payload")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](MediaDedupStream.processBatch(batch, 0L,
+      s"$blocked/corpus", indexDir, stats))
+    assert(stats.lastCommitted == -1L && stats.seen.value == 0)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"a failed media batch must release what it cached: $leaked")
+  }
+
   test("streaming media dedup: perceptual screen, reject gate, replay idempotent") {
     import spark.implicits._
     import graft.ext.Multimodal
