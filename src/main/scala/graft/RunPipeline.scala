@@ -7,7 +7,7 @@ import graft.ops.PipelineRun
   * reference's per-DAG-run batch (`sbt "runMain graft.RunPipeline
   * [sfDir] [opsDir] [sinkDir]"`): curate -> sink+report -> DQ -> decide
   * (console notifications) -> validate -> cleanup, artifacts under
-  * opsDir.
+  * opsDir, then the wall ms of each stage.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -24,6 +24,8 @@ object RunPipeline {
       s"confidence=${out.decision.confidence} " +
       s"escalate=${out.decision.escalationRequired}")
     println(s"[pipeline] validation=${out.validation} cleaned=${out.cleanedUp}")
+    println("[pipeline] stageMs " + out.stageMs
+      .map { case (stage, ms) => f"$stage=$ms%.1f" }.mkString(" "))
     spark.stop()
   }
 }

@@ -138,6 +138,13 @@ object RunStream {
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
+  /** Wall seconds since `t0` (a `System.nanoTime`): a bounded run's
+    * rate divides by the time its query ran from start to stop, which
+    * a cold first trigger or the first-commit grace stretches past the
+    * nominal run seconds.
+    */
+  private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
   /** Extends a bounded run past its duration while `leg` has committed
     * no batch and its query still runs, for at most 90 s: a cold first
     * trigger can be a run's longest, and stopping it mid-flight would
@@ -610,10 +617,12 @@ object RunStream {
       // mode-scoped paths: sharing dedup mode's literal ckpt/corpus/index
       // on the same outDir would resume the OTHER mode's checkpoint and
       // count its corpus rows (runFull suffixes per leg for this reason)
+      val t0 = System.nanoTime()
       val q = graft.streaming.CurateStream.start(curatedDocStream(rate),
         s"$outDir/corpus_cu", s"$outDir/index_cu", s"$outDir/ckpt_cu",
         stats, trigger, bench, benchMBits = 1 << 23)
       EventPipeline.runBounded(q, seconds * 1000L)
+      val wallSec = secondsSince(t0)
       maintainAfterRun("curate-index",
         graft.streaming.DedupStream.maintain(spark, s"$outDir/index_cu"))
       val kept = committedRows(spark, s"$outDir/corpus_cu",
@@ -622,7 +631,7 @@ object RunStream {
         s"decontamDropped=${stats.decontamDropped.value} " +
         s"gated=${stats.dedup.seen.value} kept=${stats.dedup.kept.value} " +
         s"sink=$kept " +
-        f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
+        f"wall=$wallSec%.1fs docsPerSec=${stats.seen.value.toDouble / wallSec}%.0f")
     }
 
     // `media` / `video` modes: the streaming PERCEPTUAL dedup leg —
@@ -646,11 +655,13 @@ object RunStream {
         if (wire == "video") graft.ext.Multimodal.videoFpFromPayload(_)
         else graft.ext.Multimodal.imageFpFromPayload(_)
       val modality = if (wire == "video") "video" else "image"
+      val t0 = System.nanoTime()
       val q = MicroBatch.start(media, s"$outDir/ckpt_md", trigger)(
         graft.streaming.MediaDedupStream.processBatch(_, _,
           s"$outDir/corpus_md", s"$outDir/index_md", stats, fpExtract,
           modality))
       EventPipeline.runBounded(q, seconds * 1000L)
+      val wallSec = secondsSince(t0)
       maintainAfterRun("media-fp",
         graft.streaming.MediaDedupStream.maintain(spark,
           s"$outDir/index_md"))
@@ -660,7 +671,7 @@ object RunStream {
         s"rejected=${stats.rejected.value} kept=${stats.kept.value} " +
         s"sink=$sink " +
         f"keptRate=${stats.kept.value.toDouble / math.max(stats.seen.value, 1)}%.4f " +
-        f"payloadsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
+        f"wall=$wallSec%.1fs payloadsPerSec=${stats.seen.value.toDouble / wallSec}%.0f")
     }
 
     // `sessions` mode: the flatMapGroupsWithState leg at RunStream
@@ -756,6 +767,7 @@ object RunStream {
       }
       val stats = new graft.streaming.GraphStream.GraphStats(spark)
       val fpIndexPath = if (legs.nonEmpty) Some(s"$outDir/fp_g") else None
+      val t0 = System.nanoTime()
       val q = MicroBatch.start(docs, s"$outDir/ckpt_g", trigger)(
         graft.streaming.GraphStream.processBatch(_, _, s"$outDir/corpus_g",
           s"$outDir/bands_g", s"$outDir/graph_g", stats, legs,
@@ -763,6 +775,7 @@ object RunStream {
       q.awaitTermination(seconds * 1000L)
       graceFirstCommit(stats, q)
       if (q.isActive) q.stop()
+      val wallSec = secondsSince(t0)
       val committed = stats.lastCommitted >= 0L
       // fold only through the committed stored id (see runFull) — an
       // interrupted trigger's bands/fps must stay under their own
@@ -790,7 +803,7 @@ object RunStream {
         f"maxTouchedRatio=${stats.maxTouchedRatio}%.2f " +
         s"touchedAudits=${stats.touchedAudits.value} " +
         s"auditStale=${stats.auditStale.value} " +
-        f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f " +
+        f"wall=$wallSec%.1fs docsPerSec=${stats.seen.value.toDouble / wallSec}%.0f " +
         s"triggers=${trigMs.map { case (r, ms) => s"$r:${ms}ms" }
           .mkString(",")}")
       if (!committed) throw new IllegalStateException(
@@ -811,10 +824,12 @@ object RunStream {
     def dedup(): Unit = {
       val docs = docStream(rate)
       val stats = new graft.streaming.DedupStream.DedupStats(spark)
+      val t0 = System.nanoTime()
       val q = MicroBatch.start(docs, s"$outDir/ckpt", trigger)(
         graft.streaming.DedupStream.processBatch(_, _, s"$outDir/corpus",
           s"$outDir/index", stats))
       EventPipeline.runBounded(q, seconds * 1000L)
+      val wallSec = secondsSince(t0)
       maintainAfterRun("dedup-index",
         graft.streaming.DedupStream.maintain(spark, s"$outDir/index"))
       val kept = committedRows(spark, s"$outDir/corpus",
@@ -822,7 +837,7 @@ object RunStream {
       println(s"[stream-dedup] seen=${stats.seen.value} " +
         s"kept=${stats.kept.value} sink=$kept " +
         f"keptRate=${stats.kept.value.toDouble / math.max(stats.seen.value, 1)}%.4f " +
-        f"docsPerSec=${stats.seen.value.toDouble / seconds}%.0f")
+        f"wall=$wallSec%.1fs docsPerSec=${stats.seen.value.toDouble / wallSec}%.0f")
     }
 
     // `json` (default) / `avro` modes: the CustomerEvent pipeline,

@@ -2,7 +2,7 @@ package graft.dq
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, TimestampType}
+import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
 
 import graft.CustomerEvents.{AsOfSql, asOfCol, Countries, EmailRegex, Plans}
 
@@ -217,19 +217,21 @@ object DqSuite {
     NotNull("source"),
     MatchRegex("source", "^src[0-9]+$", "^src[0-9]+$"))
 
-  /** Evaluate a suite in one scan. Output: one row per expectation with
-    * (exp_idx, expectation, column_name, n_evaluated, n_failed,
-    * success_rate, success) — the GE per-expectation result shape.
+  /** A suite's wide aggregate: `ev_i` and `fail_i` (long) for the i-th
+    * (0-based) expectation, so the whole suite is one aggregate over
+    * `schema`'s frame. Schema-level expectations are constants decided
+    * against `schema`. Callers may add their own columns to the same
+    * `agg` ([[graft.ops.PipelineRun.run]] adds the run report's).
     */
-  def evaluate(df: DataFrame, suite: Seq[Expectation]): DataFrame = {
-    val schema = df.schema
+  def suiteColumns(schema: StructType, suite: Seq[Expectation])
+      : Seq[Column] = {
     def schemaOk(e: Expectation): Boolean = e match {
       case ColumnExists(c) => schema.fieldNames.contains(c)
       case OfType(c, t) =>
         schema.fieldNames.contains(c) && schema(c).dataType == t
       case _ => true
     }
-    val aggs = suite.zipWithIndex.flatMap { case (e, i) =>
+    suite.zipWithIndex.flatMap { case (e, i) =>
       val (ev, fail) = e match {
         case se @ (_: ColumnExists | _: OfType) =>
           (lit(0L), lit(if (schemaOk(se)) 0L else 1L))
@@ -237,6 +239,14 @@ object DqSuite {
       }
       Seq(ev.cast("long").as(s"ev_$i"), fail.cast("long").as(s"fail_$i"))
     }
+  }
+
+  /** Evaluate a suite in one scan. Output: one row per expectation with
+    * (exp_idx, expectation, column_name, n_evaluated, n_failed,
+    * success_rate, success) — the GE per-expectation result shape.
+    */
+  def evaluate(df: DataFrame, suite: Seq[Expectation]): DataFrame = {
+    val aggs = suiteColumns(df.schema, suite)
     val wide = df.agg(aggs.head, aggs.tail: _*)
     val rows = suite.zipWithIndex.map { case (e, i) =>
       struct(
@@ -396,6 +406,23 @@ object DqSuite {
           / col("evaluated_expectations"), 6))
       .withColumn("band", bandExpr(col("failure_rate")))
       .withColumn("hard_fail", col("failure_rate") > HardFailThreshold)
+
+  /** [[summarize]]'s verdict fields, computed on the driver. */
+  final case class Verdict(evaluated: Long, unsuccessful: Long,
+    failureRate: Double, hardFail: Boolean)
+
+  /** [[summarize]]'s rule over the per-expectation failed counts (the
+    * `fail_i` of [[suiteColumns]], in suite order): an expectation is
+    * unsuccessful when it failed any value; `failure_rate` is their
+    * share rounded half-up to 6 places, as Spark's `round` does; a rate
+    * above [[HardFailThreshold]] hard-fails.
+    */
+  def verdict(failed: Seq[Long]): Verdict = {
+    val unsuccessful = failed.count(_ != 0L).toLong
+    val rate = BigDecimal(unsuccessful.toDouble / failed.size)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    Verdict(failed.size.toLong, unsuccessful, rate, rate > HardFailThreshold)
+  }
 
   // ---- quality dimensions (dq_rules.yml:91-106) -----------------------------
 

@@ -236,13 +236,25 @@ object CorpusGraph {
     * first batch hits ([[graft.streaming.GraphStream]] bootstraps the
     * graph through the same idempotent [[append]] path; a base
     * [[write]] is the batch-build convenience, not a precondition).
+    * The existence probe comes first because a read of the missing
+    * path, though [[Versioned.readOr]] maps it to empty, makes Spark's
+    * sink-metadata check log a `FileNotFoundException` stack trace for
+    * this expected case.
     */
+  private def storedLabelsOrEmpty(spark: SparkSession,
+      root: String): DataFrame = {
+    val dir = s"$root/labels"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val empty = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), LabelsSchema)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      empty
+    else Versioned.readOr(empty)(spark.read.schema(LabelsSchema).parquet(dir))
+  }
+
   private def readLabelsOrEmpty(spark: SparkSession,
       root: String): DataFrame =
-    Versioned.readOr(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(LabelsSchema.dropRight(1))))(
-      readLabelsAt(spark, root)) // missing path throws at read time
+    storedLabelsOrEmpty(spark, root).select("doc_id", "label")
 
   /** One [[append]]'s cost/shape accounting — the structured signal a
     * deployment routes on instead of a doc-comment note: touchedMembers
@@ -492,10 +504,7 @@ object CorpusGraph {
     if (affectedBuckets.isEmpty) return (0L, 0L)
     val storedB =
       // first streaming append bootstraps the label table
-      Versioned.readOr(spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          LabelsSchema))(
-        spark.read.schema(LabelsSchema).parquet(s"$path/labels"))
+      storedLabelsOrEmpty(spark, path)
       .filter(col("bucket").isin(affectedBuckets: _*)) // partition pruning
       .select("doc_id", "label", "bucket")
     val keep0 = storedB.join(d.select("doc_id"), Seq("doc_id"),

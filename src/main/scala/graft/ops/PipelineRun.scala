@@ -1,9 +1,14 @@
 package graft.ops
 
+import java.io.{ByteArrayInputStream, IOException}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => FsPath}
+import org.apache.parquet.format.Util
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,12 +100,72 @@ object PipelineRun {
   final case class LoadValidation(rowCount: Long, fileCount: Long,
     ok: Boolean)
 
+  /** [[LoadValidation]] of the parquet sink at `path`, from its files'
+    * footers: the count of `.parquet` files and the sum of their
+    * footers' `num_rows`. That is the answer `spark.read.parquet(path)
+    * .count()` gives, since Spark's column-less parquet count reads only
+    * row-group metadata too, but it launches no Spark job and infers no
+    * schema. A sink with no data files (an empty batch) reads as 0 rows
+    * and 0 files, so `ok` is false; a missing `path` throws.
+    *
+    * The sink is listed through `path`'s Hadoop filesystem under the
+    * session's Hadoop conf, so any scheme works and the local one keeps
+    * its `.crc` checks. Like Spark's file index, it skips every name
+    * that starts with `_` or `.` (`_SUCCESS`, `_temporary`, hidden
+    * files). A file whose tail magic or footer does not parse fails
+    * with its path.
+    *
+    * Two measured traps: the listing recurses with `listStatus`, as
+    * Spark's does, because `listFiles`/`listLocatedStatus` build a
+    * `LocatedFileStatus` whose owner and permission copy forks an
+    * `ls -ld` per file without libhadoop (about 320 ms for 32 files on
+    * 4 cores); and the footer is parsed with parquet-format's
+    * `Util.readFileMetaData` from two positioned reads, because
+    * `ParquetFileReader.open` costs about 10 ms per file.
+    */
   def validateLoad(spark: SparkSession, path: String,
       minRows: Long = 1): LoadValidation = {
-    val rows = spark.read.parquet(path).count()
-    val files = Files.walk(Paths.get(path)).iterator().asScala
-      .count(p => p.toString.endsWith(".parquet"))
-    LoadValidation(rows, files, rows >= minRows && files > 0)
+    val root = new FsPath(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(dir: FsPath): Iterator[FileStatus] =
+      fs.listStatus(dir).iterator.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Iterator.empty
+        else if (st.isDirectory) dataFiles(st.getPath)
+        else if (name.endsWith(".parquet")) Iterator.single(st)
+        else Iterator.empty
+      }
+    val files = dataFiles(root).toSeq
+    val rows = files.map(footerRows(fs, _)).sum
+    LoadValidation(rows, files.size.toLong, rows >= minRows && files.nonEmpty)
+  }
+
+  private val ParquetMagic = "PAR1".getBytes(StandardCharsets.US_ASCII)
+
+  /** `num_rows` of one parquet file's footer: the file ends with the
+    * thrift-encoded footer, its 4-byte little-endian length and `PAR1`.
+    */
+  private def footerRows(fs: FileSystem, file: FileStatus): Long = {
+    val path = file.getPath
+    def bad(why: String, cause: Throwable = null) =
+      new IOException(s"$path: $why", cause)
+    val len = file.getLen
+    if (len < 12) throw bad(s"$len bytes is too short for a parquet file")
+    val in = fs.open(path)
+    try {
+      val tail = new Array[Byte](8)
+      in.readFully(len - 8, tail)
+      if (!java.util.Arrays.equals(tail, 4, 8, ParquetMagic, 0, 4))
+        throw bad("bad parquet magic number at the end of the file")
+      val footerLen = ByteBuffer.wrap(tail, 0, 4)
+        .order(ByteOrder.LITTLE_ENDIAN).getInt
+      if (footerLen <= 0 || footerLen > len - 12)
+        throw bad(s"footer length $footerLen does not fit a $len-byte file")
+      val footer = new Array[Byte](footerLen)
+      in.readFully(len - 8 - footerLen, footer)
+      try Util.readFileMetaData(new ByteArrayInputStream(footer)).getNum_rows
+      catch { case e: IOException => throw bad("bad parquet footer", e) }
+    } finally in.close()
   }
 
   /** O10 — retention cleanup (pipeline_dag.py:392-423): delete regular
@@ -146,9 +211,15 @@ object PipelineRun {
     (before, fileCount)
   }
 
+  /** One cycle's result. `stageMs` is the wall ms of each stage, in run
+    * order: `sink_write`, `aggregate` (run report, source monitor and
+    * DQ suite, with their artifacts), `decide`, `validate_load`,
+    * `cleanup`; `run` also writes it to `stage_timings.json`.
+    */
   final case class RunOutcome(report: RunReport, dqFailureRate: Double,
     dqHardFail: Boolean, decision: Decision, executed: Seq[Action],
-    validation: LoadValidation, cleanedUp: Int)
+    validation: LoadValidation, cleanedUp: Int,
+    stageMs: Seq[(String, Double)])
 
   /** O8 — one full pipeline cycle over a curated (batch) frame. Mirrors
     * the DAG task chain and its gates: DQ hard-fails above 10 %
@@ -156,6 +227,16 @@ object PipelineRun {
     * notifier, actions execute only above the confidence gate, cleanup
     * runs with trigger_rule none_failed semantics (always, if prior
     * stages didn't throw).
+    *
+    * A cycle is 2 SQL executions: the partitioned sink write, which
+    * fills the cache, and one aggregate over the cached batch that
+    * carries the run report, the latest event time and the whole DQ
+    * suite ([[DqSuite.suiteColumns]]), collected as one row. The suite
+    * verdict is [[DqSuite.verdict]] over that row's failed counts, the
+    * rule [[DqSuite.summarize]] applies to [[DqSuite.evaluate]]'s rows;
+    * neither of those frames is built here, since their analysis alone
+    * cost about 90 ms a cycle. Load validation reads the sink's parquet
+    * footers ([[validateLoad]]) and launches no job.
     */
   def run(curated: DataFrame, opsDir: String, sinkDir: String,
       notifier: Notifier, trigger: TaskTrigger,
@@ -163,65 +244,85 @@ object PipelineRun {
       now: Instant = Instant.now()): RunOutcome = {
     val spark = curated.sparkSession
     Files.createDirectories(Paths.get(opsDir))
+    val stageMs = Seq.newBuilder[(String, Double)]
+    def stage[A](name: String)(body: => A): A = {
+      val t0 = System.nanoTime()
+      try body finally stageMs += name -> (System.nanoTime() - t0) / 1e6
+    }
 
     // stage: ingest (batch twin) — sink + run report artifact
     val cached = curated.persist()
     try {
-      cached.write.mode("overwrite").partitionBy("country", "plan")
-        .parquet(sinkDir)
-      val r = cached.agg(Reports.runReportColumns.head,
-        Reports.runReportColumns.tail :+
-          max(unix_millis(col("event_timestamp"))): _*).head()
-      val report = RunReport(r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))
-      writeRunReport(report, s"$opsDir/run_report.json")
+      stage("sink_write") {
+        cached.write.mode("overwrite").partitionBy("country", "plan")
+          .parquet(sinkDir)
+      }
+      val suite = DqSuite.customersSuite
+      val (report, verdict) = stage("aggregate") {
+        val cols = Reports.runReportColumns ++
+          DqSuite.suiteColumns(cached.schema, suite) :+
+          max(unix_millis(col("event_timestamp"))).as("latest_event_ms")
+        val r = cached.agg(cols.head, cols.tail: _*).head()
+        val report = RunReport(r.getAs[Long]("total_records"),
+          r.getAs[Long]("late_records"), r.getAs[Long]("dq_failures"),
+          r.getAs[Long]("schema_drift_count"))
+        writeRunReport(report, s"$opsDir/run_report.json")
 
-      // stage: monitor source — the DAG writes kafka_monitoring.json
-      // with hardcoded status/partitions/lag (pipeline_dag.py:93-123);
-      // here health derives from the batch in view: volume and
-      // event-time staleness ARE what topic lag means once rows land
-      val latestMs = if (r.isNullAt(4)) 0L else r.getLong(4)
-      writeJson(s"$opsDir/kafka_monitoring.json", Seq(
-        "topic" -> "customers",
-        "status" -> (if (report.totalRecords == 0L) "empty" else "healthy"),
-        "n_records" -> report.totalRecords,
-        "latest_event_ms" -> latestMs,
-        "staleness_ms" ->
-          (if (latestMs == 0L) -1L else now.toEpochMilli - latestMs)))
+        // stage: monitor source — the DAG writes kafka_monitoring.json
+        // with hardcoded status/partitions/lag (pipeline_dag.py:93-123);
+        // here health derives from the batch in view: volume and
+        // event-time staleness ARE what topic lag means once rows land
+        val latestMs =
+          if (r.isNullAt(r.fieldIndex("latest_event_ms"))) 0L
+          else r.getAs[Long]("latest_event_ms")
+        writeJson(s"$opsDir/kafka_monitoring.json", Seq(
+          "topic" -> "customers",
+          "status" -> (if (report.totalRecords == 0L) "empty" else "healthy"),
+          "n_records" -> report.totalRecords,
+          "latest_event_ms" -> latestMs,
+          "staleness_ms" ->
+            (if (latestMs == 0L) -1L else now.toEpochMilli - latestMs)))
 
-      // stage: data quality — GE-style suite over the curated frame
-      val suite = DqSuite.evaluate(cached, DqSuite.customersSuite)
-      val summary = DqSuite.summarize(suite).head()
-      val failureRate = summary.getAs[Double]("failure_rate")
-      val hardFail = failureRate > DqSuite.HardFailThreshold
-      writeJson(s"$opsDir/ge_results.json", Seq(
-        "evaluated" -> summary.getAs[Long]("evaluated_expectations"),
-        "unsuccessful" -> summary.getAs[Long]("unsuccessful_expectations"),
-        "failure_rate" -> failureRate, "hard_fail" -> hardFail))
+        // stage: data quality — GE-style suite verdict from the same row
+        val verdict = DqSuite.verdict(
+          suite.indices.map(i => r.getAs[Long](s"fail_$i")))
+        writeJson(s"$opsDir/ge_results.json", Seq(
+          "evaluated" -> verdict.evaluated,
+          "unsuccessful" -> verdict.unsuccessful,
+          "failure_rate" -> verdict.failureRate,
+          "hard_fail" -> verdict.hardFail))
+        (report, verdict)
+      }
 
       // stage: decide + confidence-gated action execution
-      val ctx = PipelineContext(report.totalRecords, report.lateRecords,
-        report.dqFailures, report.schemaDriftCount, consecutiveFailures)
-      val decision = DecisionEngine.decide(ctx)
-      val executed = DecisionEngine.actionsToExecute(decision)
-      executed.foreach {
-        case NotifyOps(sev, msg) => notifier.notify(sev, msg)
-        case RetriggerTask(taskId) => trigger.retrigger(taskId); ()
-        case EscalateIncident(t) =>
-          notifier.notify("critical", s"escalated incident: $t")
-        case _ => () // remap/quarantine are in-engine concerns
+      val (decision, executed) = stage("decide") {
+        val ctx = PipelineContext(report.totalRecords, report.lateRecords,
+          report.dqFailures, report.schemaDriftCount, consecutiveFailures)
+        val decision = DecisionEngine.decide(ctx)
+        val executed = DecisionEngine.actionsToExecute(decision)
+        executed.foreach {
+          case NotifyOps(sev, msg) => notifier.notify(sev, msg)
+          case RetriggerTask(taskId) => trigger.retrigger(taskId); ()
+          case EscalateIncident(t) =>
+            notifier.notify("critical", s"escalated incident: $t")
+          case _ => () // remap/quarantine are in-engine concerns
+        }
+        writeJson(s"$opsDir/agent_decision.json", Seq(
+          "decision" -> decision.decision,
+          "confidence" -> decision.confidence,
+          "escalation_required" -> decision.escalationRequired,
+          "n_actions_executed" -> executed.size))
+        (decision, executed)
       }
-      writeJson(s"$opsDir/agent_decision.json", Seq(
-        "decision" -> decision.decision,
-        "confidence" -> decision.confidence,
-        "escalation_required" -> decision.escalationRequired,
-        "n_actions_executed" -> executed.size))
 
       // stage: validate load; stage: cleanup (none_failed semantics)
-      val validation = validateLoad(spark, sinkDir)
-      val cleaned = cleanupOldData(s"$opsDir/quarantine", 7, now)
-      RunOutcome(report, failureRate, hardFail, decision, executed,
-        validation, cleaned)
+      val validation = stage("validate_load")(validateLoad(spark, sinkDir))
+      val cleaned = stage("cleanup")(
+        cleanupOldData(s"$opsDir/quarantine", 7, now))
+      val timings = stageMs.result()
+      writeJson(s"$opsDir/stage_timings.json", timings)
+      RunOutcome(report, verdict.failureRate, verdict.hardFail, decision,
+        executed, validation, cleaned, timings)
     } finally { cached.unpersist(); () }
   }
 

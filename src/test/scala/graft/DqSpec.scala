@@ -66,6 +66,30 @@ class DqSpec extends AnyFunSuite {
     assert(s.getAs[Boolean]("hard_fail"))
   }
 
+  test("verdict over failed counts equals summarize over the result rows") {
+    import spark.implicits._
+    // suite sizes with repeating (1/7, 2/3), exact (1/16) and half-way
+    // (1/128 = 0.0078125, where half-up and half-even differ) rates,
+    // around the hard-fail gate (1/10 not above it, 2/15 above), plus
+    // random failure vectors
+    val rnd = new scala.util.Random(7)
+    val cases: Seq[Seq[Long]] =
+      Seq((7, 1), (3, 2), (16, 1), (128, 1), (128, 3), (10, 1), (15, 2),
+          (15, 0), (15, 15)).map { case (n, k) =>
+        Seq.tabulate(n)(i => if (i < k) (i + 1).toLong else 0L)
+      } ++ Seq.fill(20)(Seq.fill(1 + rnd.nextInt(40))(
+        if (rnd.nextInt(4) == 0) rnd.nextInt(9).toLong + 1 else 0L))
+    cases.foreach { failed =>
+      val s = DqSuite.summarize(failed.toDF("n_failed")
+        .withColumn("success", col("n_failed") === 0)).head()
+      val v = DqSuite.verdict(failed)
+      val want = DqSuite.Verdict(s.getAs[Long]("evaluated_expectations"),
+        s.getAs[Long]("unsuccessful_expectations"),
+        s.getAs[Double]("failure_rate"), s.getAs[Boolean]("hard_fail"))
+      assert(v == want, s"failed counts $failed")
+    }
+  }
+
   test("banding thresholds match reference test cases (test_dq.py:310-333)") {
     import spark.implicits._
     val got = Seq(0.005, 0.03, 0.15).toDF("rate")
