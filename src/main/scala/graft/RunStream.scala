@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ext.Versioned
-import graft.streaming.{EventPipeline, MicroBatch}
+import graft.streaming.{BatchIndex, EventPipeline, MicroBatch}
 
 /** Runnable streaming demo without a Kafka broker: the `rate` source
   * synthesizes CustomerEvent payloads (with the reference's anomaly mix
@@ -457,8 +457,8 @@ object RunStream {
       // which would shift the committed-only counts): all six streams
       // are stopped and awaited — the wired cadence for every
       // accreting index of this composition
-      maintainAfterRun("full-dd-index",
-        DedupStream.maintain(spark, s"$outDir/dd_index"))
+      maintainAfterRun("full-dd-index", BatchIndex.maintain(spark,
+        DedupStream.BandIndex, s"$outDir/dd_index"))
       // graph artifacts fold only through the committed stored id
       // (lastCommitted + 1 — stream batch ids are offset by one): an
       // interrupted trigger's bands/fps must stay under their own
@@ -468,28 +468,26 @@ object RunStream {
       // so the fold could only re-fold the old -1 partition — wasted
       // IO, no progress (the volatile counter only knows THIS run)
       if (gStats.lastCommitted >= 0L) {
-        maintainAfterRun("full-graph-bands",
-          GraphStream.maintain(spark, s"$outDir/bands_g",
-            foldThrough = gStats.lastCommitted + 1L))
-        maintainAfterRun("full-graph-fp",
-          graft.streaming.MediaDedupStream.maintain(spark,
-            s"$outDir/fp_g", foldThrough = gStats.lastCommitted + 1L))
+        maintainAfterRun("full-graph-bands", BatchIndex.maintain(spark,
+          DedupStream.BandIndex, s"$outDir/bands_g",
+          gStats.lastCommitted + 1L))
+        maintainAfterRun("full-graph-fp", BatchIndex.maintain(spark,
+          graft.ext.Multimodal.MediaFpIndex, s"$outDir/fp_g",
+          gStats.lastCommitted + 1L))
       }
       // the two sum/union-served sketch indexes accrete one directory
       // per trigger (no bucket level / day level) — same decay law,
-      // and their hooks fold through the streams' own screen-first
-      // merges, never the default distinct fold
-      maintainAfterRun("full-hll-index",
-        graft.streaming.SketchStream.maintain(spark,
-          s"$outDir/hll_index"))
-      maintainAfterRun("full-hh-index",
-        graft.streaming.HeavyHitterStream.maintain(spark,
-          s"$outDir/hh_index"))
+      // and their declarations fold through a screen-first merge,
+      // never a distinct fold
+      maintainAfterRun("full-hll-index", BatchIndex.maintain(spark,
+        SketchStream.HllIndex, s"$outDir/hll_index"))
+      maintainAfterRun("full-hh-index", BatchIndex.maintain(spark,
+        HeavyHitterStream.CounterIndex, s"$outDir/hh_index"))
       // pair-table cadence AFTER the summary's audit (its in-flight
       // boundary detection reads un-folded batch ids); the
       // folded_through screen keeps a replayed in-flight batch exact
-      maintainAfterRun("full-graph-pairs",
-        graft.ext.CorpusGraph.maintainPairs(spark, s"$outDir/graph_g"))
+      maintainAfterRun("full-graph-pairs", BatchIndex.maintain(spark,
+        graft.ext.CorpusGraph.PairIndex, s"$outDir/graph_g"))
       summary
     } finally if (setProvider) spark.conf.unset(ProviderKey)
   }
@@ -506,7 +504,7 @@ object RunStream {
     * addressing and is a deliberate operator action).
     */
   private def maintainAfterRun(tag: String,
-      m: => Option[graft.streaming.BatchIndex.Maintenance]): Unit =
+      m: => Option[BatchIndex.Maintenance]): Unit =
     try m.foreach { r =>
       val act = r.compacted
         .map { case (b, a) => s"compacted rows=$b->$a" }
@@ -623,8 +621,8 @@ object RunStream {
         stats, trigger, bench, benchMBits = 1 << 23)
       EventPipeline.runBounded(q, seconds * 1000L)
       val wallSec = secondsSince(t0)
-      maintainAfterRun("curate-index",
-        graft.streaming.DedupStream.maintain(spark, s"$outDir/index_cu"))
+      maintainAfterRun("curate-index", BatchIndex.maintain(spark,
+        graft.streaming.DedupStream.BandIndex, s"$outDir/index_cu"))
       val kept = committedRows(spark, s"$outDir/corpus_cu",
         stats.dedup.lastCommitted)
       println(s"[stream-$wire] seen=${stats.seen.value} " +
@@ -662,9 +660,8 @@ object RunStream {
           modality))
       EventPipeline.runBounded(q, seconds * 1000L)
       val wallSec = secondsSince(t0)
-      maintainAfterRun("media-fp",
-        graft.streaming.MediaDedupStream.maintain(spark,
-          s"$outDir/index_md"))
+      maintainAfterRun("media-fp", BatchIndex.maintain(spark,
+        graft.ext.Multimodal.MediaFpIndex, s"$outDir/index_md"))
       val sink = committedRows(spark, s"$outDir/corpus_md",
         stats.lastCommitted)
       println(s"[stream-$wire] seen=${stats.seen.value} " +
@@ -780,15 +777,16 @@ object RunStream {
       // fold only through the committed stored id (see runFull) — an
       // interrupted trigger's bands/fps must stay under their own
       // batch_id or the replay's resend probe sees its first attempt;
-      // a zero-commit run skips (its bound would only re-fold the -1)
+      // a zero-commit run skips (its bound would only re-fold the -1).
+      // The corpus accretes one partition per batch too, but folding a
+      // payload table is a storage rewrite left to the operator
       if (committed) {
-        maintainAfterRun("graph-bands",
-          graft.streaming.GraphStream.maintain(spark,
-            s"$outDir/bands_g",
-            foldThrough = stats.lastCommitted + 1L))
+        maintainAfterRun("graph-bands", BatchIndex.maintain(spark,
+          graft.streaming.DedupStream.BandIndex, s"$outDir/bands_g",
+          stats.lastCommitted + 1L))
         if (legs.nonEmpty) maintainAfterRun("graph-fp",
-          graft.streaming.MediaDedupStream.maintain(spark,
-            s"$outDir/fp_g", foldThrough = stats.lastCommitted + 1L))
+          BatchIndex.maintain(spark, graft.ext.Multimodal.MediaFpIndex,
+            s"$outDir/fp_g", stats.lastCommitted + 1L))
       }
       val (pairsStored, labels, stale) = graphAudit(spark,
         s"$outDir/graph_g", stats.lastCommitted)
@@ -813,8 +811,8 @@ object RunStream {
       // pair-table cadence AFTER the audit + summary (the audit's
       // in-flight boundary detection reads un-folded batch ids); the
       // folded_through screen keeps a replayed in-flight batch exact
-      maintainAfterRun("graph-pairs",
-        graft.ext.CorpusGraph.maintainPairs(spark, s"$outDir/graph_g"))
+      maintainAfterRun("graph-pairs", BatchIndex.maintain(spark,
+        graft.ext.CorpusGraph.PairIndex, s"$outDir/graph_g"))
     }
 
     // `dedup` mode: document stream with a planted 10% duplicate rate
@@ -830,8 +828,8 @@ object RunStream {
           s"$outDir/index", stats))
       EventPipeline.runBounded(q, seconds * 1000L)
       val wallSec = secondsSince(t0)
-      maintainAfterRun("dedup-index",
-        graft.streaming.DedupStream.maintain(spark, s"$outDir/index"))
+      maintainAfterRun("dedup-index", BatchIndex.maintain(spark,
+        graft.streaming.DedupStream.BandIndex, s"$outDir/index"))
       val kept = committedRows(spark, s"$outDir/corpus",
         stats.lastCommitted)
       println(s"[stream-dedup] seen=${stats.seen.value} " +

@@ -390,7 +390,7 @@ object ScaleProbe {
     * files). The same 4n-row band index is laid out as L batch levels
     * for L ∈ {1, 8, 32} at B ∈ {2048, 8192}, one 50-doc DedupStream
     * trigger is timed against each, and the largest-L variant is
-    * compacted ([[graft.streaming.DedupStream.compactIndex]]) and
+    * compacted ([[graft.streaming.BatchIndex.compact]]) and
     * re-triggered — the recovery the
     * [[graft.streaming.BatchIndex.CompactAfterLevels]] cadence rule
     * buys. `sbt "runMain graft.ScaleProbe levels 1000000"`.
@@ -432,12 +432,13 @@ object ScaleProbe {
             s"$dir/corpus", s"$dir/index", stats))
         }
         val trig = trigger(100L)
-        val report = BatchIndex.layoutReport(spark, s"$dir/index",
-          "band_bucket", b)
+        val report =
+          BatchIndex.report(spark, DedupStream.BandIndex, s"$dir/index").get
         // compaction recovery, priced on the worst layout only
         val (compactS, trigAfter) =
           if (levels == 32)
-            (secondsOf(spark)(DedupStream.compactIndex(spark, s"$dir/index")),
+            (secondsOf(spark)(BatchIndex.compact(spark,
+              DedupStream.BandIndex, s"$dir/index")),
               trigger(101L))
           else (-1.0, -1.0)
         println(f"[scale-levels] n=$n%-8d B=$b%-6d L=$levels%-4d " +
@@ -458,7 +459,7 @@ object ScaleProbe {
   /** The long-horizon proof that the WIRED cadence keeps triggers
     * fast: `batches` micro-batches of fresh docs stream through
     * [[graft.streaming.DedupStream.processBatch]] on TWO roots — root
-    * A runs [[graft.streaming.DedupStream.maintain]] between batches
+    * A runs [[graft.streaming.BatchIndex.maintain]] between batches
     * (the hook RunStream wires after every bounded run; compacts only
     * when the diagnostics say so), root B never compacts — and every
     * batch's trigger is timed on both. Without the cadence, partition
@@ -499,7 +500,8 @@ object ScaleProbe {
         val tB = secondsOf(spark)(DedupStream.processBatch(docs, i.toLong,
           s"$noRoot/corpus", s"$noRoot/index", sB))
         // the wired cadence, between batches (the stream-stopped seam)
-        val m = DedupStream.maintain(spark, s"$withRoot/index")
+        val m = BatchIndex.maintain(spark, DedupStream.BandIndex,
+          s"$withRoot/index")
         val compacted = m.exists(_.compacted.isDefined)
         if (compacted) compactions += 1
         val rep = m.get.report

@@ -151,7 +151,8 @@ object SparkEntry {
   }
 
   /** [[corpusGraphIncrFor]] continued through the pair-table cadence:
-    * [[graft.ext.CorpusGraph.compactPairs]] folds the appended
+    * [[graft.streaming.BatchIndex.compact]] of the
+    * [[graft.ext.CorpusGraph.PairIndex]] folds the appended
     * partitions (stamping the per-bucket folded_through screen), then
     * the SAME append REPLAYS on top of the fold — the bounded-run
     * crash window (a stop mid-trigger re-runs its batch on restart)
@@ -164,7 +165,8 @@ object SparkEntry {
     val path = s"/tmp/graft_corpus_graph_cpt_${fixtureKey(dir)}"
     graft.ext.IndexCache.ensure(path) {
       val batchPairs = buildIncrGraphAt(s, dir, path)
-      graft.ext.CorpusGraph.compactPairs(s, path)
+      graft.streaming.BatchIndex.compact(s, graft.ext.CorpusGraph.PairIndex,
+        path)
       graft.ext.CorpusGraph.append(s, path, batchPairs, batchId = 1L)
     }
     graft.ext.CorpusGraph.readGraph(s, path)
@@ -1171,7 +1173,7 @@ object SparkEntry {
     }),
 
     // the incremental graph continued through the pair-table cadence:
-    // compactPairs folds the appended partitions, then the SAME batch
+    // the pair compaction folds the appended partitions, then the SAME batch
     // replays on top of the fold (the bounded-run crash window) — the
     // folded_through screen must serve the identical grown graph, and
     // the oracle stays the from-scratch rebuild

@@ -201,8 +201,8 @@ object CorpusGraph {
     readPairsAt(spark, Versioned.resolve(spark, path))
 
   /** [[PairsSchema]] plus the compaction screen column: `-1` fold
-    * partitions record the highest batch id they merged
-    * ([[compactPairs]]); pre-fold batch files lack the column and
+    * partitions record the highest batch id they merged (the
+    * [[PairIndex]] fold); pre-fold batch files lack the column and
     * read as null.
     */
   private val PairsReadSchema: org.apache.spark.sql.types.StructType =
@@ -212,7 +212,7 @@ object CorpusGraph {
 
   private[graft] def readPairsAt(spark: SparkSession,
       root: String): DataFrame =
-    // screen before serving: a crashed [[compactPairs]] (fold promoted,
+    // screen before serving: a crashed pair compaction (fold promoted,
     // stale batch dirs not yet deleted) or a replay of a folded batch
     // (bounded stop mid-trigger, then restart) re-lands rows the fold
     // already carries, and the evidence roll-ups COUNT pair rows. The
@@ -541,54 +541,32 @@ object CorpusGraph {
     ((affectedBuckets.size - emptied.size).toLong, emptied.size.toLong)
   }
 
-  /** Fold the pair table's accreted batch partitions into one distinct
-    * `batch_id = -1` partition per bucket — the [[graft.streaming
-    * .BatchIndex.compact]] contract (writers stopped). Each bucket's
-    * fold row records `folded_through` = the highest batch id it
-    * merged, and [[readPairsAt]] screens batch rows a fold already
-    * carries — so BOTH residual hazards of the plain fold are exact
-    * now: a crashed compaction's leftover batch dirs, and a bounded
-    * run's interrupted in-flight trigger whose replay re-lands a
-    * folded batch after restart. Labels are untouched — membership is
-    * set-semantics, compaction is row-identity-preserving.
+  /** The pair table as [[graft.streaming.BatchIndex.maintain]] sees
+    * it: `pairs` under (bucket, batch_id) in the resolved graph root,
+    * folded screen-first (writers stopped). Each bucket's fold row
+    * records `folded_through` = the highest batch id it merged, and
+    * [[readPairsAt]] screens batch rows a fold already carries — so
+    * BOTH residual hazards of a plain fold are exact: a crashed
+    * compaction's leftover batch dirs, and a bounded run's interrupted
+    * in-flight trigger whose replay re-lands a folded batch after
+    * restart. Labels are untouched — membership is set-semantics,
+    * compaction is row-identity-preserving. Every downstream read
+    * survives the fold: relabel/rebuild and the audits read pairs
+    * un-predicated or prefix-predicated (`batch_id <= committed`,
+    * which `-1` passes), and the per-batch seed reads
+    * ([[graft.streaming.GraphStream]]'s touched audit) only ever target
+    * the batch just written, never a folded one. The report's rebucket
+    * arm is a DIAGNOSTIC here: pair bucketing is fixed by
+    * [[LabelBuckets]], so acting on byte drift means a [[rebuildGraph]]
+    * with a resized constant (the rebuild re-buckets pairs and labels
+    * together), not an in-place [[graft.streaming.BatchIndex.rebucket]].
     */
-  def compactPairs(spark: SparkSession, path: String): (Long, Long) =
-    graft.streaming.BatchIndex.compactMulti(spark,
-      s"${Versioned.resolve(spark, path)}/pairs",
-      cols = Seq("doc_a", "doc_b", "modality", "folded_through"),
-      bucketCols = Seq("bucket"),
-      fold = Some(graft.ext.SketchIndex.screenedDistinctFold(
-        Seq("bucket"), Seq("doc_a", "doc_b", "modality"))))
-
-  /** The wired maintenance cadence for the pair table — the
-    * [[graft.streaming.BatchIndex.maintain]] discipline over the
-    * resolved pairs root: diagnose the (bucket, batch_id) layout and
-    * run [[compactPairs]] when the measured cadence fires. Every
-    * downstream read survives the fold: relabel/rebuild and the
-    * audits read pairs un-predicated or prefix-predicated
-    * (`batch_id <= committed`, which `-1` passes), and the per-batch
-    * seed reads ([[graft.streaming.GraphStream]]'s touched audit)
-    * only ever target the batch just written, never a folded one.
-    * The report's rebucket arm is a DIAGNOSTIC here: pair bucketing
-    * is fixed by [[LabelBuckets]], so acting on byte drift means a
-    * [[rebuildGraph]] with a resized constant (the rebuild re-buckets
-    * pairs and labels together), not an in-place [[graft.streaming
-    * .BatchIndex.rebucket]]. Writers stopped + checkpoints committed
-    * only (the [[compactPairs]] contract); None = no graph yet.
-    */
-  def maintainPairs(spark: SparkSession, path: String)
-      : Option[graft.streaming.BatchIndex.Maintenance] = {
-    val pairs = s"${Versioned.resolve(spark, path)}/pairs"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(pairs).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(pairs))) return None
-    val report = graft.streaming.BatchIndex.layoutReportMulti(spark,
-      pairs, Seq("bucket"), LabelBuckets, LabelBuckets)
-    val compacted =
-      if (report.compactRecommended) Some(compactPairs(spark, path))
-      else None
-    Some(graft.streaming.BatchIndex.Maintenance(report, compacted))
+  val PairIndex: graft.streaming.BatchIndex.Index = {
+    import graft.streaming.BatchIndex.{Buckets, Component, Fold, Index}
+    Index(Seq(Component("pairs", Seq("bucket"),
+        Fold.ScreenedDistinct(Seq("doc_a", "doc_b", "modality")),
+        Buckets.Fixed(LabelBuckets))),
+      resizable = true)
   }
 
   /** Outcome of one [[purge]] run: pair rows removed, label rows

@@ -164,7 +164,12 @@ object Dedup {
         .select("band_idx", "band_hash")
       rawBands.join(sizes, Seq("band_idx", "band_hash"))
     }
-    val banded = Scratch.track(capped.persist())
+    // bands the caller already persisted (the graph stream's batch
+    // bands) are read as they are; the caller owns their release
+    val banded =
+      if (capped.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        capped
+      else Scratch.track(capped.persist())
     val cand = Scratch.track(banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx")
           && col("a.band_hash") === col("b.band_hash")

@@ -1800,32 +1800,24 @@ object Multimodal {
     Versioned.assertAppendLanded(spark, path, root, "media fp")
   }
 
-  /** Fold the fingerprint index's accreted per-batch partitions into
-    * one distinct `batch_id = -1` partition per (modality, bucket) —
-    * the [[graft.streaming.BatchIndex.compact]] contract over the
-    * unified layout (streams stopped only; readers scan every batch
-    * level, so -1 serves like any other).
+  /** The unified media fp index as [[graft.streaming.BatchIndex
+    * .maintain]] sees it: the data component under (modality, bucket)
+    * and the band sidecar under (modality, band_bucket), both in the
+    * served root (a pre-sidecar root has no bands to fold) and both
+    * distinct-folded. The bucket counts are the observed level
+    * combinations.
     */
-  def compactMediaFpIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      foldThrough: Long = Long.MaxValue): (Long, Long) = {
-    val root = Versioned.resolve(spark, path)
-    val out = graft.streaming.BatchIndex.compactMulti(spark,
-      s"$root/data",
-      cols = Seq("doc_id", "decoded", "fp_lo", "fp_hi"),
-      bucketCols = Seq("modality", "bucket"),
-      foldThrough = foldThrough)
-    // the band sidecar compacts with its component (absent on a
-    // pre-sidecar root — nothing to fold)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")))
-      graft.streaming.BatchIndex.compactMulti(spark, s"$root/bands",
-        cols = Seq("doc_id", "fp_lo", "fp_hi", "band_idx", "band_val"),
-        bucketCols = Seq("modality", "band_bucket"),
-        foldThrough = foldThrough)
-    out
+  val MediaFpIndex: graft.streaming.BatchIndex.Index = {
+    import graft.streaming.BatchIndex.{Buckets, Component, Fold, Index}
+    Index(Seq(
+        Component("data", Seq("modality", "bucket"),
+          Fold.Distinct(Seq("doc_id", "decoded", "fp_lo", "fp_hi")),
+          Buckets.Observed(MediaFpBuckets)),
+        Component("bands", Seq("modality", "band_bucket"),
+          Fold.Distinct(
+            Seq("doc_id", "fp_lo", "fp_hi", "band_idx", "band_val")),
+          Buckets.Observed(MediaBandBuckets))),
+      resizable = true)
   }
 
   /** Rebuild the fingerprint index with atomic swap — the

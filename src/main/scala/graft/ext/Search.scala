@@ -189,8 +189,8 @@ object Search {
         org.apache.spark.sql.types.LongType)))
 
   /** [[PostingsSchema]] / [[DocLenSchema]] plus the compaction screen
-    * column ([[graft.streaming.SearchStream.compactIndex]] stamps it
-    * on `-1` fold rows; pre-fold files read as null).
+    * column (the [[graft.streaming.SearchStream.PostingsIndex]] fold
+    * stamps it on `-1` fold rows; pre-fold files read as null).
     */
   private val PostingsReadSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(PostingsSchema.fields :+

@@ -86,7 +86,7 @@ object SketchIndex {
     * .HeavyHitterStream]]); one definition of the screen, so the
     * subtle folded_through semantics cannot drift between consumers.
     */
-  // (write-side twin below: [[screenedDistinctFold]])
+  // (write side: the screened folds of graft.streaming.BatchIndex.Fold)
   def screenFolded(idx: DataFrame,
       keyCols: Seq[String] = Seq("day")): DataFrame =
     if (!idx.columns.contains("batch_id"))
@@ -113,32 +113,6 @@ object SketchIndex {
           || col("batch_id") > col("screen_through"))
         .drop(keyCols.map(c => s"screen_$c") :+ "screen_through": _*)
     }
-
-  /** The WRITE-side twin of [[screenFolded]] for DISTINCT-row indexes
-    * (pair evidence, postings, doclen — where the fold keeps rows,
-    * unlike the sketch/counter aggregating folds): screen first so a
-    * re-run over a crashed compaction's leftovers cannot resurrect
-    * superseded rows, take the distinct live rows, and stamp each
-    * key's `folded_through` = the highest batch id it merged. One
-    * definition of the stamp (the coalesce(-1)/greatest(batch_id)
-    * recipe), so the screen and its writer cannot drift apart. Pass
-    * the result as `fold` to [[graft.streaming.BatchIndex
-    * .compactMulti]]; `keyCols` empty = global fold (1-row broadcast
-    * attach).
-    */
-  def screenedDistinctFold(keyCols: Seq[String], dataCols: Seq[String])
-      : DataFrame => DataFrame = { idx0 =>
-    val idx =
-      if (idx0.columns.contains("folded_through")) idx0
-      else idx0.withColumn("folded_through", lit(null).cast("long"))
-    val thr = max(greatest(coalesce(col("folded_through"), lit(-1L)),
-      col("batch_id"))).as("folded_through")
-    val live = screenFolded(idx, keyCols)
-      .select((keyCols ++ dataCols).map(col): _*).distinct()
-    if (keyCols.isEmpty) live.crossJoin(broadcast(idx.agg(thr)))
-    else live.join(
-      broadcast(idx.groupBy(keyCols.map(col): _*).agg(thr)), keyCols)
-  }
 
   /** Served read: distinct-user estimate per event_type over
     * [fromDay, toDay] by unioning the stored sketches. The day filter

@@ -183,34 +183,6 @@ object PipelineRun {
     old.size
   }
 
-  /** Small-files compaction for a parquet sink (the streaming dual sink
-    * writes one file per partition-dir per micro-batch — 77 files for a
-    * 5 k-event batch over 77 dirs, 243 before the batch was rebalanced
-    * by its partition columns; at a 30 s trigger that is ~2.9 k
-    * files/day/dir): rewrite with
-    * `ceil(rows/targetRows)` output files per partition column set.
-    * Returns (files before, files after). The 100 TB version is this
-    * exact job per partition-dir on a schedule.
-    */
-  def compact(spark: SparkSession, path: String, targetRows: Long,
-      partitionCols: Seq[String] = Seq("country", "plan")): (Long, Long) = {
-    def fileCount: Long = Files.walk(Paths.get(path)).iterator().asScala
-      .count(p => p.toString.endsWith(".parquet"))
-    val before = fileCount
-    val df = spark.read.parquet(path)
-    val n = math.max(1, math.ceil(df.count().toDouble / targetRows).toInt)
-    val tmp = path.stripSuffix("/") + "__compact_tmp"
-    df.repartition(n).write.mode("overwrite")
-      .partitionBy(partitionCols: _*).parquet(tmp)
-    // atomic-ish swap (same filesystem)
-    val p = Paths.get(path); val t = Paths.get(tmp)
-    val old = Paths.get(path.stripSuffix("/") + "__compact_old")
-    Files.move(p, old)
-    Files.move(t, p)
-    org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-    (before, fileCount)
-  }
-
   /** One cycle's result. `stageMs` is the wall ms of each stage, in run
     * order: `sink_write`, `aggregate` (run report, source monitor and
     * DQ suite, with their artifacts), `decide`, `validate_load`,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.ext.Versioned
+import graft.ext.{SketchIndex, Versioned}
 
 /** The ONE persisted-index write/serve contract shared by every
   * incremental index in the engine — MinHash band index
@@ -41,6 +41,16 @@ import graft.ext.Versioned
   *      committed batches into `-1` means a later replay of one of them
   *      would screen against its own rows — compact only with the
   *      stream stopped and its checkpoint fully committed.
+  *
+  * Maintenance runs once here for every index a stream leg grows. Each
+  * leg declares its index once as an [[Index]] (its component dirs,
+  * their levels, fold and bucket rule): `DedupStream.BandIndex` (also
+  * the graph leg's band index), `EmbedStream.LshIndex`,
+  * `NoveltyStream.GramIndex`, `SearchStream.PostingsIndex`,
+  * `Multimodal.MediaFpIndex`, `SketchStream.HllIndex`,
+  * `HeavyHitterStream.CounterIndex` and `CorpusGraph.PairIndex`.
+  * [[report]] diagnoses one, [[compact]] folds it and [[maintain]]
+  * does the first and, when due, the second.
   *
   * At 100 TB the indexes stay hash-sized (bands/buckets/gram hashes,
   * never payloads), writes touch only the current batch's partition,
@@ -271,14 +281,14 @@ object BatchIndex {
     */
   val DefaultIndexRowBytes: Long = 32L
 
-  /** Bytes-per-bucket drift past which [[layoutReport]] recommends a
+  /** Bytes-per-bucket drift past which [[report]] recommends a
     * [[rebucket]]: resizing is a full rewrite, so the rule carries
     * hysteresis — fire at 4× the target (one doubling of B would
     * land the index back inside 2×), not at every crossing.
     */
   val RebucketDriftFactor = 4L
 
-  /** Batch levels per bucket past which [[layoutReport]] recommends a
+  /** Batch levels per bucket past which [[report]] recommends a
     * [[compact]]: each committed batch adds one file per touched
     * bucket, and every trigger's partition discovery lists ALL B × L
     * directories — the file-count counterweight to scaling B. The
@@ -293,7 +303,7 @@ object BatchIndex {
   val CompactAfterLevels = 16L
 
   /** Total partition-dir budget (B × batch levels) past which
-    * [[layoutReport]] recommends compaction regardless of the level
+    * [[report]] recommends compaction regardless of the level
     * count — at large B a handful of levels already multiplies into
     * the file-count regime the measured table shows degrading
     * (B = 8 192 × L = 8 = 65 k dirs was 2× slower than L = 1).
@@ -306,7 +316,7 @@ object BatchIndex {
     * compiled fixture default — tiny first batches must not create
     * degenerate 1-bucket layouts). A catch-up first macro batch thus
     * creates its index at a B sized for the data it actually carries
-    * instead of the fixture constant, and the [[layoutReport]]
+    * instead of the fixture constant, and the [[report]]
     * diagnostics watch the byte drift from there (against MEASURED
     * bytes, not this planning estimate).
     */
@@ -346,6 +356,80 @@ object BatchIndex {
     else autoBucketCount(firstBatchKeyRows, default, rowBytes)
   }
 
+  /** How a component finds its bucket count (the [[LayoutReport]]
+    * denominator) and the floor of its resize recommendation.
+    */
+  sealed trait Buckets
+  object Buckets {
+    /** The count the index was written with ([[bucketCountOf]]: its
+      * `_graft_buckets` record, else `default`); the floor is
+      * `default`. The key-bucketed layouts.
+      */
+    final case class Recorded(default: Long) extends Buckets
+    /** The level combinations the index holds, counted by the
+      * report's own per-bucket rollup (each is one directory fan-out,
+      * which is what the file-count cadence prices); the floor is
+      * `floor`. Layouts with no recorded count.
+      */
+    final case class Observed(floor: Long) extends Buckets
+    /** `n`, also the floor: a count fixed by a constant, or 1 for a
+      * component with no level above `batch_id`.
+      */
+    final case class Fixed(n: Long) extends Buckets
+  }
+
+  /** A component's merge semantics for [[compact]]. There is no
+    * default: a sum-served index folded as distinct rows would
+    * double-count across the crash window (see [[compact]]).
+    */
+  sealed trait Fold
+  object Fold {
+    /** Distinct rows over the levels and `cols`, for indexes served by
+      * set lookup, where a crash window's duplicates are neutral.
+      */
+    final case class Distinct(cols: Seq[String]) extends Fold
+    /** Distinct rows over the levels and `cols` for indexes served by
+      * aggregating rows (pair evidence, postings, doclen): screen
+      * first ([[graft.ext.SketchIndex.screenFolded]], keyed on the
+      * levels) so a re-run over a crashed compaction's leftovers
+      * cannot resurrect superseded rows, then stamp each level key's
+      * `folded_through`, the highest batch id it merged, which the
+      * readers' screen compares against.
+      */
+    final case class ScreenedDistinct(cols: Seq[String]) extends Fold
+    /** `aggs` per levels and `keys` over the screened rows, stamping
+      * `folded_through` the same way: the exact merge of a sum-served
+      * sketch index (HLL registers, Misra–Gries counters).
+      */
+    final case class ScreenedMerge(keys: Seq[String], aggs: Seq[Column])
+        extends Fold
+  }
+
+  /** One `batch_id`-partitioned dir of an accreting index: `dir` under
+    * the index's root ("" for the root itself), the partition `levels`
+    * above `batch_id`, its [[Fold]] and its [[Buckets]] rule.
+    */
+  final case class Component(dir: String, levels: Seq[String],
+      fold: Fold, buckets: Buckets)
+
+  /** An accreting index as its maintenance sees it, declared once by
+    * the leg that writes it. The report comes from the first
+    * component, whose absence means no index yet; a compaction folds
+    * every present component. `resizable = false` marks levels that are
+    * semantic (a day), where a resize means nothing: the rebucket arm
+    * is dropped from the report.
+    */
+  final case class Index(components: Seq[Component], resizable: Boolean)
+
+  object Index {
+    /** The [[ingestKeyed]] layout: `cols` under the key-bucket level,
+      * distinct-folded, at the recorded bucket count.
+      */
+    def keyed(cols: Seq[String], defaultBuckets: Long): Index =
+      Index(Seq(Component("", Seq(KeyBucketCol), Fold.Distinct(cols),
+        Buckets.Recorded(defaultBuckets))), resizable = true)
+  }
+
   /** One index's layout health — the diagnostics op behind the B rule
     * and the compaction cadence: MEASURED bytes per bucket vs the
     * byte target (with the [[autoBucketCountBytes]] recommendation
@@ -364,61 +448,6 @@ object BatchIndex {
       recommendedBuckets: Long, rebucketRecommended: Boolean,
       compactRecommended: Boolean)
 
-  def layoutReport(spark: SparkSession, path: String, bucketCol: String,
-      default: Long,
-      targetBytes: Long = TargetBytesPerBucket): LayoutReport =
-    layoutReportMulti(spark, path, Seq(bucketCol),
-      bucketCountOf(spark, path, default), default, targetBytes)
-
-  /** [[layoutReport]] over layouts with MULTIPLE partition levels
-    * above batch_id (the unified media fp index's (modality, bucket)).
-    * `buckets` is the reporting denominator — pass the recorded count
-    * for single-level layouts; multi-level callers pass the OBSERVED
-    * distinct combination count (each combination is one directory
-    * fan-out, which is what the file-count cadence prices). `floor`
-    * is the resize recommendation's lower bound (the compiled
-    * default — a recommendation may shrink BELOW the current count,
-    * which is exactly the byte rule's listing-bound repair).
-    */
-  def layoutReportMulti(spark: SparkSession, path: String,
-      bucketCols: Seq[String], buckets: Long, floor: Long,
-      targetBytes: Long = TargetBytesPerBucket): LayoutReport = {
-    val b = buckets
-    val bytes = org.apache.hadoop.fs.FileSystem.get(
-        new org.apache.hadoop.fs.Path(path).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(new org.apache.hadoop.fs.Path(path))
-      .getLength
-    val index = spark.read.parquet(path)
-    // ONE scan: a per-(bucket…, batch) cell count first — all are
-    // PARTITION columns, so the scan reads no data pages — then the
-    // per-bucket rollup AND the global distinct-level count both
-    // derive from the cell frame (its exchange is reused across the
-    // two branches; the index itself is never re-scanned)
-    val cells = index
-      .groupBy((bucketCols :+ "batch_id").map(col): _*)
-      .agg(count(lit(1)).as("rows"))
-    val per = cells.groupBy(bucketCols.map(col): _*)
-      .agg(sum("rows").as("rows"), count(lit(1)).as("levels"))
-      .agg(sum("rows").as("rows"), max("rows").as("maxRows"),
-        max("levels").as("maxLevels"))
-      .crossJoin(cells.agg(
-        countDistinct(col("batch_id")).as("levels")))
-      .head()
-    val rows = if (per.isNullAt(0)) 0L else per.getLong(0)
-    val maxRows = if (per.isNullAt(1)) 0L else per.getLong(1)
-    val maxLevels = if (per.isNullAt(2)) 0L else per.getLong(2)
-    val levels = if (per.isNullAt(3)) 0L else per.getLong(3)
-    val rec = autoBucketCountBytes(bytes, floor, targetBytes)
-    LayoutReport(b, rows, bytes, rows.toDouble / math.max(b, 1L),
-      bytes.toDouble / math.max(b, 1L), maxRows,
-      levels, maxLevels, rec,
-      rebucketRecommended =
-        bytes > b * targetBytes * RebucketDriftFactor,
-      compactRecommended = maxLevels > CompactAfterLevels
-        || b * levels > CompactFileBudget)
-  }
-
   /** Outcome of one [[maintain]] pass: the diagnostics that drove it,
     * the compaction's (before, after) row counts when one ran, and
     * whether a rebucket is (still) recommended — rebuckets change
@@ -431,37 +460,206 @@ object BatchIndex {
     def rebucketRecommended: Boolean = report.rebucketRecommended
   }
 
-  /** The maintenance hook that turns [[layoutReport]]'s measured
-    * cadence into a running code path: read the diagnostics and run
-    * the recommended [[compactMulti]] in one call. The measured decay
-    * law (SCALING.md "Streaming compaction cadence": triggers 3× at
-    * 65 k partition dirs, 35× at 262 k, while the repair itself grows
-    * super-linearly) means a long-running stream that nobody compacts
-    * degrades without bound — stream owners call this BETWEEN bounded
-    * runs / with the stream stopped and its checkpoint committed (the
-    * [[compact]] contract; the caller owns that precondition), e.g.
-    * [[DedupStream.maintain]] / [[NoveltyStream.maintain]] /
-    * [[EmbedStream.maintain]], wired into [[graft.RunStream]]'s
-    * bounded modes. Absent index (stream never committed) returns
-    * None — nothing to maintain.
+  /** The layout report of `index` at `path` (its first component);
+    * None when the index is absent.
     */
-  def maintain(spark: SparkSession, path: String, bucketCol: String,
-      default: Long, cols: Seq[String],
-      fold: Option[DataFrame => DataFrame] = None,
-      targetBytes: Long = TargetBytesPerBucket,
+  def report(spark: SparkSession, index: Index, path: String,
+      targetBytes: Long = TargetBytesPerBucket): Option[LayoutReport] =
+    present(spark, index, path).headOption.map { case (c, dir) =>
+      layout(spark, dir, c, index.resizable, targetBytes)
+    }
+
+  /** The maintenance hook that turns the measured cadence into a
+    * running code path: diagnose the index and, when any present
+    * component is due, [[compact]] every present one. The measured
+    * decay law (SCALING.md "Streaming compaction cadence": triggers 3×
+    * at 65 k partition dirs, 35× at 262 k, while the repair itself
+    * grows super-linearly) means a long-running stream that nobody
+    * compacts degrades without bound — stream owners call this
+    * BETWEEN bounded runs / with the stream stopped and its checkpoint
+    * committed (the [[compact]] contract; the caller owns that
+    * precondition), as [[graft.RunStream]]'s bounded modes do for
+    * every index they grow. Returns the first component's report;
+    * None = absent index (stream never committed), nothing to
+    * maintain.
+    */
+  def maintain(spark: SparkSession, index: Index, path: String,
       foldThrough: Long = Long.MaxValue): Option[Maintenance] = {
+    val parts = present(spark, index, path)
+    parts.headOption.map { case (c, dir) =>
+      val head = layout(spark, dir, c, index.resizable,
+        TargetBytesPerBucket)
+      val due = head.compactRecommended || parts.tail.exists {
+        case (ci, d) => layout(spark, d, ci, index.resizable,
+          TargetBytesPerBucket).compactRecommended
+      }
+      Maintenance(head,
+        if (due) Some(foldAll(spark, parts, foldThrough)) else None)
+    }
+  }
+
+  /** Contract 3: fold every committed `batch_id >= 0` partition of
+    * each present component into one `batch_id = -1` partition per
+    * level combination, with the component's [[Fold]]. Returns the
+    * first component's (rows before, rows after); None = absent index.
+    * Run only with the stream stopped (see object doc). Crash window:
+    * the `-1` rows promote before the old partitions delete, so a
+    * crash can leave BOTH visible — row-level duplicates are
+    * correctness-neutral for [[Fold.Distinct]] indexes, but an index
+    * whose serving SUMS across rows must screen batch rows out of
+    * folded buckets at read time (the SketchIndex discipline) and
+    * fold through the same screen ([[Fold.ScreenedDistinct]],
+    * [[Fold.ScreenedMerge]]).
+    *
+    * `foldThrough`: partitions above the caller's last fully-committed
+    * batch are left in place — NOT folded, NOT deleted. An in-flight
+    * batch interrupted mid-processBatch has landed SOME of its
+    * artifacts (e.g. a graph trigger's bands but not its pairs);
+    * folding those rows into `-1` would defeat the reader-side
+    * `batch_id < storedId` replay exclusion — the replay would see its
+    * own first attempt as stored state, classify every doc as re-sent,
+    * and silently never produce the batch's evidence. Callers that
+    * know their committed boundary (RunStream's post-run maintenance)
+    * pass it; Long.MaxValue folds everything (safe only when
+    * checkpoints are known committed).
+    */
+  def compact(spark: SparkSession, index: Index, path: String,
+      foldThrough: Long = Long.MaxValue): Option[(Long, Long)] = {
+    val parts = present(spark, index, path)
+    if (parts.isEmpty) None else Some(foldAll(spark, parts, foldThrough))
+  }
+
+  /** `index`'s components with their dirs under the root `path`
+    * resolves to ([[Versioned.resolve]]; an unversioned path resolves
+    * to itself), keeping the present ones; empty when the first
+    * component is absent.
+    */
+  private def present(spark: SparkSession, index: Index, path: String)
+      : Seq[(Component, String)] = {
+    val root = Versioned.resolve(spark, path)
+    val dirs = index.components.map(c =>
+      c -> (if (c.dir.isEmpty) root else s"$root/${c.dir}"))
     val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri,
+      new org.apache.hadoop.fs.Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return None
-    val report = layoutReport(spark, path, bucketCol, default,
-      targetBytes)
-    val compacted =
-      if (report.compactRecommended)
-        Some(compactMulti(spark, path, cols, Seq(bucketCol), fold,
-          foldThrough))
-      else None
-    Some(Maintenance(report, compacted))
+    def exists(d: String) = fs.exists(new org.apache.hadoop.fs.Path(d))
+    if (!exists(dirs.head._2)) Nil
+    else dirs.filter { case (_, d) => exists(d) }
+  }
+
+  private def foldAll(spark: SparkSession,
+      parts: Seq[(Component, String)], foldThrough: Long): (Long, Long) =
+    parts.map { case (c, dir) => fold(spark, dir, c, foldThrough) }.head
+
+  /** The layout scan: one index read whose per-(levels…, batch) cell
+    * counts (all PARTITION columns, so no data page is read) give the
+    * per-bucket rollup, the global distinct-level count and, for
+    * [[Buckets.Observed]], the bucket count.
+    */
+  private def layout(spark: SparkSession, path: String, c: Component,
+      resizable: Boolean, targetBytes: Long): LayoutReport = {
+    val bytes = org.apache.hadoop.fs.FileSystem.get(
+        new org.apache.hadoop.fs.Path(path).toUri,
+        spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(new org.apache.hadoop.fs.Path(path))
+      .getLength
+    // the cell frame's exchange is reused across the rollup and the
+    // distinct-level branch; the index itself is never re-scanned
+    val cells = spark.read.parquet(path)
+      .groupBy((c.levels :+ "batch_id").map(col): _*)
+      .agg(count(lit(1)).as("rows"))
+    val per = cells.groupBy(c.levels.map(col): _*)
+      .agg(sum("rows").as("rows"), count(lit(1)).as("levels"))
+      .agg(sum("rows").as("rows"), max("rows").as("maxRows"),
+        max("levels").as("maxLevels"), count(lit(1)).as("groups"))
+      .crossJoin(cells.agg(
+        countDistinct(col("batch_id")).as("levels")))
+      .head()
+    def at(i: Int): Long = if (per.isNullAt(i)) 0L else per.getLong(i)
+    val (rows, maxRows, maxLevels, levels) = (at(0), at(1), at(2), at(4))
+    val (b, floor) = c.buckets match {
+      case Buckets.Recorded(d) => (bucketCountOf(spark, path, d), d)
+      case Buckets.Observed(f) => (at(3), f)
+      case Buckets.Fixed(n) => (n, n)
+    }
+    LayoutReport(b, rows, bytes, rows.toDouble / math.max(b, 1L),
+      bytes.toDouble / math.max(b, 1L), maxRows,
+      levels, maxLevels,
+      if (resizable) autoBucketCountBytes(bytes, floor, targetBytes)
+      else b,
+      rebucketRecommended =
+        resizable && bytes > b * targetBytes * RebucketDriftFactor,
+      compactRecommended = maxLevels > CompactAfterLevels
+        || b * levels > CompactFileBudget)
+  }
+
+  /** The fold primitive of [[compact]] over one component dir. */
+  private def fold(spark: SparkSession, path: String, c: Component,
+      foldThrough: Long): (Long, Long) = {
+    val parts = c.levels :+ "batch_id"
+    // mergeSchema: a screened fold adds folded_through, which plain
+    // per-file inference would drop when the first-listed file
+    // predates it
+    val full = spark.read.option("mergeSchema", "true").parquet(path)
+    val before = full.count()
+    val index = full.filter(col("batch_id") <= foldThrough)
+    // nothing in fold scope (a fresh index, or a bound below every
+    // partition): writing an empty partitioned frame emits only
+    // _SUCCESS and the tmp read-back would throw UNABLE_TO_INFER_SCHEMA
+    // after staging — short-circuit instead of half-running
+    if (index.isEmpty) return (before, before)
+    // bounded collect: one row per LIVE partition directory — ≤ buckets
+    // × committed batches (the partition space, never row counts), and
+    // compaction's whole point is to keep that space folded down
+    val liveDirs: Seq[String] =
+      index.filter(col("batch_id") >= 0L)
+        .select(parts.map(p => col(p).cast("string")): _*)
+        .distinct().collect().toIndexedSeq
+        .map(r => parts.indices
+          .map(i => s"${parts(i)}=${r.getString(i)}").mkString("/"))
+    // the fold sees the FULL frame (incl. batch_id), which the
+    // folded_through stamp needs
+    val foldedThrough = max(greatest(coalesce(col("folded_through"),
+      lit(-1L)), col("batch_id"))).as("folded_through")
+    val folded = c.fold match {
+      case Fold.Distinct(cols) =>
+        index.select((c.levels ++ cols).distinct.map(col): _*).distinct()
+      case Fold.ScreenedDistinct(cols) =>
+        val withFt =
+          if (index.columns.contains("folded_through")) index
+          else index.withColumn("folded_through", lit(null).cast("long"))
+        val live = SketchIndex.screenFolded(withFt, c.levels)
+          .select((c.levels ++ cols).map(col): _*).distinct()
+        if (c.levels.isEmpty)
+          live.crossJoin(broadcast(withFt.agg(foldedThrough)))
+        else live.join(broadcast(withFt.groupBy(c.levels.map(col): _*)
+          .agg(foldedThrough)), c.levels)
+      case Fold.ScreenedMerge(keys, aggs) =>
+        SketchIndex.screenFolded(index, c.levels)
+          .groupBy((c.levels ++ keys).map(col): _*)
+          .agg(aggs.head, aggs.tail :+ foldedThrough: _*)
+    }
+    val tmp = new org.apache.hadoop.fs.Path(path + ".compacting")
+    folded
+      .withColumn("batch_id", lit(-1L))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(parts: _*).parquet(tmp.toString)
+    spark.read.parquet(tmp.toString)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(parts: _*).parquet(path)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      tmp.toUri, spark.sparkContext.hadoopConfiguration)
+    liveDirs.foreach { d =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
+      ()
+    }
+    fs.delete(tmp, true)
+    // cached plans over the pre-compaction files must not outlive the
+    // fold (nor feed the count below)
+    spark.catalog.refreshByPath(path)
+    val after = spark.read.parquet(path).count()
+    (before, after)
   }
 
   /** Record (or verify) an index's bucket count before writing to it.
@@ -475,12 +673,8 @@ object BatchIndex {
     val p = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       p.toUri, spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      val out = fs.create(p, true)
-      try out.write(buckets.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } else {
+    if (!fs.exists(p)) writeBucketMeta(fs, p.getParent, buckets)
+    else {
       val have = bucketCountOf(spark, path, buckets)
       require(have == buckets,
         s"index at $path is laid out at $have buckets but the writer " +
@@ -611,35 +805,9 @@ object BatchIndex {
     */
   def rebucket(spark: SparkSession, path: String, bucketCol: String,
       newBuckets: Long,
-      bucketExpr: Long => org.apache.spark.sql.Column): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".rebucketing")
-    if (fs.exists(live)) {
-      fs.delete(tmp, true) // partial stage from a crashed run
-      // mergeSchema: same reason as [[compactMulti]] — a full rewrite
-      // that inferred schema from the first-listed file would silently
-      // drop columns added by later batches of a schema-evolved index
-      val index = spark.read.option("mergeSchema", "true").parquet(path)
-      index.drop(bucketCol)
-        .withColumn(bucketCol, bucketExpr(newBuckets))
-        .repartition(col(bucketCol))
-        .write.partitionBy(bucketCol, "batch_id").parquet(tmp.toString)
-      // layout record INSIDE the stage — promoted by the same rename
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_graft_buckets"), true)
-      try out.write(newBuckets.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(live, true)
-    } else require(fs.exists(tmp),
-      s"nothing to rebucket at $path (no index, no staged copy)")
-    fs.rename(tmp, live)
-    spark.catalog.refreshByPath(path) // drop pre-rebucket cached plans
-    ()
-  }
+      bucketExpr: Long => org.apache.spark.sql.Column): Unit =
+    relayout(spark, path, bucketCol, newBuckets, bucketExpr, "rebucket")(
+      _ => false)
 
   /** One-time, in-place migration of an index written under the flat
     * `batch_id=`-only layout to the key-bucketed `bucketCol/batch_id`
@@ -663,7 +831,25 @@ object BatchIndex {
     */
   def migrateToBucketed(spark: SparkSession, path: String,
       bucketCol: String, buckets: Long,
-      bucketExpr: Long => org.apache.spark.sql.Column): Unit = {
+      bucketExpr: Long => org.apache.spark.sql.Column): Unit =
+    relayout(spark, path, bucketCol, buckets, bucketExpr, "migrate") {
+      index => index.columns.contains(bucketCol) && {
+        // already bucketed — just ensure the layout metadata exists
+        // (verifies on mismatch rather than silently restamping)
+        ensureBucketMeta(spark, path, buckets)
+        true
+      }
+    }
+
+  /** The staged full rewrite of [[rebucket]] and [[migrateToBucketed]]:
+    * the live index re-bucketed by `bucketExpr(buckets)` into a stage
+    * dir with its layout record, then swapped in. `done` sees the live
+    * index first and ends the op when it returns true.
+    */
+  private def relayout(spark: SparkSession, path: String,
+      bucketCol: String, buckets: Long,
+      bucketExpr: Long => org.apache.spark.sql.Column, verb: String)(
+      done: DataFrame => Boolean): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(path).toUri,
       spark.sparkContext.hadoopConfiguration)
@@ -671,117 +857,31 @@ object BatchIndex {
     val tmp = new org.apache.hadoop.fs.Path(path + ".rebucketing")
     if (fs.exists(live)) {
       fs.delete(tmp, true) // partial stage from a crashed run
-      // mergeSchema: a full rewrite must not drop columns added by
-      // later batches of a schema-evolved index (the compact rationale)
+      // mergeSchema: same reason as [[compact]] — a full rewrite
+      // that inferred schema from the first-listed file would silently
+      // drop columns added by later batches of a schema-evolved index
       val index = spark.read.option("mergeSchema", "true").parquet(path)
-      if (index.columns.contains(bucketCol)) {
-        // already bucketed — just ensure the layout metadata exists
-        // (verifies on mismatch rather than silently restamping)
-        ensureBucketMeta(spark, path, buckets)
-        return
-      }
-      index.withColumn(bucketCol, bucketExpr(buckets))
+      if (done(index)) return
+      index.drop(bucketCol)
+        .withColumn(bucketCol, bucketExpr(buckets))
         .repartition(col(bucketCol))
         .write.partitionBy(bucketCol, "batch_id").parquet(tmp.toString)
       // layout record INSIDE the stage — promoted by the same rename
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_graft_buckets"), true)
-      try out.write(buckets.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeBucketMeta(fs, tmp, buckets)
       fs.delete(live, true)
     } else require(fs.exists(tmp),
-      s"nothing to migrate at $path (no index, no staged copy)")
+      s"nothing to $verb at $path (no index, no staged copy)")
     fs.rename(tmp, live)
-    spark.catalog.refreshByPath(path) // drop pre-migration cached plans
+    spark.catalog.refreshByPath(path) // drop pre-rewrite cached plans
     ()
   }
 
-  /** Contract 3: fold every committed `batch_id >= 0` partition into
-    * one `batch_id = -1` partition (per bucket when `bucketCol` is
-    * set). `fold` is the merge semantics — distinct rows by default,
-    * an aggregation for mergeable-sketch indexes. Returns (rows
-    * before, rows after). Run only with the stream stopped (see
-    * object doc). Crash window: the `-1` rows promote before the old
-    * partitions delete, so a crash can leave BOTH visible — row-level
-    * duplicates are correctness-neutral for distinct-fold indexes,
-    * but an index whose serving SUMS across rows must screen batch
-    * rows out of folded buckets at read time (the SketchIndex
-    * discipline) or rerun the compaction before serving accounting.
-    */
-  def compact(spark: SparkSession, path: String, cols: Seq[String],
-      bucketCol: Option[String] = None,
-      fold: Option[DataFrame => DataFrame] = None): (Long, Long) =
-    compactMulti(spark, path, cols, bucketCol.toSeq, fold)
-
-  /** [[compact]] for indexes with MULTIPLE partition levels above
-    * batch_id (the unified media fingerprint index's (modality,
-    * bucket)); same contract, the fold keys on every level.
-    */
-  def compactMulti(spark: SparkSession, path: String, cols: Seq[String],
-      bucketCols: Seq[String],
-      fold: Option[DataFrame => DataFrame] = None,
-      foldThrough: Long = Long.MaxValue): (Long, Long) = {
-    import spark.implicits._
-    val parts = bucketCols :+ "batch_id"
-    // mergeSchema: a custom fold may have added columns (e.g. the
-    // sketch index's folded_through) that plain per-file inference
-    // would drop when the first-listed file predates them
-    val full = spark.read.option("mergeSchema", "true").parquet(path)
-    val before = full.count()
-    // foldThrough: partitions above the caller's last fully-committed
-    // batch are left in place — NOT folded, NOT deleted. An in-flight
-    // batch interrupted mid-processBatch has landed SOME of its
-    // artifacts (e.g. a graph trigger's bands but not its pairs);
-    // folding those rows into `-1` would defeat the reader-side
-    // `batch_id < storedId` replay exclusion — the replay would see
-    // its own first attempt as stored state, classify every doc as
-    // re-sent, and silently never produce the batch's evidence.
-    // Callers that know their committed boundary (RunStream's
-    // post-run maintenance) pass it; Long.MaxValue folds everything
-    // (safe only when checkpoints are known committed).
-    val index = full.filter(col("batch_id") <= foldThrough)
-    // nothing in fold scope (a fresh index, or a bound below every
-    // partition): writing an empty partitioned frame emits only
-    // _SUCCESS and the tmp read-back would throw UNABLE_TO_INFER_SCHEMA
-    // after staging — short-circuit instead of half-running
-    if (index.isEmpty) return (before, before)
-    // bounded collect: one row per LIVE partition directory — ≤ buckets
-    // × committed batches (the partition space, never row counts), and
-    // compaction's whole point is to keep that space folded down
-    val liveDirs: Seq[String] = {
-      val live = index.filter(col("batch_id") >= 0L)
-      live.select(parts.map(c => col(c).cast("string")): _*)
-        .distinct().collect().toIndexedSeq
-        .map(r => parts.indices
-          .map(i => s"${parts(i)}=${r.getString(i)}").mkString("/"))
-    }
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compacting")
-    // default fold: distinct rows over the index columns; a custom fold
-    // sees the FULL frame (incl. batch_id) for merge semantics that
-    // need it (aggregating sketch registers, recording folded_through)
-    val folded = fold.getOrElse((df: DataFrame) =>
-      df.select((bucketCols ++ cols).distinct.map(col): _*)
-        .distinct())(index)
-    folded
-      .withColumn("batch_id", lit(-1L))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(parts: _*).parquet(tmp.toString)
-    spark.read.parquet(tmp.toString)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(parts: _*).parquet(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    liveDirs.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, d), true)
-      ()
-    }
-    fs.delete(tmp, true)
-    // cached plans over the pre-compaction files must not outlive the
-    // fold (nor feed the count below)
-    spark.catalog.refreshByPath(path)
-    val after = spark.read.parquet(path).count()
-    (before, after)
+  private def writeBucketMeta(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, buckets: Long): Unit = {
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(dir, "_graft_buckets"), true)
+    try out.write(buckets.toString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 }

@@ -91,27 +91,14 @@ object DedupStream {
       bandBucketCount, BandCols, Dedup.bandTable, bandBucketAt)(
       BatchIndex.keepFirst(corpusPath, "doc_id", BandCols.tail))
 
-  /** Fold the band index's per-batch partitions into one distinct
-    * partition ([[BatchIndex.compact]] contract — stream stopped only).
-    * Bands are unique per doc so this is small-file folding, not
-    * duplicate removal. Cadence: run when
-    * [[BatchIndex.layoutReport]] reports `compactRecommended` (levels
-    * per bucket past [[BatchIndex.CompactAfterLevels]]) — the
-    * file-count counterweight to the B ∝ corpus sizing rule, measured
-    * in SCALING.md "Streaming compaction cadence".
+  /** The band index as [[BatchIndex.maintain]] sees it (also the
+    * graph leg's band index): distinct-folded, since bands are unique
+    * per doc and compaction is small-file folding, not duplicate
+    * removal. Read at call time, like [[bandBucketCount]]. Its cadence
+    * fires when levels per bucket pass [[BatchIndex.CompactAfterLevels]]
+    * — the file-count counterweight to the B ∝ corpus sizing rule,
+    * measured in SCALING.md "Streaming compaction cadence".
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): (Long, Long) =
-    BatchIndex.compactMulti(spark, indexPath, BandCols,
-      bucketCols = Seq("band_bucket"))
-
-  /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
-    * band index: diagnose layout, run the recommended compaction.
-    * Stream stopped + checkpoint committed only (the [[compactIndex]]
-    * contract) — callers run it between bounded runs.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[BatchIndex.Maintenance] =
-    BatchIndex.maintain(spark, indexPath, "band_bucket",
-      bandBucketCount, BandCols)
+  def BandIndex: BatchIndex.Index =
+    BatchIndex.Index.keyed(BandCols, bandBucketCount)
 }

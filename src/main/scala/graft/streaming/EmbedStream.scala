@@ -114,19 +114,7 @@ object EmbedStream {
       IndexCols, bucketTable, keyBucketColAt)(
       BatchIndex.keepFirst(corpusPath, "vec_id", IndexCols.tail))
 
-  /** Fold the LSH index's per-batch partitions into one distinct
-    * partition ([[BatchIndex.compact]] contract — stream stopped only).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): (Long, Long) =
-    BatchIndex.compactMulti(spark, indexPath, IndexCols,
-      bucketCols = Seq("band_bucket"))
-
-  /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
-    * LSH index — stream stopped + checkpoint committed only.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[BatchIndex.Maintenance] =
-    BatchIndex.maintain(spark, indexPath, "band_bucket", KeyBuckets,
-      IndexCols)
+  /** The LSH index as [[BatchIndex.maintain]] sees it. */
+  val LshIndex: BatchIndex.Index =
+    BatchIndex.Index.keyed(IndexCols, KeyBuckets)
 }

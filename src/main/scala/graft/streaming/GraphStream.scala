@@ -493,27 +493,4 @@ object GraphStream {
     cross.unionByName(internal)
       .withColumn("modality", lit(leg.modality))
   }
-
-  /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
-    * stream's band index — stream stopped + checkpoint committed only.
-    * The pair table's cadence is [[CorpusGraph.maintainPairs]] (wired
-    * separately — [[graft.RunStream]] runs it after the post-run
-    * audit, whose in-flight boundary detection reads un-folded batch
-    * ids); the corpus accretes one partition per batch too, but
-    * folding a PAYLOAD table is a deliberate storage rewrite, not a
-    * metadata repair — left to the operator.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      bandIndexPath: String,
-      foldThrough: Long = Long.MaxValue): Option[BatchIndex.Maintenance] =
-    // foldThrough = the last COMMITTED stored id (stats.lastCommitted
-    // + 1 at the RunStream seam): this stream writes bands BEFORE
-    // pairs inside a trigger, so an interrupted in-flight batch can
-    // have bands on disk with no pair evidence — folding those bands
-    // into -1 would make the replay's `batch_id < storedId` resend
-    // probe see its own first attempt, classify every doc re-sent,
-    // and silently never produce the batch's pairs
-    BatchIndex.maintain(spark, bandIndexPath, "band_bucket",
-      DedupStream.bandBucketCount, DedupStream.BandCols,
-      foldThrough = foldThrough)
 }

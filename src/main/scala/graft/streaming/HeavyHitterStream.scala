@@ -41,66 +41,36 @@ object HeavyHitterStream {
       true
     }
 
-  /** Screen batch rows a fold already merged — the [[BatchIndex
+  /** Served merged counters over everything ingested so far: one
+    * narrow index read, counters summed per symbol. Batch rows a fold
+    * already merged are screened out first
+    * ([[graft.ext.SketchIndex.screenFolded]] with an empty key: this
+    * index folds globally, no bucket level) — the [[BatchIndex
     * .compact]] crash window leaves the promoted `batch_id = -1` fold
     * AND its superseded batch partitions both visible, and this index
-    * SERVES BY SUMMING, so without a screen that window over-counts
-    * (breaking the "est ≤ exact, never over" MG guarantee) and a
-    * re-run compaction would double-count permanently. The shared
-    * [[graft.ext.SketchIndex.screenFolded]] discipline with an empty
-    * key (this index folds globally, no bucket level).
-    */
-  private def screenFolded(idx: DataFrame): DataFrame =
-    graft.ext.SketchIndex.screenFolded(idx, keyCols = Seq.empty)
-
-  /** Served merged counters over everything ingested so far: one
-    * narrow index read, counters summed per symbol (batch rows a fold
-    * already merged are screened out first — see [[screenFolded]]).
-    * Estimates carry the summed-MG guarantees (see object doc); they
-    * are under-estimates, never over.
+    * SERVES BY SUMMING, so without the screen that window over-counts
+    * (breaking the "est ≤ exact, never over" MG guarantee). Estimates
+    * carry the summed-MG guarantees (see object doc); they are
+    * under-estimates, never over.
     */
   def servedCounters(spark: SparkSession, indexPath: String): DataFrame =
-    screenFolded(
-      spark.read.option("mergeSchema", "true").parquet(indexPath))
+    graft.ext.SketchIndex.screenFolded(
+      spark.read.option("mergeSchema", "true").parquet(indexPath),
+      keyCols = Seq.empty)
       .groupBy("symbol").agg(sum("est").as("est"))
 
-  /** Fold per-batch counter rows to one row per symbol — stream
-    * stopped only. Counter summation is the exact merge, so served
-    * answers are identical before and after. The fold screens first
-    * (re-running a crashed compaction must not re-merge rows the old
-    * fold already counted) and records `folded_through` so serving
-    * can apply the same screen.
+  /** The counter index as [[BatchIndex.maintain]] sees it: one row
+    * per symbol after a fold, merged by summing counters through the
+    * screen-first merge (counter summation is the exact merge, so
+    * served answers are identical before and after; a
+    * distinct fold would leave the crash window double-counting). The
+    * index has no level above `batch_id` — one directory per batch,
+    * folded globally — so its bucket count is one.
     */
-  def compact(spark: SparkSession, indexPath: String): (Long, Long) =
-    BatchIndex.compact(spark, indexPath, Seq("symbol", "est"),
-      fold = Some { idx =>
-        screenFolded(idx)
-          .groupBy("symbol").agg(sum("est").as("est"),
-            max(greatest(coalesce(col("folded_through"), lit(-1L)),
-              col("batch_id"))).as("folded_through"))
-      })
-
-  /** The wired maintenance cadence for the counter index — the
-    * [[BatchIndex.maintain]] discipline with THIS stream's fold (a
-    * sum-served index must compact through the screen-first merge, or
-    * the crash window double-counts; see [[compact]]). The index has
-    * no bucket level — one directory per batch, folded globally — so
-    * the layout report runs with an empty bucket set and a denominator
-    * of one. Stream stopped + checkpoint committed only; None = no
-    * index yet.
-    */
-  def maintain(spark: SparkSession, indexPath: String)
-      : Option[BatchIndex.Maintenance] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(indexPath).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(indexPath)))
-      return None
-    val report = BatchIndex.layoutReportMulti(spark, indexPath,
-      Nil, 1L, 1L)
-    val compacted =
-      if (report.compactRecommended) Some(compact(spark, indexPath))
-      else None
-    Some(BatchIndex.Maintenance(report, compacted))
-  }
+  val CounterIndex: BatchIndex.Index = BatchIndex.Index(Seq(
+      BatchIndex.Component("", Nil,
+        BatchIndex.Fold.ScreenedMerge(Seq("symbol"),
+          Seq(sum("est").as("est"))),
+        BatchIndex.Buckets.Fixed(1L))),
+    resizable = true)
 }

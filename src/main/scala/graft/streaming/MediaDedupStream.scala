@@ -163,59 +163,4 @@ object MediaDedupStream {
         }
       } finally { cached.unpersist(); () }
     }
-
-  /** Fold the fingerprint index's per-batch partitions into one
-    * distinct partition per (modality, bucket)
-    * ([[Multimodal.compactMediaFpIndex]] — streams stopped only).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      foldThrough: Long = Long.MaxValue): (Long, Long) =
-    Multimodal.compactMediaFpIndex(spark, indexPath, foldThrough)
-
-  /** The wired maintenance cadence for the unified media fp index
-    * (the [[BatchIndex.maintain]] discipline over its VERSIONED,
-    * two-component layout): diagnose the data component's
-    * (modality, bucket) layout and the band sidecar's
-    * (modality, band_bucket) layout; one [[compactIndex]] (it folds
-    * both components) when either crosses the cadence. Streams
-    * stopped + checkpoints committed only. Returns the data
-    * component's report; None = no index yet. `foldThrough` bounds
-    * the fold to the caller's last fully-committed stored id — a
-    * GraphStream media leg appends fingerprints BEFORE its pairs
-    * land, so an interrupted trigger's fps must not fold into `-1`
-    * where the replay's `batch_id < storedId` resend probe would
-    * see them (the [[GraphStream.maintain]] hazard, media face).
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      foldThrough: Long = Long.MaxValue)
-      : Option[BatchIndex.Maintenance] = {
-    val root = graft.ext.Versioned.resolve(spark, indexPath)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/data")))
-      return None
-    def observed(p: String, cs: Seq[String]): Long =
-      spark.read.parquet(p)
-        .select(cs.map(org.apache.spark.sql.functions.col): _*)
-        .distinct().count()
-    val dataRep = BatchIndex.layoutReportMulti(spark, s"$root/data",
-      Seq("modality", "bucket"),
-      observed(s"$root/data", Seq("modality", "bucket")),
-      Multimodal.MediaFpBuckets)
-    val bandsDue =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")) &&
-        BatchIndex.layoutReportMulti(spark, s"$root/bands",
-          Seq("modality", "band_bucket"),
-          observed(s"$root/bands", Seq("modality", "band_bucket")),
-          Multimodal.mediaBandBucketCountOf(spark, root))
-          .compactRecommended
-    val compacted =
-      if (dataRep.compactRecommended || bandsDue)
-        Some(compactIndex(spark, indexPath, foldThrough))
-      else None
-    Some(BatchIndex.Maintenance(dataRep, compacted))
-  }
 }

@@ -73,27 +73,14 @@ object NoveltyStream {
       (kb.keys, nNovel)
     }
 
-  /** Compact the gram index: batches re-append grams the index already
-    * holds (the per-batch write cannot know), so after many ingests the
-    * index carries cross-partition duplicates — correctness-neutral
-    * (the scorer distincts the matched set before its probe join,
-    * [[graft.ext.TextAnalysis.noveltyAgainst]]) but scan cost grows past
-    * the distinct gram volume. Delegates to [[BatchIndex.compact]] —
-    * distinct-`h` fold into `batch_id = -1`, promoted via dynamic
-    * overwrite so the live path never stops existing; run only with the
-    * stream stopped (see the contract doc there). Returns
-    * (rows before, rows after).
+  /** The gram index as [[BatchIndex.maintain]] sees it. Batches
+    * re-append grams the index already holds (the per-batch write
+    * cannot know), so after many ingests it carries cross-partition
+    * duplicates — correctness-neutral (the scorer distincts the matched
+    * set before its probe join, [[graft.ext.TextAnalysis.noveltyAgainst]])
+    * but scan cost grows past the distinct gram volume; the distinct
+    * fold collapses them.
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): (Long, Long) =
-    BatchIndex.compactMulti(spark, indexPath, Seq("h"),
-      bucketCols = Seq("band_bucket"))
-
-  /** The wired maintenance cadence ([[BatchIndex.maintain]]) for the
-    * gram index — stream stopped + checkpoint committed only.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[BatchIndex.Maintenance] =
-    BatchIndex.maintain(spark, indexPath, "band_bucket", KeyBuckets,
-      Seq("h"))
+  val GramIndex: BatchIndex.Index =
+    BatchIndex.Index.keyed(Seq("h"), KeyBuckets)
 }

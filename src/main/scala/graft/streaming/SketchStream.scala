@@ -55,63 +55,24 @@ object SketchStream {
       } finally { rows.unpersist(); () }
     }
 
-  /** Fold the per-batch rows into one row per (day, event_type) —
-    * stream stopped only. [[BatchIndex.compact]] with the day bucket
-    * level and HLL-union fold semantics (union is lossless for HLL
-    * registers, so served estimates are identical before and after;
-    * exact `n_events` accounting across the compaction crash window is
-    * guarded at serve time — [[graft.ext.SketchIndex
-    * .distinctUsersOverRange]] ignores batch rows for any day that
-    * already carries a folded row).
+  /** The sketch index as [[BatchIndex.maintain]] sees it: one row
+    * per (day, event_type) after a fold, merged by HLL union and an
+    * `n_events` sum through the screen-first merge (union is lossless
+    * for HLL registers, so served estimates are identical before and
+    * after; a distinct fold would leave `n_events`
+    * double-countable across the crash window, which
+    * [[graft.ext.SketchIndex.distinctUsersOverRange]] screens at
+    * serve time). `day` is a SEMANTIC level: the bucket count is the
+    * observed day count and no resize is ever reported (byte drift
+    * from many events per day must never print an actionable-looking
+    * resize for it).
     */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): (Long, Long) =
-    BatchIndex.compact(spark, indexPath,
-      Seq("day", "event_type", "sketch", "n_events"), Some("day"),
-      Some { idx =>
-        // screen first so re-running a CRASHED compaction (fold rows +
-        // their superseded batch rows both on disk) cannot double-count
-        // n_events into the new fold; record the highest batch id each
-        // (day, type) fold merged so serving can apply the same screen
-        graft.ext.SketchIndex.screenFolded(idx)
-          .groupBy("day", "event_type")
-          .agg(hll_union_agg(col("sketch")).as("sketch"),
-            sum("n_events").as("n_events"),
-            max(greatest(coalesce(col("folded_through"), lit(-1L)),
-              col("batch_id"))).as("folded_through"))
-      })
-
-  /** The wired maintenance cadence for the sketch index — the
-    * [[BatchIndex.maintain]] discipline with THIS stream's fold: a
-    * sum-served index must compact through the screen-first merge
-    * above (the default distinct fold would leave `n_events`
-    * double-countable across the crash window), so the hook diagnoses
-    * with [[BatchIndex.layoutReportMulti]] and runs [[compact]] when
-    * the cadence fires. `day` is a SEMANTIC partition level — a
-    * resize is meaningless, so the report's denominator and floor are
-    * both the observed day count (the byte rule can never recommend
-    * "fewer days"). Stream stopped + checkpoint committed only;
-    * None = no index yet.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[BatchIndex.Maintenance] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(indexPath).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(indexPath)))
-      return None
-    val days = spark.read.parquet(indexPath)
-      .select(col("day")).distinct().count()
-    val raw = BatchIndex.layoutReportMulti(spark, indexPath,
-      Seq("day"), days, days)
-    // the rebucket arm is suppressed, not just floored: `day` is a
-    // semantic level, so byte drift (many events per day) must never
-    // print an actionable-looking resize for it
-    val report = raw.copy(rebucketRecommended = false,
-      recommendedBuckets = days)
-    val compacted =
-      if (report.compactRecommended) Some(compact(spark, indexPath))
-      else None
-    Some(BatchIndex.Maintenance(report, compacted))
-  }
+  val HllIndex: BatchIndex.Index = BatchIndex.Index(Seq(
+      BatchIndex.Component("", Seq("day"),
+        BatchIndex.Fold.ScreenedMerge(Seq("event_type"),
+          Seq(hll_union_agg(col("sketch")).as("sketch"),
+            sum("n_events").as("n_events"))),
+        // no resize is reported, so the floor is never read
+        BatchIndex.Buckets.Observed(1L))),
+    resizable = false)
 }

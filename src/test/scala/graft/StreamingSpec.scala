@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventPipeline, JdbcSink, MicroBatch}
+import graft.streaming.{BatchIndex, EventPipeline, JdbcSink, MicroBatch}
 
 /** The exact column contract of Spark's Kafka source (key/value are
   * binary; topic/partition/offset/timestamp/timestampType metadata) —
@@ -565,12 +565,6 @@ class StreamingSpec extends AnyFunSuite {
     start(stats2).awaitTermination(60000)
     assert(stats2.total.value == 3) // NOT 8: offsets recovered
     assert(spark.read.parquet(mainDir).count() == 8)
-
-    // compaction: many micro-batch files -> bounded file count
-    val (before, after) = graft.ops.PipelineRun.compact(
-      spark, mainDir, targetRows = 1000)
-    assert(after <= before)
-    assert(spark.read.parquet(mainDir).count() == 8) // content preserved
   }
 
   test("sink fallback picks parquet without complete JDBC config") {
@@ -728,7 +722,8 @@ class StreamingSpec extends AnyFunSuite {
 
     // compaction folds per-batch partitions into batch_id=-1 and the
     // compacted index still screens: a near-copy of vector 1 is dropped
-    val (cb, ca) = EmbedStream.compactIndex(spark, indexDir)
+    val (cb, ca) =
+      BatchIndex.compact(spark, EmbedStream.LshIndex, indexDir).get
     assert(ca == cb) // (vec_id, table, bucket) rows are already unique
     EmbedStream.processBatch(
       Seq((20L, perturb(b)), (21L, vec())).toDF("vec_id", "embedding")
@@ -926,7 +921,8 @@ class StreamingSpec extends AnyFunSuite {
     // collapse to one row each; the compacted index is a valid log —
     // later batches still score identically against it
     val distinctGrams = idx.select("h").distinct().count() // pre-swap read
-    val (before, after) = NoveltyStream.compactIndex(spark, indexDir)
+    val (before, after) =
+      BatchIndex.compact(spark, NoveltyStream.GramIndex, indexDir).get
     assert(after < before)
     assert(after == distinctGrams)
     val b2 = docs((6L, s"$boiler w1 w2 w3"))
@@ -974,7 +970,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(acct == 4L)
 
     // compact folds batch rows per day; answers identical after
-    SketchStream.compact(spark, indexDir)
+    BatchIndex.compact(spark, SketchStream.HllIndex, indexDir)
     assert(est(100L, 100L) == 3L && est(100L, 101L) == 4L)
     val rowsPerDay = spark.read.parquet(indexDir)
       .groupBy("day").count().collect()
@@ -999,14 +995,14 @@ class StreamingSpec extends AnyFunSuite {
       .head().getLong(0)
     assert(acctAll() == 5L, "crashed-compaction leftovers double-counted")
     // re-running the compaction folds cleanly over the crashed state
-    SketchStream.compact(spark, indexDir)
+    BatchIndex.compact(spark, SketchStream.HllIndex, indexDir)
     assert(est(100L, 100L) == 3L && est(100L, 101L) == 5L)
     assert(acctAll() == 5L)
 
     // maintenance hook: a just-compacted layout is healthy — the
     // diagnostics report without folding, and the day denominator is
     // the observed semantic partition count (resize never recommended)
-    val m = SketchStream.maintain(spark, indexDir).get
+    val m = BatchIndex.maintain(spark, SketchStream.HllIndex, indexDir).get
     assert(m.compacted.isEmpty, s"${m.report}")
     assert(m.report.buckets == 2L && !m.rebucketRecommended)
   }
@@ -1048,7 +1044,7 @@ class StreamingSpec extends AnyFunSuite {
     HeavyHitterStream.processBatch(b1, 1L, indexDir, fresh)
     assert(served() == est)
     // compaction is an exact fold: answers identical, one row/symbol
-    HeavyHitterStream.compact(spark, indexDir)
+    BatchIndex.compact(spark, HeavyHitterStream.CounterIndex, indexDir)
     assert(served() == est)
     assert(spark.read.parquet(indexDir).groupBy("symbol").count()
       .filter(col("count") > 1).count() == 0)
@@ -1071,7 +1067,7 @@ class StreamingSpec extends AnyFunSuite {
     // (the fold screens first, so the old fold row + its superseded
     // batch rows merge without double-counting, and folded_through
     // advances past the newest merged batch)
-    HeavyHitterStream.compact(spark, indexDir)
+    BatchIndex.compact(spark, HeavyHitterStream.CounterIndex, indexDir)
     assert(served() == withZ,
       "re-run compaction double-counted superseded batch rows")
     assert(spark.read.parquet(indexDir).groupBy("symbol").count()
@@ -1081,7 +1077,8 @@ class StreamingSpec extends AnyFunSuite {
     // let the HOOK fold it — it must run this stream's screen-first
     // merge (sum-served: the default distinct fold would leave the
     // crash window double-countable), and serving must not move
-    assert(HeavyHitterStream.maintain(spark, indexDir).get
+    assert(BatchIndex.maintain(spark, HeavyHitterStream.CounterIndex,
+        indexDir).get
       .compacted.isEmpty, "healthy layout must not compact")
     // symbols are first characters — every batch lands "n n", so the
     // summed estimate for n must be exactly 2 × 18 batches
@@ -1089,7 +1086,8 @@ class StreamingSpec extends AnyFunSuite {
       HeavyHitterStream.processBatch(docs("n n"), b, indexDir, stats)
     }
     val pre = served()
-    val m = HeavyHitterStream.maintain(spark, indexDir).get
+    val m = BatchIndex.maintain(spark, HeavyHitterStream.CounterIndex,
+      indexDir).get
     assert(m.report.maxLevelsPerBucket >
       graft.streaming.BatchIndex.CompactAfterLevels, s"${m.report}")
     assert(m.compacted.nonEmpty, "cadence crossed but hook idle")
@@ -1280,6 +1278,9 @@ class StreamingSpec extends AnyFunSuite {
     val s2 = new graft.streaming.CurateStream.CurateStats(spark)
     val d2 = Files.createTempDirectory("cb2").toString
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    // the data lands before start: an AvailableNow query fixes its end
+    // offset when it starts, so data added later may not be processed
+    mem.addData((1L, good + " alpha"), (2L, other))
     val q = graft.streaming.CurateStream.start(
       mem.toDF().toDF("doc_id", "text"),
       s"$d2/corpus", s"$d2/index", s"$d2/ckpt", s2,
@@ -1287,7 +1288,6 @@ class StreamingSpec extends AnyFunSuite {
       benchmark = Some(
         Seq((0L, ("  " + good + "  ").toUpperCase, "en"))
           .toDF("doc_id", "text", "lang")))
-    mem.addData((1L, good + " alpha"), (2L, other))
     q.awaitTermination(60000)
     assert(s2.decontamDropped.value == 1,
       "start() must train the Bloom on CANONICAL benchmark text")
@@ -1350,8 +1350,8 @@ class StreamingSpec extends AnyFunSuite {
 
     // BatchIndex compaction: per-batch partitions fold into batch_id=-1
     // and the compacted index still screens later batches
-    val (cBefore, cAfter) =
-      graft.streaming.DedupStream.compactIndex(spark, indexDir)
+    val (cBefore, cAfter) = BatchIndex.compact(spark,
+      graft.streaming.DedupStream.BandIndex, indexDir).get
     assert(cAfter == cBefore) // bands unique per doc: pure folding
     assert(spark.read.parquet(indexDir).select("batch_id").distinct()
       .collect().map(_.getAs[Number]("batch_id").longValue()).toSet
@@ -1388,7 +1388,8 @@ class StreamingSpec extends AnyFunSuite {
         s"${d.getParent.getName}/batch_id=2")
     b2Dirs.foreach(d => org.apache.hadoop.fs.FileUtil.copy(fs, d, fs,
       mirror(d), false, spark.sparkContext.hadoopConfiguration))
-    graft.streaming.DedupStream.compactIndex(spark, indexDir)
+    BatchIndex.compact(spark, graft.streaming.DedupStream.BandIndex,
+      indexDir)
     b2Dirs.foreach(d => org.apache.hadoop.fs.FileUtil.copy(fs,
       mirror(d), fs, d, false,
       spark.sparkContext.hadoopConfiguration))
@@ -1571,11 +1572,13 @@ class StreamingSpec extends AnyFunSuite {
       .toSet
 
     // maintenance: healthy layout reports without compacting; a forced
-    // compactIndex folds BOTH components into batch_id=-1 and serving
+    // compaction folds BOTH components into batch_id=-1 and serving
     // (term hits AND BM25 scores, doclen included) is bit-identical
-    val m0 = graft.streaming.SearchStream.maintain(spark, idx).get
+    val m0 = BatchIndex.maintain(spark,
+      graft.streaming.SearchStream.PostingsIndex, idx).get
     assert(m0.compacted.isEmpty, s"${m0.report}")
-    val (pb, pa) = graft.streaming.SearchStream.compactIndex(spark, idx)
+    val (pb, pa) = BatchIndex.compact(spark,
+      graft.streaming.SearchStream.PostingsIndex, idx).get
     assert(pb == pa, "postings rows are unique per (token, doc, batch)")
     assert(spark.read.parquet(s"$idx/postings").select("batch_id")
       .distinct().collect().map(_.getAs[Number](0).longValue()).toSet
@@ -1617,11 +1620,71 @@ class StreamingSpec extends AnyFunSuite {
       "replayed folded batch double-served BM25 tf/df/dl")
     // re-running the compaction over the crash-window state folds
     // cleanly (the screen runs inside the fold too)
-    graft.streaming.SearchStream.compactIndex(spark, idx)
+    BatchIndex.compact(spark, graft.streaming.SearchStream.PostingsIndex,
+      idx)
     assert(graft.ext.Search.bm25Served(spark, idx, Seq("spark"))
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
       .toSet == bm25AfterIngest)
+  }
+
+  // the observed bucket count is the layout scan's own per-bucket
+  // rollup, so a maintain pass is its components' scans and nothing more
+  test("search maintain pass: its jobs are the two layout scans, no distinct-count job") {
+    import spark.implicits._
+    import graft.streaming.SearchStream
+    val idx = Files.createTempDirectory("postjobs").toString
+    graft.ext.Search.writeSearchIndex(
+      Seq((0L, "spark join")).toDF("doc_id", "text"), idx)
+    (0L to 2L).foreach(b => SearchStream.processBatch(
+      Seq((b + 1, s"spark w$b")).toDF("doc_id", "text"), b, idx))
+    val ctx = spark.sparkContext
+    // (jobs started, SQL actions run) while `body` runs
+    def measure(body: => Unit): (Int, Seq[String]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val onJob = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      val onExec = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = { actions.add(f); () }
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = { actions.add(f); () }
+      }
+      org.apache.spark.GraftListenerBus.drain(ctx)
+      ctx.addSparkListener(onJob)
+      spark.listenerManager.register(onExec)
+      try { body; org.apache.spark.GraftListenerBus.drain(ctx) }
+      finally {
+        ctx.removeSparkListener(onJob)
+        spark.listenerManager.unregister(onExec)
+      }
+      (jobs.get, actions.asScala.toSeq)
+    }
+    def only(c: BatchIndex.Component) =
+      BatchIndex.Index(Seq(c), resizable = true)
+    val Seq(postings, doclen) = SearchStream.PostingsIndex.components
+    var m: Option[BatchIndex.Maintenance] = None
+    val (passJobs, passActions) = measure {
+      m = BatchIndex.maintain(spark, SearchStream.PostingsIndex, idx)
+    }
+    assert(m.get.compacted.isEmpty, s"${m.get.report}")
+    // one action per component scan, no count
+    assert(passActions == Seq("head", "head"), s"$passActions")
+    val (postingsJobs, _) =
+      measure(BatchIndex.report(spark, only(postings), idx))
+    val (doclenJobs, _) = measure(BatchIndex.report(spark, only(doclen), idx))
+    assert(passJobs == postingsJobs + doclenJobs,
+      s"pass $passJobs jobs vs scans $postingsJobs + $doclenJobs")
+    // the rollup's group count is the distinct bucket count
+    assert(m.get.report.buckets == spark.read.parquet(s"$idx/postings")
+      .select("bucket").distinct().count())
   }
 
   test("anomaly monitor folds batches idempotently and alerts once per hour") {
@@ -1683,7 +1746,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.{BatchIndex, MediaDedupStream}
     val corpusDir = Files.createTempDirectory("mfm_corpus").toString
     val indexDir = Files.createTempDirectory("mfm_index").toString
-    assert(MediaDedupStream.maintain(spark, indexDir).isEmpty,
+    assert(BatchIndex.maintain(spark, Multimodal.MediaFpIndex, indexDir)
+        .isEmpty,
       "no index yet → nothing to maintain")
     val stats = new MediaDedupStream.MediaStats(spark)
     // 18 one-image batches, ids ≡ 3 (mod MediaFpBuckets) so every
@@ -1698,7 +1762,7 @@ class StreamingSpec extends AnyFunSuite {
     val rowsBefore = spark.read
       .parquet(s"${graft.ext.Versioned.resolve(spark, indexDir)}/data")
       .count()
-    val m = MediaDedupStream.maintain(spark, indexDir).get
+    val m = BatchIndex.maintain(spark, Multimodal.MediaFpIndex, indexDir).get
     assert(m.report.maxLevelsPerBucket > BatchIndex.CompactAfterLevels,
       s"${m.report}")
     assert(m.compacted.isDefined, "the cadence must RUN the compact")
@@ -1706,7 +1770,8 @@ class StreamingSpec extends AnyFunSuite {
     // stream still screens (a twin of an indexed doc is rejected)
     val root = graft.ext.Versioned.resolve(spark, indexDir)
     assert(spark.read.parquet(s"$root/data").count() == rowsBefore)
-    val m2 = MediaDedupStream.maintain(spark, indexDir).get
+    val m2 =
+      BatchIndex.maintain(spark, Multimodal.MediaFpIndex, indexDir).get
     assert(m2.compacted.isEmpty && m2.report.batchLevels == 1L,
       s"${m2.report}")
     val twinOf3 = 3L // pngHashPayload(3) again under a fresh id? ids
@@ -1789,8 +1854,8 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(10L, 20L, 30L))
 
     // compaction folds to batch_id=-1 and the index still screens
-    val (mBefore, mAfter) =
-      MediaDedupStream.compactIndex(spark, indexDir)
+    val (mBefore, mAfter) = BatchIndex.compact(spark,
+      graft.ext.Multimodal.MediaFpIndex, indexDir).get
     assert(mAfter == mBefore) // one fp row per doc, all unique
     MediaDedupStream.processBatch(
       batchDf((37L, img(37)), (40L, img(40))),
@@ -1894,7 +1959,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(corpusDir).count() == 6L)
 
     // pair partitions compact (streams stopped) without moving results
-    val (pb, pa) = CorpusGraph.compactPairs(spark, graphDir)
+    val (pb, pa) =
+      BatchIndex.compact(spark, CorpusGraph.PairIndex, graphDir).get
     assert(pb == pa, "stream batches held no duplicate pair rows")
     assert(CorpusGraph.readLabels(spark, graphDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == labels)
@@ -1921,7 +1987,8 @@ class StreamingSpec extends AnyFunSuite {
     // re-running the compaction over the crash-window state (fold +
     // superseded batch dir both on disk) folds cleanly: the screen
     // runs inside the fold too
-    val (_, pa2) = CorpusGraph.compactPairs(spark, graphDir)
+    val (_, pa2) =
+      BatchIndex.compact(spark, CorpusGraph.PairIndex, graphDir).get
     assert(pa2 == pa && evidence() == evFolded,
       "re-run compaction duplicated superseded pair rows")
 
@@ -1961,9 +2028,8 @@ class StreamingSpec extends AnyFunSuite {
       Dedup.bandTable(b3).withColumn("band_bucket",
         graft.streaming.DedupStream.bandBucketAt(bandB)),
       4L, bandsDir, bucketCol = Some("band_bucket"))
-    graft.streaming.BatchIndex.compactMulti(spark, bandsDir,
-      Seq("doc_id", "band_idx", "band_hash"), Seq("band_bucket"),
-      foldThrough = 3L)
+    BatchIndex.compact(spark, graft.streaming.DedupStream.BandIndex,
+      bandsDir, foldThrough = 3L)
     assert(spark.read.parquet(bandsDir).select("batch_id").distinct()
       .collect().map(_.getAs[Number](0).longValue()).toSet
       == Set(-1L, 4L), "bounded fold must keep the in-flight partition")
@@ -2699,11 +2765,14 @@ class StreamingSpec extends AnyFunSuite {
         .withColumn("band_bucket", DedupStream.bandBucketAt(4L)),
       0L, drifted, bucketCol = Some("band_bucket"))
     BatchIndex.ensureBucketMeta(spark, drifted, 4L)
-    val r0 = BatchIndex.layoutReport(spark, drifted, "band_bucket", 4L)
+    // the band layout at an explicit default bucket count
+    def bandsAt(b: Long) =
+      BatchIndex.Index.keyed(Seq("doc_id", "band_idx", "band_hash"), b)
+    val r0 = BatchIndex.report(spark, bandsAt(4L), drifted).get
     assert(!r0.rebucketRecommended,
       s"KB-sized buckets are healthy under the 16 MB target: $r0")
-    val r1 = BatchIndex.layoutReport(spark, drifted, "band_bucket", 4L,
-      targetBytes = 4096L)
+    val r1 = BatchIndex.report(spark, bandsAt(4L), drifted,
+      targetBytes = 4096L).get
     assert(r1.buckets == 4L && r1.rows == 12000L, s"$r1")
     assert(r1.bytes > 4L * 4096L * BatchIndex.RebucketDriftFactor
       && r1.rebucketRecommended, s"$r1")
@@ -2722,13 +2791,12 @@ class StreamingSpec extends AnyFunSuite {
         i.toLong, accreted, bucketCol = Some("band_bucket"))
     }
     BatchIndex.ensureBucketMeta(spark, accreted, 4L)
-    val r2 = BatchIndex.layoutReport(spark, accreted, "band_bucket", 4L)
+    val r2 = BatchIndex.report(spark, bandsAt(4L), accreted).get
     assert(r2.batchLevels == 18L && r2.maxLevelsPerBucket == 18L, s"$r2")
     assert(r2.compactRecommended && !r2.rebucketRecommended, s"$r2")
     // compaction resets the level count and the recommendation
-    BatchIndex.compact(spark, accreted,
-      Seq("doc_id", "band_idx", "band_hash"), Some("band_bucket"))
-    val r3 = BatchIndex.layoutReport(spark, accreted, "band_bucket", 4L)
+    BatchIndex.compact(spark, bandsAt(4L), accreted)
+    val r3 = BatchIndex.report(spark, bandsAt(4L), accreted).get
     assert(r3.batchLevels == 1L && !r3.compactRecommended, s"$r3")
     assert(r3.rows == r2.rows, s"compaction must not drop rows: $r3")
 
@@ -2743,7 +2811,7 @@ class StreamingSpec extends AnyFunSuite {
         i.toLong, wide, bucketCol = Some("band_bucket"))
     }
     BatchIndex.ensureBucketMeta(spark, wide, 32768L)
-    val r4 = BatchIndex.layoutReport(spark, wide, "band_bucket", 32768L)
+    val r4 = BatchIndex.report(spark, bandsAt(32768L), wide).get
     assert(r4.buckets == 32768L && r4.batchLevels == 2L, s"$r4")
     assert(r4.compactRecommended && r4.maxLevelsPerBucket <= 2L,
       s"file budget must trigger at B x levels = 65536: $r4")
@@ -2788,7 +2856,7 @@ class StreamingSpec extends AnyFunSuite {
         DedupStream.processBatch(batch, i.toLong, aC, aI, sA)
         DedupStream.processBatch(batch, i.toLong, bC, bI, sB)
         if (i == 17) { // 18 levels > CompactAfterLevels(16): cadence due
-          val m = DedupStream.maintain(spark, aI).get
+          val m = BatchIndex.maintain(spark, DedupStream.BandIndex, aI).get
           assert(
             m.report.maxLevelsPerBucket > BatchIndex.CompactAfterLevels,
             s"${m.report}")
@@ -2797,8 +2865,8 @@ class StreamingSpec extends AnyFunSuite {
             "KB-sized fixture index must never recommend a rewrite")
           maintained = true
           // post-compact: one folded level remains
-          val after = BatchIndex.layoutReport(spark, aI, "band_bucket",
-            DedupStream.bandBucketCount)
+          val after =
+            BatchIndex.report(spark, DedupStream.BandIndex, aI).get
           assert(after.batchLevels == 1L && !after.compactRecommended,
             s"$after")
         }
@@ -2818,12 +2886,43 @@ class StreamingSpec extends AnyFunSuite {
     assert(indexContent(aI) == indexContent(bI),
       "maintained and unmaintained indexes must hold the same bands")
     // an absent index (stream never committed) is a no-op, not a crash
-    assert(DedupStream.maintain(spark, "/tmp/graft_mh_never_written")
-      .isEmpty)
+    assert(BatchIndex.maintain(spark, DedupStream.BandIndex,
+      "/tmp/graft_mh_never_written").isEmpty)
     // healthy layouts report without compacting — the hook is safe to
     // call after EVERY bounded run
-    val m2 = DedupStream.maintain(spark, aI).get
+    val m2 = BatchIndex.maintain(spark, DedupStream.BandIndex, aI).get
     assert(m2.compacted.isEmpty && !m2.rebucketRecommended)
+  }
+
+  // the layout scan and the batch_id fold live in BatchIndex; a leg
+  // that diagnoses or compacts its own index is a visible edit here
+  test("src/main has one index maintenance path") {
+    import java.nio.file.Paths
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .toList
+      finally files.close()
+    def filesWith(text: String): Set[String] = sources
+      .filter(f => Files.readString(f).contains(text))
+      .map(_.getFileName.toString).toSet
+    // the layout scan: bytes from the filesystem, levels from the cells
+    assert(filesWith("getContentSummary") == Set("BatchIndex.scala"))
+    assert(filesWith("countDistinct(col(\"batch_id\"))")
+      == Set("BatchIndex.scala"))
+    // the fold primitive: the write of the -1 partition
+    assert(filesWith("withColumn(\"batch_id\", lit(-1L))")
+      == Set("BatchIndex.scala"))
+    val ownMaintenance = """def (maintain|compact)\w*""".r
+    sources.filter { f =>
+      val n = f.getFileName.toString
+      (n.endsWith("Stream.scala")
+        && f.getParent.getFileName.toString == "streaming") ||
+        n == "CorpusGraph.scala" || n == "Multimodal.scala"
+    }.foreach { f =>
+      assert(ownMaintenance.findFirstIn(Files.readString(f)).isEmpty,
+        s"${f.getFileName} defines its own maintain or compact")
+    }
   }
 
   test("full-rewrite layout ops merge schemas: rebucket/migrate keep late-added columns") {
@@ -2895,7 +2994,7 @@ class StreamingSpec extends AnyFunSuite {
     write(21L to 40L, 1L)
     // fold batches 0-1 into a -1 partition, then land a live batch on
     // top — the read must union the fold level with real levels
-    BatchIndex.compactMulti(spark, idx, cols, Seq("band_bucket"))
+    BatchIndex.compact(spark, BatchIndex.Index.keyed(cols, 64L), idx)
     write(41L to 60L, 2L)
 
     val present = spark.read.parquet(idx)
