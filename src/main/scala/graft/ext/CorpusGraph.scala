@@ -830,7 +830,7 @@ object CorpusGraph {
     // Scratch.scopedAll would accrete unreleased MEMORY_AND_DISK cache
     // entries per invocation (exactly the unbounded-cache failure the
     // scopedAll doc warns about). Scopes nest, so a caller that already
-    // runs one (GraphStream's trigger body, ScaleProbe) is unaffected —
+    // runs one (every MicroBatch.commit body, ScaleProbe) is unaffected —
     // the frames just release at this inner boundary instead.
     Scratch.scopedAll {
     val pairs = readPairsAt(spark, root).select("doc_a", "doc_b")

@@ -761,18 +761,27 @@ object Multimodal {
     * fp_hi)`.
     */
   def imageFpFromPayload(batch: DataFrame,
-      codec: MediaCodec[ImageAHash] = PngAHashDecoder): DataFrame = {
+      codec: MediaCodec[ImageAHash] = PngAHashDecoder): DataFrame =
+    fpFromPayload(batch, codec, "image/png", "ahash_lo", "ahash_hi")
+
+  /** The one payload-decode step of the `*FpFromPayload` extractors:
+    * `(doc_id, payload)` rows as `mime` media records through `codec`,
+    * its `lo`/`hi` fingerprint columns renamed `fp_lo`/`fp_hi`.
+    */
+  private def fpFromPayload[
+      T <: Product : scala.reflect.runtime.universe.TypeTag](
+      batch: DataFrame, codec: MediaCodec[T], mime: String, lo: String,
+      hi: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     batch.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(it => codec.decodePartition(it.map { case (id, p) =>
-        MediaRecord(id, p, "image/png",
-          if (p == null) 0L else p.length.toLong)
+        MediaRecord(id, p, mime, if (p == null) 0L else p.length.toLong)
       }))
       .toDF()
-      .select(col("doc_id"), col("decoded"),
-        col("ahash_lo").as("fp_lo"), col("ahash_hi").as("fp_hi"))
+      .select(col("doc_id"), col("decoded"), col(lo).as("fp_lo"),
+        col(hi).as("fp_hi"))
   }
 
   /** Perceptual image near-dup — see [[bandedHamming64]] for the
@@ -951,18 +960,8 @@ object Multimodal {
     * through the same fpExtract seam.
     */
   def audioFpFromPayload(batch: DataFrame,
-      codec: MediaCodec[AudioFp] = WavFpDecoder): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    batch.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => codec.decodePartition(it.map { case (id, p) =>
-        MediaRecord(id, p, "audio/wav",
-          if (p == null) 0L else p.length.toLong)
-      }))
-      .toDF()
-      .select(col("doc_id"), col("decoded"), col("fp_lo"), col("fp_hi"))
-  }
+      codec: MediaCodec[AudioFp] = WavFpDecoder): DataFrame =
+    fpFromPayload(batch, codec, "audio/wav", "fp_lo", "fp_hi")
 
   /** Perceptual audio near-dup — the [[bandedHamming64]] screen over
     * [[audioFingerprints]]; a one-sample nudge moves one window's
@@ -1210,18 +1209,8 @@ object Multimodal {
     * ingests clips through the same exact-verified screen.
     */
   def videoFpFromPayload(batch: DataFrame,
-      codec: MediaCodec[VideoFp] = GvidFpDecoder): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    batch.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(it => codec.decodePartition(it.map { case (id, p) =>
-        MediaRecord(id, p, "video/x-gvid",
-          if (p == null) 0L else p.length.toLong)
-      }))
-      .toDF()
-      .select(col("doc_id"), col("decoded"), col("fp_lo"), col("fp_hi"))
-  }
+      codec: MediaCodec[VideoFp] = GvidFpDecoder): DataFrame =
+    fpFromPayload(batch, codec, "video/x-gvid", "fp_lo", "fp_hi")
 
   /** Perceptual video near-dup — the [[bandedHamming64]] screen over
     * [[videoFingerprints]]; the twin's one-frame flicker moves exactly
@@ -1640,13 +1629,21 @@ object Multimodal {
     * rebuild folds them into its staged batch_id=0.
     */
   def appendToMediaFpIndex(batch: DataFrame, path: String,
+      batchId: Long): Unit =
+    appendFpRows(mediaFpRows(batch), path, batchId)
+
+  /** The one append step of both fingerprint ingests: persist the
+    * batch's bucketed fp `rows` (decoded once, they land in data AND
+    * derive the band sidecar partition), land them under the root's
+    * (modality, bucket, batch_id=<id>) data partitions, then the
+    * sidecar's, then check the append landed in the served snapshot.
+    */
+  private def appendFpRows(rows: DataFrame, path: String,
       batchId: Long): Unit = {
     require(batchId > 0, "batch_id 0 is the base build")
-    val spark = batch.sparkSession
+    val spark = rows.sparkSession
     val root = Versioned.resolve(spark, path)
-    // decode ONCE: the same rows land in data AND derive the band
-    // sidecar partition
-    val rows = mediaFpRows(batch).persist()
+    rows.persist()
     try {
       rows
         .withColumn("batch_id", lit(batchId))
@@ -1697,12 +1694,15 @@ object Multimodal {
     */
   def backfillMediaFpBands(spark: org.apache.spark.sql.SparkSession,
       root: String): Long = {
-    val data = Versioned.readOr(Option.empty[DataFrame])(
-        Some(readMediaFpData(spark, root)))
-      .getOrElse(return 0L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
+    // probe first: reading an absent data dir (a stream's first media
+    // batch) would log Spark's missing-metadata warning with a stack
+    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/data"))) return 0L
+    val data = Versioned.readOr(Option.empty[DataFrame])(
+        Some(readMediaFpData(spark, root)))
+      .getOrElse(return 0L)
     val have: Set[Long] =
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")))
         Set.empty
@@ -1777,27 +1777,13 @@ object Multimodal {
     */
   def appendFingerprintsToMediaFpIndex(fps: DataFrame, modality: String,
       path: String, batchId: Long): Unit = {
-    require(batchId > 0, "batch_id 0 is the base build")
     require(MediaFpModalities.contains(modality),
       s"unknown modality: $modality")
-    val spark = fps.sparkSession
-    val root = Versioned.resolve(spark, path)
-    val rows = fps.select(col("doc_id"), col("decoded"), col("fp_lo"),
+    appendFpRows(fps.select(col("doc_id"), col("decoded"), col("fp_lo"),
         col("fp_hi"))
       .withColumn("modality", lit(modality))
-      .withColumn("bucket", pmod(col("doc_id"), lit(MediaFpBuckets)))
-      .persist()
-    try {
-      rows
-        .withColumn("batch_id", lit(batchId))
-        .repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("modality", "bucket", "batch_id")
-        .parquet(s"$root/data")
-      writeBandSidecarPartition(rows, batchId, root)
-    } finally { rows.unpersist(); () }
-    Versioned.assertAppendLanded(spark, path, root, "media fp")
+      .withColumn("bucket", pmod(col("doc_id"), lit(MediaFpBuckets))),
+      path, batchId)
   }
 
   /** The unified media fp index as [[graft.streaming.BatchIndex

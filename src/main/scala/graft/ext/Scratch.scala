@@ -30,7 +30,7 @@ import org.apache.spark.sql.Dataset
   * pressure, and CacheManager reuse keeps the dedup family's shared
   * fragments warm across the suite.
   *
-  * Without an active scope (library use, streaming, specs) [[track]]
+  * Without an active scope (library use, specs) [[track]]
   * is a no-op — callers outside a harness keep full control of frame
   * lifetimes. Registration happens at plan-construction time on the
   * scope's thread, which is also where `persist`/`localCheckpoint`
@@ -182,13 +182,17 @@ object Scratch {
   }
 
   /** [[scoped]] with the keep-plain-persists policy INVERTED: release
-    * EVERY tracked frame, plain persists included. The right scope for
-    * a streaming foreachBatch body — each micro-batch's plans are
-    * unique (new batch data in every leaf), so the cross-query
-    * plan-match reuse that justifies keeping plain persists in the
-    * harness scope cannot happen, and over hours of triggers the
-    * untouched cache entries (MEMORY_AND_DISK: evicted blocks land on
-    * DISK and stay until unpersist) accumulate without bound.
+    * EVERY tracked frame, plain persists included. The scope of every
+    * streaming foreachBatch body: [[graft.streaming.MicroBatch.commit]]
+    * runs each body in it, which makes the commit gate the one owner
+    * of a micro-batch's frames — each micro-batch's plans are unique
+    * (new batch data in every leaf), so the cross-query plan-match
+    * reuse that justifies keeping plain persists in the harness scope
+    * cannot happen, and over hours of triggers the untouched cache
+    * entries (MEMORY_AND_DISK: evicted blocks land on DISK and stay
+    * until unpersist) accumulate without bound. Outside streaming it
+    * bounds one measured unit of work (ScaleProbe's touched audit, the
+    * closure rounds of [[CorpusGraph]]).
     */
   def scopedAll[T](body: => T): T = {
     val outer = tl.get()

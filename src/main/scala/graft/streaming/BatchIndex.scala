@@ -69,7 +69,8 @@ object BatchIndex {
     * ~4-rows/doc band table is a multi-GB driver allocation shipped
     * to every executor — an OOM where a shuffle join just pays one
     * exchange of the same rows. ~512k docs ≈ 2 M band rows ≈ 100 MB
-    * serialized, comfortably broadcastable with headroom.
+    * serialized, comfortably broadcastable with headroom. Every leg
+    * applies it through one hint, [[MicroBatch.Batch.bc]].
     */
   val TriggerBroadcastMaxDocs = 524288L
 
@@ -174,23 +175,33 @@ object BatchIndex {
     */
   def readHitPartitions(spark: SparkSession, path: String,
       partCol: String, values: Seq[Long],
-      empty: => DataFrame): DataFrame = {
+      empty: => DataFrame): DataFrame =
+    listPartitions(spark, path, partCol).fold(empty) { case (present, _) =>
+      val hit = values.distinct.filter(present.contains)
+      if (hit.isEmpty) empty
+      else Versioned.readOr(empty)(spark.read.option("basePath", path)
+        .parquet(hit.map(v => s"$path/$partCol=$v"): _*))
+    }
+
+  /** The one top-level listing of a value-partitioned layout: the
+    * `partCol=` values present as dirs directly under `path`, plus
+    * whether any `name=value` dir sits there at all. None = the path
+    * does not exist.
+    */
+  private def listPartitions(spark: SparkSession, path: String,
+      partCol: String): Option[(Set[Long], Boolean)] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       p.toUri, spark.sparkContext.hadoopConfiguration)
-    val entries =
-      try fs.listStatus(p)
-      catch { case _: java.io.FileNotFoundException => return empty }
+    val dirs =
+      try fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => return None }
     val prefix = s"$partCol="
-    val present = entries.iterator.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith(prefix))
+    val present = dirs.iterator.filter(_.startsWith(prefix))
       .flatMap(n => scala.util.Try(
         n.stripPrefix(prefix).toLong).toOption)
       .toSet
-    val hit = values.distinct.filter(present.contains)
-    if (hit.isEmpty) empty
-    else Versioned.readOr(empty)(spark.read.option("basePath", path)
-      .parquet(hit.map(v => s"$path/$partCol=$v"): _*))
+    Some((present, dirs.exists(_.contains("="))))
   }
 
   /** The bucket values present as `bucketCol=` partition dirs directly
@@ -203,27 +214,14 @@ object BatchIndex {
     * as "no hit buckets" would screen against nothing.
     */
   private def presentBuckets(spark: SparkSession, path: String,
-      bucketCol: String): Option[Set[Long]] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      p.toUri, spark.sparkContext.hadoopConfiguration)
-    val entries =
-      try fs.listStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val prefix = s"$bucketCol="
-    val present = entries.iterator.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith(prefix))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(prefix).toLong).toOption)
-      .toSet
-    require(present.nonEmpty
-        || !entries.exists(e => e.isDirectory
-          && e.getPath.getName.contains("=")),
-      s"index at $path predates the $bucketCol-bucketed layout — " +
-        "run BatchIndex.migrateToBucketed (stream stopped) before " +
-        "resuming this checkpoint")
-    Some(present)
-  }
+      bucketCol: String): Option[Set[Long]] =
+    listPartitions(spark, path, bucketCol).map { case (present, anyPart) =>
+      require(present.nonEmpty || !anyPart,
+        s"index at $path predates the $bucketCol-bucketed layout — " +
+          "run BatchIndex.migrateToBucketed (stream stopped) before " +
+          "resuming this checkpoint")
+      present
+    }
 
   /** Read the key-bucket count an index was WRITTEN with — its layout
     * metadata sidecar (`<path>/_graft_buckets`; the `_` prefix keeps
@@ -698,67 +696,43 @@ object BatchIndex {
       spark.sparkContext.longAccumulator(s"${leg}_$passedName")
   }
 
-  /** One key-bucketed micro-batch as its leg's screen sees it: the
-    * cached batch `rows`, its index `keys`, and the stored `index`
-    * visible to `batchId`, pruned to the buckets those keys hit.
-    * [[keep]] persists a frame until the batch's index write is done
-    * (that write may still read it).
-    */
-  final class KeyedBatch private[BatchIndex] (val batchId: Long,
-      val rows: DataFrame, val keys: DataFrame, val index: DataFrame) {
-    private val held = scala.collection.mutable.Buffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
-    private[BatchIndex] def release(): Unit = held.foreach(_.unpersist())
-  }
-
   /** The per-trigger ingest of a key-bucketed index leg
-    * ([[DedupStream]], [[EmbedStream]], [[NoveltyStream]]), behind the
-    * [[MicroBatch.commit]] gate: cache and count the batch (an empty
-    * batch commits nothing); resolve the index's bucket count
-    * ([[bucketCountForWrite]], sized from the batch's `keysOf` rows for
-    * a new index); read the stored rows in the batch's hit buckets
-    * ([[readBeforeBuckets]] over `cols`); run the leg's `screen`, which
-    * writes the leg's own output and returns the key rows to index and
-    * its `passed` count; stamp the layout ([[ensureBucketMeta]]); land
-    * those keys under `bucketAt(b)` ([[writePartition]]); then count.
-    * The index write follows the output write, so a replay between the
-    * two rewrites both, and the index read excludes the batch's own
+    * ([[DedupStream]], [[EmbedStream]], [[NoveltyStream]]) over the
+    * [[MicroBatch.commit]] handle `b` (an empty batch commits nothing):
+    * key the batch (`keysOf`, kept for the batch); resolve the index's
+    * bucket count ([[bucketCountForWrite]], sized from those key rows
+    * for a new index); read the stored rows in the batch's hit buckets
+    * ([[readBeforeBuckets]] over `cols`); run the leg's `screen` over
+    * the handle, the keys and that index, which writes the leg's own
+    * output and returns the key rows to index and its `passed` count;
+    * stamp the layout ([[ensureBucketMeta]]); land those keys under
+    * `bucketAt` of that count ([[writePartition]]); then count. The
+    * index write follows the output write, so a replay between the two
+    * rewrites both, and the index read excludes the batch's own
     * partition.
     */
-  def ingestKeyed(batch: DataFrame, batchId: Long, indexPath: String,
+  def ingestKeyed(b: MicroBatch.Batch, indexPath: String,
       stats: KeyedStats, defaultBuckets: Long, cols: Seq[String],
       keysOf: DataFrame => DataFrame, bucketAt: Long => Column)(
-      screen: KeyedBatch => (DataFrame, Long)): Unit =
-    MicroBatch.commit(stats, batchId) {
-      val spark = batch.sparkSession
-      // one materialization of the micro-batch: every action below
-      // reuses it instead of re-reading the source per action
-      val cached = batch.persist()
-      try {
-        val nSeen = cached.count()
-        nSeen > 0 && {
-          val keys = keysOf(cached).persist()
-          try {
-            val b = bucketCountForWrite(spark, indexPath, defaultBuckets,
-              keys.count())
-            // rows in other buckets cannot join a batch key by
-            // construction, so the pruned read is lossless
-            val hit = keys.select(bucketAt(b)).distinct()
-              .collect().map(_.getLong(0)).toSeq
-            val kb = new KeyedBatch(batchId, cached, keys,
-              readBeforeBuckets(spark, indexPath, batchId, cols,
-                keysOf(cached.limit(0)), KeyBucketCol, hit))
-            try {
-              val (indexed, nPassed) = screen(kb)
-              ensureBucketMeta(spark, indexPath, b)
-              writePartition(indexed.withColumn(KeyBucketCol, bucketAt(b)),
-                batchId, indexPath, bucketCol = Some(KeyBucketCol))
-              stats.seen.add(nSeen); stats.passed.add(nPassed)
-              true
-            } finally kb.release()
-          } finally { keys.unpersist(); () }
-        }
-      } finally { cached.unpersist(); () }
+      screen: (MicroBatch.Batch, DataFrame, DataFrame) => (DataFrame, Long))
+      : Boolean =
+    b.n > 0 && {
+      val spark = b.rows.sparkSession
+      val keys = b.keep(keysOf(b.rows))
+      val buckets = bucketCountForWrite(spark, indexPath, defaultBuckets,
+        keys.count())
+      // rows in other buckets cannot join a batch key by construction,
+      // so the pruned read is lossless
+      val hit = keys.select(bucketAt(buckets)).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      val index = readBeforeBuckets(spark, indexPath, b.id, cols,
+        keysOf(b.rows.limit(0)), KeyBucketCol, hit)
+      val (indexed, nPassed) = screen(b, keys, index)
+      ensureBucketMeta(spark, indexPath, buckets)
+      writePartition(indexed.withColumn(KeyBucketCol, bucketAt(buckets)),
+        b.id, indexPath, bucketCol = Some(KeyBucketCol))
+      stats.seen.add(b.n); stats.passed.add(nPassed)
+      true
     }
 
   /** The keep-first candidate screen of the dedup legs
@@ -768,13 +742,13 @@ object BatchIndex {
     * `corpusPath`, and only their keys extend the index.
     */
   def keepFirst(corpusPath: String, id: String, keyCols: Seq[String])(
-      kb: KeyedBatch): (DataFrame, Long) = {
-    val drops = kb.keep(dropSet(kb.keys, kb.index, id, keyCols))
-    val survivors =
-      kb.keep(kb.rows.join(broadcast(drops), Seq(id), "left_anti"))
+      b: MicroBatch.Batch, keys: DataFrame,
+      index: DataFrame): (DataFrame, Long) = {
+    val drops = b.bc(b.keep(dropSet(keys, index, id, keyCols)))
+    val survivors = b.keep(b.rows.join(drops, Seq(id), "left_anti"))
     val nKept = survivors.count()
-    writePartition(survivors, kb.batchId, corpusPath)
-    (kb.keys.join(broadcast(drops), Seq(id), "left_anti"), nKept)
+    writePartition(survivors, b.id, corpusPath)
+    (keys.join(drops, Seq(id), "left_anti"), nKept)
   }
 
   /** Ids of batch `keys` rows that share all `keyCols` with an `index`

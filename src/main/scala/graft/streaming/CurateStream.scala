@@ -35,15 +35,18 @@ object CurateStream {
     /** Docs the benchmark-decontam Bloom gate dropped. */
     val decontamDropped =
       spark.sparkContext.longAccumulator("curate_decontam_dropped")
-    /** Delegated dedup-stage stats; its `seen` is the gate's survivor
-      * count, its `kept` the corpus-bound survivor count.
+    /** Dedup-stage stats, whose ledger gates the whole funnel; its
+      * `seen` is the gate's survivor count, its `kept` the corpus-bound
+      * survivor count.
       */
     val dedup = new DedupStream.DedupStats(spark)
   }
 
   /** One idempotent micro-batch: canonicalize, quality-gate,
-    * optionally decontam-screen, then delegate to the dedup ingest
-    * (which re-checks the replay guard itself).
+    * optionally decontam-screen, then the dedup ingest
+    * ([[DedupStream.ingest]]) — all under ONE [[MicroBatch.commit]] of
+    * the dedup stage's ledger, so every frame the stages cache
+    * releases with the batch however it ends.
     *
     * `bench` is the benchmark's trained Bloom
     * ([[Curation.BloomState]] — positions AND the bit-space they were
@@ -62,43 +65,32 @@ object CurateStream {
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String, stats: CurateStats,
       bench: Option[Curation.BloomState] = None): Unit =
-    if (batchId > stats.dedup.lastCommitted) {
-      val canon = batch
-        .withColumn("text", Curation.normalizeText(col("text")))
-        .persist()
-      try {
-        val nRaw = canon.count()
-        val gated = TextAnalysis.qualityFilter(canon)
-        val (screened, nDropped) = bench match {
-          case None => (gated, 0L)
-          case Some(state) =>
-            val g = gated.persist()
-            val out = g.join(
-              Curation.bloomFlagged(g, state.bits, state.mBits),
-              Seq("doc_id"), "left_anti")
-              .persist()
-            // materialize before unpersisting the gated parent; the
-            // dropped count is gate-survivors minus screen-survivors
-            val kept = out.count()
-            val dropped = g.count() - kept
-            g.unpersist()
-            (out, dropped)
-        }
-        try {
-          DedupStream.processBatch(screened,
-            batchId, corpusPath, indexPath, stats.dedup)
-          // counters advance only AFTER the delegate returns (the
-          // commit-then-count discipline every stream here follows): a
-          // failing batch throws out of the line above, so a same-driver
-          // retry can never double-count seen. An all-gated batch
-          // returns without committing (nothing to write) — still
-          // exactly one seen.add, since no exception means no retry.
-          stats.seen.add(nRaw)
-          stats.decontamDropped.add(nDropped)
-        } finally {
-          if (bench.isDefined) { screened.unpersist(); () }
-        }
-      } finally { canon.unpersist(); () }
+    MicroBatch.commit(stats.dedup, batchId, batch
+        .withColumn("text", Curation.normalizeText(col("text")))) { b =>
+      val gated = TextAnalysis.qualityFilter(b.rows)
+      // the dedup stage's handle: the gated batch, or what the
+      // benchmark screen leaves of it; the dropped count is
+      // gate-survivors minus screen-survivors
+      val (screened, nDropped) = bench match {
+        case None => (b.narrow(gated), 0L)
+        case Some(state) =>
+          val g = b.keep(gated)
+          val out = b.narrow(g.join(
+            Curation.bloomFlagged(g, state.bits, state.mBits),
+            Seq("doc_id"), "left_anti"))
+          (out, g.count() - out.n)
+      }
+      val committed = DedupStream.ingest(screened, corpusPath, indexPath,
+        stats.dedup)
+      // counters advance only AFTER the dedup stage returns (the
+      // commit-then-count discipline every stream here follows): a
+      // failing batch throws out of the line above, so a same-driver
+      // retry can never double-count seen. An all-gated batch commits
+      // nothing (nothing to write) — still exactly one seen.add, since
+      // no exception means no retry.
+      stats.seen.add(b.n)
+      stats.decontamDropped.add(nDropped)
+      committed
     }
 
   /** Attach the curation ingest to a documents stream; `benchmark`

@@ -87,7 +87,16 @@ object DedupStream {
     */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String, stats: DedupStats): Unit =
-    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats,
+    MicroBatch.commit(stats, batchId, batch)(
+      ingest(_, corpusPath, indexPath, stats))
+
+  /** [[processBatch]]'s body over a batch handle — the dedup stage
+    * [[CurateStream]] runs under its own commit of the same ledger.
+    * True when the batch had rows to commit.
+    */
+  private[streaming] def ingest(b: MicroBatch.Batch, corpusPath: String,
+      indexPath: String, stats: DedupStats): Boolean =
+    BatchIndex.ingestKeyed(b, indexPath, stats,
       bandBucketCount, BandCols, Dedup.bandTable, bandBucketAt)(
       BatchIndex.keepFirst(corpusPath, "doc_id", BandCols.tail))
 

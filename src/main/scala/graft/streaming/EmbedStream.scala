@@ -110,9 +110,10 @@ object EmbedStream {
     */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       indexPath: String, stats: EmbedStats): Unit =
-    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats, KeyBuckets,
-      IndexCols, bucketTable, keyBucketColAt)(
-      BatchIndex.keepFirst(corpusPath, "vec_id", IndexCols.tail))
+    MicroBatch.commit(stats, batchId, batch)(
+      BatchIndex.ingestKeyed(_, indexPath, stats, KeyBuckets,
+        IndexCols, bucketTable, keyBucketColAt)(
+        BatchIndex.keepFirst(corpusPath, "vec_id", IndexCols.tail)))
 
   /** The LSH index as [[BatchIndex.maintain]] sees it. */
   val LshIndex: BatchIndex.Index =

@@ -183,7 +183,9 @@ object EventPipeline {
     * commit rename. REBALANCE rather than `repartition(cols)`: AQE
     * coalesces the small post-shuffle partitions and splits a skewed one,
     * so a hot directory does not serialize a large batch. The shuffle
-    * runs once, into the cache that feeds the report and both writes.
+    * runs once, into the batch the gate caches (the [[MicroBatch.Batch]]
+    * rows), which feeds the report and both writes and is released with
+    * the batch however it ends.
     *
     * Emptiness is read from the run report's total — an empty batch
     * writes nothing and moves no counter. A separate `isEmpty` would be
@@ -191,27 +193,24 @@ object EventPipeline {
     */
   def processBatch(batch: DataFrame, batchId: Long, mainPath: String,
       quarantinePath: String, stats: RunStats): Unit =
-    MicroBatch.commit(stats, batchId) {
-      val cached = batch.withColumn("batch_id", lit(batchId))
-        .withColumn("event_date", to_date(col("event_timestamp")))
-        .hint("rebalance", col("event_date"), col("country"), col("plan"))
-        .persist()
-      try {
-        val r = Reports.runReport(cached).head()
-        r.getLong(0) > 0 && {
-          val (main, quarantine) =
-            Quarantine.split(cached, !col("dq_passed"))
-          Seq(main -> mainPath, quarantine -> quarantinePath).foreach {
-            case (flow, path) => flow.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id", "event_date", "country", "plan").parquet(path)
-          }
-          // both writes committed — only now touch the report counters
-          stats.total.add(r.getLong(0)); stats.late.add(r.getLong(1))
-          stats.dqFailed.add(r.getLong(2)); stats.drifted.add(r.getLong(3))
-          true
+    MicroBatch.commit(stats, batchId,
+        batch.withColumn("batch_id", lit(batchId))
+          .withColumn("event_date", to_date(col("event_timestamp")))
+          .hint("rebalance", col("event_date"), col("country"),
+            col("plan"))) { b =>
+      val r = Reports.runReport(b.rows).head()
+      r.getLong(0) > 0 && {
+        val (main, quarantine) = Quarantine.split(b.rows, !col("dq_passed"))
+        Seq(main -> mainPath, quarantine -> quarantinePath).foreach {
+          case (flow, path) => flow.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", "event_date", "country", "plan").parquet(path)
         }
-      } finally { cached.unpersist(); () }
+        // both writes committed — only now touch the report counters
+        stats.total.add(r.getLong(0)); stats.late.add(r.getLong(1))
+        stats.dqFailed.add(r.getLong(2)); stats.drifted.add(r.getLong(3))
+        true
+      }
     }
 
   /** T3+T4+O5 — dual parquet sink via foreachBatch: one micro-batch

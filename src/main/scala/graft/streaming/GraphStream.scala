@@ -136,13 +136,6 @@ object GraphStream {
     */
   val CorpusDocRowBytes = 1024L
 
-  /** Test seam over [[BatchIndex.TriggerBroadcastMaxDocs]]:
-    * StreamingSpec pins stored pairs/labels identical THROUGH the
-    * no-forced-broadcast macro-batch path by setting this to 0.
-    */
-  @volatile private[graft] var triggerBroadcastBound: Long =
-    BatchIndex.TriggerBroadcastMaxDocs
-
   /** One idempotent micro-batch ingest of a document stream (the
     * foreachBatch body of the leg, extracted so StreamingSpec can
     * replay it).
@@ -159,24 +152,24 @@ object GraphStream {
     * moment they ingest, not at the next batch roll-up. (Two separate
     * streams could not do this: their pair writes would collide on
     * the graph's `batch_id` partitions.)
+    *
+    * [[MicroBatch.commit]] owns the batch's frames — those kept here
+    * through its handle (the media legs' included, adopted from their
+    * helper threads) and the library-internal candidate/shingle/delta
+    * persists inside incrementalNearDups and CorpusGraph.append — and
+    * releases them all when the batch ends: a micro-batch's plans are
+    * unique per trigger, so none has cross-batch reuse value.
     */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       bandIndexPath: String, graphPath: String,
       stats: GraphStats, mediaLegs: Seq[MediaLeg] = Nil,
       fpIndexPath: Option[String] = None,
       auditTouched: Boolean = false): Unit =
-    // release-everything scratch scope: a micro-batch's plans are
-    // unique per trigger, so every persist here (the batch bands below
-    // AND the library-internal candidate/shingle/delta persists inside
-    // incrementalNearDups / CorpusGraph.append) has zero cross-batch
-    // reuse value — without the scope they would accrete cache+disk
-    // blocks for the stream's lifetime
-    MicroBatch.commit(stats, batchId)(graft.ext.Scratch.scopedAll {
+    MicroBatch.commit(stats, batchId, batch) { b =>
       require(mediaLegs.isEmpty || fpIndexPath.isDefined,
         "media legs need the unified fingerprint index path")
       val spark = batch.sparkSession
       val storedId = batchId + 1 // 0 is reserved for batch base builds
-      val cached = batch.persist()
       val trace = sys.env.contains("SPARK_GRAFT_TRACE")
       var tPrev = System.nanoTime()
       def mark(phase: String): Unit = if (trace) {
@@ -184,210 +177,197 @@ object GraphStream {
         println(f"[gs-trace] $phase%-14s ${(now - tPrev) / 1e9}%6.2fs")
         tPrev = now
       }
-      try {
-        val nSeen = cached.count()
-        nSeen > 0 && {
-          mark("count")
-          // batch-derived frames broadcast only while the trigger is
-          // trigger-sized; a catch-up macro-batch takes plain joins (the
-          // BatchIndex.TriggerBroadcastMaxDocs rationale) — results are
-          // identical, spec-pinned through this path
-          val smallTrigger = nSeen <= triggerBroadcastBound
-          def bc(df: DataFrame): DataFrame =
-            if (smallTrigger) broadcast(df) else df
-          val batchBands = graft.ext.Scratch.track(
-            Dedup.bandTable(cached).persist())
-          // THIS band index's / corpus's bucket counts: recorded layout
-          // metadata, or the auto-sizing rule over the first batch for
-          // NEW artifacts (band rows for the band index, docs for the
-          // corpus) — probing with any other count would address the
-          // wrong buckets
-          val bandB = BatchIndex.bucketCountForWrite(spark, bandIndexPath,
-            DedupStream.bandBucketCount, batchBands.count())
-          val corpusB = BatchIndex.bucketCountForWrite(spark, corpusPath,
-            CorpusBuckets, nSeen, rowBytes = CorpusDocRowBytes)
-          // pruned index read: only the band buckets this batch's hashes
-          // hit (the [[DedupStream.BandBuckets]] layout) — every use
-          // below is an equi-join on (band_idx, band_hash) or a probe
-          // for ids sharing those hashes, so rows in other buckets
-          // cannot contribute. Persisted for the trigger (scopedAll
-          // releases it): the candidate-bucket discovery, the
-          // re-sent-id probe, and incrementalNearDups' candidate join
-          // all read this one pruned scan.
-          val hitBandBuckets = batchBands
-            .select(DedupStream.bandBucketAt(bandB).as("band_bucket"))
-            .distinct()
-            .collect().map(_.getLong(0)).toSeq
-          mark("hitBuckets")
-          val indexBands = graft.ext.Scratch.track(
-            BatchIndex.readBeforeBuckets(spark, bandIndexPath,
-              storedId, DedupStream.BandCols, batchBands.limit(0),
-              "band_bucket", hitBandBuckets).persist())
-          // re-sent ids: a doc_id already in the stored band index has
-          // been ingested — screening it again would put the SAME doc on
-          // both sides of incrementalNearDups, whose shingle union then
-          // doubles its rows and inflates every jaccard it touches
-          // (2i/(2na+nb−2i) — borderline non-dups would enter the graph
-          // as false pair evidence), and it would land a second corpus
-          // row. Drop such rows: their evidence already exists. (Bands
-          // are a pure function of text, so an identical re-send always
-          // collides with its own stored rows; a CHANGED text under a
-          // reused doc_id is an upstream contract violation — doc ids
-          // are immutable identities here.)
-          val resentIds = graft.ext.Scratch.track(indexBands
-            .join(bc(cached.select("doc_id").distinct()),
-              Seq("doc_id"), "left_semi")
-            .select("doc_id").distinct().persist())
-          val nResent = resentIds.count()
-          mark("resentProbe")
-          val fresh =
-            if (nResent == 0L) cached
-            else graft.ext.Scratch.track(cached
-              .join(bc(resentIds), Seq("doc_id"), "left_anti")
-              .persist())
-          val freshBands =
-            if (nResent == 0L) batchBands
-            else graft.ext.Scratch.track(batchBands
-              .join(bc(resentIds), Seq("doc_id"), "left_anti")
-              .persist())
-          // corpus side of candidate verification: the band join names
-          // the candidate index docs FIRST (hash-sized tables), their
-          // bucket set prunes the corpus read to ≤ min(candidates,
-          // buckets) partitions, and the replay-excluding batch_id
-          // filter keeps a recovery replay from screening against its
-          // own first attempt — per-trigger corpus IO is candidate-
-          // bucket-sized, never a full corpus rescan
-          val candBuckets = indexBands
-            .join(bc(freshBands
-              .select("band_idx", "band_hash").distinct()),
-              Seq("band_idx", "band_hash"))
-            .select(pmod(col("doc_id"), lit(corpusB)).as("bucket"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          mark("candBuckets")
-          val corpusBefore = BatchIndex.readBeforeBuckets(spark,
-            corpusPath, storedId, cached.columns.toIndexedSeq,
-            cached.limit(0), "bucket", candBuckets)
-          val cross = Dedup.incrementalNearDups(
-              corpusBefore, fresh, indexBands = Some(indexBands),
-              broadcastBatch = smallTrigger)
-            .filter(col("batch_doc") =!= col("index_doc")) // belt+braces
-            .select(least(col("batch_doc"), col("index_doc")).as("doc_a"),
-              greatest(col("batch_doc"), col("index_doc")).as("doc_b"))
-          val internal = Dedup.minhashNearDups(fresh,
-              bands = Some(freshBands))
-            .select("doc_a", "doc_b")
-          val textPairs = cross.unionByName(internal)
-            .withColumn("modality", lit("text"))
-          // perceptual legs: each decodes once, extends the unified fp
-          // index, and contributes its pairs to the SAME graph append.
-          // Multiple legs run CONCURRENTLY (each on its own thread over
-          // the shared session): a leg's actions — decode count, hit-
-          // bucket collect, fp append — are many small jobs that leave
-          // the executor pool underused, so serial legs pay the queue
-          // tax thrice; concurrency overlaps them (the intra-trigger
-          // face of the six-leg FAIR fix, measured in SCALING.md
-          // "graphmm3"). Index WRITES inside the legs stay serialized
-          // ([[fpAppendLock]] in mediaLegPairs) — each leg writes only
-          // its own modality partitions, but the shared band-sidecar
-          // backfill and layout metadata must not race. Scratch frames
-          // are collected per helper thread and adopted into THIS
-          // trigger's scope, so they release at the trigger boundary as
-          // before — after the pair plans they back were consumed.
-          val legPairs: Seq[DataFrame] =
-            if (mediaLegs.isEmpty) Nil
-            else if (mediaLegs.sizeIs == 1) {
-              val p = mediaLegPairs(spark, mediaLegs.head, fresh,
-                fpIndexPath.get, storedId, stats, smallTrigger)
-              mark(s"leg:${mediaLegs.head.modality}")
-              Seq(p)
-            } else {
-              import scala.concurrent.{Await, ExecutionContext, Future}
-              import scala.concurrent.duration.Duration
-              import scala.util.{Failure, Success, Try}
-              val pool = java.util.concurrent.Executors
-                .newFixedThreadPool(mediaLegs.size)
-              implicit val ec: ExecutionContext =
-                ExecutionContext.fromExecutor(pool)
-              val futs = mediaLegs.map { leg =>
-                Future {
-                  val t0 = System.nanoTime()
-                  val r = graft.ext.Scratch.collectTracked(
-                    mediaLegPairs(spark, leg, fresh, fpIndexPath.get,
-                      storedId, stats, smallTrigger))
-                  if (trace) println(f"[gs-trace] leg:${leg.modality}%-10s "
-                    + f"${(System.nanoTime() - t0) / 1e9}%6.2fs (concurrent)")
-                  r
-                }
+      val nSeen = b.n
+      nSeen > 0 && {
+        mark("count")
+        val batchBands = b.keep(Dedup.bandTable(b.rows))
+        // THIS band index's / corpus's bucket counts: recorded layout
+        // metadata, or the auto-sizing rule over the first batch for
+        // NEW artifacts (band rows for the band index, docs for the
+        // corpus) — probing with any other count would address the
+        // wrong buckets
+        val bandB = BatchIndex.bucketCountForWrite(spark, bandIndexPath,
+          DedupStream.bandBucketCount, batchBands.count())
+        val corpusB = BatchIndex.bucketCountForWrite(spark, corpusPath,
+          CorpusBuckets, nSeen, rowBytes = CorpusDocRowBytes)
+        // pruned index read: only the band buckets this batch's hashes
+        // hit (the [[DedupStream.BandBuckets]] layout) — every use
+        // below is an equi-join on (band_idx, band_hash) or a probe
+        // for ids sharing those hashes, so rows in other buckets
+        // cannot contribute. Kept for the batch: the
+        // candidate-bucket discovery, the
+        // re-sent-id probe, and incrementalNearDups' candidate join
+        // all read this one pruned scan.
+        val hitBandBuckets = batchBands
+          .select(DedupStream.bandBucketAt(bandB).as("band_bucket"))
+          .distinct()
+          .collect().map(_.getLong(0)).toSeq
+        mark("hitBuckets")
+        val indexBands = b.keep(BatchIndex.readBeforeBuckets(spark,
+          bandIndexPath, storedId, DedupStream.BandCols,
+          batchBands.limit(0), "band_bucket", hitBandBuckets))
+        // re-sent ids: a doc_id already in the stored band index has
+        // been ingested — screening it again would put the SAME doc on
+        // both sides of incrementalNearDups, whose shingle union then
+        // doubles its rows and inflates every jaccard it touches
+        // (2i/(2na+nb−2i) — borderline non-dups would enter the graph
+        // as false pair evidence), and it would land a second corpus
+        // row. Drop such rows: their evidence already exists. (Bands
+        // are a pure function of text, so an identical re-send always
+        // collides with its own stored rows; a CHANGED text under a
+        // reused doc_id is an upstream contract violation — doc ids
+        // are immutable identities here.)
+        val resentIds = b.keep(indexBands
+          .join(b.bc(b.rows.select("doc_id").distinct()),
+            Seq("doc_id"), "left_semi")
+          .select("doc_id").distinct())
+        val nResent = resentIds.count()
+        mark("resentProbe")
+        val fresh =
+          if (nResent == 0L) b.rows
+          else b.keep(b.rows.join(b.bc(resentIds), Seq("doc_id"),
+            "left_anti"))
+        val freshBands =
+          if (nResent == 0L) batchBands
+          else b.keep(batchBands.join(b.bc(resentIds), Seq("doc_id"),
+            "left_anti"))
+        // corpus side of candidate verification: the band join names
+        // the candidate index docs FIRST (hash-sized tables), their
+        // bucket set prunes the corpus read to ≤ min(candidates,
+        // buckets) partitions, and the replay-excluding batch_id
+        // filter keeps a recovery replay from screening against its
+        // own first attempt — per-trigger corpus IO is candidate-
+        // bucket-sized, never a full corpus rescan
+        val candBuckets = indexBands
+          .join(b.bc(freshBands
+            .select("band_idx", "band_hash").distinct()),
+            Seq("band_idx", "band_hash"))
+          .select(pmod(col("doc_id"), lit(corpusB)).as("bucket"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        mark("candBuckets")
+        val corpusBefore = BatchIndex.readBeforeBuckets(spark,
+          corpusPath, storedId, b.rows.columns.toIndexedSeq,
+          b.rows.limit(0), "bucket", candBuckets)
+        val cross = Dedup.incrementalNearDups(
+            corpusBefore, fresh, indexBands = Some(indexBands),
+            broadcastBatch = b.small)
+          .filter(col("batch_doc") =!= col("index_doc")) // belt+braces
+          .select(least(col("batch_doc"), col("index_doc")).as("doc_a"),
+            greatest(col("batch_doc"), col("index_doc")).as("doc_b"))
+        val internal = Dedup.minhashNearDups(fresh,
+            bands = Some(freshBands))
+          .select("doc_a", "doc_b")
+        val textPairs = cross.unionByName(internal)
+          .withColumn("modality", lit("text"))
+        // perceptual legs: each decodes once, extends the unified fp
+        // index, and contributes its pairs to the SAME graph append.
+        // Multiple legs run CONCURRENTLY (each on its own thread over
+        // the shared session): a leg's actions — decode count, hit-
+        // bucket collect, fp append — are many small jobs that leave
+        // the executor pool underused, so serial legs pay the queue
+        // tax thrice; concurrency overlaps them (the intra-trigger
+        // face of the six-leg FAIR fix, measured in SCALING.md
+        // "graphmm3"). Index WRITES inside the legs stay serialized
+        // ([[fpAppendLock]] in mediaLegPairs) — each leg writes only
+        // its own modality partitions, but the shared band-sidecar
+        // backfill and layout metadata must not race. A leg's kept
+        // frames are collected on its helper thread and adopted into
+        // THIS trigger's scope, so they release at the trigger
+        // boundary — after the pair plans they back were consumed.
+        val legPairs: Seq[DataFrame] =
+          if (mediaLegs.isEmpty) Nil
+          else if (mediaLegs.sizeIs == 1) {
+            val p = mediaLegPairs(b, mediaLegs.head, fresh,
+              fpIndexPath.get, storedId, stats)
+            mark(s"leg:${mediaLegs.head.modality}")
+            Seq(p)
+          } else {
+            import scala.concurrent.{Await, ExecutionContext, Future}
+            import scala.concurrent.duration.Duration
+            import scala.util.{Failure, Success, Try}
+            val pool = java.util.concurrent.Executors
+              .newFixedThreadPool(mediaLegs.size)
+            implicit val ec: ExecutionContext =
+              ExecutionContext.fromExecutor(pool)
+            val futs = mediaLegs.map { leg =>
+              Future {
+                val t0 = System.nanoTime()
+                val r = graft.ext.Scratch.collectTracked(
+                  mediaLegPairs(b, leg, fresh, fpIndexPath.get,
+                    storedId, stats))
+                if (trace) println(f"[gs-trace] leg:${leg.modality}%-10s "
+                  + f"${(System.nanoTime() - t0) / 1e9}%6.2fs (concurrent)")
+                r
               }
-              // settle ALL legs before adopting/rethrowing: a fail-fast
-              // await would leak the successful legs' collected frames
-              val settled: Seq[Try[(DataFrame,
-                  Seq[org.apache.spark.sql.Dataset[_]])]] =
-                try Await.result(
-                  Future.sequence(futs.map(_.transform(Success(_)))),
-                  Duration.Inf)
-                finally pool.shutdown()
-              settled.foreach {
-                case Success((_, frames)) => graft.ext.Scratch.adopt(frames)
-                case Failure(_) => ()
-              }
-              settled.collectFirst { case Failure(e) => throw e }
-              mark("legs(conc)")
-              settled.map(_.get._1)
             }
-          val batchPairs = legPairs.foldLeft(textPairs)(_.unionByName(_))
-          // EVERY fresh doc lands (evidence-preserving — no near-dup
-          // drops; only exact id re-sends are deduplicated), bucketed
-          // for the pruned read-back above; pairs and relabel go
-          // through the graph's own idempotent append
-          BatchIndex.ensureBucketMeta(spark, corpusPath, corpusB)
-          BatchIndex.writePartition(
-            fresh.withColumn("bucket",
-              pmod(col("doc_id"), lit(corpusB))),
-            storedId, corpusPath, bucketCol = Some("bucket"))
-          BatchIndex.ensureBucketMeta(spark, bandIndexPath, bandB)
-          BatchIndex.writePartition(
-            freshBands.withColumn("band_bucket",
-              DedupStream.bandBucketAt(bandB)),
-            storedId, bandIndexPath, bucketCol = Some("band_bucket"))
-          mark("writes")
-          // no pre-count of batchPairs: append persists its own
-          // projection of the plan and its report carries the row count,
-          // so counting here would just materialize the same pairs plan
-          // (decode included) one extra time per trigger
-          val report = CorpusGraph.append(spark, graphPath, batchPairs,
-            storedId)
-          mark("graphAppend")
-          stats.seen.add(nSeen)
-          stats.resent.add(nResent)
-          stats.pairs.add(report.batchPairRows)
-          if (report.routedFullRelabel) stats.routedAppends.add(1L)
-          if (report.graphMembers > 0L) {
-            val ratio =
-              report.touchedMembers.toDouble / report.graphMembers
-            if (ratio > stats.maxTouchedRatio)
-              stats.maxTouchedRatio = ratio
+            // settle ALL legs before adopting/rethrowing: a fail-fast
+            // await would leak the successful legs' collected frames
+            val settled: Seq[Try[(DataFrame,
+                Seq[org.apache.spark.sql.Dataset[_]])]] =
+              try Await.result(
+                Future.sequence(futs.map(_.transform(Success(_)))),
+                Duration.Inf)
+              finally pool.shutdown()
+            settled.foreach {
+              case Success((_, frames)) => graft.ext.Scratch.adopt(frames)
+              case Failure(_) => ()
+            }
+            settled.collectFirst { case Failure(e) => throw e }
+            mark("legs(conc)")
+            settled.map(_.get._1)
           }
-          stats.lastAppend = report
-          // opt-in per-ingest health monitor (~1.5× append cost — a
-          // knob, not a default): audit exactly the components this
-          // batch touched, seeded from its own just-written pair
-          // partition (a pruned read; the batchPairs plan must not
-          // recompute its decodes for a seed set)
-          if (auditTouched) {
-            val seed = CorpusGraph.readPairs(spark, graphPath)
-              .filter(col("batch_id") === storedId)
-            val audit = CorpusGraph.staleLabelCountTouched(spark,
-              graphPath, seed.select(col("doc_a").as("doc_id"))
-                .unionByName(seed.select(col("doc_b").as("doc_id"))))
-            stats.touchedAudits.add(1L)
-            stats.auditStale.add(audit.stale)
-            mark("touchedAudit")
-          }
-          true
+        val batchPairs = legPairs.foldLeft(textPairs)(_.unionByName(_))
+        // EVERY fresh doc lands (evidence-preserving — no near-dup
+        // drops; only exact id re-sends are deduplicated), bucketed
+        // for the pruned read-back above; pairs and relabel go
+        // through the graph's own idempotent append
+        BatchIndex.ensureBucketMeta(spark, corpusPath, corpusB)
+        BatchIndex.writePartition(
+          fresh.withColumn("bucket",
+            pmod(col("doc_id"), lit(corpusB))),
+          storedId, corpusPath, bucketCol = Some("bucket"))
+        BatchIndex.ensureBucketMeta(spark, bandIndexPath, bandB)
+        BatchIndex.writePartition(
+          freshBands.withColumn("band_bucket",
+            DedupStream.bandBucketAt(bandB)),
+          storedId, bandIndexPath, bucketCol = Some("band_bucket"))
+        mark("writes")
+        // no pre-count of batchPairs: append persists its own
+        // projection of the plan and its report carries the row count,
+        // so counting here would just materialize the same pairs plan
+        // (decode included) one extra time per trigger
+        val report = CorpusGraph.append(spark, graphPath, batchPairs,
+          storedId)
+        mark("graphAppend")
+        stats.seen.add(nSeen)
+        stats.resent.add(nResent)
+        stats.pairs.add(report.batchPairRows)
+        if (report.routedFullRelabel) stats.routedAppends.add(1L)
+        if (report.graphMembers > 0L) {
+          val ratio =
+            report.touchedMembers.toDouble / report.graphMembers
+          if (ratio > stats.maxTouchedRatio)
+            stats.maxTouchedRatio = ratio
         }
-      } finally { cached.unpersist(); () }
-    })
+        stats.lastAppend = report
+        // opt-in per-ingest health monitor (~1.5× append cost — a
+        // knob, not a default): audit exactly the components this
+        // batch touched, seeded from its own just-written pair
+        // partition (a pruned read; the batchPairs plan must not
+        // recompute its decodes for a seed set)
+        if (auditTouched) {
+          val seed = CorpusGraph.readPairs(spark, graphPath)
+            .filter(col("batch_id") === storedId)
+          val audit = CorpusGraph.staleLabelCountTouched(spark,
+            graphPath, seed.select(col("doc_a").as("doc_id"))
+              .unionByName(seed.select(col("doc_b").as("doc_id"))))
+          stats.touchedAudits.add(1L)
+          stats.auditStale.add(audit.stale)
+          mark("touchedAudit")
+        }
+        true
+      }
+    }
 
   /** One media leg's pair evidence for a micro-batch, with the side
     * effect of extending the unified fingerprint index: decode
@@ -406,25 +386,22 @@ object GraphStream {
     * the doc's text produced no bands) is screened out of the fp
     * append and the pair screen; its evidence already exists.
     */
-  private def mediaLegPairs(spark: org.apache.spark.sql.SparkSession,
-      leg: MediaLeg, fresh: DataFrame, fpIndexPath: String,
-      storedId: Long, stats: GraphStats,
-      smallTrigger: Boolean): DataFrame = {
-    def bc(df: DataFrame): DataFrame =
-      if (smallTrigger) broadcast(df) else df
+  private def mediaLegPairs(b: MicroBatch.Batch, leg: MediaLeg,
+      fresh: DataFrame, fpIndexPath: String, storedId: Long,
+      stats: GraphStats): DataFrame = {
+    val spark = fresh.sparkSession
     def emptyPairs = spark.range(0).select(col("id").as("doc_a"),
       col("id").as("doc_b"), lit(leg.modality).as("modality"))
     if (!fresh.columns.contains(leg.payloadCol)) return emptyPairs
-    val fps = graft.ext.Scratch.track(leg.fpExtract(
-        fresh.filter(col(leg.payloadCol).isNotNull)
-          .select(col("doc_id"), col(leg.payloadCol).as("payload")))
-      .persist())
+    val fps = b.keep(leg.fpExtract(
+      fresh.filter(col(leg.payloadCol).isNotNull)
+        .select(col("doc_id"), col(leg.payloadCol).as("payload"))))
     stats.mediaRejected.add(fps.filter(!col("decoded")).count())
     val decoded0 = fps.filter(col("decoded"))
       .select("doc_id", "decoded", "fp_lo", "fp_hi")
     if (decoded0.isEmpty) return emptyPairs
-    val bands0 = graft.ext.Scratch.track(Multimodal.fpBands(
-      decoded0.select("doc_id", "fp_lo", "fp_hi")).persist())
+    val bands0 = b.keep(Multimodal.fpBands(
+      decoded0.select("doc_id", "fp_lo", "fp_hi")))
     val root = graft.ext.Versioned.resolve(spark, fpIndexPath)
     // the ROOT's bucket count (sidecar layout metadata) — see
     // [[MediaDedupStream.processBatch]]
@@ -434,7 +411,7 @@ object GraphStream {
       .distinct().collect().map(_.getLong(0)).toSeq
     def emptyBands = Multimodal.fpBands(
       decoded0.select("doc_id", "fp_lo", "fp_hi").limit(0))
-    val indexBands = graft.ext.Scratch.track((
+    val indexBands = b.keep(
       if (hit.isEmpty) emptyBands
       else Multimodal.mediaFpBandsPruned(spark, root, leg.modality,
           hit, storedId)
@@ -453,27 +430,25 @@ object GraphStream {
                   leg.modality, hit, storedId).get
               }
           }
-        }).persist())
-    val mediaResent = graft.ext.Scratch.track(indexBands
-      .join(bc(decoded0.select("doc_id").distinct()),
+        })
+    val mediaResent = b.keep(indexBands
+      .join(b.bc(decoded0.select("doc_id").distinct()),
         Seq("doc_id"), "left_semi")
-      .select("doc_id").distinct().persist())
+      .select("doc_id").distinct())
     // counting here ALSO materializes indexBands' cache before the fp
     // append below lands new files under the same root
     val nMediaResent = mediaResent.count()
     val decoded =
       if (nMediaResent == 0L) decoded0
-      else graft.ext.Scratch.track(decoded0
-        .join(bc(mediaResent), Seq("doc_id"), "left_anti")
-        .persist())
+      else b.keep(decoded0.join(b.bc(mediaResent), Seq("doc_id"),
+        "left_anti"))
     val bands =
       if (nMediaResent == 0L) bands0
-      else graft.ext.Scratch.track(bands0
-        .join(bc(mediaResent), Seq("doc_id"), "left_anti")
-        .persist())
+      else b.keep(bands0.join(b.bc(mediaResent), Seq("doc_id"),
+        "left_anti"))
     // cross pairs: pruned stored bands × batch bands, exact verify —
     // evidence, not drops (both sides keep their corpus rows)
-    val cross = indexBands.as("i").join(bc(bands.as("b")),
+    val cross = indexBands.as("i").join(b.bc(bands.as("b")),
         col("i.band_idx") === col("b.band_idx")
           && col("i.band_val") === col("b.band_val")
           && col("i.doc_id") =!= col("b.doc_id"))

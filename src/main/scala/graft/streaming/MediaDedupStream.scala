@@ -39,12 +39,6 @@ import graft.ext.Multimodal
   */
 object MediaDedupStream {
 
-  /** Test seam over [[BatchIndex.TriggerBroadcastMaxDocs]] (see
-    * [[GraphStream.triggerBroadcastBound]]).
-    */
-  @volatile private[graft] var triggerBroadcastBound: Long =
-    BatchIndex.TriggerBroadcastMaxDocs
-
   final class MediaStats(spark: org.apache.spark.sql.SparkSession)
       extends MicroBatch.Ledger {
     val seen = spark.sparkContext.longAccumulator("media_seen")
@@ -91,76 +85,59 @@ object MediaDedupStream {
       fpExtract: DataFrame => DataFrame =
         Multimodal.imageFpFromPayload(_),
       modality: String = "image"): Unit =
-    MicroBatch.commit(stats, batchId) {
+    MicroBatch.commit(stats, batchId, batch) { b =>
       val spark = batch.sparkSession
       val storedId = batchId + 1 // 0 is reserved for batch base builds
-      val cached = batch.persist()
-      try {
-        val nSeen = cached.count()
-        nSeen > 0 && {
-          // batch-derived drop sets broadcast only while the trigger is
-          // trigger-sized (BatchIndex.TriggerBroadcastMaxDocs — a
-          // catch-up macro-batch takes plain joins; identical results)
-          def bc(df: DataFrame): DataFrame =
-            if (nSeen <= triggerBroadcastBound) broadcast(df)
-            else df
-          // every frame this batch persists, released however it ends
-          val held = scala.collection.mutable.Buffer.empty[DataFrame]
-          def keep(df: DataFrame): DataFrame = { held += df; df.persist() }
-          // decode ONCE: these rows screen the batch AND grow the index
-          val fps = keep(fpExtract(cached))
-          try {
-            val nRejected = fps.filter(!col("decoded")).count()
-            val keptFpCols = fps.filter(col("decoded"))
-              .select("doc_id", "fp_lo", "fp_hi")
-            val bands = keep(Multimodal.fpBands(keptFpCols))
-            // the accumulated fingerprints visible to this batch,
-            // PRUNED to the band buckets the batch hits (the band
-            // sidecar layout — [[Multimodal.MediaBandBuckets]]): a
-            // Hamming-≤3 neighbor shares ≥1 band (pigeonhole), so rows
-            // in other buckets cannot drop anything. Strictly-before
-            // batches only (replay-excluding — the readBefore
-            // contract). A pre-sidecar root is MIGRATED in place on
-            // first contact ([[Multimodal.backfillMediaFpBands]] — a
-            // pure projection of stored fingerprints, no decode), then
-            // served pruned like any other: one bounded rewrite instead
-            // of a permanent full-slice screen.
-            val root = graft.ext.Versioned.resolve(spark, indexPath)
-            // the ROOT's bucket count (its sidecar layout metadata) —
-            // probing with any other count addresses the wrong buckets
-            val bandB = Multimodal.mediaBandBucketCountOf(spark, root)
-            val hit = bands
-              .select(Multimodal.mediaBandBucketAt(bandB)
-                .as("band_bucket"))
-              .distinct().collect().map(_.getLong(0)).toSeq
-            def emptyBands = Multimodal.fpBands(keptFpCols.limit(0))
-            val indexBands =
-              if (hit.isEmpty) emptyBands
-              else Multimodal.mediaFpBandsPruned(spark, root, modality,
-                  hit, storedId)
-                .getOrElse {
-                  if (Multimodal.backfillMediaFpBands(spark, root) == 0L)
-                    emptyBands // no data component yet — first batch
-                  else Multimodal.mediaFpBandsPruned(spark, root,
-                    modality, hit, storedId).get
-                }
-            val drops = keep(dropSet(bands, indexBands))
-            val keptFps = fps.filter(col("decoded"))
-              .join(bc(drops), Seq("doc_id"), "left_anti")
-            val survivors = keep(cached
-              .join(fps.filter(col("decoded")).select("doc_id"),
-                Seq("doc_id"), "left_semi")
-              .join(bc(drops), Seq("doc_id"), "left_anti"))
-            val nKept = survivors.count()
-            BatchIndex.writePartition(survivors, batchId, corpusPath)
-            Multimodal.appendFingerprintsToMediaFpIndex(keptFps, modality,
-              indexPath, storedId)
-            stats.seen.add(nSeen)
-            stats.rejected.add(nRejected)
-            stats.kept.add(nKept)
-            true
-          } finally held.foreach(_.unpersist())
-        }
-      } finally { cached.unpersist(); () }
+      b.n > 0 && {
+        // decode ONCE: these rows screen the batch AND grow the index
+        val fps = b.keep(fpExtract(b.rows))
+        val nRejected = fps.filter(!col("decoded")).count()
+        val keptFpCols = fps.filter(col("decoded"))
+          .select("doc_id", "fp_lo", "fp_hi")
+        val bands = b.keep(Multimodal.fpBands(keptFpCols))
+        // the accumulated fingerprints visible to this batch, PRUNED to
+        // the band buckets the batch hits (the band sidecar layout —
+        // [[Multimodal.MediaBandBuckets]]): a Hamming-≤3 neighbor
+        // shares ≥1 band (pigeonhole), so rows in other buckets cannot
+        // drop anything. Strictly-before batches only (replay-excluding
+        // — the readBefore contract). A pre-sidecar root is MIGRATED in
+        // place on first contact ([[Multimodal.backfillMediaFpBands]] —
+        // a pure projection of stored fingerprints, no decode), then
+        // served pruned like any other: one bounded rewrite instead of
+        // a permanent full-slice screen.
+        val root = graft.ext.Versioned.resolve(spark, indexPath)
+        // the ROOT's bucket count (its sidecar layout metadata) —
+        // probing with any other count addresses the wrong buckets
+        val bandB = Multimodal.mediaBandBucketCountOf(spark, root)
+        val hit = bands
+          .select(Multimodal.mediaBandBucketAt(bandB).as("band_bucket"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        def emptyBands = Multimodal.fpBands(keptFpCols.limit(0))
+        val indexBands =
+          if (hit.isEmpty) emptyBands
+          else Multimodal.mediaFpBandsPruned(spark, root, modality,
+              hit, storedId)
+            .getOrElse {
+              if (Multimodal.backfillMediaFpBands(spark, root) == 0L)
+                emptyBands // no data component yet — first batch
+              else Multimodal.mediaFpBandsPruned(spark, root,
+                modality, hit, storedId).get
+            }
+        val drops = b.bc(b.keep(dropSet(bands, indexBands)))
+        val keptFps = fps.filter(col("decoded"))
+          .join(drops, Seq("doc_id"), "left_anti")
+        val survivors = b.keep(b.rows
+          .join(fps.filter(col("decoded")).select("doc_id"),
+            Seq("doc_id"), "left_semi")
+          .join(drops, Seq("doc_id"), "left_anti"))
+        val nKept = survivors.count()
+        BatchIndex.writePartition(survivors, batchId, corpusPath)
+        Multimodal.appendFingerprintsToMediaFpIndex(keptFps, modality,
+          indexPath, storedId)
+        stats.seen.add(b.n)
+        stats.rejected.add(nRejected)
+        stats.kept.add(nKept)
+        true
+      }
     }
 }

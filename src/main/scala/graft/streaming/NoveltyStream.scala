@@ -62,16 +62,17 @@ object NoveltyStream {
     */
   def processBatch(batch: DataFrame, batchId: Long, reportPath: String,
       indexPath: String, stats: NoveltyStats): Unit =
-    BatchIndex.ingestKeyed(batch, batchId, indexPath, stats, KeyBuckets,
-      Seq("h"), TextAnalysis.gramIndex, gramBucketAt) { kb =>
-      val report = kb.keep(TextAnalysis.noveltyAgainst(kb.index, kb.rows)
-        .withColumn("batch_id", lit(batchId)))
-      val nNovel = report.filter(col("novelty") === 1.0).count()
-      report.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(reportPath)
-      (kb.keys, nNovel)
-    }
+    MicroBatch.commit(stats, batchId, batch)(
+      BatchIndex.ingestKeyed(_, indexPath, stats, KeyBuckets,
+        Seq("h"), TextAnalysis.gramIndex, gramBucketAt) { (b, keys, index) =>
+        val report = b.keep(TextAnalysis.noveltyAgainst(index, b.rows)
+          .withColumn("batch_id", lit(batchId)))
+        val nNovel = report.filter(col("novelty") === 1.0).count()
+        report.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(reportPath)
+        (keys, nNovel)
+      })
 
   /** The gram index as [[BatchIndex.maintain]] sees it. Batches
     * re-append grams the index already holds (the per-batch write

@@ -41,18 +41,15 @@ object SketchStream {
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       stats: SketchStats): Unit =
-    MicroBatch.commit(stats, batchId) {
-      val rows = sketchRows(batch).persist()
-      try {
-        // coalesce: sum over an EMPTY batch is NULL (a rate source's
-        // batch 0 has no rows), and the write must still commit so
-        // the ledger advances
-        stats.events.add(
-          rows.agg(coalesce(sum("n_events"), lit(0L)))
-            .head().getLong(0))
-        BatchIndex.writePartition(rows, batchId, indexPath, Some("day"))
-        true
-      } finally { rows.unpersist(); () }
+    MicroBatch.commit(stats, batchId, sketchRows(batch)) { b =>
+      // coalesce: sum over an EMPTY batch is NULL (a rate source's
+      // batch 0 has no rows), and the write must still commit so the
+      // ledger advances
+      val events = b.rows.agg(coalesce(sum("n_events"), lit(0L)))
+        .head().getLong(0)
+      BatchIndex.writePartition(b.rows, batchId, indexPath, Some("day"))
+      stats.events.add(events)
+      true
     }
 
   /** The sketch index as [[BatchIndex.maintain]] sees it: one row

@@ -345,12 +345,14 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[String]
     val ckpt = Files.createTempDirectory("jckpt").toString
+    // the data lands before start: an AvailableNow query fixes its end
+    // offset when it starts, so data added later may not be processed
+    mem.addData(eventJson("s1", "s1@example.com", now))
     val q = MicroBatch.start(
       EventPipeline.curate(EventPipeline.parse(
         mem.toDF().select(col("value")))),
       ckpt, Trigger.AvailableNow())(
       JdbcSink.writeBatch(_, _, url, "curated_stream"))
-    mem.addData(eventJson("s1", "s1@example.com", now))
     q.awaitTermination(60000)
     val sc2 = java.sql.DriverManager.getConnection(url)
     try {
@@ -1786,24 +1788,123 @@ class StreamingSpec extends AnyFunSuite {
       "compacted index must still screen perceptual twins")
   }
 
-  test("streaming media dedup: a batch that fails after its persists releases them") {
+  test("every persisting foreachBatch body releases its frames, failed or committed") {
     import spark.implicits._
-    import graft.ext.Multimodal
-    import graft.streaming.MediaDedupStream
-    val indexDir = Files.createTempDirectory("med_rel_index").toString
-    // the corpus path sits under a regular file: the corpus write throws
-    // after the fingerprints, bands, drop set and survivors are cached
-    val blocked = Files.createTempFile("med_rel_block", "").toString
-    val stats = new MediaDedupStream.MediaStats(spark)
-    val batch = Seq((10L, Multimodal.pngHashPayload(10)),
+    import org.apache.spark.util.LongAccumulator
+    import graft.ext.{Curation, Multimodal}
+    import graft.streaming._
+    def dir(tag: String) = Files.createTempDirectory(tag).toString
+    // a path under a regular file: a write there throws after the
+    // batch has cached its frames
+    def blocked(tag: String) = Files.createTempFile(tag, "").toString + "/x"
+    def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    val textA = (1 to 50).map(i => s"a$i").mkString(" ")
+    val textB = (1 to 50).map(i => s"b$i").mkString(" ")
+    val good = "the quick brown fox jumps over azure lazy dog and then " +
+      "runs far away into green fields of tall grass today"
+    val other = "the quick birds watch green apples and sweet pears " +
+      "while many other foxes stroll past nearby trees today okay fine"
+    val events = EventPipeline.curate(EventPipeline.parse(Seq(
+      eventJson("c1", "good@example.com", T0),
+      eventJson("c2", "bad-email", T0)).toDF("value")),
+      lit(new java.sql.Timestamp(T0)))
+    val rnd = new scala.util.Random(7)
+    val vectors = (0L until 3L).map(i => (i, Seq.fill(64)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    val sketchEvents = Seq((1L, 1L), (2L, 2L)).toDF("user_id", "d")
+      .withColumn("ts", timestamp_millis(col("d") * 86400000L))
+      .withColumn("event_type", lit("click"))
+    val images = Seq((10L, Multimodal.pngHashPayload(10)),
       (20L, Multimodal.pngHashPayload(20))).toDF("doc_id", "payload")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[Exception](MediaDedupStream.processBatch(batch, 0L,
-      s"$blocked/corpus", indexDir, stats))
-    assert(stats.lastCommitted == -1L && stats.seen.value == 0)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"a failed media batch must release what it cached: $leaked")
+    val mmDocs = Seq((1L, textA), (2L, textB), (3L, textA + " z"))
+      .map { case (id, t) => (id, t, Multimodal.pngHashPayload(id)) }
+      .toDF("doc_id", "text", "image_payload")
+    val imageLeg = Seq(GraphStream.MediaLeg("image_payload", "image",
+      Multimodal.imageFpFromPayload(_)))
+    graft.functions.GraftFunctions.register(spark)
+    val bench = Curation.bloomState(Seq((0L, good, "en"))
+      .toDF("doc_id", "text", "lang"))
+    bench.bits.persist().count() // serving state: owned by the caller
+    // a position table that fails when the screen probes it: the
+    // batch fails INSIDE the benchmark gate, between its two caches
+    val badBench = Curation.BloomState(spark.range(1)
+      .select(raise_error(lit("position table unreadable")).cast("long")
+        .as("pos")), bench.mBits)
+    val curateBatch = docs((1L, good + " alpha"), (2L, other))
+
+    // (leg, its ledger and batch counter, its batch 0 run against an
+    // output path: a blocked path fails the batch, a fresh one commits)
+    type Leg = (MicroBatch.Ledger, LongAccumulator, String => Unit)
+    val legs: Seq[(String, () => Leg)] = Seq(
+      "EventPipeline" -> { () =>
+        val s = new EventPipeline.RunStats(spark)
+        (s, s.total, (q: String) => EventPipeline.processBatch(events,
+          0L, dir("rel_main"), q, s))
+      },
+      "Dedup" -> { () =>
+        val s = new DedupStream.DedupStats(spark)
+        (s, s.seen, (c: String) => DedupStream.processBatch(
+          docs((1L, textA), (2L, textA + " z")), 0L, c, dir("rel_i"), s))
+      },
+      "Embed" -> { () =>
+        val s = new EmbedStream.EmbedStats(spark)
+        (s, s.seen, (c: String) => EmbedStream.processBatch(vectors, 0L,
+          c, dir("rel_i"), s))
+      },
+      "Novelty" -> { () =>
+        val s = new NoveltyStream.NoveltyStats(spark)
+        (s, s.seen, (r: String) => NoveltyStream.processBatch(
+          docs((1L, "f1 f2 f3 f4"), (2L, "f1 f2 g3")), 0L, r,
+          dir("rel_i"), s))
+      },
+      "Sketch" -> { () =>
+        val s = new SketchStream.SketchStats(spark)
+        (s, s.events,
+          (i: String) => SketchStream.processBatch(sketchEvents, 0L, i, s))
+      },
+      "Curate with a benchmark" -> { () =>
+        val s = new CurateStream.CurateStats(spark)
+        (s.dedup, s.seen, (c: String) => CurateStream.processBatch(
+          curateBatch, 0L, c, dir("rel_i"), s, Some(bench)))
+      },
+      "Media" -> { () =>
+        val s = new MediaDedupStream.MediaStats(spark)
+        (s, s.seen, (c: String) => MediaDedupStream.processBatch(images,
+          0L, c, dir("rel_i"), s))
+      },
+      "Graph" -> { () =>
+        val s = new GraphStream.GraphStats(spark)
+        (s, s.seen, (c: String) => GraphStream.processBatch(mmDocs, 0L, c,
+          dir("rel_b"), dir("rel_g"), s, imageLeg, Some(dir("rel_f"))))
+      })
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    def check(leg: String, ledger: MicroBatch.Ledger, n: LongAccumulator,
+        fail: () => Unit, commit: () => Unit): Unit = {
+      val before = cached
+      intercept[Exception](fail())
+      assert(ledger.lastCommitted == -1L && n.value == 0L,
+        s"$leg: a failed batch committed or counted")
+      assert((cached -- before).isEmpty,
+        s"$leg: a failed batch must release what it cached")
+      commit()
+      assert(ledger.lastCommitted == 0L && n.value > 0L,
+        s"$leg: the batch did not commit")
+      assert((cached -- before).isEmpty,
+        s"$leg: a committed batch must release what it cached")
+    }
+    legs.foreach { case (leg, make) =>
+      val (ledger, n, run) = make()
+      check(leg, ledger, n, () => run(blocked("rel_block")),
+        () => run(dir("rel_out")))
+    }
+    // the Curate row that fails inside the benchmark gate
+    val s = new CurateStream.CurateStats(spark)
+    check("Curate failing in its gate", s.dedup, s.seen,
+      () => CurateStream.processBatch(curateBatch, 0L, dir("rel_c"),
+        dir("rel_i"), s, Some(badBench)),
+      () => CurateStream.processBatch(curateBatch, 0L, dir("rel_c"),
+        dir("rel_i"), s, Some(bench)))
+    bench.bits.unpersist()
   }
 
   test("streaming media dedup: perceptual screen, reject gate, replay idempotent") {
@@ -2499,11 +2600,11 @@ class StreamingSpec extends AnyFunSuite {
   test("macro-batch trigger path (no forced broadcasts) lands identical artifacts") {
     import spark.implicits._
     import graft.ext.{CorpusGraph, Multimodal}
-    import graft.streaming.{GraphStream, MediaDedupStream}
+    import graft.streaming.{DedupStream, GraphStream, MediaDedupStream}
     // a catch-up macro-batch (docs > TriggerBroadcastMaxDocs) drops
     // the forced batch-side broadcasts — the joins replan, the
-    // artifacts must not move. Bound forced to 0 so the fixture batch
-    // counts as a macro-batch.
+    // artifacts must not move. The one bound (MicroBatch's) forced to
+    // 0 so every fixture batch counts as a macro-batch.
     def mm(ids: Seq[Long], texts: Map[Long, String]) = ids
       .map(id => (id, texts(id), Multimodal.pngHashPayload(id)))
       .toDF("doc_id", "text", "image_payload")
@@ -2515,15 +2616,13 @@ class StreamingSpec extends AnyFunSuite {
     val leg = Seq(GraphStream.MediaLeg("image_payload", "image",
       Multimodal.imageFpFromPayload(_)))
     def run(tag: String, bound: Long): (Set[(Long, Long, String)],
-        Map[Long, Long], Set[Long], Set[Long]) = {
+        Map[Long, Long], Set[Long], Set[Long], (Set[Long], Long)) = {
       val c = Files.createTempDirectory(s"mb_c$tag").toString
       val b = Files.createTempDirectory(s"mb_b$tag").toString
       val g = Files.createTempDirectory(s"mb_g$tag").toString
       val f = Files.createTempDirectory(s"mb_f$tag").toString
-      val prevG = GraphStream.triggerBroadcastBound
-      val prevM = MediaDedupStream.triggerBroadcastBound
-      GraphStream.triggerBroadcastBound = bound
-      MediaDedupStream.triggerBroadcastBound = bound
+      val prev = MicroBatch.triggerBroadcastBound
+      MicroBatch.triggerBroadcastBound = bound
       try {
         val stats = new GraphStream.GraphStats(spark)
         GraphStream.processBatch(mm(Seq(1L, 2L, 3L), texts), 0L,
@@ -2547,16 +2646,30 @@ class StreamingSpec extends AnyFunSuite {
          Multimodal.readMediaFpIndex(spark, f).select("doc_id")
            .distinct().collect().map(_.getLong(0)).toSet,
          spark.read.parquet(mc).select("doc_id").collect()
-           .map(_.getLong(0)).toSet)
-      } finally {
-        GraphStream.triggerBroadcastBound = prevG
-        MediaDedupStream.triggerBroadcastBound = prevM
-      }
+           .map(_.getLong(0)).toSet,
+         dedupRun(tag))
+      } finally MicroBatch.triggerBroadcastBound = prev
+    }
+    // the keep-first screen (BatchIndex.keepFirst): an in-batch twin
+    // (3 of 1) and, next batch, a cross-batch twin (10 of 2) drop
+    def dedupRun(tag: String): (Set[Long], Long) = {
+      val dc = Files.createTempDirectory(s"mb_dc$tag").toString
+      val di = Files.createTempDirectory(s"mb_di$tag").toString
+      val ds = new DedupStream.DedupStats(spark)
+      def docs(ids: Long*) = ids.map(id => (id, texts(id)))
+        .toDF("doc_id", "text")
+      DedupStream.processBatch(docs(1L, 2L, 3L), 0L, dc, di, ds)
+      DedupStream.processBatch(docs(10L, 20L), 1L, dc, di, ds)
+      (spark.read.parquet(dc).select("doc_id").collect()
+         .map(_.getLong(0)).toSet,
+       spark.read.parquet(di).count())
     }
     val normal = run("n", Long.MaxValue)
     val macroB = run("m", 0L)
     assert(normal._1.nonEmpty && normal._2.nonEmpty,
       s"fixture produced no evidence: $normal")
+    assert(normal._5._1 == Set(1L, 2L, 20L),
+      s"dedup fixture must drop its twins: ${normal._5}")
     assert(normal == macroB,
       s"macro-batch path diverged:\n$normal\nvs\n$macroB")
   }
@@ -2923,6 +3036,39 @@ class StreamingSpec extends AnyFunSuite {
       assert(ownMaintenance.findFirstIn(Files.readString(f)).isEmpty,
         s"${f.getFileName} defines its own maintain or compact")
     }
+  }
+
+  test("src/main has one micro-batch frame lifetime") {
+    import java.nio.file.Paths
+    val dir = Paths.get("src/main/scala/graft/streaming")
+    val files = Files.list(dir)
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f.getFileName.toString -> Files.readString(f)).toMap
+      finally files.close()
+    // a batch's frames release only through MicroBatch.commit's scope;
+    // the one release here is CurateStream.start's Bloom table, which
+    // outlives every batch and goes when its query terminates
+    val releases = sources.toSeq.flatMap { case (n, src) =>
+      "unpersist\\(".r.findAllMatchIn(src).map(_ => n)
+    }
+    assert(releases == Seq("CurateStream.scala"),
+      s"unpersist( outside the commit scope: $releases")
+    assert(sources("CurateStream.scala").contains("st.bits.unpersist()"))
+    sources.foreach { case (n, src) =>
+      assert("""\bheld\b""".r.findFirstIn(src).isEmpty,
+        s"$n keeps its own held buffer")
+    }
+    assert(!sources("GraphStream.scala").contains("scopedAll"),
+      "GraphStream opens its own release scope")
+    val main = Files.walk(Paths.get("src/main/scala"))
+    val bounds =
+      try main.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => "var triggerBroadcastBound".r
+          .findAllMatchIn(Files.readString(f)).size)
+        .sum
+      finally main.close()
+    assert(bounds == 1, s"triggerBroadcastBound declared $bounds times")
   }
 
   test("full-rewrite layout ops merge schemas: rebucket/migrate keep late-added columns") {
