@@ -679,22 +679,17 @@ object Multimodal {
     */
   def fpBands(fingerprints: DataFrame): DataFrame =
     fingerprints.select(col("doc_id"), col("fp_lo"),
-      col("fp_hi"), explode(bandStructs).as("b"))
+      col("fp_hi"), explode(array(
+        struct(lit(0L).as("band_idx"),
+          col("fp_lo").bitwiseAND(lit(65535L)).as("band_val")),
+        struct(lit(1L).as("band_idx"),
+          shiftright(col("fp_lo"), 16).as("band_val")),
+        struct(lit(2L).as("band_idx"),
+          col("fp_hi").bitwiseAND(lit(65535L)).as("band_val")),
+        struct(lit(3L).as("band_idx"),
+          shiftright(col("fp_hi"), 16).as("band_val")))).as("b"))
       .select(col("doc_id"), col("fp_lo"), col("fp_hi"),
         col("b.band_idx").as("band_idx"), col("b.band_val").as("band_val"))
-
-  /** The 4×16-bit band slices of a (fp_lo, fp_hi) fingerprint — the
-    * ONE definition [[fpBands]] and the sidecar backfill explode.
-    */
-  private def bandStructs: Column = array(
-    struct(lit(0L).as("band_idx"),
-      col("fp_lo").bitwiseAND(lit(65535L)).as("band_val")),
-    struct(lit(1L).as("band_idx"),
-      shiftright(col("fp_lo"), 16).as("band_val")),
-    struct(lit(2L).as("band_idx"),
-      col("fp_hi").bitwiseAND(lit(65535L)).as("band_val")),
-    struct(lit(3L).as("band_idx"),
-      shiftright(col("fp_hi"), 16).as("band_val")))
 
   /** Exact 64-bit Hamming distance between two (lo, hi) pairs. */
   def fpHamming(loA: Column, hiA: Column, loB: Column,
@@ -1633,18 +1628,34 @@ object Multimodal {
     appendFpRows(mediaFpRows(batch), path, batchId)
 
   /** The one append step of both fingerprint ingests: persist the
-    * batch's bucketed fp `rows` (decoded once, they land in data AND
-    * derive the band sidecar partition), land them under the root's
-    * (modality, bucket, batch_id=<id>) data partitions, then the
-    * sidecar's, then check the append landed in the served snapshot.
+    * batch's bucketed fp `rows` (decoded once, they derive the band
+    * sidecar partition AND land in data), land the sidecar's
+    * (modality, band_bucket, batch_id=<id>) partitions, then the
+    * root's (modality, bucket, batch_id=<id>) data partitions, then
+    * check the append landed in the served snapshot. Sidecar first: a
+    * crash between the two writes leaves band rows that readers
+    * exclude (`batch_id < storedId`) and the replay rewrites, never
+    * fingerprints without their bands — the state [[mediaBandsBefore]]
+    * refuses. A root already in that state is refused here too: an
+    * append would start a sidecar missing every stored fingerprint.
     */
   private def appendFpRows(rows: DataFrame, path: String,
       batchId: Long): Unit = {
     require(batchId > 0, "batch_id 0 is the base build")
     val spark = rows.sparkSession
     val root = Versioned.resolve(spark, path)
+    checkSidecar(spark, root)
+    val b = mediaBandBucketCountOf(spark, root)
     rows.persist()
     try {
+      bandSidecarRows(rows, b)
+        .withColumn("batch_id", lit(batchId))
+        .repartition(col("band_bucket"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("modality", "band_bucket", "batch_id")
+        .parquet(s"$root/bands")
+      graft.streaming.BatchIndex.ensureBucketMeta(spark, s"$root/bands", b)
       rows
         .withColumn("batch_id", lit(batchId))
         .repartition(col("modality"), col("bucket"))
@@ -1652,115 +1663,36 @@ object Multimodal {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("modality", "bucket", "batch_id")
         .parquet(s"$root/data")
-      writeBandSidecarPartition(rows, batchId, root)
     } finally { rows.unpersist(); () }
     // append-vs-rebuild race: fail loudly if a rebuild committed while
     // this batch was writing (re-running the append recovers)
     Versioned.assertAppendLanded(spark, path, root, "media fp")
   }
 
-  /** [[bandSidecarRows]] preserving each row's own batch_id — the
-    * backfill projection: a backfilled sidecar row must land under its
-    * fingerprint's ORIGINAL batch partition so the replay-excluding
-    * `batch_id < ownId` reads and per-batch compaction semantics hold
-    * for backfilled rows exactly as for natively-written ones.
+  /** Whether a RESOLVED root has its band sidecar; fails on a root
+    * holding fingerprint data without one (written by an engine from
+    * before the sidecar, or a torn base build), naming the remedy:
+    * screening it, or starting its sidecar with one batch, would miss
+    * every stored fingerprint.
     */
-  private def bandSidecarRowsWithBatch(fps: DataFrame,
-      b: Long): DataFrame =
-    fps.filter(col("decoded"))
-      .select(col("doc_id"), col("fp_lo"), col("fp_hi"),
-        col("modality"), col("batch_id"), explode(bandStructs).as("b"))
-      .select(col("doc_id"), col("fp_lo"), col("fp_hi"),
-        col("b.band_idx").as("band_idx"),
-        col("b.band_val").as("band_val"),
-        col("modality"), col("batch_id"))
-      .withColumn("band_bucket", mediaBandBucketAt(b))
-
-  /** One-time, in-place band-sidecar backfill of a RESOLVED root whose
-    * bands component is absent or missing data batches: derive band
-    * rows for every data batch absent from `<root>/bands` — a pure
-    * projection of the stored fingerprints, never a second decode —
-    * and land them under their own (modality, band_bucket, batch_id)
-    * partitions. Idempotent (dynamic overwrite per batch partition).
-    * Returns batches backfilled (0 = nothing missing / no data yet).
-    *
-    * Every append runs this whenever the bands dir is absent, closing
-    * the partial-sidecar hole: without it, the FIRST append to a
-    * pre-sidecar root would create `bands/` holding only that batch,
-    * and every later pruned screen would trust the partial sidecar —
-    * silently missing near-dups of every pre-sidecar fingerprint
-    * forever. [[graft.streaming.MediaDedupStream]] calls it as the
-    * explicit migration when its pruned read finds no sidecar.
-    */
-  def backfillMediaFpBands(spark: org.apache.spark.sql.SparkSession,
-      root: String): Long = {
+  private def checkSidecar(spark: org.apache.spark.sql.SparkSession,
+      root: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
-    // probe first: reading an absent data dir (a stream's first media
-    // batch) would log Spark's missing-metadata warning with a stack
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/data"))) return 0L
-    val data = Versioned.readOr(Option.empty[DataFrame])(
-        Some(readMediaFpData(spark, root)))
-      .getOrElse(return 0L)
-    val have: Set[Long] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")))
-        Set.empty
-      else spark.read.schema(MediaBandSchema).parquet(s"$root/bands")
-        .select("batch_id").distinct()
-        .collect().map(_.getLong(0)).toSet
-    // bounded collect: distinct batch_id values of the data component
-    // (one per committed ingest — partition-column read)
-    val missing = data.select("batch_id").distinct()
-      .collect().map(_.getLong(0)).filterNot(have)
-    if (missing.isEmpty) return 0L
-    val b = mediaBandBucketCountOf(spark, root)
-    bandSidecarRowsWithBatch(
-        data.filter(col("batch_id").isin(missing.toIndexedSeq: _*)), b)
-      .repartition(col("band_bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("modality", "band_bucket", "batch_id")
-      .parquet(s"$root/bands")
-    graft.streaming.BatchIndex.ensureBucketMeta(spark, s"$root/bands", b)
-    // a session-cached sidecar plan must see the backfilled batches
-    spark.catalog.refreshByPath(s"$root/bands")
-    missing.length.toLong
-  }
-
-  /** Land one batch's band-sidecar rows (dynamic overwrite — an
-    * at-least-once replay rewrites exactly its own partitions, the
-    * same idempotence unit as the data component). When the root has
-    * no sidecar yet (pre-sidecar layout), the WHOLE sidecar is
-    * backfilled first — writing only this batch's partition would
-    * leave a partial sidecar that pruned screens would silently trust
-    * (see [[backfillMediaFpBands]]).
-    */
-  private def writeBandSidecarPartition(fps: DataFrame, batchId: Long,
-      root: String): Unit = {
-    val spark = fps.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands"))) {
-      backfillMediaFpBands(spark, root)
-      ()
+    fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")) || {
+      val data = new org.apache.hadoop.fs.Path(s"$root/data")
+      val files = if (fs.exists(data)) Some(fs.listFiles(data, true))
+        else None
+      var holdsRows = false
+      while (!holdsRows && files.exists(_.hasNext))
+        holdsRows = files.get.next().getPath.getName.endsWith(".parquet")
+      require(!holdsRows,
+        s"media fp index at $root holds fingerprints but no band " +
+          "sidecar — run Multimodal.rebuildMediaFpIndex, whose staged " +
+          "rewrite derives it")
+      false
     }
-    writeBandSidecarOwnPartition(fps, batchId, root)
-  }
-
-  private def writeBandSidecarOwnPartition(fps: DataFrame,
-      batchId: Long, root: String): Unit = {
-    val spark = fps.sparkSession
-    val b = mediaBandBucketCountOf(spark, root)
-    bandSidecarRows(fps, b)
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("band_bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("modality", "band_bucket", "batch_id")
-      .parquet(s"$root/bands")
-    graft.streaming.BatchIndex.ensureBucketMeta(spark, s"$root/bands", b)
   }
 
   /** Land one modality's ALREADY-DECODED fingerprints under the
@@ -1789,7 +1721,8 @@ object Multimodal {
   /** The unified media fp index as [[graft.streaming.BatchIndex
     * .maintain]] sees it: the data component under (modality, bucket)
     * and the band sidecar under (modality, band_bucket), both in the
-    * served root (a pre-sidecar root has no bands to fold) and both
+    * served root (a root without a sidecar has no bands to fold;
+    * screens refuse it until [[rebuildMediaFpIndex]]) and both
     * distinct-folded. The bucket counts are the observed level
     * combinations.
     */
@@ -1914,59 +1847,71 @@ object Multimodal {
     // reads one snapshot throughout (see [[Versioned]])
     readMediaFpData(spark, Versioned.resolve(spark, path))
 
-  /** The band sidecar's rows for ONE modality, pruned to `hitBuckets`
-    * and to batches strictly before `beforeBatch` — the per-trigger
-    * read of [[graft.streaming.MediaDedupStream]]. Returns `None`
-    * when the root predates the sidecar (flat pre-bands layout): the
-    * caller falls back to deriving bands from the full modality slice
-    * (correct, the old linear-scan cost) instead of silently
-    * screening against nothing.
+  /** The stored side of the media screen: ONE modality's band-sidecar
+    * rows of a RESOLVED root, pruned to the band buckets `batchBands`
+    * hits at the ROOT's bucket count ([[mediaBandBucketCountOf]]) and
+    * to batches strictly before `storedId`. A Hamming-≤
+    * [[AHashMaxHamming]] neighbour shares ≥1 band (pigeonhole), so
+    * rows in other buckets cannot match. The read is
+    * [[graft.streaming.BatchIndex.readBeforeBuckets]]' direct-path
+    * listing and replay exclusion. A root with no fingerprints yet
+    * reads empty; one with fingerprints but no sidecar fails, naming
+    * [[rebuildMediaFpIndex]].
     */
-  def mediaFpBandsPruned(spark: org.apache.spark.sql.SparkSession,
-      root: String, modality: String, hitBuckets: Seq[Long],
-      beforeBatch: Long): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/bands")))
-      None
+  def mediaBandsBefore(spark: org.apache.spark.sql.SparkSession,
+      root: String, modality: String, batchBands: DataFrame,
+      storedId: Long): DataFrame = {
+    def empty = batchBands.select(BandCols.map(col): _*).limit(0)
+    if (!checkSidecar(spark, root)) empty
     else {
-      // direct-path read of the hit (modality, band_bucket) dirs — a
-      // whole-sidecar read with an isin filter would LIST every
-      // modality × B × L leaf dir before pruning any (the measured
-      // trigger decay law; see [[graft.streaming.BatchIndex
-      // .readBeforeBuckets]]); one listStatus of this modality's
-      // bucket dirs bounds listing to O(B + hit × L)
-      val sel = Seq("doc_id", "fp_lo", "fp_hi", "band_idx", "band_val")
-      def empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        MediaBandSchema).select(sel.map(col): _*)
-      val mDir = new org.apache.hadoop.fs.Path(
-        s"$root/bands/modality=$modality")
-      val present =
-        try fs.listStatus(mDir).iterator.filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .filter(_.startsWith("band_bucket="))
-          .flatMap(n => scala.util.Try(
-            n.stripPrefix("band_bucket=").toLong).toOption)
-          .toSet
-        catch { case _: java.io.FileNotFoundException => Set.empty[Long] }
-      val hit = hitBuckets.distinct.filter(present.contains)
-      if (hit.isEmpty) Some(empty)
-      else Some(spark.read.schema(MediaBandSchema)
-        .option("basePath", s"$root/bands")
-        .parquet(hit.map(b => s"$mDir/band_bucket=$b"): _*)
-        .filter(col("batch_id") < beforeBatch)
-        .select(sel.map(col): _*))
+      val b = mediaBandBucketCountOf(spark, root)
+      val hit = batchBands.select(mediaBandBucketAt(b)).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      graft.streaming.BatchIndex.readBeforeBuckets(spark,
+        s"$root/bands/modality=$modality", storedId, BandCols, empty,
+        "band_bucket", hit)
     }
+  }
+
+  /** The columns of a band row ([[fpBands]]' output). */
+  private val BandCols = Seq("doc_id", "fp_lo", "fp_hi", "band_idx",
+    "band_val")
+
+  /** The one incremental media screen: each batch fingerprint's
+    * neighbours within [[AHashMaxHamming]] among the `stored` band rows
+    * (any id — a re-sent doc finds its own stored fingerprint) and
+    * among batch-mates with a smaller doc_id, as `(doc_s, doc_b,
+    * hamming)`. One join: stored ∪ batch band rows, flagged by origin,
+    * against `bc(batchBands)`, so the stored side never shuffles when
+    * `bc` broadcasts. Both inputs are [[fpBands]] rows; banding is
+    * lossless at this radius (pigeonhole), and the exact Hamming check
+    * screens accidental 16-bit collisions. Subset-exact: a full
+    * re-screen's pairs that touch a batch doc are exactly these.
+    */
+  def nearEarlier(stored: DataFrame, batchBands: DataFrame,
+      bc: DataFrame => DataFrame): DataFrame = {
+    def rows(df: DataFrame) = df.select(BandCols.map(col): _*)
+    rows(stored).withColumn("stored", lit(true))
+      .unionByName(rows(batchBands).withColumn("stored", lit(false)))
+      .as("s")
+      .join(bc(rows(batchBands)).as("b"),
+        col("s.band_idx") === col("b.band_idx")
+          && col("s.band_val") === col("b.band_val")
+          && (col("s.stored") || col("s.doc_id") < col("b.doc_id")))
+      .select(col("s.doc_id").as("doc_s"), col("b.doc_id").as("doc_b"),
+        fpHamming(col("s.fp_lo"), col("s.fp_hi"), col("b.fp_lo"),
+          col("b.fp_hi")).as("hamming"))
+      .filter(col("hamming") <= AHashMaxHamming)
+      .distinct() // a pair can collide in several bands
   }
 
   /** The takedown artifact entries for the media fp artifact: BOTH
     * components of EVERY retained root (retained snapshots are real
     * copies; the band sidecar carries doc ids just like the data
     * component — an enumeration that lists only `data` leaves purged
-    * ids serving from `bands`). Pre-sidecar roots contribute only
-    * their data component.
+    * ids serving from `bands`). A root without a sidecar (an engine
+    * from before it, or a torn base build — screens refuse it until
+    * [[rebuildMediaFpIndex]]) still holds ids in its data component.
     */
   def mediaFpTakedownArtifacts(
       spark: org.apache.spark.sql.SparkSession,
@@ -1995,87 +1940,63 @@ object Multimodal {
       indexPath: String, modality: String): DataFrame = {
     require(MediaFpModalities.contains(modality),
       s"unknown modality: $modality")
-    bandedHamming64(
-      readMediaFpIndex(spark, indexPath)
-        .filter(col("modality") === lit(modality) && col("decoded"))
-        .select("doc_id", "fp_lo", "fp_hi"),
+    bandedHamming64(decodedFps(spark, indexPath, modality),
       AHashMaxHamming)
+  }
+
+  /** One modality's decoded `(doc_id, fp_lo, fp_hi)` rows of the index. */
+  private def decodedFps(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String, modality: String): DataFrame =
+    readMediaFpIndex(spark, indexPath)
+      .filter(col("modality") === lit(modality) && col("decoded"))
+      .select("doc_id", "fp_lo", "fp_hi")
+
+  /** All three modalities' pair streams of ONE snapshot, each tagged
+    * with its `modality`: the root resolves once, so a rebuild
+    * committing between two modality reads cannot mix snapshots inside
+    * one roll-up. `screen` gets the resolved root and a modality.
+    */
+  private def perModality(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String)(screen: (String, String) => DataFrame)
+      : DataFrame = {
+    val root = Versioned.resolve(spark, indexPath)
+    MediaFpModalities
+      .map(m => screen(root, m).withColumn("modality", lit(m)))
+      .reduce(_.unionByName(_))
   }
 
   /** All three modalities' pair streams from the index — the served
     * twin of [[mediaNearDupPairs]].
     */
   def mediaNearDupPairsServed(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
-    // resolve ONCE for all three screens: a rebuild committing between
-    // two modality reads must not mix snapshots inside one roll-up
-    // (per-screen resolve is a no-op on the resolved version dir)
-    val root = Versioned.resolve(spark, indexPath)
-    MediaFpModalities
-      .map(m => mediaNearDupsServed(spark, root, m)
-        .withColumn("modality", lit(m)))
-      .reduce(_.unionByName(_))
-  }
-
-  /** Incremental banded screen: every pair within `maxHamming`
-    * involving ≥1 batch doc, against batch ∪ index fingerprints — the
-    * per-ingest twin of [[bandedHamming64]]. The batch's band table is
-    * BROADCAST against the (index ∪ batch) band stream, so the stored
-    * side never shuffles and per-ingest cost is O(|batch| × bucket
-    * density), never index². Subset-exact: fingerprints and the
-    * Hamming verify are per-pair, so (stored pairs ∪ these) equals a
-    * full re-screen of the grown corpus — the property the corpus
-    * graph's append ≡ rebuild contract rests on.
-    */
-  private[graft] def bandedHamming64Incremental(indexFps: DataFrame,
-      batchFps: DataFrame, maxHamming: Long): DataFrame = {
-    val batch = Scratch.track(batchFps
-      .select("doc_id", "fp_lo", "fp_hi").persist())
-    val all = indexFps.select("doc_id", "fp_lo", "fp_hi")
-      .unionByName(batch)
-    val a = fpBands(all).select(col("band_idx"), col("band_val"),
-      col("doc_id").as("doc_x"), col("fp_lo").as("lo_x"),
-      col("fp_hi").as("hi_x"))
-    val b = fpBands(batch).select(col("band_idx"), col("band_val"),
-      col("doc_id").as("doc_y"), col("fp_lo").as("lo_y"),
-      col("fp_hi").as("hi_y"))
-    a.join(broadcast(b), Seq("band_idx", "band_val"))
-      .filter(col("doc_x") =!= col("doc_y"))
-      // canonicalize (a pair surfaces from either side's bands) and
-      // collapse multi-band collisions; hamming is symmetric
-      .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
-        greatest(col("doc_x"), col("doc_y")).as("doc_b"),
-        fpHamming(col("lo_x"), col("hi_x"), col("lo_y"), col("hi_y"))
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+      indexPath: String): DataFrame =
+    perModality(spark, indexPath)(mediaNearDupsServed(spark, _, _))
 
   /** All three modalities' INCREMENTAL pair streams from the persisted
     * index: the new-batch slice of the grown index screens against the
-    * whole index. `isBatch` marks the batch docs (fingerprints are
-    * per-doc, so slicing the one index is exact — no second decode of
-    * anything). Emits (doc_a, doc_b, hamming, modality) for exactly
-    * the pairs [[mediaNearDupPairsServed]] would emit that touch a
-    * batch doc — the media feed of [[CorpusGraph.append]].
+    * whole index through [[nearEarlier]]. `isBatch` marks the batch
+    * docs (fingerprints are per-doc, so slicing the one index is exact
+    * — no second decode of anything). Emits (doc_a, doc_b, hamming,
+    * modality) for exactly the pairs [[mediaNearDupPairsServed]] would
+    * emit that touch a batch doc — the media feed of
+    * [[CorpusGraph.append]].
     */
   def mediaNearDupPairsIncremental(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       isBatch: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame = {
-    // resolve ONCE for all three screens (see mediaNearDupPairsServed)
-    val root = Versioned.resolve(spark, indexPath)
-    MediaFpModalities.map { m =>
-      val fps = readMediaFpIndex(spark, root)
-        .filter(col("modality") === lit(m) && col("decoded"))
-        .select("doc_id", "fp_lo", "fp_hi")
-      bandedHamming64Incremental(
-        fps.filter(!isBatch(col("doc_id"))),
-        fps.filter(isBatch(col("doc_id"))),
-        AHashMaxHamming)
-        .withColumn("modality", lit(m))
-    }.reduce(_.unionByName(_))
-  }
+      : DataFrame =
+    perModality(spark, indexPath) { (root, m) =>
+      val batch = Scratch.keep(fpBands(decodedFps(spark, root, m)
+        .filter(isBatch(col("doc_id")))))
+      // the batch docs are in the index already: every stored batch,
+      // minus the batch docs themselves
+      val stored = mediaBandsBefore(spark, root, m, batch, Long.MaxValue)
+        .filter(!isBatch(col("doc_id")))
+      nearEarlier(stored, batch, broadcast(_))
+        .select(least(col("doc_s"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_s"), col("doc_b")).as("doc_b"),
+          col("hamming"))
+    }
 
   /** [[mediaNearDupPairsServed]] restricted to docs matching `pred` on
     * both endpoints — the corpus-only slice an incremental-ingest
@@ -2085,18 +2006,11 @@ object Multimodal {
   def mediaNearDupPairsServedWhere(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame = {
-    val root = Versioned.resolve(spark, indexPath)
-    MediaFpModalities.map { m =>
-      bandedHamming64(
-        readMediaFpIndex(spark, root)
-          .filter(col("modality") === lit(m) && col("decoded")
-            && pred(col("doc_id")))
-          .select("doc_id", "fp_lo", "fp_hi"),
-        AHashMaxHamming)
-        .withColumn("modality", lit(m))
-    }.reduce(_.unionByName(_))
-  }
+      : DataFrame =
+    perModality(spark, indexPath) { (root, m) =>
+      bandedHamming64(decodedFps(spark, root, m)
+        .filter(pred(col("doc_id"))), AHashMaxHamming)
+    }
 
   /** Cross-modal duplicate clusters served from the fingerprint index
     * — [[mediaDedupClusters]]' roll-up at index-read cost (the

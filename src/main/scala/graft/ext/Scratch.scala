@@ -61,6 +61,15 @@ object Scratch {
     df
   }
 
+  /** `df` persisted and [[track]]ed, unless its plan is cached already:
+    * then whoever cached it keeps the release. Persisting a cached plan
+    * again only logs `CacheManager: Asked to cache already cached data`,
+    * and tracking it could release the other owner's entry early.
+    */
+  def keep[T <: Dataset[_]](df: T): T =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else { df.persist(); track(df) }
+
   /** Best-effort release, three cases:
     *
     *   1. Frames that ARE a checkpoint (analyzed plan's ROOT is the

@@ -109,11 +109,10 @@ object GraphStream {
 
   /** Serializes the unified fp index's WRITE operations across
     * concurrent media legs: each leg writes only its own modality
-    * partitions, but (a) the pre-sidecar backfill reads/writes ALL
-    * modalities' band rows and (b) the `_graft_buckets` layout stamp
-    * is one file — two legs racing either could tear the sidecar.
-    * Reads stay lock-free (the `batch_id < storedId` replay exclusion
-    * already hides concurrent same-batch writes from them).
+    * partitions, but the sidecar's `_graft_buckets` layout stamp is one
+    * file that two legs racing could tear. Reads stay lock-free (the
+    * `batch_id < storedId` replay exclusion already hides concurrent
+    * same-batch writes from them).
     */
   private val fpAppendLock = new Object
 
@@ -269,11 +268,11 @@ object GraphStream {
         // face of the six-leg FAIR fix, measured in SCALING.md
         // "graphmm3"). Index WRITES inside the legs stay serialized
         // ([[fpAppendLock]] in mediaLegPairs) — each leg writes only
-        // its own modality partitions, but the shared band-sidecar
-        // backfill and layout metadata must not race. A leg's kept
-        // frames are collected on its helper thread and adopted into
-        // THIS trigger's scope, so they release at the trigger
-        // boundary — after the pair plans they back were consumed.
+        // its own modality partitions, but the shared sidecar layout
+        // stamp must not race. A leg's kept frames are collected on
+        // its helper thread and adopted into THIS trigger's scope, so
+        // they release at the trigger boundary — after the pair plans
+        // they back were consumed.
         val legPairs: Seq[DataFrame] =
           if (mediaLegs.isEmpty) Nil
           else if (mediaLegs.sizeIs == 1) {
@@ -372,11 +371,11 @@ object GraphStream {
   /** One media leg's pair evidence for a micro-batch, with the side
     * effect of extending the unified fingerprint index: decode
     * `fresh`'s non-null payloads once, read the stored sidecar pruned
-    * to the batch's hit band buckets (migrating a pre-sidecar root in
-    * place — the [[MediaDedupStream]] discipline), screen cross
-    * (stored × batch) and batch-internal pairs with the exact Hamming
-    * verify (pigeonhole-lossless at ≤ [[Multimodal.AHashMaxHamming]]),
-    * and append the batch fingerprints under `storedId`. Emits
+    * to the batch's hit band buckets ([[Multimodal.mediaBandsBefore]]),
+    * screen stored × batch and batch-internal pairs through the one
+    * media screen ([[Multimodal.nearEarlier]] — exact Hamming verify,
+    * pigeonhole-lossless at ≤ [[Multimodal.AHashMaxHamming]]), and
+    * append the batch fingerprints under `storedId`. Emits
     * `(doc_a, doc_b, modality)`. Subset-exact: stored pairs ∪ these =
     * a full re-screen of the grown index's modality slice — the
     * append ≡ rebuild contract's media face.
@@ -402,41 +401,15 @@ object GraphStream {
     if (decoded0.isEmpty) return emptyPairs
     val bands0 = b.keep(Multimodal.fpBands(
       decoded0.select("doc_id", "fp_lo", "fp_hi")))
-    val root = graft.ext.Versioned.resolve(spark, fpIndexPath)
-    // the ROOT's bucket count (sidecar layout metadata) — see
-    // [[MediaDedupStream.processBatch]]
-    val sidecarB = Multimodal.mediaBandBucketCountOf(spark, root)
-    val hit = bands0
-      .select(Multimodal.mediaBandBucketAt(sidecarB).as("band_bucket"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    def emptyBands = Multimodal.fpBands(
-      decoded0.select("doc_id", "fp_lo", "fp_hi").limit(0))
-    val indexBands = b.keep(
-      if (hit.isEmpty) emptyBands
-      else Multimodal.mediaFpBandsPruned(spark, root, leg.modality,
-          hit, storedId)
-        .getOrElse {
-          // pre-sidecar root: one-time in-place backfill (a pure
-          // projection of stored fingerprints), then serve pruned.
-          // Under the write lock, with a re-probe first: a concurrent
-          // leg may have built the sidecar while this one waited
-          fpAppendLock.synchronized {
-            Multimodal.mediaFpBandsPruned(spark, root, leg.modality,
-                hit, storedId)
-              .getOrElse {
-                if (Multimodal.backfillMediaFpBands(spark, root) == 0L)
-                  emptyBands // no data component yet — first media batch
-                else Multimodal.mediaFpBandsPruned(spark, root,
-                  leg.modality, hit, storedId).get
-              }
-          }
-        })
-    val mediaResent = b.keep(indexBands
+    val stored = b.keep(Multimodal.mediaBandsBefore(spark,
+      graft.ext.Versioned.resolve(spark, fpIndexPath), leg.modality,
+      bands0, storedId))
+    val mediaResent = b.keep(stored
       .join(b.bc(decoded0.select("doc_id").distinct()),
         Seq("doc_id"), "left_semi")
       .select("doc_id").distinct())
-    // counting here ALSO materializes indexBands' cache before the fp
-    // append below lands new files under the same root
+    // counting here ALSO materializes the stored bands' cache before
+    // the fp append below lands new files under the same root
     val nMediaResent = mediaResent.count()
     val decoded =
       if (nMediaResent == 0L) decoded0
@@ -446,26 +419,16 @@ object GraphStream {
       if (nMediaResent == 0L) bands0
       else b.keep(bands0.join(b.bc(mediaResent), Seq("doc_id"),
         "left_anti"))
-    // cross pairs: pruned stored bands × batch bands, exact verify —
-    // evidence, not drops (both sides keep their corpus rows)
-    val cross = indexBands.as("i").join(b.bc(bands.as("b")),
-        col("i.band_idx") === col("b.band_idx")
-          && col("i.band_val") === col("b.band_val")
-          && col("i.doc_id") =!= col("b.doc_id"))
-      .filter(Multimodal.fpHamming(col("i.fp_lo"), col("i.fp_hi"),
-        col("b.fp_lo"), col("b.fp_hi")) <= Multimodal.AHashMaxHamming)
-      .select(least(col("i.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("i.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct() // a pair can collide in several bands
-    val internal = Multimodal.bandedHamming64(
-        decoded.select("doc_id", "fp_lo", "fp_hi"),
-        Multimodal.AHashMaxHamming)
-      .select("doc_a", "doc_b")
+    // evidence, not drops: both sides keep their corpus rows
+    val pairs = Multimodal.nearEarlier(stored, bands, b.bc)
+      .filter(col("doc_s") =!= col("doc_b"))
+      .select(least(col("doc_s"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_s"), col("doc_b")).as("doc_b"))
+      .distinct()
     fpAppendLock.synchronized {
       Multimodal.appendFingerprintsToMediaFpIndex(decoded, leg.modality,
         fpIndexPath, storedId)
     }
-    cross.unionByName(internal)
-      .withColumn("modality", lit(leg.modality))
+    pairs.withColumn("modality", lit(leg.modality))
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 import graft.ext.Scratch
 
@@ -62,13 +61,10 @@ object MicroBatch {
     val rows: DataFrame = keep(frame)
     lazy val n: Long = rows.count()
 
-    /** `df` cached for the rest of the batch: persisted unless it is
-      * cached already (by this batch or its owner, which keeps the
-      * release), and released with the batch.
+    /** `df` cached for the rest of the batch ([[Scratch.keep]]: a frame
+      * cached already keeps its owner's release) and released with it.
       */
-    def keep(df: DataFrame): DataFrame =
-      if (df.storageLevel != StorageLevel.NONE) df
-      else Scratch.track(df.persist())
+    def keep(df: DataFrame): DataFrame = Scratch.keep(df)
 
     /** Whether batch-derived frames may be forced to broadcast: only
       * while the batch is trigger-sized

@@ -364,6 +364,54 @@ class PropertySpec extends AnyFunSuite {
     (4 to 6).foreach(d => assert(
       !out.exists(p => p._1 == d.toLong && p._2 == 1000L + d),
       s"distance $d must not pair"))
+
+    // the incremental screen over a stored/batch split: the planted
+    // ladder arrives as a batch against the stored base, with a re-sent
+    // stored id and an in-batch twin of a ladder row
+    import graft.ext.Multimodal
+    val stored = base
+    val (_, tlo, thi) = planted(2)
+    val (twlo, twhi) = flipBits(tlo, thi, 1)
+    val batch = planted ++ Seq(base(10), (1100L, twlo, twhi))
+    def bandsOf(rows: Seq[(Long, Long, Long)]) =
+      Multimodal.fpBands(rows.toDF("doc_id", "fp_lo", "fp_hi"))
+    val near = Multimodal.nearEarlier(bandsOf(stored), bandsOf(batch),
+        org.apache.spark.sql.functions.broadcast(_))
+    val nearSet = near.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // definition: stored neighbours of any id, earlier batch-mates
+    val bruteNear = (for {
+      b <- batch
+      s <- stored.map((_, true)) ++ batch.map((_, false))
+      if s._2 || s._1._1 < b._1
+      d = ham(s._1, b) if d <= 3
+    } yield (s._1._1, b._1, d)).toSet
+    assert(nearSet == bruteNear,
+      s"nearEarlier: missed ${bruteNear -- nearSet}, " +
+        s"extra ${nearSet -- bruteNear}")
+    assert(nearSet.contains((10L, 10L, 0L)), "a re-sent id finds itself")
+    assert(nearSet.contains((1002L, 1100L, 1L)), "in-batch twin")
+    def within(a: (Long, Long, Long), b: (Long, Long, Long)) =
+      ham(a, b) <= 3
+    // the media dedup leg's drop set: batch docs near a stored row
+    // (no id guard) or near an earlier batch-mate
+    val dropSet = (batch.filter(b => stored.exists(within(_, b))) ++
+      (for (a <- batch; b <- batch if a._1 < b._1 && within(a, b))
+        yield b)).map(_._1).toSet
+    assert(near.select("doc_b").distinct().collect()
+      .map(_.getLong(0)).toSet == dropSet)
+    // the graph leg's evidence: stored × batch pairs of distinct ids
+    // plus batch-internal pairs, canonicalised
+    val cross = for {
+      s <- stored; b <- batch if s._1 != b._1 && within(s, b)
+    } yield (math.min(s._1, b._1), math.max(s._1, b._1))
+    val internal = for {
+      a <- batch; b <- batch if a._1 < b._1 && within(a, b)
+    } yield (a._1, b._1)
+    val evidence = nearSet.collect {
+      case (s, b, _) if s != b => (math.min(s, b), math.max(s, b))
+    }
+    assert(evidence == (cross ++ internal).toSet)
   }
 
   test("property: sum-neutral image twin nudge bounds Hamming at 2 for ANY id") {

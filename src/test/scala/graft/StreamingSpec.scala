@@ -2268,9 +2268,8 @@ class StreamingSpec extends AnyFunSuite {
       .select(Multimodal.mediaBandBucket.as("b")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(hit.nonEmpty && hit.size <= 4, s"hit=$hit")
-    val pruned = Multimodal.mediaFpBandsPruned(spark, idx, "image",
-      hit.toSeq, beforeBatch = 1L)
-      .getOrElse(fail("sidecar must exist on a fresh base build"))
+    val pruned = Multimodal.mediaBandsBefore(spark, idx, "image", bands,
+      storedId = 1L)
     val scannedBuckets = spark.read
       .schema(Multimodal.MediaBandSchema).parquet(s"$idx/bands")
       .filter(col("modality") === "image"
@@ -2674,7 +2673,7 @@ class StreamingSpec extends AnyFunSuite {
       s"macro-batch path diverged:\n$normal\nvs\n$macroB")
   }
 
-  test("pre-sidecar media fp root: first contact backfills the WHOLE sidecar (no partial-sidecar hole)") {
+  test("pre-sidecar media fp root: screen and append refuse it until the rebuild") {
     import spark.implicits._
     import graft.ext.Multimodal
     import graft.streaming.MediaDedupStream
@@ -2684,80 +2683,79 @@ class StreamingSpec extends AnyFunSuite {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(idx).toUri,
       spark.sparkContext.hadoopConfiguration)
-    def stripSidecar(): Unit = {
-      assert(fs.delete(
-        new org.apache.hadoop.fs.Path(s"$idx/bands"), true))
-      ()
-    }
-    def bandBatches = spark.read.schema(Multimodal.MediaBandSchema)
-      .parquet(s"$idx/bands").select("batch_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    def dataBatches = spark.read.schema(Multimodal.MediaFpSchema)
-      .parquet(s"$idx/data").select("batch_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    def sidecarComplete(): Unit = {
-      assert(bandBatches == dataBatches,
-        s"sidecar batches $bandBatches != data batches $dataBatches")
-      val decoded = spark.read.schema(Multimodal.MediaFpSchema)
-        .parquet(s"$idx/data").filter(col("decoded")).count()
-      assert(spark.read.schema(Multimodal.MediaBandSchema)
-        .parquet(s"$idx/bands").count() == 4L * decoded,
-        "4 sidecar band rows per decoded fingerprint")
-    }
+    def hasBands = fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands"))
 
     // the pre-r14 on-disk layout: two committed batches, no sidecar
     Multimodal.writeMediaFpIndex(
       docs.filter(col("doc_id").isin(10L, 20L)), idx)
     Multimodal.appendToMediaFpIndex(
       docs.filter(col("doc_id") === 30L), idx, 1L)
-    stripSidecar()
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$idx/bands"), true))
 
-    // the STREAM path migrates on first contact: 17 is the perceptual
-    // twin of PRE-sidecar doc 10 — a partial (or absent) sidecar would
-    // admit it; the backfilled pruned screen must drop it
+    // 17 is the perceptual twin of PRE-sidecar doc 10: an absent or
+    // partial sidecar would admit it, so the screen refuses the root
     val stats = new MediaDedupStream.MediaStats(spark)
-    MediaDedupStream.processBatch(
-      Seq((17L, Multimodal.pngHashPayload(17L)),
-        (50L, Multimodal.pngHashPayload(50L))).toDF("doc_id", "payload"),
-      2L, corpusDir, idx, stats)
+    val batch = Seq((17L, Multimodal.pngHashPayload(17L)),
+      (50L, Multimodal.pngHashPayload(50L))).toDF("doc_id", "payload")
+    val screenErr = intercept[IllegalArgumentException] {
+      MediaDedupStream.processBatch(batch, 2L, corpusDir, idx, stats)
+    }
+    assert(screenErr.getMessage.contains("rebuildMediaFpIndex"),
+      screenErr.getMessage)
+    assert(stats.kept.value == 0 && stats.lastCommitted == -1L)
+    // the bare APPEND path refuses too, before it writes a partial
+    // sidecar holding only its own batch
+    val appendErr = intercept[IllegalArgumentException] {
+      Multimodal.appendFingerprintsToMediaFpIndex(
+        Multimodal.mediaFingerprints(
+          docs.filter(col("doc_id") === 40L), "image"),
+        "image", idx, 4L)
+    }
+    assert(appendErr.getMessage.contains("rebuildMediaFpIndex"),
+      appendErr.getMessage)
+    assert(!hasBands, "a refused append must not start a sidecar")
+
+    // the named remedy derives the sidecar; the replayed batch then
+    // screens the twin out and lands the new doc
+    Multimodal.rebuildMediaFpIndex(spark,
+      docs.filter(col("doc_id").isin(10L, 20L, 30L)), idx)
+    MediaDedupStream.processBatch(batch, 2L, corpusDir, idx, stats)
     assert(stats.kept.value == 1,
       "twin of a pre-sidecar fingerprint must screen out")
     assert(spark.read.parquet(corpusDir).select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(50L))
-    sidecarComplete() // batches 0,1 backfilled + the stream's own 3
+  }
 
-    // the bare APPEND path must not recreate the partial-sidecar hole
-    // (first append to a stripped root writing only its own batch):
-    // backfill covers every pre-existing batch before the new one lands
-    stripSidecar()
-    Multimodal.appendFingerprintsToMediaFpIndex(
-      Multimodal.mediaFingerprints(
-        docs.filter(col("doc_id") === 40L), "image"),
-      "image", idx, 4L)
-    assert(bandBatches.contains(0L) && bandBatches.contains(4L),
-      s"append must backfill pre-sidecar batches, got $bandBatches")
-    sidecarComplete()
-    // and the migrated sidecar serves the SAME candidates as bands
-    // derived from the full data component (losslessness)
-    val probe = Multimodal.fpBands(Multimodal.mediaFingerprints(
-        docs.filter(col("doc_id") === 17L), "image")
-      .filter(col("decoded")).select("doc_id", "fp_lo", "fp_hi"))
-    val hit = probe.select(Multimodal.mediaBandBucket.as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    def cands(idxBands: org.apache.spark.sql.DataFrame) =
-      idxBands.join(probe.select("band_idx", "band_val").distinct(),
-          Seq("band_idx", "band_val"))
-        .select("doc_id").distinct().collect()
-        .map(_.getLong(0)).toSet
-    val pruned = Multimodal.mediaFpBandsPruned(spark, idx, "image",
-        hit, beforeBatch = 5L)
-      .getOrElse(fail("sidecar must exist after the migration"))
-    val full = Multimodal.fpBands(
-      Multimodal.readMediaFpIndex(spark, idx)
-        .filter(col("modality") === "image" && col("decoded")
-          && col("batch_id") < 5L)
-        .select("doc_id", "fp_lo", "fp_hi"))
-    assert(cands(pruned) == cands(full) && cands(pruned).contains(10L))
+  // the first append to a fresh root writes the sidecar partition and
+  // the data partition once each: no whole-sidecar pass, no collect
+  test("first media fp append to a fresh root is two writes and no collect") {
+    import graft.ext.Multimodal
+    val idx = Files.createTempDirectory("fpappend").toString + "/idx"
+    val fps = Multimodal.mediaFingerprints(
+      Tables(spark, Sf0001).documents.filter(col("doc_id") < 20L), "image")
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val onExec = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { actions.add(f); () }
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = { actions.add(f); () }
+    }
+    val ctx = spark.sparkContext
+    org.apache.spark.GraftListenerBus.drain(ctx)
+    spark.listenerManager.register(onExec)
+    try {
+      Multimodal.appendFingerprintsToMediaFpIndex(fps, "image", idx, 1L)
+      org.apache.spark.GraftListenerBus.drain(ctx)
+    } finally spark.listenerManager.unregister(onExec)
+    val seen = actions.asScala.toSeq
+    assert(seen == Seq("command", "command"), s"$seen")
+    val root = graft.ext.Versioned.resolve(spark, idx)
+    assert(spark.read.schema(Multimodal.MediaBandSchema)
+      .parquet(s"$root/bands").count()
+      == 4L * spark.read.schema(Multimodal.MediaFpSchema)
+        .parquet(s"$root/data").filter(col("decoded")).count())
   }
 
   test("pre-bucketing flat band index: actionable failure, one-time migration, pruned serving") {
@@ -3069,6 +3067,34 @@ class StreamingSpec extends AnyFunSuite {
         .sum
       finally main.close()
     assert(bounds == 1, s"triggerBroadcastBound declared $bounds times")
+  }
+
+  // the media legs and the incremental batch screen share one stored-side
+  // read and one screen join (Multimodal.mediaBandsBefore, nearEarlier)
+  test("src/main has one media screen") {
+    import java.nio.file.Paths
+    val main = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try main.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f -> Files.readString(f)).toList
+      finally main.close()
+    val hamming = sources.collect {
+      case (f, src) if f.getParent.getFileName.toString == "streaming"
+          && src.contains("fpHamming(") => f.getFileName.toString
+    }
+    assert(hamming.isEmpty,
+      s"a streaming leg verifies Hamming itself: $hamming")
+    val multimodal = sources.collectFirst {
+      case (f, src) if f.getFileName.toString == "Multimodal.scala" => src
+    }.get
+    val held = Seq("listStatus(", "backfill", "bandedHamming64Incremental")
+      .filter(multimodal.contains)
+    assert(held.isEmpty, s"Multimodal.scala holds $held")
+    val pruned = sources.collect {
+      case (f, src) if src.contains("mediaFpBandsPruned") =>
+        f.getFileName.toString
+    }
+    assert(pruned.isEmpty, s"mediaFpBandsPruned is back in $pruned")
   }
 
   test("full-rewrite layout ops merge schemas: rebucket/migrate keep late-added columns") {
